@@ -19,8 +19,7 @@ pinned by the regroup fixture below. The output is again a RowKind
 changelog (+I / -U / +U / -D), since group rows appear, change, and
 disappear as keys move between groups.
 
-The Spark-first state machine (foreachBatch, marker-committed — the
-sibling recipe):
+The Spark-first state machine (foreachBatch, batch_commit protocol):
 
   per micro-batch k:
     1. MERGE:  winners_k = per-key argmax by (op_ts, op_id) over
@@ -37,8 +36,7 @@ sibling recipe):
     3. DIFF:   changelog(agg_{k-1} -> agg_k): groups appearing emit
                +I, disappearing emit -D (old row), changing emit -U
                (old) then +U (new) — |groups|-sized full-outer join;
-    4. PUBLISH state/batch-k + agg/batch-k + out/batch_id=k, marker
-               LAST (replay no-op, mid-crash scrub + recompute).
+    4. PUBLISH state/batch-k + agg/batch-k + out/batch-k.
 
 A consumer applying the changelog in (batch_id, op) order materializes
 exactly the batch GROUP BY of the current state (pinned by replay in
@@ -63,18 +61,24 @@ DuckDB oracle: `stream_agg_retract_sql` (queries.py).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.streaming.late_data import (
-    run_concurrently,
-    stage_chunked_by,
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    overwrite,
+    read_version,
 )
-from flink_kafka_table_api_spark.caching import replan_cached_plans
+from flink_kafka_table_api_spark.streaming.late_data import stage_chunked_by
 
 OPS_COLUMNS = ["op_id", "op_ts", "key", "grp", "op", "value"]
+OPS_SCHEMA = (
+    "op_id long, op_ts timestamp, key long, grp string, op string, "
+    "value double"
+)
 _STATE_SCHEMA = (
     "key long, op_id long, op_ts timestamp, grp string, op string, "
     "value double"
@@ -160,7 +164,6 @@ def stream_agg_retract(
     *,
     n_chunks: int,
     chunk_col: str = "__chunk",
-    keep_versions: int = 3,
 ) -> DataFrame:
     """GROUP BY (grp) COUNT/SUM over an upsert/delete changelog
     (`ops_chunked`: op_id, op_ts, key, grp, op in {'U','D'}, value,
@@ -175,76 +178,28 @@ def stream_agg_retract(
     out_dir = os.path.join(state_dir, "out")
     state_dir_v = os.path.join(state_dir, "state")
     agg_dir = os.path.join(state_dir, "agg")
-    marker_dir = os.path.join(state_dir, "commits")
+    commit = BatchCommit(
+        state_dir, scoped=(out_dir, state_dir_v, agg_dir),
+        versioned=(state_dir_v, agg_dir),
+    )
 
-    def _read(base: str, batch_id: int, schema: str) -> DataFrame:
-        p = os.path.join(base, f"batch-{batch_id}")
-        if batch_id < 0 or not os.path.isdir(p):
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(p)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replay of a committed batch: no-op
-        for d in (out_dir, state_dir_v, agg_dir):
-            shutil.rmtree(
-                os.path.join(d, f"batch-{batch_id}"), ignore_errors=True
-            )
+    def process(batch: DataFrame, batch_id: int) -> Publish:
         merged = _winners(
-            _read(state_dir_v, batch_id - 1, _STATE_SCHEMA)
+            read_version(spark, state_dir_v, batch_id - 1, _STATE_SCHEMA)
             .unionByName(batch.select(
                 "key", "op_id", "op_ts", "grp", "op", "value"
             ))
         ).persist()
         agg = _group_agg(merged).persist()
-        prev_agg = _read(agg_dir, batch_id - 1, _AGG_SCHEMA)
-        # three independent DAGs over the two persisted frames to
-        # DISTINCT paths — overlapped so the batch pays the slowest
-        # write, not the sum (guide §2.6; marker still follows all)
-        run_concurrently(
-            lambda: _changelog(prev_agg, agg, batch_id).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(out_dir, f"batch-{batch_id}")),
-            lambda: merged.write.mode("overwrite").parquet(
-                os.path.join(state_dir_v, f"batch-{batch_id}")
-            ),
-            lambda: agg.write.mode("overwrite").parquet(
-                os.path.join(agg_dir, f"batch-{batch_id}")
-            ),
-        )
-        merged.unpersist()
-        agg.unpersist()
-        open(marker, "w").close()
-        old = batch_id - keep_versions
-        if old >= 0:
-            for d in (state_dir_v, agg_dir):
-                shutil.rmtree(os.path.join(d, f"batch-{old}"),
-                              ignore_errors=True)
+        prev_agg = read_version(spark, agg_dir, batch_id - 1, _AGG_SCHEMA)
+        return Publish([
+            overwrite(_changelog(prev_agg, agg, batch_id),
+                      batch_dir(out_dir, batch_id)),
+            overwrite(merged, batch_dir(state_dir_v, batch_id)),
+            overwrite(agg, batch_dir(agg_dir, batch_id)),
+        ], release=[merged, agg])
 
-    stream = (
-        spark.readStream
-        .schema("op_id long, op_ts timestamp, key long, grp string, "
-                "op string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", os.path.join(state_dir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not os.path.isdir(out_dir):
-        return spark.createDataFrame([], _OUT_SCHEMA)
-    return (
-        spark.read.schema(_OUT_SCHEMA)
-        .option("recursiveFileLookup", "true").parquet(out_dir)
-        .select("op", "grp", "n_keys", "total", "batch_id")
-    )
+    return commit.drain(spark, src, OPS_SCHEMA, process, out_dir, _OUT_SCHEMA)
 
 
 def apply_changelog(log: DataFrame) -> DataFrame:

@@ -15,9 +15,9 @@ eligible for cleanup at end + allowed. Plain watermark semantics
 (allowed = 0) silently drops exactly the rows a data-quality team most
 wants to see.
 
-The deterministic micro-batch twin (foreachBatch, marker-committed —
-the sibling recipe; single watermark source, the multi-source rules are
-idle_watermark / watermark_alignment's job):
+The deterministic micro-batch twin (foreachBatch, batch_commit protocol;
+single watermark source, the multi-source rules are idle_watermark /
+watermark_alignment's job):
 
   per micro-batch k:
     1. CLASSIFY: against W_{k-1} = max(delivered ts through k-1) − delay:
@@ -39,7 +39,7 @@ idle_watermark / watermark_alignment's job):
                  classifies as quarantine BY THE SAME RULE — eviction
                  is emergent from classification, not a second policy)
                  and leave the state;
-    5. PUBLISH:  out/batch-k + state/batch-k + wm json, marker LAST.
+    5. PUBLISH:  out/batch-k + state/batch-k + wm/batch-k.json.
     Terminal flush: never-fired windows emit '+I' tagged n_chunks.
 
 Completeness/finality: '+I' fires are complete w.r.t. admitted rows
@@ -65,9 +65,7 @@ correction pairs, quarantine rows, and the terminal flush.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,12 +75,17 @@ from flink_kafka_table_api_spark.streaming.chunk_stats import (
     ChunkStats,
     stat_max,
 )
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    overwrite,
+    read_version,
+)
 from flink_kafka_table_api_spark.streaming.late_data import (
-    run_concurrently,
     stage_chunked_by,
     ts_shift,
 )
-from flink_kafka_table_api_spark.caching import replan_cached_plans
 
 _STATE_SCHEMA = (
     "window_start timestamp, window_end timestamp, n_events long, "
@@ -119,7 +122,6 @@ def stream_allowed_lateness(
     ts_col: str = "ts",
     value_col: str = "value",
     chunk_col: str = "__chunk",
-    keep_versions: int = 3,
 ) -> DataFrame:
     """Tumbling windowed aggregation with allowed lateness: returns the
     changelog (op, window_start, window_end, n_events, sum_value,
@@ -144,36 +146,17 @@ def stream_allowed_lateness(
     )
     out_dir = os.path.join(state_dir, "out")
     st_dir = os.path.join(state_dir, "state")
-    wm_dir = os.path.join(state_dir, "wm")
-    marker_dir = os.path.join(state_dir, "commits")
-
-    def _meta_after(batch_id: int) -> dict:
-        p = os.path.join(wm_dir, f"batch-{batch_id}.json")
-        if batch_id < 0 or not os.path.exists(p):
-            return {"max_seen": None}
-        return json.load(open(p))
-
-    def _state_after(batch_id: int) -> DataFrame:
-        p = os.path.join(st_dir, f"batch-{batch_id}")
-        if batch_id < 0 or not os.path.isdir(p):
-            return spark.createDataFrame([], _STATE_SCHEMA)
-        return spark.read.schema(_STATE_SCHEMA).parquet(p)
+    commit = BatchCommit(
+        state_dir, scoped=(out_dir, st_dir), versioned=(st_dir,),
+        meta_dir=os.path.join(state_dir, "wm"),
+    )
 
     def _ts_minus(iso: str, interval: str) -> str:
         return ts_shift(iso, interval)
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        os.makedirs(wm_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replay of a committed batch: no-op
-        for d in (out_dir, st_dir):
-            shutil.rmtree(
-                os.path.join(d, f"batch-{batch_id}"), ignore_errors=True
-            )
+    def process(batch: DataFrame, batch_id: int) -> Publish:
         batch = batch.persist()
-        prev = _meta_after(batch_id - 1)
+        prev = commit.meta(batch_id - 1, {"max_seen": None})
         # 1. CLASSIFY against W_{k-1}
         if prev["max_seen"] is None:
             admitted, quarantined = batch, batch.filter(F.lit(False))
@@ -192,7 +175,9 @@ def stream_allowed_lateness(
             F.lit(batch_id).cast("long").alias("batch_id"),
         )
         # 2. MERGE admitted partials into carried state
-        prior = _state_after(batch_id - 1).persist()
+        prior = read_version(
+            spark, st_dir, batch_id - 1, _STATE_SCHEMA
+        ).persist()
         part = _partials(admitted, window)
         merged = (
             prior.select("window_start", "window_end", "n_events",
@@ -258,9 +243,6 @@ def stream_allowed_lateness(
         out = late_rows.unionByName(first_fires).unionByName(
             retracts
         ).unionByName(updates)
-        write_out = lambda: out.write.mode("overwrite").parquet(  # noqa: E731
-            os.path.join(out_dir, f"batch-{batch_id}")
-        )
         # 4. EVICT — windows past end + allowed can never be corrected
         # again (further rows of theirs quarantine by the same rule)
         new_state = merged.select(
@@ -276,56 +258,20 @@ def stream_allowed_lateness(
                   & (F.col("window_end")
                      <= F.lit(evict_line).cast("timestamp")))
             )
-        # emission + state are independent DAGs over the persisted
-        # frames to DISTINCT paths — overlapped (guide §2.6; the marker
-        # still follows both)
-        run_concurrently(
-            write_out,
-            lambda: new_state.write.mode("overwrite").parquet(
-                os.path.join(st_dir, f"batch-{batch_id}")
-            ),
-        )
-        json.dump({"max_seen": max_seen}, open(
-            os.path.join(wm_dir, f"batch-{batch_id}.json"), "w"
-        ))
-        merged.unpersist()
-        prior.unpersist()
-        batch.unpersist()
-        open(marker, "w").close()
-        old = batch_id - keep_versions
-        if old >= 0:
-            shutil.rmtree(os.path.join(st_dir, f"batch-{old}"),
-                          ignore_errors=True)
+        return Publish([
+            overwrite(out, batch_dir(out_dir, batch_id)),
+            overwrite(new_state, batch_dir(st_dir, batch_id)),
+        ], meta={"max_seen": max_seen}, release=[merged, prior, batch])
 
-    stream = (
-        spark.readStream
-        .schema("ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    emitted = commit.drain(
+        spark, src, "ts timestamp, value double", process,
+        out_dir, _OUT_SCHEMA,
     )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    last = max(
-        (int(e.name[len("batch-"):])
-         for e in os.scandir(marker_dir)),
-        default=-1,
-    )
-    flush = _state_after(last).filter(~F.col("fired")).select(
+    last = read_version(spark, st_dir, commit.last(), _STATE_SCHEMA)
+    flush = last.filter(~F.col("fired")).select(
         F.lit("+I").alias("op"), "window_start", "window_end",
         "n_events", F.col("sum_value").cast("double"),
         F.lit(n_chunks).cast("long").alias("batch_id"),
-    )
-    emitted = (
-        spark.read.schema(_OUT_SCHEMA)
-        .option("recursiveFileLookup", "true").parquet(out_dir)
-        if os.path.isdir(out_dir) else
-        spark.createDataFrame([], _OUT_SCHEMA)
     )
     return emitted.unionByName(flush).select(
         "op", "window_start", "window_end", "n_events",

@@ -12,22 +12,16 @@ This is the Spark-first shape of the reference's continuous-insert
 lifecycle (TransactionProcessor.java:192,215-223) applied to the
 vector-index sink instead of a Kafka topic.
 
-Per micro-batch k (foreachBatch):
+Per micro-batch k (foreachBatch, batch_commit protocol — the
+index/batch_id=k scrub means a mid-batch crash never double-publishes):
 
-  1. SKIP:    commits/batch-k exists -> the batch is already published;
-              a post-recovery replay is a no-op (curation_pipeline.py
-              contract);
-  2. SCRUB:   remove index/batch_id=k — a mid-batch crash leaves only
-              batch-scoped partition directories, so recompute starts
-              clean and never double-publishes;
-  3. ASSIGN:  nearest-centroid coarse quantization of the BATCH ONLY
+  1. ASSIGN:  nearest-centroid coarse quantization of the BATCH ONLY
               (broadcast of the tiny fixed centroid table — identical
               expression to the batch `ivf_assign`, so incremental
               assignment is bit-equal to a one-shot build);
-  4. PUBLISH: append the assigned batch (plus the int8-quantized `qe`
+  2. PUBLISH: append the assigned batch (plus the int8-quantized `qe`
               column, matching `ivf_build_index`'s layout) partitioned
-              by (batch_id, cluster); existing files are never touched;
-  5. MARKER:  commits/batch-k LAST.
+              by (batch_id, cluster); existing files are never touched.
 
 Because assignment is a stateless per-row function of fixed centroids,
 the accumulated index is equal (as a rowset) to `ivf_build_index` over
@@ -45,14 +39,13 @@ the probed clusters' directories across ALL batch_id partitions
 At 100 TB: per-batch cost is O(|batch| * k_centroids) assignment plus a
 write that touches only the batch's own partition dirs; the index is
 just a partitioned table whose per-query read is nprobe/k of the rows;
-exactly-once is batch-granular via the marker protocol (id-level upsert
+exactly-once is batch-granular via batch_commit (id-level upsert
 semantics belong to streaming/cdc_apply.py, not the append-only index).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,11 +56,12 @@ from flink_kafka_table_api_spark.functions.vector import (
     cosine,
 )
 from flink_kafka_table_api_spark.operators import similarity as sim
-from flink_kafka_table_api_spark.streaming.late_data import (
-    run_concurrently,
-    stage_chunked_by,
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    has_data,
 )
-from flink_kafka_table_api_spark.caching import replan_cached_plans
+from flink_kafka_table_api_spark.streaming.late_data import stage_chunked_by
 
 VEC_COLUMNS = ["vec_id", "embedding"]
 
@@ -147,28 +141,15 @@ def stream_ann_ingest(
     )
     index = os.path.join(state_dir, "index")
     metrics = os.path.join(state_dir, "metrics")
-    marker_dir = os.path.join(state_dir, "commits")
+    commit = BatchCommit(state_dir, partitioned=(index, metrics))
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replay after recovery: already published
-        shutil.rmtree(
-            os.path.join(index, f"batch_id={batch_id}"), ignore_errors=True
-        )
-        shutil.rmtree(
-            os.path.join(metrics, f"batch_id={batch_id}"),
-            ignore_errors=True,
-        )
+    def process(batch: DataFrame, batch_id: int) -> Publish:
         assign = assign_with_distance(batch, cents).persist()
         # index + drift-metric publishes are independent DAGs over the
-        # persisted assignment to DISTINCT paths — overlapped (guide
-        # §2.6; the marker still follows both). The drift partial is ONE
-        # tiny row per batch — exact decimal sum of the per-vector
-        # quantization error (order-insensitive, so the oracle replays
-        # it bit-for-bit).
-        run_concurrently(
+        # persisted assignment. The drift partial is ONE tiny row per
+        # batch — exact decimal sum of the per-vector quantization error
+        # (order-insensitive, so the oracle replays it bit-for-bit).
+        return Publish([
             lambda: assign.select("vec_id", "embedding", "cluster")
             .withColumn("qe", sim.int8_quantize("embedding")
                         .cast("array<tinyint>"))
@@ -184,34 +165,17 @@ def stream_ann_ingest(
             .write.mode("append")
             .partitionBy("batch_id")
             .parquet(metrics),
-        )
-        assign.unpersist()
-        open(marker, "w").close()
+        ], release=[assign])
 
-    stream = (
-        spark.readStream
-        .schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", os.path.join(state_dir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    empty = spark.createDataFrame(
-        [], "block string, vec_id long, score double"
+    commit.drain(
+        spark, src, "vec_id long, embedding array<float>", process
     )
     # an all-empty stream publishes markers but no partition dirs; an
     # index with no files is an empty result, not a read error
-    if not os.path.isdir(index) or not any(
-        e.name.startswith("batch_id=") for e in os.scandir(index)
-    ):
-        return empty
+    if not has_data(index):
+        return spark.createDataFrame(
+            [], "block string, vec_id long, score double"
+        )
     qclusters = sim.ivf_route(cents, query, nprobe=nprobe)
     topk = (
         sim.ivf_topk_indexed(spark, index, qclusters, query, k=k)

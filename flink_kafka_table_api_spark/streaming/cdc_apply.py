@@ -25,10 +25,8 @@ hardened with the round-8 watermark + crash-safety machinery:
                mutation;
     4. ADVANCE: W_k = max(op_ts SEEN through batch k) - delay (seen,
                not admitted: dropped ops still advance the watermark);
-    5. PUBLISH: state/batch-k + offsets/batch-k.json, marker LAST —
-               replays of committed batches are no-ops, a mid-batch
-               crash scrubs and recomputes (the curation_pipeline.py
-               contract).
+    5. PUBLISH: state/batch-k + offsets/batch-k.json under the
+               batch_commit protocol.
 
 The final snapshot is the last state version with DELETE winners
 removed: a key whose latest admitted op is a delete is absent, exactly
@@ -41,20 +39,24 @@ At 100 TB: the per-batch reduce shuffles one row per distinct key in
 the batch; the merge joins that against the previous state version on
 the key (sort-merge or broadcast as AQE decides). State size is
 O(live keys); old versions are pruned to a bounded tail
-(`keep_versions`), so storage does not grow with stream age. What this
-deliberately does NOT do is re-read the ops history — state version k
-is a pure fold of version k-1 and batch k.
+(batch_commit.KEEP_VERSIONS), so storage does not grow with stream age.
+What this deliberately does NOT do is re-read the ops history — state
+version k is a pure fold of version k-1 and batch k.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    overwrite,
+)
 from flink_kafka_table_api_spark.streaming.incremental_dedup import (
     IncrementalDedup,
 )
@@ -66,7 +68,6 @@ from flink_kafka_table_api_spark.streaming.late_data import (
     stage_chunked_by,
     ts_shift,
 )
-from flink_kafka_table_api_spark.caching import replan_cached_plans
 
 OPS_COLUMNS = ["op_id", "op_ts", "key", "op", "value"]
 
@@ -125,7 +126,6 @@ def stream_cdc_apply(
     n_chunks: int,
     delay: str,
     chunk_col: str = "__chunk",
-    keep_versions: int = 3,
     snapshot: DataFrame | None = None,
 ) -> DataFrame:
     """Materialize a keyed changelog stream (`ops_chunked`: op_id,
@@ -160,45 +160,27 @@ def stream_cdc_apply(
         {"mx": F.max("op_ts")},
     )
     state = os.path.join(state_dir, "state")
-    marker_dir = os.path.join(state_dir, "commits")
     offsets_dir = os.path.join(state_dir, "offsets")
+    commit = BatchCommit(
+        state_dir, scoped=(state,), versioned=(state,), meta_dir=offsets_dir
+    )
+    no_meta = {"watermark": None, "max_seen": None}
 
-    if snapshot is not None:
-        seed_meta = os.path.join(offsets_dir, "batch--1.json")
+    if snapshot is not None and commit.meta(-1, None) is None:
         # idempotent, crash-safe seeding: state parquet first
         # (overwrite), the offsets file LAST as the commit point; a
         # reseed after a mid-seed crash just overwrites
-        if not os.path.exists(seed_meta):
-            os.makedirs(offsets_dir, exist_ok=True)
-            snapshot.write.mode("overwrite").parquet(
-                os.path.join(state, "batch--1")
-            )
-            mx = snapshot.agg(F.max("last_op_ts")).first()[0]
-            max_seen = mx.isoformat() if mx is not None else None
-            wm = None
-            if max_seen is not None:
-                wm = ts_shift(max_seen, delay)
-            json.dump(
-                {"watermark": wm, "max_seen": max_seen},
-                open(seed_meta, "w"),
-            )
+        snapshot.write.mode("overwrite").parquet(batch_dir(state, -1))
+        mx = snapshot.agg(F.max("last_op_ts")).first()[0]
+        max_seen = mx.isoformat() if mx is not None else None
+        commit.write_meta(-1, {
+            "watermark": None if max_seen is None
+            else ts_shift(max_seen, delay),
+            "max_seen": max_seen,
+        })
 
-    def meta_after(batch_id: int) -> dict:
-        p = os.path.join(offsets_dir, f"batch-{batch_id}.json")
-        if batch_id < 0 and not os.path.exists(p):
-            return {"watermark": None, "max_seen": None}
-        return json.load(open(p))
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        os.makedirs(offsets_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replayed after recovery: already merged
-        shutil.rmtree(
-            os.path.join(state, f"batch-{batch_id}"), ignore_errors=True
-        )
-        prev = meta_after(batch_id - 1)
+    def process(batch: DataFrame, batch_id: int) -> Publish:
+        prev = commit.meta(batch_id - 1, no_meta)
         admitted = (
             batch if prev["watermark"] is None
             else batch.filter(F.col("op_ts") > prev["watermark"])
@@ -206,10 +188,8 @@ def stream_cdc_apply(
         batch_w = changelog_winners(
             admitted.withColumn("__n", F.lit(1)), "__n"
         )
-        prev_path = os.path.join(state, f"batch-{batch_id - 1}")
-        merged = merge_state_version(spark, prev_path, batch_w)
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state, f"batch-{batch_id}")
+        merged = merge_state_version(
+            spark, batch_dir(state, batch_id - 1), batch_w
         )
         # sidecar; in-batch aggregate only if the files don't resolve
         srows = stats.for_batch(ckpt, batch_id)
@@ -225,37 +205,16 @@ def stream_cdc_apply(
         new_wm = None
         if max_seen is not None:
             new_wm = ts_shift(max_seen, delay)
-        json.dump(
-            {"watermark": new_wm, "max_seen": max_seen},
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"), "w"),
+        return Publish(
+            [overwrite(merged, batch_dir(state, batch_id))],
+            meta={"watermark": new_wm, "max_seen": max_seen},
         )
-        open(marker, "w").close()
-        # bounded version tail: state does not grow with stream age
-        old = batch_id - keep_versions
-        if old >= 0:
-            shutil.rmtree(
-                os.path.join(state, f"batch-{old}"), ignore_errors=True
-            )
-            if old == 0:  # the bootstrap seed is superseded with batch 0
-                shutil.rmtree(
-                    os.path.join(state, "batch--1"), ignore_errors=True
-                )
 
-    stream = (
-        spark.readStream
-        .schema("op_id long, op_ts timestamp, key long, op string, "
-                "value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    commit.drain(
+        spark, src,
+        "op_id long, op_ts timestamp, key long, op string, value double",
+        process,
     )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     last = _last_state_version(state)
     if last is None:
         return spark.createDataFrame(

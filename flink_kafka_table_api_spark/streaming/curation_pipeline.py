@@ -18,11 +18,9 @@ Per micro-batch, NOTHING already processed is rescanned:
 - sequence packing continues from a persisted running token total, so
   `seq_id` (a pure function of the global exclusive cumulative token sum)
   comes out IDENTICAL to a single full-corpus packing run;
-- the sink merge is idempotent via per-batch commit markers (a replayed
-  batch after recovery is a no-op), the streaming/upsert.py recipe —
-  and every side effect of a batch (the dedup state, the packed sink
-  rows, the carried token total) is a BATCH-SCOPED overwrite published
-  BEFORE the marker, so a crash mid-batch replays into a scrub +
+- every side effect of a batch (the dedup state, the packed sink rows,
+  the carried token total) is a BATCH-SCOPED write under the
+  batch_commit protocol, so a crash mid-batch replays into a scrub +
   deterministic recompute instead of duplicated appends: the offset
   chain reads batch N-1's published total, never a mutable global file,
   so a half-committed batch can neither double-count tokens nor corrupt
@@ -36,7 +34,6 @@ re-shuffle of the accumulated corpus.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +43,12 @@ from pyspark.sql import Observation
 
 from flink_kafka_table_api_spark.operators.curation import pack_sequences
 from flink_kafka_table_api_spark.operators.text import quality_score_col
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    overwrite,
+)
 from flink_kafka_table_api_spark.streaming.chunk_stats import (
     ChunkStats,
     stat_max,
@@ -55,7 +58,6 @@ from flink_kafka_table_api_spark.streaming.incremental_dedup import (
     IncrementalDedup,
 )
 from flink_kafka_table_api_spark.streaming.late_data import stage_chunked_by
-from flink_kafka_table_api_spark.caching import replan_cached_plans
 
 
 def stage_ordered_chunks(
@@ -120,42 +122,18 @@ def stream_curate_pack(
         {"mn": F.min("doc_id"), "mx": F.max("doc_id")},
     )
     sink = os.path.join(state_dir, "packed")
-    marker_dir = os.path.join(state_dir, "commits")
-    offsets_dir = os.path.join(state_dir, "offsets")
+    commit = BatchCommit(
+        state_dir, scoped=(sink,), meta_dir=os.path.join(state_dir, "offsets")
+    )
     inc = IncrementalDedup(
         os.path.join(state_dir, "dedup"),
         threshold=threshold, portable=portable,
     )
 
-    def offset_after(batch_id: int) -> int:
-        """Published running token total after `batch_id` (0 before the
-        first batch). Reading the PREVIOUS batch's immutable snapshot —
-        not a mutable global file — is what makes a replayed
-        half-committed batch recompute the same offset it saw the first
-        time instead of double-counting its own tokens."""
-        if batch_id < 0:
-            return 0
-        return json.load(
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"))
-        )["token_total"]
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        os.makedirs(marker_dir, exist_ok=True)
-        os.makedirs(offsets_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replayed after recovery: already merged
-        # crash-replay scrub: without a marker, any batch-scoped output
-        # on disk is partial — remove it so the recompute publishes clean
-        shutil.rmtree(
-            os.path.join(sink, f"batch-{batch_id}"), ignore_errors=True
-        )
+    def process(batch: DataFrame, batch_id: int) -> Publish:
         batch = batch.persist()
         # 1) incremental near-dup: batch signatures vs accumulated index
-        #    (process_batch is itself idempotent: marker-guarded,
-        #    batch-scoped state, scrub-on-replay)
+        #    (process_batch is itself a batch_commit, nested in this one)
         inc.process_batch(batch, batch_id)
         # matches involving THIS batch's docs, newer side (`a`) dropped —
         # the keep-first-copy rule; a batch doc matching an indexed doc OR
@@ -179,9 +157,11 @@ def stream_curate_pack(
         # once per consumer (measured ~0.5 s/batch at sf0.1)
         kept = kept.persist()
         # 3) packing continues from the PREVIOUS batch's published token
-        # total (pack_sequences handles an all-dropped batch: empty
-        # layout, zero new tokens — no extra emptiness probe job needed)
-        offset = offset_after(batch_id - 1)
+        # total — an immutable snapshot, never a mutable global file, so
+        # a replayed half-committed batch recomputes the offset it saw
+        # the first time (pack_sequences handles an all-dropped batch:
+        # empty layout, zero new tokens — no extra emptiness probe job)
+        offset = commit.meta(batch_id - 1, {"token_total": 0})["token_total"]
         srows = stats.for_batch(ckpt, batch_id)
         mn = stat_min(srows, "mn") if srows is not None else None
         bounds = (
@@ -192,47 +172,20 @@ def stream_curate_pack(
         packed = pack_sequences(
             kept, budget=budget, start_offset=offset, id_bounds=bounds
         )
-        # 4) publish: batch-scoped sink overwrite + this batch's offset
-        #    snapshot, marker LAST — the commit point (doc_ids are unique
-        #    across batches, so the sink union is an append of new keys;
-        #    the marker makes replays no-ops, and the scrub above makes
-        #    mid-batch-crash replays clean recomputes). The token total
-        #    rides the write as an observed metric — same value the
-        #    separate agg job computed, one less job per batch.
+        # 4) publish the batch-scoped sink (doc_ids are unique across
+        #    batches, so the sink union is an append of new keys) and this
+        #    batch's offset snapshot. The token total rides the write as
+        #    an observed metric — same value the separate agg job
+        #    computed, one less job per batch.
         obs = Observation()
-        packed.observe(obs, F.sum("n_tokens").alias("t")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(sink, f"batch-{batch_id}"))
-        new_tokens = obs.get["t"] or 0
-        json.dump(
-            {"token_total": int(offset + new_tokens)},
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"), "w"),
+        return Publish(
+            [overwrite(packed.observe(obs, F.sum("n_tokens").alias("t")),
+                       batch_dir(sink, batch_id))],
+            meta=lambda: {"token_total": int(offset + (obs.get["t"] or 0))},
+            release=[kept, batch],
         )
-        kept.unpersist()
-        batch.unpersist()
-        open(marker, "w").close()
 
-    schema = docs.select("doc_id", "text").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not IncrementalDedup._has_parts(sink):
-        # every batch was filtered to nothing: typed empty sink
-        return spark.createDataFrame(
-            [], "doc_id long, n_tokens long, seq_id long"
-        )
-    return (
-        spark.read.schema("doc_id long, n_tokens long, seq_id long")
-        .option("recursiveFileLookup", "true").parquet(sink)
-        .select("doc_id", "n_tokens", "seq_id")
+    return commit.drain(
+        spark, src_dir, docs.select("doc_id", "text").schema, process,
+        out=sink, out_schema="doc_id long, n_tokens long, seq_id long",
     )

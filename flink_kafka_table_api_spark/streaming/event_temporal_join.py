@@ -28,7 +28,7 @@ affect instant t) or is dropped by admission. So emitting at
 H_k = min(W_dim_k, W_probe_k) >= t is safe, and emitting any earlier is
 not — that is the entire contract, and the splice test pins it.
 
-  state layout (all per-batch, marker-committed):
+  state layout (all per-batch, under the batch_commit protocol):
     hist/batch_id=k/__kb=N/   SCD2 delta store — stream_scd2's
                               apply_history_delta, verbatim
     pending/batch-k/          full snapshot of still-buffered probes
@@ -37,10 +37,9 @@ not — that is the entire contract, and the splice test pins it.
     out/batch_id=k/           rows whose emission horizon was reached
                               at batch k
     offsets/batch-k.json      both sides' watermarks + max_seen
-    commits/batch-k           marker LAST (replay no-op, crash scrub)
 
   per micro-batch k (foreachBatch, driven by the probe stream):
-    1. SKIP/SCRUB by marker;
+    1. SKIP/SCRUB (batch_commit);
     2. DIM: admit ops drop k (op_ts > W_dim_{k-1}), fold into the SCD2
        delta store;
     3. PROBE: admit probe drop k (probe_ts > W_probe_{k-1}; too-late
@@ -54,7 +53,7 @@ not — that is the entire contract, and the splice test pins it.
        PRUNED to the emitting probes' __kb buckets; U-version matches
        enrich, deleted spans / unseen keys / before-first-version
        enrich NULL (LEFT semantics);
-    6. PUBLISH out + new pending snapshot + offsets, marker LAST.
+    6. PUBLISH out + new pending snapshot + offsets.
 
   end of input (availableNow termination): bounded-run flush — Flink's
   batch-mode end-of-input watermark is +inf, so every still-buffered
@@ -75,20 +74,25 @@ compaction bounds.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    overwrite,
+    partition_dir,
+    read_back,
+)
 from flink_kafka_table_api_spark.streaming.cdc_apply import OPS_COLUMNS
 from flink_kafka_table_api_spark.streaming.chunk_stats import (
     ChunkStats,
     stat_max,
 )
 from flink_kafka_table_api_spark.streaming.late_data import (
-    run_concurrently,
     stage_chunked_by,
     ts_shift,
 )
@@ -99,7 +103,6 @@ from flink_kafka_table_api_spark.streaming.scd2_stream import (
     scd2_lookup,
 )
 from flink_kafka_table_api_spark.streaming.temporal_join import PROBE_COLUMNS
-from flink_kafka_table_api_spark.caching import replan_cached_plans
 
 OUT_SCHEMA = (
     "probe_id long, probe_ts timestamp, key long, "
@@ -200,18 +203,10 @@ def stream_event_temporal_join(
     hist = os.path.join(state_dir, "hist")
     pending = os.path.join(state_dir, "pending")
     out = os.path.join(state_dir, "out")
-    marker_dir = os.path.join(state_dir, "commits")
-    offsets_dir = os.path.join(state_dir, "offsets")
-
-    def meta_after(batch_id: int) -> dict:
-        if batch_id < 0:
-            return {
-                "dim_watermark": None, "dim_max_seen": None,
-                "probe_watermark": None, "probe_max_seen": None,
-            }
-        return json.load(
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"))
-        )
+    commit = BatchCommit(
+        state_dir, scoped=(pending,), partitioned=(hist, out),
+        versioned=(pending,), meta_dir=os.path.join(state_dir, "offsets"),
+    )
 
     def wm(max_seen: str | None, delay: str) -> str | None:
         if max_seen is None:
@@ -225,24 +220,16 @@ def stream_event_temporal_join(
         return max(cands) if cands else None
 
     def read_pending(batch_id: int) -> DataFrame | None:
-        p = os.path.join(pending, f"batch-{batch_id}")
+        p = batch_dir(pending, batch_id)
         if not os.path.isdir(p):
             return None
         return spark.read.schema(PENDING_SCHEMA).parquet(p)
 
-    def process(probe_batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        os.makedirs(offsets_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replayed after recovery: already published
-        for d in (
-            os.path.join(hist, f"batch_id={batch_id}"),
-            os.path.join(pending, f"batch-{batch_id}"),
-            os.path.join(out, f"batch_id={batch_id}"),
-        ):
-            shutil.rmtree(d, ignore_errors=True)
-        prev = meta_after(batch_id - 1)
+    def process(probe_batch: DataFrame, batch_id: int) -> Publish:
+        prev = commit.meta(batch_id - 1, dict.fromkeys((
+            "dim_watermark", "dim_max_seen",
+            "probe_watermark", "probe_max_seen",
+        )))
         # 2. dim side: admit + fold into the SCD2 delta store
         ops_file = f"chunk{batch_id:04d}.parquet"
         ops = spark.read.schema(OPS_SCHEMA).parquet(
@@ -325,80 +312,35 @@ def stream_event_temporal_join(
                 .join(emit.select("key").distinct(), "key", "left_semi")
                 if kbs else None
             )
-        # 6. publish out + pending + offsets, marker LAST. The two
-        # writes are independent DAGs over the persisted buffer to
-        # DISTINCT paths — overlapped so the batch pays the slower one,
-        # not the sum (guide §2.6; the marker still follows both).
-        run_concurrently(
-            lambda: _enrich(full_hist, emit, lookup_bin_seconds)
-            .write.mode("overwrite")
-            .parquet(os.path.join(out, f"batch_id={batch_id}")),
-            lambda: still.write.mode("overwrite").parquet(
-                os.path.join(pending, f"batch-{batch_id}")
-            ),
-        )
-        json.dump(
-            {
-                "dim_watermark": w_dim, "dim_max_seen": dim_max,
-                "probe_watermark": w_probe, "probe_max_seen": probe_max,
-            },
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"), "w"),
-        )
-        buffered.unpersist()
-        open(marker, "w").close()
-        # the k-1 pending snapshot is superseded; keep one spare for
-        # a crash between this marker and the next batch's publish
-        shutil.rmtree(
-            os.path.join(pending, f"batch-{batch_id - 2}"),
-            ignore_errors=True,
-        )
+        # 6. publish out + pending + offsets: independent DAGs over the
+        # persisted buffer to DISTINCT paths
+        return Publish([
+            overwrite(_enrich(full_hist, emit, lookup_bin_seconds),
+                      partition_dir(out, batch_id)),
+            overwrite(still, batch_dir(pending, batch_id)),
+        ], meta={
+            "dim_watermark": w_dim, "dim_max_seen": dim_max,
+            "probe_watermark": w_probe, "probe_max_seen": probe_max,
+        }, release=[buffered])
 
-    stream = (
-        spark.readStream
-        .schema("probe_id long, probe_ts timestamp, key long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(probe_src)
+    commit.drain(
+        spark, probe_src, "probe_id long, probe_ts timestamp, key long",
+        process,
     )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     # end-of-input flush: watermark -> +inf, every buffered probe emits
-    # against the final history (idempotent: recomputed from committed
-    # state, published under a marker like any batch)
-    flush_marker = os.path.join(marker_dir, f"batch-{n_chunks}-flush")
-    if not os.path.exists(flush_marker):
-        shutil.rmtree(
-            os.path.join(out, f"batch_id={n_chunks}"), ignore_errors=True
-        )
+    # against the final history (recomputed from committed state and
+    # committed like any batch)
+    def flush() -> Publish:
         left = read_pending(n_chunks - 1)
-        if left is not None:
-            _enrich(
-                read_history(spark, hist), left, lookup_bin_seconds,
-            ).write.mode("overwrite").parquet(
-                os.path.join(out, f"batch_id={n_chunks}")
-            )
-        open(flush_marker, "w").close()
+        return Publish([] if left is None else [overwrite(
+            _enrich(read_history(spark, hist), left, lookup_bin_seconds),
+            partition_dir(out, n_chunks),
+        )])
 
-    parts = [
-        e.name for e in os.scandir(out)
-        if e.name.startswith("batch_id=")
-    ] if os.path.isdir(out) else []
-    if not parts:
-        return spark.createDataFrame([], OUT_SCHEMA + ", batch_id long")
-    return (
-        spark.read.schema(OUT_SCHEMA + ", batch_id int")
-        .option("basePath", out)
-        .parquet(*(os.path.join(out, p) for p in parts))
-        .select(
-            "probe_id", "probe_ts", "key", "dim_value", "dim_op_id",
-            F.col("batch_id").cast("long").alias("batch_id"),
-        )
+    commit.run(n_chunks, flush, suffix="-flush")
+    return read_back(spark, out, OUT_SCHEMA + ", batch_id long").select(
+        "probe_id", "probe_ts", "key", "dim_value", "dim_op_id", "batch_id"
     )
 
 

@@ -37,9 +37,8 @@ sibling module makes at drop boundaries):
     5. EMIT:    pending windows with window_end <= W_k leave the store
                 tagged batch_id = k; whatever survives the final batch
                 flushes as batch_id = n_chunks;
-    6. PUBLISH: out/batch-k + wm/batch-k.json + marker LAST (the
-                sibling-module crash contract: replays of committed
-                batches no-op, a mid-batch crash scrubs and recomputes).
+    6. PUBLISH: out/batch-k + pending/batch-k + wm/batch-k.json under
+                the batch_commit protocol.
 
 Why this is the behavior that matters: with the plain min-combine, one
 idle source freezes W at its last timestamp and EVERY window emits only
@@ -74,9 +73,7 @@ active-set min-combine, and emission batches, relationally.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,12 +83,17 @@ from flink_kafka_table_api_spark.streaming.chunk_stats import (
     ChunkStats,
     stat_group_max,
 )
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    overwrite,
+    read_version,
+)
 from flink_kafka_table_api_spark.streaming.late_data import (
-    run_concurrently,
     stage_chunked_by,
     ts_shift,
 )
-from flink_kafka_table_api_spark.caching import replan_cached_plans
 
 _PENDING_SCHEMA = (
     "source string, window_start timestamp, window_end timestamp, "
@@ -141,7 +143,6 @@ def stream_idle_watermark(
     value_col: str = "value",
     chunk_col: str = "__chunk",
     idleness: bool = True,
-    keep_versions: int = 3,
 ) -> DataFrame:
     """Tumbling per-(source, window) aggregation of a multi-source
     stream under per-source watermarks with idle-source exclusion.
@@ -171,32 +172,13 @@ def stream_idle_watermark(
     )
     out_dir = os.path.join(state_dir, "out")
     pend_dir = os.path.join(state_dir, "pending")
-    wm_dir = os.path.join(state_dir, "wm")
-    marker_dir = os.path.join(state_dir, "commits")
+    commit = BatchCommit(
+        state_dir, scoped=(out_dir, pend_dir), versioned=(pend_dir,),
+        meta_dir=os.path.join(state_dir, "wm"),
+    )
 
-    def _meta_after(batch_id: int) -> dict:
-        p = os.path.join(wm_dir, f"batch-{batch_id}.json")
-        if batch_id < 0 or not os.path.exists(p):
-            return {"watermark": None, "max_seen": {}}
-        return json.load(open(p))
-
-    def _pending_after(batch_id: int) -> DataFrame:
-        p = os.path.join(pend_dir, f"batch-{batch_id}")
-        if batch_id < 0 or not os.path.isdir(p):
-            return spark.createDataFrame([], _PENDING_SCHEMA)
-        return spark.read.schema(_PENDING_SCHEMA).parquet(p)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        os.makedirs(wm_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replay of a committed batch: no-op
-        for d in (out_dir, pend_dir):
-            shutil.rmtree(
-                os.path.join(d, f"batch-{batch_id}"), ignore_errors=True
-            )
-        prev = _meta_after(batch_id - 1)
+    def process(batch: DataFrame, batch_id: int) -> Publish:
+        prev = commit.meta(batch_id - 1, {"watermark": None, "max_seen": {}})
         admitted = (
             batch if prev["watermark"] is None
             else batch.filter(F.col("ts") > F.lit(prev["watermark"])
@@ -232,7 +214,7 @@ def stream_idle_watermark(
             wm = cand if wm is None else max(wm, cand)
         # 4. MERGE — order-free decimal partials into the pending store
         merged = merge_pending(
-            _pending_after(batch_id - 1),
+            read_version(spark, pend_dir, batch_id - 1, _PENDING_SCHEMA),
             window_partials(admitted, window),
         ).persist()
         # 5. EMIT / CARRY split on the new watermark
@@ -247,59 +229,22 @@ def stream_idle_watermark(
                           .cast("timestamp"))
             if wm is not None else merged
         )
-        # both writes are independent splits of the persisted merged
-        # frame to DISTINCT paths — overlapped (guide §2.6; the marker
-        # still follows both)
-        run_concurrently(
-            lambda: ready
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch-{batch_id}")),
-            lambda: carry.write.mode("overwrite").parquet(
-                os.path.join(pend_dir, f"batch-{batch_id}")
+        return Publish([
+            overwrite(
+                ready.withColumn("batch_id", F.lit(batch_id).cast("long")),
+                batch_dir(out_dir, batch_id),
             ),
-        )
-        # 6. PUBLISH — meta, then the marker as the commit point
-        json.dump(
-            {"watermark": wm, "max_seen": max_seen},
-            open(os.path.join(wm_dir, f"batch-{batch_id}.json"), "w"),
-        )
-        merged.unpersist()
-        open(marker, "w").close()
-        old = batch_id - keep_versions
-        if old >= 0:
-            shutil.rmtree(os.path.join(pend_dir, f"batch-{old}"),
-                          ignore_errors=True)
+            overwrite(carry, batch_dir(pend_dir, batch_id)),
+        ], meta={"watermark": wm, "max_seen": max_seen}, release=[merged])
 
-    stream = (
-        spark.readStream
-        .schema("source string, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    emitted = commit.drain(
+        spark, src, "source string, ts timestamp, value double", process,
+        out_dir, _PENDING_SCHEMA + ", batch_id long",
     )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # terminal flush: windows the watermark never passed
-    last = max(
-        (int(e.name[len("batch-"):])
-         for e in os.scandir(os.path.join(state_dir, "commits"))),
-        default=-1,
-    )
-    flush = _pending_after(last).withColumn(
-        "batch_id", F.lit(n_chunks).cast("long")
-    )
-    emitted = (
-        spark.read.schema(_PENDING_SCHEMA + ", batch_id long")
-        .option("recursiveFileLookup", "true").parquet(out_dir)
-        if os.path.isdir(out_dir) else
-        spark.createDataFrame([], _PENDING_SCHEMA + ", batch_id long")
-    )
+    flush = read_version(
+        spark, pend_dir, commit.last(), _PENDING_SCHEMA
+    ).withColumn("batch_id", F.lit(n_chunks).cast("long"))
     return emitted.unionByName(flush).select(
         "source", "window_start", "window_end", "n_events",
         F.col("sum_value").cast("double").alias("sum_value"),

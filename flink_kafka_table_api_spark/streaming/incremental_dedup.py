@@ -16,15 +16,9 @@ delta deduped against everything already ingested WITHOUT rescanning it):
     3. exact-Jaccard verify candidate pairs (new doc text vs indexed doc
        text, via the doc store);
     4. publish flagged pairs / the new docs' bands + texts into
-       BATCH-SCOPED state directories, then mark the batch indexed.
-
-Crash safety / exactly-once: every side effect of a batch is an overwrite
-of a `batch-N` directory (or the `indexed/batch-N` marker, written LAST).
-A replay of a fully-indexed batch is a no-op (marker check); a replay
-after a mid-batch crash first scrubs the batch's partial directories and
-recomputes them from identical inputs — the accumulated index it reads
-contains only fully or partially published EARLIER batches, never its own
-partial output.
+       BATCH-SCOPED state directories under the batch_commit protocol
+       (marker `indexed/batch-N`) — the accumulated index a replay reads
+       holds only EARLIER batches, never its own partial output.
 
 Cap semantics vs the single-pass batch oracle: the cap engages on the
 occupancy a bucket has reached AT DETECTION TIME. A bucket that crosses
@@ -42,7 +36,6 @@ per doc, bucket-keyed so step 2 prunes. Batches also self-dedup
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,7 +47,13 @@ from flink_kafka_table_api_spark.operators.dedup import (
     minhash_signatures,
     shingles,
 )
-from flink_kafka_table_api_spark.streaming.late_data import run_concurrently
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    has_data,
+    overwrite,
+)
 
 
 class IncrementalDedup:
@@ -79,6 +78,10 @@ class IncrementalDedup:
         self.docs_path = os.path.join(state_dir, "doc_store")
         self.matches_path = os.path.join(state_dir, "matches")
         self.marker_dir = os.path.join(state_dir, "indexed")
+        self.commit = BatchCommit(
+            state_dir, marker_dir=self.marker_dir,
+            scoped=(self.bands_path, self.docs_path, self.matches_path),
+        )
         self.num_hashes = num_hashes
         self.bands = bands
         self.rows_per_band = rows_per_band
@@ -89,27 +92,6 @@ class IncrementalDedup:
         self.capture_plans = capture_plans
         self.last_candidate_plan: str | None = None
 
-    # -- batch-scoped state layout -------------------------------------
-    @staticmethod
-    def _part(table_path: str, batch_id: int) -> str:
-        return os.path.join(table_path, f"batch-{batch_id}")
-
-    @staticmethod
-    def _has_parts(table_path: str) -> bool:
-        """True iff any batch directory holds an actual parquet data
-        file — an all-empty batch (e.g. zero matches) writes a directory
-        with only a _SUCCESS marker, which parquet schema inference
-        cannot read."""
-        if not os.path.isdir(table_path):
-            return False
-        for root, _dirs, files in os.walk(table_path):
-            if any(
-                f.endswith(".parquet") and not f.startswith(("_", "."))
-                for f in files
-            ):
-                return True
-        return False
-
     @staticmethod
     def _read_parts(
         spark: SparkSession, table_path: str, template: DataFrame
@@ -118,7 +100,7 @@ class IncrementalDedup:
         frame when none hold data yet). recursiveFileLookup keeps the
         state schema identical to what each batch wrote — no
         partition-column surprises for downstream unions."""
-        if not IncrementalDedup._has_parts(table_path):
+        if not has_data(table_path):
             return template.limit(0)
         # explicit schema (the template's own): skips the per-call footer
         # schema inference — a driver-side file read per micro-batch that
@@ -131,18 +113,8 @@ class IncrementalDedup:
         )
 
     def is_indexed(self, batch_id: int) -> bool:
-        """True iff process_batch fully published this batch (marker is
-        the LAST write of a batch — the replay no-op signal)."""
-        return os.path.exists(
-            os.path.join(self.marker_dir, f"batch-{batch_id}")
-        )
-
-    def _scrub(self, batch_id: int) -> None:
-        """Remove this batch's (necessarily partial — its marker is
-        absent) state directories so a post-crash replay recomputes them
-        from a clean slate and never reads its own half-written output."""
-        for t in (self.bands_path, self.docs_path, self.matches_path):
-            shutil.rmtree(self._part(t, batch_id), ignore_errors=True)
+        """True iff process_batch fully published this batch."""
+        return self.commit.committed(batch_id)
 
     def _new_bands(self, batch: DataFrame) -> DataFrame:
         sigs = minhash_signatures(
@@ -179,9 +151,9 @@ class IncrementalDedup:
         )
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        if self.is_indexed(batch_id):
-            return  # replayed after recovery: already fully published
-        self._scrub(batch_id)
+        self.commit.run(batch_id, lambda: self._index(batch, batch_id))
+
+    def _index(self, batch: DataFrame, batch_id: int) -> Publish:
         spark = batch.sparkSession
         batch = batch.select("doc_id", "text").persist()
         # lazy persist: the concurrent publishes below materialize both
@@ -281,33 +253,16 @@ class IncrementalDedup:
             self.last_candidate_plan = (
                 cand._jdf.queryExecution().executedPlan().toString()
             )
-        # publish: batch-scoped overwrites, marker LAST (the commit
-        # point). The three writes are independent DAGs over the two
-        # persisted frames and DISTINCT paths — overlapped so the batch
-        # pays the slowest write, not the sum (guide §2.6; the marker
-        # still follows ALL of them)
-        run_concurrently(
-            lambda: matches.write.mode("overwrite").parquet(
-                self._part(self.matches_path, batch_id)
-            ),
-            lambda: new_bands.write.mode("overwrite").parquet(
-                self._part(self.bands_path, batch_id)
-            ),
-            lambda: batch.write.mode("overwrite").parquet(
-                self._part(self.docs_path, batch_id)
-            ),
-        )
-        cand.unpersist()
-        sh.unpersist()
-        new_bands.unpersist()
-        batch.unpersist()
-        os.makedirs(self.marker_dir, exist_ok=True)
-        open(os.path.join(self.marker_dir, f"batch-{batch_id}"), "w").close()
+        return Publish([
+            overwrite(matches, batch_dir(self.matches_path, batch_id)),
+            overwrite(new_bands, batch_dir(self.bands_path, batch_id)),
+            overwrite(batch, batch_dir(self.docs_path, batch_id)),
+        ], release=[cand, sh, new_bands, batch])
 
     def matches(self, spark) -> DataFrame:
         if not os.path.isdir(self.matches_path):
             raise FileNotFoundError("no batches processed yet")
-        if not self._has_parts(self.matches_path):
+        if not has_data(self.matches_path):
             # batches ran but every one was match-free: typed empty frame
             return spark.createDataFrame(
                 [], "a long, b long, jaccard double, batch_id int"

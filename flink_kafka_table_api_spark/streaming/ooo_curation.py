@@ -45,11 +45,9 @@ finalizes. Docs above the terminal watermark stay buffered (in state,
 unpacked) — exactly like unemitted streaming windows; a longer-running
 stream finalizes them on the next drop.
 
-Crash safety: the curation_pipeline.py recipe verbatim — every batch
-side effect is a batch-scoped overwrite (packed/batch-N,
-offsets/batch-N.json carrying {token_total, watermark, max_seen}, the
-dedup state) published before a last-written marker; replays of
-committed batches are no-ops, mid-batch crashes scrub and recompute.
+Crash safety: the batch_commit protocol, as in curation_pipeline.py —
+packed/batch-N, offsets/batch-N.json carrying {token_total, watermark,
+max_seen} and the nested dedup state are all batch-scoped.
 
 At 100 TB: admission/finalization are O(batch) id comparisons against
 two scalars; the only joins are the dedup bucket-join (capped) and the
@@ -60,9 +58,7 @@ lateness horizon) — bounded by horizon width, not corpus age.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,6 +67,12 @@ from pyspark.sql import Observation
 
 from flink_kafka_table_api_spark.operators.curation import pack_sequences
 from flink_kafka_table_api_spark.operators.text import quality_score_col
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    overwrite,
+)
 from flink_kafka_table_api_spark.streaming.incremental_dedup import (
     IncrementalDedup,
 )
@@ -79,7 +81,6 @@ from flink_kafka_table_api_spark.streaming.chunk_stats import (
     stat_max,
     stat_min,
 )
-from flink_kafka_table_api_spark.caching import replan_cached_plans
 from flink_kafka_table_api_spark.streaming.late_data import stage_chunked_by
 
 
@@ -120,30 +121,17 @@ def stream_curate_pack_ooo(
     all_rows = [r for rows in stats.by_file.values() for r in rows]
     global_min = stat_min(all_rows, "mn")
     sink = os.path.join(state_dir, "packed")
-    marker_dir = os.path.join(state_dir, "commits")
-    offsets_dir = os.path.join(state_dir, "offsets")
+    commit = BatchCommit(
+        state_dir, scoped=(sink,), meta_dir=os.path.join(state_dir, "offsets")
+    )
     inc = IncrementalDedup(
         os.path.join(state_dir, "dedup"),
         threshold=threshold, portable=portable,
     )
+    no_meta = {"token_total": 0, "watermark": None, "max_seen": None}
 
-    def meta_after(batch_id: int) -> dict:
-        if batch_id < 0:
-            return {"token_total": 0, "watermark": None, "max_seen": None}
-        return json.load(
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"))
-        )
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        os.makedirs(offsets_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replayed after recovery: already merged
-        shutil.rmtree(
-            os.path.join(sink, f"batch-{batch_id}"), ignore_errors=True
-        )
-        prev = meta_after(batch_id - 1)
+    def process(batch: DataFrame, batch_id: int) -> Publish:
+        prev = commit.meta(batch_id - 1, no_meta)
         wm_prev = prev["watermark"]
         batch = batch.select("doc_id", "text")
         # 1) admit: too-late rows (id at/below the watermark) drop here,
@@ -221,41 +209,18 @@ def stream_curate_pack_ooo(
             id_bounds=bounds,
         )
         obs = Observation()
-        packed.observe(obs, F.sum("n_tokens").alias("t")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(sink, f"batch-{batch_id}"))
-        new_tokens = obs.get["t"] or 0
-        json.dump(
-            {
-                "token_total": int(prev["token_total"] + new_tokens),
+        return Publish(
+            [overwrite(packed.observe(obs, F.sum("n_tokens").alias("t")),
+                       batch_dir(sink, batch_id))],
+            meta=lambda: {
+                "token_total": int(prev["token_total"] + (obs.get["t"] or 0)),
                 "watermark": new_wm,
                 "max_seen": None if max_seen is None else int(max_seen),
             },
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"), "w"),
+            release=[kept],
         )
-        kept.unpersist()
-        open(marker, "w").close()
 
-    schema = "doc_id long, text string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not IncrementalDedup._has_parts(sink):
-        return spark.createDataFrame(
-            [], "doc_id long, n_tokens long, seq_id long"
-        )
-    return (
-        spark.read.schema("doc_id long, n_tokens long, seq_id long")
-        .option("recursiveFileLookup", "true").parquet(sink)
-        .select("doc_id", "n_tokens", "seq_id")
+    return commit.drain(
+        spark, src, "doc_id long, text string", process,
+        out=sink, out_schema="doc_id long, n_tokens long, seq_id long",
     )

@@ -49,17 +49,13 @@ out-of-orderness buffer (pending). State is bounded by range + lateness
 horizon width — never by stream age. Per-batch cost: ONE keyed window
 over O(batch + context) rows.
 
-Crash safety: the sibling-module recipe verbatim — every side effect is
-a batch-scoped write (emitted/batch-k, context/batch-k, pending/batch-k,
-offsets/batch-k.json) published before a last-written marker; replays
-of committed batches are no-ops, mid-batch crashes scrub and recompute.
+Crash safety: the batch_commit protocol over emitted/batch-k,
+context/batch-k, pending/batch-k and offsets/batch-k.json.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -70,15 +66,35 @@ from flink_kafka_table_api_spark.streaming.chunk_stats import (
     ChunkStats,
     stat_max,
 )
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    overwrite,
+    read_version,
+)
 from flink_kafka_table_api_spark.streaming.late_data import (
-    run_concurrently,
     stage_chunked_by,
     ts_shift,
 )
-from flink_kafka_table_api_spark.caching import replan_cached_plans
 
 ROW_COLUMNS = ["row_id", "ts", "key", "value"]
 _SCHEMA = "row_id long, ts timestamp, key long, value double"
+_NO_META = {"watermark": None, "max_seen": None}
+
+
+def _commit(state_dir: str) -> tuple[BatchCommit, str, str, str]:
+    """Both frames' layout: the emitted result sink (kept whole) plus the
+    context and pending state tails (pruned to KEEP_VERSIONS)."""
+    emitted, context, pending = (
+        os.path.join(state_dir, d) for d in ("emitted", "context", "pending")
+    )
+    commit = BatchCommit(
+        state_dir, scoped=(emitted, context, pending),
+        versioned=(context, pending),
+        meta_dir=os.path.join(state_dir, "offsets"),
+    )
+    return commit, emitted, context, pending
 
 
 def over_range_agg(
@@ -179,7 +195,6 @@ def stream_over_agg(
     delay: str,
     range_seconds: int,
     chunk_col: str = "__chunk",
-    keep_versions: int = 3,
 ) -> DataFrame:
     """Run the event-time OVER aggregation over `rows_chunked`
     (row_id, ts, key, value, `chunk_col`) staged as `n_chunks`
@@ -195,43 +210,17 @@ def stream_over_agg(
     # watermark-advance maxima ride ONE staging-time job instead of one
     # agg job per micro-batch (chunk_stats.py; guide §1.2)
     stats = ChunkStats(spark, src, _SCHEMA, {"mx": F.max("ts")})
-    emitted_dir = os.path.join(state_dir, "emitted")
-    context_dir = os.path.join(state_dir, "context")
-    pending_dir = os.path.join(state_dir, "pending")
-    marker_dir = os.path.join(state_dir, "commits")
-    offsets_dir = os.path.join(state_dir, "offsets")
+    commit, emitted_dir, context_dir, pending_dir = _commit(state_dir)
 
-    def meta_after(batch_id: int) -> dict:
-        if batch_id < 0:
-            return {"watermark": None, "max_seen": None}
-        return json.load(
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"))
-        )
-
-    def _read_or_empty(path: str) -> DataFrame:
-        if os.path.isdir(path):
-            # explicit schema: no per-batch footer inference job
-            return spark.read.schema(_SCHEMA).parquet(path)
-        return spark.createDataFrame([], _SCHEMA)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        os.makedirs(offsets_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replayed after recovery: already emitted
-        for d in (emitted_dir, context_dir, pending_dir):
-            shutil.rmtree(
-                os.path.join(d, f"batch-{batch_id}"), ignore_errors=True
-            )
-        prev = meta_after(batch_id - 1)
+    def process(batch: DataFrame, batch_id: int) -> Publish:
+        prev = commit.meta(batch_id - 1, _NO_META)
         batch = batch.select(*ROW_COLUMNS)
         admitted = (
             batch if prev["watermark"] is None
             else batch.filter(F.col("ts") > prev["watermark"])
         )
-        live = _read_or_empty(
-            os.path.join(pending_dir, f"batch-{batch_id - 1}")
+        live = read_version(
+            spark, pending_dir, batch_id - 1, _SCHEMA
         ).unionByName(admitted)
         # advance the watermark from everything SEEN (sidecar; in-batch
         # aggregate only if this batch's files don't resolve)
@@ -257,9 +246,7 @@ def stream_over_agg(
             live.limit(0) if new_wm is None
             else live.filter(F.col("ts") > new_wm)
         )
-        context = _read_or_empty(
-            os.path.join(context_dir, f"batch-{batch_id - 1}")
-        )
+        context = read_version(spark, context_dir, batch_id - 1, _SCHEMA)
         # ONE banded (key, bin) window over emit + context; only emit
         # rows leave (the shared skew-safe shape — see over_range_agg)
         scope = emit.withColumn("__ctx", F.lit(False)).unionByName(
@@ -275,54 +262,15 @@ def stream_over_agg(
         if new_wm is not None:
             horizon = ts_shift(new_wm, f"{range_seconds} seconds")
             new_context = new_context.filter(F.col("ts") > horizon)
-        # three independent DAGs over the persisted live frame to
-        # DISTINCT paths — overlapped so the batch pays the slowest
-        # write, not the sum (guide §2.6; marker still follows all)
-        run_concurrently(
-            lambda: out.write.mode("overwrite").parquet(
-                os.path.join(emitted_dir, f"batch-{batch_id}")
-            ),
-            lambda: new_context.write.mode("overwrite").parquet(
-                os.path.join(context_dir, f"batch-{batch_id}")
-            ),
-            lambda: pending.write.mode("overwrite").parquet(
-                os.path.join(pending_dir, f"batch-{batch_id}")
-            ),
-        )
-        json.dump(
-            {"watermark": new_wm, "max_seen": max_seen},
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"), "w"),
-        )
-        live.unpersist()
-        open(marker, "w").close()
-        # bounded state tails (emitted batch dirs are the result sink
-        # and stay)
-        old = batch_id - keep_versions
-        if old >= 0:
-            for d in (context_dir, pending_dir):
-                shutil.rmtree(
-                    os.path.join(d, f"batch-{old}"), ignore_errors=True
-                )
+        return Publish([
+            overwrite(out, batch_dir(emitted_dir, batch_id)),
+            overwrite(new_context, batch_dir(context_dir, batch_id)),
+            overwrite(pending, batch_dir(pending_dir, batch_id)),
+        ], meta={"watermark": new_wm, "max_seen": max_seen}, release=[live])
 
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not os.path.isdir(emitted_dir):
-        return spark.createDataFrame(
-            [], _SCHEMA + ", n_win long, sum_win double"
-        )
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        emitted_dir
+    return commit.drain(
+        spark, src, _SCHEMA, process,
+        emitted_dir, _SCHEMA + ", n_win long, sum_win double",
     )
 
 
@@ -366,7 +314,6 @@ def stream_over_rows_agg(
     delay: str,
     n_preceding: int,
     chunk_col: str = "__chunk",
-    keep_versions: int = 3,
 ) -> DataFrame:
     """The ROWS-frame twin of :func:`stream_over_agg`: every row
     finalized by the terminal watermark carries COUNT/SUM over its key's
@@ -378,43 +325,17 @@ def stream_over_rows_agg(
     )
     ckpt = os.path.join(state_dir, "ckpt")
     stats = ChunkStats(spark, src, _SCHEMA, {"mx": F.max("ts")})
-    emitted_dir = os.path.join(state_dir, "emitted")
-    context_dir = os.path.join(state_dir, "context")
-    pending_dir = os.path.join(state_dir, "pending")
-    marker_dir = os.path.join(state_dir, "commits")
-    offsets_dir = os.path.join(state_dir, "offsets")
+    commit, emitted_dir, context_dir, pending_dir = _commit(state_dir)
 
-    def meta_after(batch_id: int) -> dict:
-        if batch_id < 0:
-            return {"watermark": None, "max_seen": None}
-        return json.load(
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"))
-        )
-
-    def _read_or_empty(path: str) -> DataFrame:
-        if os.path.isdir(path):
-            # explicit schema: no per-batch footer inference job
-            return spark.read.schema(_SCHEMA).parquet(path)
-        return spark.createDataFrame([], _SCHEMA)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        os.makedirs(offsets_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replayed after recovery: already emitted
-        for d in (emitted_dir, context_dir, pending_dir):
-            shutil.rmtree(
-                os.path.join(d, f"batch-{batch_id}"), ignore_errors=True
-            )
-        prev = meta_after(batch_id - 1)
+    def process(batch: DataFrame, batch_id: int) -> Publish:
+        prev = commit.meta(batch_id - 1, _NO_META)
         batch = batch.select(*ROW_COLUMNS)
         admitted = (
             batch if prev["watermark"] is None
             else batch.filter(F.col("ts") > prev["watermark"])
         )
-        live = _read_or_empty(
-            os.path.join(pending_dir, f"batch-{batch_id - 1}")
+        live = read_version(
+            spark, pending_dir, batch_id - 1, _SCHEMA
         ).unionByName(admitted)
         srows = stats.for_batch(ckpt, batch_id)
         batch_max = (
@@ -438,9 +359,7 @@ def stream_over_rows_agg(
             live.limit(0) if new_wm is None
             else live.filter(F.col("ts") > new_wm)
         )
-        context = _read_or_empty(
-            os.path.join(context_dir, f"batch-{batch_id - 1}")
-        )
+        context = read_version(spark, context_dir, batch_id - 1, _SCHEMA)
         scope = emit.withColumn("__ctx", F.lit(False)).unionByName(
             context.withColumn("__ctx", F.lit(True))
         )
@@ -473,49 +392,13 @@ def stream_over_rows_agg(
             .filter(F.col("__rn") <= n_preceding)
             .drop("__rn")
         )
-        # overlapped batch-scoped publishes (guide §2.6), as in the
-        # RANGE variant
-        run_concurrently(
-            lambda: out.write.mode("overwrite").parquet(
-                os.path.join(emitted_dir, f"batch-{batch_id}")
-            ),
-            lambda: new_context.write.mode("overwrite").parquet(
-                os.path.join(context_dir, f"batch-{batch_id}")
-            ),
-            lambda: pending.write.mode("overwrite").parquet(
-                os.path.join(pending_dir, f"batch-{batch_id}")
-            ),
-        )
-        json.dump(
-            {"watermark": new_wm, "max_seen": max_seen},
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"), "w"),
-        )
-        live.unpersist()
-        open(marker, "w").close()
-        old = batch_id - keep_versions
-        if old >= 0:
-            for d in (context_dir, pending_dir):
-                shutil.rmtree(
-                    os.path.join(d, f"batch-{old}"), ignore_errors=True
-                )
+        return Publish([
+            overwrite(out, batch_dir(emitted_dir, batch_id)),
+            overwrite(new_context, batch_dir(context_dir, batch_id)),
+            overwrite(pending, batch_dir(pending_dir, batch_id)),
+        ], meta={"watermark": new_wm, "max_seen": max_seen}, release=[live])
 
-    stream = (
-        spark.readStream.schema(_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not os.path.isdir(emitted_dir):
-        return spark.createDataFrame(
-            [], _SCHEMA + ", n_win long, sum_win double"
-        )
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        emitted_dir
+    return commit.drain(
+        spark, src, _SCHEMA, process,
+        emitted_dir, _SCHEMA + ", n_win long, sum_win double",
     )

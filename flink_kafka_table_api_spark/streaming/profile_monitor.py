@@ -8,7 +8,7 @@ without ever re-scanning the accumulated corpus. The batch profiler
 its streaming twin: every micro-batch contributes ONE narrow aggregate
 row per column (count, nulls, typed min/max, and a Datasketches HLL
 sketch of the column's values — Spark's `hll_sketch_agg`), published
-crash-safely under the round-8 marker protocol; the live profile is a
+crash-safely under the batch_commit protocol; the live profile is a
 fold over those partials in which counts SUM, ranges MIN/MAX, and
 sketches UNION (`hll_union_agg`).
 
@@ -26,16 +26,15 @@ The scale story survives intact: profile state is O(batches x columns)
 tiny rows, per-batch cost is one map-side-partial aggregate over the
 batch, and the merge never touches data rows.
 
-Per micro-batch k (foreachBatch):
-  1. SKIP if commits/batch-k exists (post-recovery replay is a no-op);
-  2. SCRUB partials/batch_id=k (a mid-batch crash recomputes cleanly);
-  3. AGGREGATE the batch once — per column: n_rows, n_null,
+Per micro-batch k (foreachBatch, batch_commit protocol):
+  1. AGGREGATE the batch once — per column: n_rows, n_null,
      min/max in the column's own type (doubles for numerics, ISO-format
      strings for timestamps/strings — both orderings engine-portable),
      hll_sketch_agg over a portable representation (longs stay longs,
      timestamps as unix micros, doubles/strings as strings);
-  4. PUBLISH one row per column into partials/ partitioned by batch_id;
-  5. MARKER last.
+  2. PUBLISH one row per column into partials/ partitioned by batch_id
+     (the partials/batch_id=k scrub makes a mid-batch crash recompute
+     cleanly).
 
 The profile readout (`profile_of`) is deterministic and — except for
 the sketch estimate, which carries the HLL++ accuracy contract instead —
@@ -47,13 +46,16 @@ tolerance boolean (the `approx_distinct` precedent).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    has_data,
+)
 from flink_kafka_table_api_spark.streaming.late_data import stage_chunked_by
-from flink_kafka_table_api_spark.caching import replan_cached_plans
 
 # (column, kind): kind drives the min/max type and the sketch input
 # representation. Kinds: "long" | "double" | "string" | "ts".
@@ -173,44 +175,21 @@ def stream_profile(
         chunk_col=chunk_col, n_chunks=n_chunks, columns=columns,
     )
     partials_dir = os.path.join(state_dir, "partials")
-    marker_dir = os.path.join(state_dir, "commits")
-    schema = rows_chunked.select(*columns).schema
+    commit = BatchCommit(state_dir, partitioned=(partials_dir,))
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return
-        shutil.rmtree(
-            os.path.join(partials_dir, f"batch_id={batch_id}"),
-            ignore_errors=True,
-        )
-        (
-            _batch_partials(batch, spec)
+    def process(batch: DataFrame, batch_id: int) -> Publish:
+        return Publish([
+            lambda: _batch_partials(batch, spec)
             .withColumn("batch_id", F.lit(batch_id))
             .write.mode("append")
             .partitionBy("batch_id")
             .parquet(partials_dir)
-        )
-        open(marker, "w").close()
+        ])
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    commit.drain(
+        spark, src, rows_chunked.select(*columns).schema, process
     )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", os.path.join(state_dir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    if not os.path.isdir(partials_dir) or not any(
-        e.name.startswith("batch_id=") for e in os.scandir(partials_dir)
-    ):
+    if not has_data(partials_dir):
         return spark.createDataFrame(
             [], "column string, n_rows long, n_null long, min_num double, "
             "max_num double, min_str string, max_str string, "

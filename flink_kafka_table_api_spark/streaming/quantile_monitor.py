@@ -14,8 +14,7 @@ cumulative histogram, and the accuracy contract is explicit — the
 reported quantile is the lower edge of the selected bin, correct to one
 bin width (which is also emitted, so the consumer knows the error bar).
 
-  per micro-batch k (foreachBatch, marker-committed — the sibling
-  recipe):
+  per micro-batch k (foreachBatch, batch_commit protocol):
     1. CALIBRATE (batch 0 only): [lo, hi] = the first drop's min/max;
        bin width w = (hi - lo) / n_bins, carried in the offsets json.
        Later values OUTSIDE the calibrated range clamp into the edge
@@ -34,7 +33,7 @@ bin width (which is also emitted, so the consumer knows the error bar).
        selected bin = first bin whose cumulative count reaches it;
        one row (batch_id, q, n_seen, bin_idx, q_lo = lo + bin * w,
        bin_width) per quantile per batch — the monitor's time series;
-    5. PUBLISH hist/batch-k + out/batch-k + offsets, marker LAST.
+    5. PUBLISH hist/batch-k + out/batch-k + offsets/batch-k.json.
 
 At 100 TB: state is n_bins longs regardless of stream age; the
 per-batch work is one narrow scan into a 64-cell aggregate; the merge
@@ -49,10 +48,9 @@ inputs, so the oracle is full-value with NO tolerance needed.
 
 from __future__ import annotations
 
-import json
 import math
 import os
-import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,8 +60,14 @@ from flink_kafka_table_api_spark.streaming.chunk_stats import (
     stat_max,
     stat_min,
 )
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    overwrite,
+    read_version,
+)
 from flink_kafka_table_api_spark.streaming.late_data import stage_chunked_by
-from flink_kafka_table_api_spark.caching import replan_cached_plans
 
 _HIST_SCHEMA = "bin int, n long"
 _OUT_SCHEMA = (
@@ -82,7 +86,6 @@ def stream_quantile_monitor(
     quantiles: tuple[float, ...] = (0.5, 0.9, 0.99),
     value_col: str = "value",
     chunk_col: str = "__chunk",
-    keep_versions: int = 3,
 ) -> DataFrame:
     """Monitor rank statistics of `value_col` over `n_chunks` drops:
     per batch, fold the drop into the carried fixed-bin histogram and
@@ -110,29 +113,19 @@ def stream_quantile_monitor(
     binned: dict[str, ChunkStats] = {}
     out_dir = os.path.join(state_dir, "out")
     hist_dir = os.path.join(state_dir, "hist")
-    meta_dir = os.path.join(state_dir, "offsets")
-    marker_dir = os.path.join(state_dir, "commits")
-
-    def _meta_after(batch_id: int) -> dict | None:
-        p = os.path.join(meta_dir, f"batch-{batch_id}.json")
-        if batch_id < 0 or not os.path.exists(p):
-            return None
-        return json.load(open(p))
-
-    def _hist_after(batch_id: int) -> DataFrame:
-        p = os.path.join(hist_dir, f"batch-{batch_id}")
-        if batch_id < 0 or not os.path.isdir(p):
-            return spark.createDataFrame([], _HIST_SCHEMA)
-        return spark.read.schema(_HIST_SCHEMA).parquet(p)
+    commit = BatchCommit(
+        state_dir, scoped=(out_dir, hist_dir), versioned=(hist_dir,),
+        meta_dir=os.path.join(state_dir, "offsets"),
+    )
 
     def _hist_cells_after(batch_id: int) -> dict[int, int]:
         """Driver-side histogram state read (n_bins longs — pyarrow,
         no Spark job); reads Spark-written state from older runs too."""
         import pyarrow.parquet as pq
 
-        p = os.path.join(hist_dir, f"batch-{batch_id}")
+        p = batch_dir(hist_dir, batch_id)
         cells: dict[int, int] = {}
-        if batch_id < 0 or not os.path.isdir(p):
+        if not os.path.isdir(p):
             return cells
         for e in sorted(os.scandir(p), key=lambda e: e.name):
             if not e.name.endswith(".parquet") or e.name.startswith(
@@ -153,14 +146,25 @@ def stream_quantile_monitor(
             F.lit(n_bins - 1),
         ).cast("int")
 
-    def _emit_and_publish(
-        batch_id: int, meta: dict, cells: list, marker: str,
-        write_hist_arrow: bool,
-    ) -> None:
-        """Shared tail of both paths: rank selection, the |quantiles|-row
-        Arrow emission, state + meta + marker publishes."""
-        import pyarrow as pa
+    def _arrow_write(base: str, batch_id: int, table) -> Callable:
+        """Publish thunk for a tiny driver-side table — written via Arrow
+        instead of spinning a Spark job for a few rows each batch."""
         import pyarrow.parquet as pq
+
+        def write() -> None:
+            d = batch_dir(base, batch_id)
+            os.makedirs(d, exist_ok=True)
+            pq.write_table(table, os.path.join(d, "part-0.parquet"))
+
+        return write
+
+    def _emit(
+        batch_id: int, meta: dict, cells: list, hist_write: Callable,
+        release: tuple = (),
+    ) -> Publish:
+        """Shared tail of both paths: rank selection, the |quantiles|-row
+        Arrow emission, published with the histogram state and meta."""
+        import pyarrow as pa
 
         lo, w = meta["lo"], meta["w"]
         n_seen = sum(n for _, n in cells)
@@ -180,8 +184,6 @@ def stream_quantile_monitor(
                 batch_id, float(q), n_seen, int(sel),
                 lo + sel * w, float(w),
             ))
-        # |quantiles| rows: write driver-side via Arrow instead of
-        # spinning a Spark job for a 3-row DataFrame each batch
         tbl = pa.table({
             "batch_id": pa.array([r[0] for r in rows], pa.int64()),
             "q": pa.array([r[1] for r in rows], pa.float64()),
@@ -190,41 +192,13 @@ def stream_quantile_monitor(
             "q_lo": pa.array([r[4] for r in rows], pa.float64()),
             "bin_width": pa.array([r[5] for r in rows], pa.float64()),
         })
-        bdir = os.path.join(out_dir, f"batch-{batch_id}")
-        os.makedirs(bdir, exist_ok=True)
-        pq.write_table(tbl, os.path.join(bdir, "part-0.parquet"))
-        if write_hist_arrow:
-            # histogram state is n_bins longs: publish it driver-side
-            # too (typed exactly as the Spark write: bin int32, n int64)
-            hdir = os.path.join(hist_dir, f"batch-{batch_id}")
-            os.makedirs(hdir, exist_ok=True)
-            pq.write_table(
-                pa.table({
-                    "bin": pa.array([b for b, _ in cells], pa.int32()),
-                    "n": pa.array([n for _, n in cells], pa.int64()),
-                }),
-                os.path.join(hdir, "part-0.parquet"),
-            )
-        json.dump(meta, open(
-            os.path.join(meta_dir, f"batch-{batch_id}.json"), "w"
-        ))
-        open(marker, "w").close()
-        old = batch_id - keep_versions
-        if old >= 0:
-            shutil.rmtree(os.path.join(hist_dir, f"batch-{old}"),
-                          ignore_errors=True)
+        return Publish(
+            [_arrow_write(out_dir, batch_id, tbl), hist_write],
+            meta=meta, release=release,
+        )
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        os.makedirs(meta_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replay of a committed batch: no-op
-        for d in (out_dir, hist_dir):
-            shutil.rmtree(
-                os.path.join(d, f"batch-{batch_id}"), ignore_errors=True
-            )
-        meta = _meta_after(batch_id - 1)
+    def process(batch: DataFrame, batch_id: int) -> Publish:
+        meta = commit.meta(batch_id - 1, None)
         srows = stats.for_batch(ckpt, batch_id)
         if srows is not None:
             # fully driver-side batch: calibrate from the sidecar,
@@ -245,15 +219,21 @@ def stream_quantile_monitor(
                 )
             brows = binned["cs"].for_batch(ckpt, batch_id)
             if brows is not None:
+                import pyarrow as pa
+
                 merged_cells = _hist_cells_after(batch_id - 1)
                 for r in brows:
                     b = r["bin"]
                     merged_cells[b] = merged_cells.get(b, 0) + r["n"]
-                _emit_and_publish(
-                    batch_id, meta, sorted(merged_cells.items()), marker,
-                    write_hist_arrow=True,
-                )
-                return
+                cells = sorted(merged_cells.items())
+                # histogram state is n_bins longs: published driver-side
+                # too (typed exactly as the Spark write: bin int32, n int64)
+                return _emit(batch_id, meta, cells, _arrow_write(
+                    hist_dir, batch_id, pa.table({
+                        "bin": pa.array([b for b, _ in cells], pa.int32()),
+                        "n": pa.array([n for _, n in cells], pa.int64()),
+                    }),
+                ))
         # fallback: the original in-batch Spark path (unresolvable files)
         if meta is None:
             mm = batch.agg(
@@ -267,40 +247,20 @@ def stream_quantile_monitor(
             _bin_col(meta["lo"], meta["w"]).alias("bin")
         ).groupBy("bin").agg(F.count("*").cast("long").alias("n"))
         merged = (
-            _hist_after(batch_id - 1).unionByName(partial)
+            read_version(spark, hist_dir, batch_id - 1, _HIST_SCHEMA)
+            .unionByName(partial)
             .groupBy("bin").agg(F.sum("n").cast("long").alias("n"))
         ).persist()
         # bounded state: n_bins rows — the quantile read is driver-side
         # integer selection over a 64-cell list (documented bounded
         # collect, the quota.py precedent)
         cells = sorted((r["bin"], r["n"]) for r in merged.collect())
-        merged.write.mode("overwrite").parquet(
-            os.path.join(hist_dir, f"batch-{batch_id}")
-        )
-        merged.unpersist()
-        _emit_and_publish(
-            batch_id, meta, cells, marker, write_hist_arrow=False,
+        return _emit(
+            batch_id, meta, cells,
+            overwrite(merged, batch_dir(hist_dir, batch_id)),
+            release=(merged,),
         )
 
-    stream = (
-        spark.readStream
-        .schema("value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not os.path.isdir(out_dir):
-        return spark.createDataFrame([], _OUT_SCHEMA)
-    return (
-        spark.read.schema(_OUT_SCHEMA)
-        .option("recursiveFileLookup", "true").parquet(out_dir)
-        .select("batch_id", "q", "n_seen", "bin_idx", "q_lo",
-                "bin_width")
+    return commit.drain(
+        spark, src, "value double", process, out_dir, _OUT_SCHEMA
     )

@@ -22,9 +22,8 @@ Spark-first it is the round-8 foreachBatch state machine:
                the source) — seen, not kept: once a source crosses its
                budget every later doc drops anyway, and counting seen
                tokens is exactly the batch twin's prefix semantics;
-    5. PUBLISH: kept/batch-k + consumed/batch-k, marker LAST (the
-               sibling-module crash contract: replays no-op, mid-batch
-               crashes scrub and recompute).
+    5. PUBLISH: kept/batch-k + consumed/batch-k under the
+               batch_commit protocol.
 
 Because drops arrive in id order, the incremental run is BIT-EQUAL to
 one batch pass over the whole corpus in id order — which is the DuckDB
@@ -39,19 +38,20 @@ broadcast-joinable lookup.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.operators.text import token_count
-from flink_kafka_table_api_spark.streaming.late_data import (
-    run_concurrently,
-    stage_chunked_by,
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    overwrite,
+    read_version,
 )
-from flink_kafka_table_api_spark.caching import replan_cached_plans
+from flink_kafka_table_api_spark.streaming.late_data import stage_chunked_by
 
 _CONSUMED_SCHEMA = "source string, consumed long"
 
@@ -64,7 +64,6 @@ def stream_source_quota(
     n_chunks: int,
     budget: int,
     chunk_col: str = "__chunk",
-    keep_versions: int = 3,
 ) -> DataFrame:
     """Enforce a per-source token budget over `docs_chunked`
     (doc_id, source, text, `chunk_col`) staged as `n_chunks` id-ordered
@@ -78,28 +77,18 @@ def stream_source_quota(
     )
     kept_dir = os.path.join(state_dir, "kept")
     consumed_dir = os.path.join(state_dir, "consumed")
-    marker_dir = os.path.join(state_dir, "commits")
+    commit = BatchCommit(
+        state_dir, scoped=(kept_dir, consumed_dir), versioned=(consumed_dir,)
+    )
 
-    def _consumed_after(batch_id: int) -> DataFrame:
-        p = os.path.join(consumed_dir, f"batch-{batch_id}")
-        if batch_id < 0 or not os.path.isdir(p):
-            return spark.createDataFrame([], _CONSUMED_SCHEMA)
-        return spark.read.parquet(p)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replayed after recovery: already admitted
-        for d in (kept_dir, consumed_dir):
-            shutil.rmtree(
-                os.path.join(d, f"batch-{batch_id}"), ignore_errors=True
-            )
+    def process(batch: DataFrame, batch_id: int) -> Publish:
         sized = batch.select(
             "source", "doc_id",
             token_count("text").cast("long").alias("n_tokens"),
         ).persist()
-        carried = _consumed_after(batch_id - 1)
+        carried = read_version(
+            spark, consumed_dir, batch_id - 1, _CONSUMED_SCHEMA
+        )
         w = (
             Window.partitionBy("source")
             .orderBy("doc_id")
@@ -126,45 +115,15 @@ def stream_source_quota(
                  + F.coalesce(F.col("__t"), F.lit(0))).alias("consumed"),
             )
         )
-        # both publishes are independent DAGs over the persisted sized
-        # frame to DISTINCT paths — overlapped (guide §2.6; the marker
-        # still follows both)
-        run_concurrently(
-            lambda: kept.write.mode("overwrite").parquet(
-                os.path.join(kept_dir, f"batch-{batch_id}")
-            ),
-            lambda: new_consumed.write.mode("overwrite").parquet(
-                os.path.join(consumed_dir, f"batch-{batch_id}")
-            ),
-        )
-        sized.unpersist()
-        open(marker, "w").close()
-        old = batch_id - keep_versions
-        if old >= 0:
-            shutil.rmtree(
-                os.path.join(consumed_dir, f"batch-{old}"),
-                ignore_errors=True,
-            )
+        return Publish([
+            overwrite(kept, batch_dir(kept_dir, batch_id)),
+            overwrite(new_consumed, batch_dir(consumed_dir, batch_id)),
+        ], release=[sized])
 
-    stream = (
-        spark.readStream
-        .schema("doc_id long, source string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    return commit.drain(
+        spark, src, "doc_id long, source string, text string", process,
+        out=kept_dir, out_schema="source string, doc_id long, n_tokens long",
     )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", os.path.join(state_dir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not os.path.isdir(kept_dir):
-        return spark.createDataFrame(
-            [], "source string, doc_id long, n_tokens long"
-        )
-    return spark.read.option("recursiveFileLookup", "true").parquet(kept_dir)
 
 
 def load_consumed(spark: SparkSession, state_dir: str) -> DataFrame:

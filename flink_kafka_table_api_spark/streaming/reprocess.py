@@ -1,13 +1,13 @@
-"""Selective reprocessing for marker-protocol streaming state (round 8).
+"""Selective reprocessing for batch_commit streaming state (round 8).
 
-Every round-8 streaming pipeline (curation, cdc_apply, ann_ingest,
-profile_monitor, temporal_join) follows one state convention under its
-`state_dir`:
+Every foreachBatch pipeline in this package keeps its state under
+`state_dir` in the streaming/batch_commit.py layout:
 
   commits/batch-N        the exactly-once marker, written LAST
   offsets/batch-N.json   watermark/offset scalars (where applicable)
   state/batch-N          versioned keyed state (where applicable)
-  <any>/batch_id=N/      batch-scoped output/index/history partitions
+  <dir>/batch-N          batch-scoped outputs, at any depth (a nested
+  <dir>/batch_id=N/      commit such as dedup/indexed/batch-N included)
   ckpt/                  the Structured Streaming checkpoint
 
 That convention makes REPROCESSING a first-class operation instead of a
@@ -28,22 +28,28 @@ and the blast radius is exactly the batch-scoped directories removed.
 from __future__ import annotations
 
 import os
-import re
 import shutil
 
-_BATCH_DIR = re.compile(r"^batch_id=(\d+)$")
-_BATCH_FILE = re.compile(r"^batch-(\d+)(\.json)?$")
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    MARKER_DIR,
+    batch_number,
+)
 
 
 def reset_from(state_dir: str, batch_id: int) -> dict:
-    """Remove every artifact batches >= `batch_id` published under
-    `state_dir` (markers, offsets, state versions, batch-scoped
-    partition dirs) plus the streaming checkpoint, leaving batches
-    < `batch_id` untouched. Returns {kind: n_removed} for auditing."""
+    """Remove every ``batch-N``, ``batch-N.json``, ``batch-N-flush`` or
+    ``batch_id=N`` entry with N >= `batch_id` at any depth under
+    `state_dir` (batch_commit's naming rule), plus the streaming
+    checkpoint ``ckpt/``, leaving batches < `batch_id` untouched.
+    Returns {kind: n_removed} for auditing: markers, offsets and state
+    count the top-level commits/, offsets/ and state/ entries,
+    partitions the top-level ``<dir>/batch_id=N`` dirs, nested every
+    other removal (``<dir>/batch-N`` outputs, nested commits)."""
     # fail fast, before any deletion: pipelines with a versioned state
     # chain (cdc_apply, temporal_join) fold batch K onto state/batch-K-1,
-    # and keep_versions prunes old versions — resetting to a K whose
-    # basis was pruned would silently rebase the tail's merge on nothing
+    # and the version prune (batch_commit.KEEP_VERSIONS) drops old
+    # versions — resetting to a K whose basis was pruned would silently
+    # rebase the tail's merge on nothing
     state_d = os.path.join(state_dir, "state")
     if batch_id > 0 and os.path.isdir(state_d):
         have = {e.name for e in os.scandir(state_d)}
@@ -56,31 +62,28 @@ def reset_from(state_dir: str, batch_id: int) -> dict:
                 "predecessor version survives)"
             )
     removed = {"markers": 0, "offsets": 0, "state": 0,
-               "partitions": 0, "checkpoint": 0}
-    for sub, kind in (("commits", "markers"), ("offsets", "offsets"),
-                      ("state", "state")):
-        d = os.path.join(state_dir, sub)
-        if not os.path.isdir(d):
-            continue
-        for e in os.scandir(d):
-            m = _BATCH_FILE.match(e.name)
-            if m and int(m.group(1)) >= batch_id:
-                if e.is_dir():
-                    shutil.rmtree(e.path)
-                else:
-                    os.remove(e.path)
-                removed[kind] += 1
-    # batch-scoped partition dirs anywhere one level down (out/, hist/,
-    # index/, partials/, ...)
-    for e in os.scandir(state_dir):
-        if not e.is_dir() or e.name in ("commits", "offsets", "state",
-                                        "ckpt", "src", "ops", "probes"):
-            continue
-        for p in os.scandir(e.path):
-            m = _BATCH_DIR.match(p.name)
-            if m and int(m.group(1)) >= batch_id:
-                shutil.rmtree(p.path)
+               "partitions": 0, "nested": 0, "checkpoint": 0}
+    kinds = {MARKER_DIR: "markers", "offsets": "offsets", "state": "state"}
+    for root, dirs, files in os.walk(state_dir):
+        rel = os.path.relpath(root, state_dir)
+        if rel == ".":
+            dirs[:] = [d for d in dirs if d != "ckpt"]
+        for name in dirs + files:
+            n = batch_number(name)
+            if n is None or n < batch_id:
+                continue
+            path = os.path.join(root, name)
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            else:
+                os.remove(path)
+            if os.sep not in rel and rel in kinds:
+                removed[kinds[rel]] += 1
+            elif os.sep not in rel and name.startswith("batch_id="):
                 removed["partitions"] += 1
+            else:
+                removed["nested"] += 1
+        dirs[:] = [d for d in dirs if os.path.isdir(os.path.join(root, d))]
     ckpt = os.path.join(state_dir, "ckpt")
     if os.path.isdir(ckpt):
         shutil.rmtree(ckpt)

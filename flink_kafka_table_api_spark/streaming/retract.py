@@ -22,7 +22,7 @@ express it — this is exactly the query class Spark's built-in
 Structured Streaming refuses (update/complete mode cannot feed a
 downstream file sink transactionally). The Spark-first equivalent:
 
-  per micro-batch k (foreachBatch, marker-committed):
+  per micro-batch k (foreachBatch, batch_commit protocol):
     1. FOLD:  state_k = state_{k-1} ⊎ per-key batch sums — one hash
               aggregate + one keyed merge, DECIMAL(25,6) accumulation
               so totals are order-free exact (the repo-wide rule for
@@ -35,8 +35,7 @@ downstream file sink transactionally). The Spark-first equivalent:
               staying whose (total, rank) changed emit -U (old row)
               then +U (new row). N x N full-outer join of two tiny
               snapshots;
-    4. PUBLISH out/batch_id=k + state/batch-k + top/batch-k,
-       marker LAST (replay no-op, crash scrub+recompute).
+    4. PUBLISH out/batch_id=k + state/batch-k + top/batch-k.
 
 A downstream consumer that applies the changelog in (batch_id, op)
 order materializes exactly the batch Top-N — pinned by replaying the
@@ -55,16 +54,18 @@ state is (key, total), exactly Flink's ValueState per key.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.streaming.late_data import (
-    run_concurrently,
-    stage_chunked_by,
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    overwrite,
+    partition_dir,
 )
-from flink_kafka_table_api_spark.caching import replan_cached_plans
+from flink_kafka_table_api_spark.streaming.late_data import stage_chunked_by
 
 ROWS_COLUMNS = ["row_id", "key", "value"]
 STATE_SCHEMA = "key long, total decimal(25,6)"
@@ -159,7 +160,6 @@ def stream_topn_retract(
     n_chunks: int,
     n: int,
     chunk_col: str = "__chunk",
-    keep_versions: int = 3,
 ) -> DataFrame:
     """Maintain `SELECT key, SUM(value) GROUP BY key ORDER BY total
     DESC LIMIT n` over `rows_chunked` (row_id, key, value,
@@ -175,89 +175,36 @@ def stream_topn_retract(
     state = os.path.join(state_dir, "state")
     top = os.path.join(state_dir, "top")
     out = os.path.join(state_dir, "out")
-    marker_dir = os.path.join(state_dir, "commits")
+    commit = BatchCommit(
+        state_dir, scoped=(state, top), partitioned=(out,),
+        versioned=(state, top),
+    )
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replayed after recovery: already published
-        for d in (
-            os.path.join(state, f"batch-{batch_id}"),
-            os.path.join(top, f"batch-{batch_id}"),
-            os.path.join(out, f"batch_id={batch_id}"),
-        ):
-            shutil.rmtree(d, ignore_errors=True)
+    def process(batch: DataFrame, batch_id: int) -> Publish:
         # the old shape wrote state, read it back, wrote top, read THAT
         # back, then wrote the diff — three serialized jobs with two
         # parquet round-trips. The persisted frames carry the identical
         # rows (a parquet round-trip is value-preserving), so all three
-        # publishes are independent DAGs to DISTINCT paths — overlapped,
-        # the batch pays the slowest write (guide §2.6; marker last).
+        # publishes are independent DAGs to DISTINCT paths.
         merged = _fold(
-            spark, os.path.join(state, f"batch-{batch_id - 1}"),
-            _batch_sums(batch),
+            spark, batch_dir(state, batch_id - 1), _batch_sums(batch)
         ).persist()
         new_top = _topn(merged, n).persist()
-        prev_top_path = os.path.join(top, f"batch-{batch_id - 1}")
+        prev_top_path = batch_dir(top, batch_id - 1)
         prev_top = (
             spark.read.schema(TOP_SCHEMA).parquet(prev_top_path)
             if os.path.isdir(prev_top_path) else None
         )
-        run_concurrently(
-            lambda: merged.write.mode("overwrite").parquet(
-                os.path.join(state, f"batch-{batch_id}")
-            ),
-            lambda: new_top.write.mode("overwrite").parquet(
-                os.path.join(top, f"batch-{batch_id}")
-            ),
-            lambda: _diff(prev_top, new_top)
-            .write.mode("overwrite").parquet(
-                os.path.join(out, f"batch_id={batch_id}")
-            ),
-        )
-        merged.unpersist()
-        new_top.unpersist()
-        open(marker, "w").close()
-        old = batch_id - keep_versions
-        if old >= 0:
-            shutil.rmtree(
-                os.path.join(state, f"batch-{old}"), ignore_errors=True
-            )
-            shutil.rmtree(
-                os.path.join(top, f"batch-{old}"), ignore_errors=True
-            )
+        return Publish([
+            overwrite(merged, batch_dir(state, batch_id)),
+            overwrite(new_top, batch_dir(top, batch_id)),
+            overwrite(_diff(prev_top, new_top), partition_dir(out, batch_id)),
+        ], release=[merged, new_top])
 
-    stream = (
-        spark.readStream
-        .schema("row_id long, key long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", os.path.join(state_dir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    parts = [
-        e.name for e in os.scandir(out)
-        if e.name.startswith("batch_id=")
-    ] if os.path.isdir(out) else []
-    if not parts:
-        return spark.createDataFrame([], OUT_SCHEMA + ", batch_id long")
-    return (
-        spark.read.schema(OUT_SCHEMA + ", batch_id int")
-        .option("basePath", out)
-        .parquet(*(os.path.join(out, p) for p in parts))
-        .select(
-            "op", "key", "total", "rnk",
-            F.col("batch_id").cast("long").alias("batch_id"),
-        )
-    )
+    return commit.drain(
+        spark, src, "row_id long, key long, value double", process,
+        out, OUT_SCHEMA + ", batch_id long",
+    ).select("op", "key", "total", "rnk", "batch_id")
 
 
 def apply_changelog(log: DataFrame) -> DataFrame:

@@ -41,9 +41,8 @@ last-writer-wins reads:
                 rows — so a key's ops are always recoverable from its
                 latest delta alone and late-but-admitted ops splice
                 into the middle of the chain correctly;
-    4. PUBLISH: hist/batch_id=k + offsets/batch-k.json, marker LAST (replays
-                of committed batches no-op; a mid-batch crash scrubs
-                and recomputes — the curation_pipeline.py contract);
+    4. PUBLISH: hist/batch_id=k + offsets/batch-k.json under the
+                batch_commit protocol;
     5. COMPACT (every `compact_every` batches): fold the untouched
                 keys' latest rows into batch_id=k too, making it a full
                 snapshot; older deltas are then shadowed duplicates
@@ -66,13 +65,16 @@ crash-safe without a lock.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+)
 from flink_kafka_table_api_spark.streaming.cdc_apply import OPS_COLUMNS
 from flink_kafka_table_api_spark.streaming.chunk_stats import (
     ChunkStats,
@@ -82,7 +84,6 @@ from flink_kafka_table_api_spark.streaming.late_data import (
     stage_chunked_by,
     ts_shift,
 )
-from flink_kafka_table_api_spark.caching import replan_cached_plans
 
 HIST_SCHEMA = (
     "key long, op_id long, op_ts timestamp, op string, value double, "
@@ -235,46 +236,41 @@ def stream_scd2(
         },
     )
     hist = os.path.join(state_dir, "hist")
-    marker_dir = os.path.join(state_dir, "commits")
-    offsets_dir = os.path.join(state_dir, "offsets")
 
-    def meta_after(batch_id: int) -> dict:
-        if batch_id < 0:
-            return {"watermark": None, "max_seen": None}
-        return json.load(
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"))
+    def compacts(batch_id: int) -> bool:
+        return (
+            compact_every is not None and (batch_id + 1) % compact_every == 0
         )
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        os.makedirs(offsets_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replay of a committed batch: no-op
-        # crash-replay scrub: an unmarked delta is torn output
-        shutil.rmtree(os.path.join(hist, f"batch_id={batch_id}"),
-                      ignore_errors=True)
-        prev = meta_after(batch_id - 1)
+    def drop_shadowed(batch_id: int) -> None:
+        # a compaction batch's delta is a full snapshot; older deltas are
+        # shadowed duplicates — deleting them AFTER the marker is
+        # idempotent cleanup, crash-safe by construction
+        if not compacts(batch_id):
+            return
+        for e in os.scandir(hist):
+            if e.name.startswith("batch_id=") and \
+                    int(e.name.split("=")[1]) < batch_id:
+                shutil.rmtree(e.path, ignore_errors=True)
+
+    commit = BatchCommit(
+        state_dir, partitioned=(hist,),
+        meta_dir=os.path.join(state_dir, "offsets"), after=drop_shadowed,
+    )
+
+    def process(batch: DataFrame, batch_id: int) -> Publish:
+        prev = commit.meta(batch_id - 1, {"watermark": None, "max_seen": None})
         admitted = (
             batch if prev["watermark"] is None
             else batch.filter(F.col("op_ts") > prev["watermark"])
         ).withColumn(
             "__kb", F.pmod(F.xxhash64("key"), F.lit(n_buckets)).cast("int")
         ).persist()
-        compact = (
-            compact_every is not None
-            and (batch_id + 1) % compact_every == 0
-        )
         # sidecar; in-batch aggregate/collect only if files don't resolve
         srows = stats.for_batch(ckpt, batch_id)
         file_kbs = (
             sorted({b for r in srows for b in r["kbs"]})
             if srows is not None else None
-        )
-        apply_history_delta(
-            spark, hist, admitted,
-            batch_id=batch_id, n_buckets=n_buckets, compact=compact,
-            kbs=file_kbs,
         )
         batch_max = (
             batch.agg(F.max("op_ts")).first()[0] if srows is None
@@ -288,36 +284,21 @@ def stream_scd2(
         new_wm = None
         if max_seen is not None:
             new_wm = ts_shift(max_seen, delay)
-        json.dump(
-            {"watermark": new_wm, "max_seen": max_seen},
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"), "w"),
-        )
-        admitted.unpersist()
-        open(marker, "w").close()
-        if compact:
-            # b=batch_id is now a full snapshot; older deltas are
-            # shadowed duplicates — deleting them AFTER the marker is
-            # idempotent cleanup, crash-safe by construction
-            for e in os.scandir(hist):
-                if e.name.startswith("batch_id=") and \
-                        int(e.name.split("=")[1]) < batch_id:
-                    shutil.rmtree(e.path, ignore_errors=True)
+        return Publish([
+            lambda: apply_history_delta(
+                spark, hist, admitted,
+                batch_id=batch_id, n_buckets=n_buckets,
+                compact=compacts(batch_id),
+                kbs=file_kbs,
+            ),
+        ], meta={"watermark": new_wm, "max_seen": max_seen},
+            release=[admitted])
 
-    stream = (
-        spark.readStream
-        .schema("op_id long, op_ts timestamp, key long, op string, "
-                "value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    commit.drain(
+        spark, src,
+        "op_id long, op_ts timestamp, key long, op string, value double",
+        process,
     )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     full = read_history(spark, hist)
     if full is None:
         return spark.createDataFrame(

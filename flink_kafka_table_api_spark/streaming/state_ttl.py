@@ -34,10 +34,8 @@ late-op stand-in the engine carries has op_ts <= W.op_ts <= cutoff_k
 and is evicted identically). The invariant is pinned by the
 late-op-to-evicted-key fixture in tests/test_state_ttl.py.
 
-The Spark-first state machine is the agg_retract recipe with one extra
-stage (foreachBatch, marker-committed, batch-scoped writes published
-before the marker — replay is a no-op, a mid-crash batch is scrubbed
-and recomputed):
+The Spark-first state machine is the agg_retract recipe (foreachBatch,
+batch_commit protocol) with one extra stage:
 
   per micro-batch k:
     1. MERGE:  winners over carried state ∪ batch ops (max_by hash
@@ -70,15 +68,14 @@ changelog (the stream_agg_retract oracle shape plus one WHERE clause).
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.streaming.agg_retract import (
     OPS_COLUMNS,
+    OPS_SCHEMA,
     _AGG_SCHEMA,
     _changelog,
     _group_agg,
@@ -90,12 +87,17 @@ from flink_kafka_table_api_spark.streaming.chunk_stats import (
     ChunkStats,
     stat_max,
 )
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    overwrite,
+    read_version,
+)
 from flink_kafka_table_api_spark.streaming.late_data import (
     interval_micros,
-    run_concurrently,
     stage_chunked_by,
 )
-from flink_kafka_table_api_spark.caching import replan_cached_plans
 
 
 def stream_agg_state_ttl(
@@ -106,7 +108,6 @@ def stream_agg_state_ttl(
     n_chunks: int,
     ttl: str = "12 days",
     chunk_col: str = "__chunk",
-    keep_versions: int = 3,
 ) -> DataFrame:
     """GROUP BY (grp) COUNT/SUM over an upsert/delete changelog with
     event-time state TTL: identical contract to
@@ -127,42 +128,20 @@ def stream_agg_state_ttl(
     # per-chunk clock maxima ride ONE staging-time job instead of one
     # agg job per micro-batch (chunk_stats.py; guide §1.2)
     stats = ChunkStats(
-        spark, src,
-        "op_id long, op_ts timestamp, key long, grp string, "
-        "op string, value double",
-        {"mx": F.max(F.unix_micros("op_ts"))},
+        spark, src, OPS_SCHEMA, {"mx": F.max(F.unix_micros("op_ts"))}
     )
     out_dir = os.path.join(state_dir, "out")
     state_dir_v = os.path.join(state_dir, "state")
     agg_dir = os.path.join(state_dir, "agg")
-    meta_dir = os.path.join(state_dir, "meta")
-    marker_dir = os.path.join(state_dir, "commits")
+    commit = BatchCommit(
+        state_dir, scoped=(out_dir, state_dir_v, agg_dir),
+        versioned=(state_dir_v, agg_dir),
+        meta_dir=os.path.join(state_dir, "meta"),
+    )
 
-    def _read(base: str, batch_id: int, schema: str) -> DataFrame:
-        p = os.path.join(base, f"batch-{batch_id}")
-        if batch_id < 0 or not os.path.isdir(p):
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(p)
-
-    def _clock_after(batch_id: int):
-        p = os.path.join(meta_dir, f"batch-{batch_id}.json")
-        if batch_id < 0 or not os.path.exists(p):
-            return None
-        v = json.load(open(p))["clock_us"]
-        return None if v is None else int(v)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        os.makedirs(meta_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replay of a committed batch: no-op
-        for d in (out_dir, state_dir_v, agg_dir):
-            shutil.rmtree(
-                os.path.join(d, f"batch-{batch_id}"), ignore_errors=True
-            )
+    def process(batch: DataFrame, batch_id: int) -> Publish:
         merged = _winners(
-            _read(state_dir_v, batch_id - 1, _STATE_SCHEMA)
+            read_version(spark, state_dir_v, batch_id - 1, _STATE_SCHEMA)
             .unionByName(batch.select(
                 "key", "op_id", "op_ts", "grp", "op", "value"
             ))
@@ -185,7 +164,7 @@ def stream_agg_state_ttl(
             .first()["m"]
             if srows is None else stat_max(srows, "mx")
         )
-        prev_clock = _clock_after(batch_id - 1)
+        prev_clock = commit.meta(batch_id - 1, {"clock_us": None})["clock_us"]
         clock = max(
             (c for c in (prev_clock, mx) if c is not None), default=None
         )
@@ -201,53 +180,12 @@ def stream_agg_state_ttl(
             )
         kept = kept.persist()
         agg = _group_agg(kept).persist()
-        prev_agg = _read(agg_dir, batch_id - 1, _AGG_SCHEMA)
-        # three independent DAGs over the two persisted frames to
-        # DISTINCT paths — overlapped so the batch pays the slowest
-        # write, not the sum (guide §2.6; marker still follows all)
-        run_concurrently(
-            lambda: _changelog(prev_agg, agg, batch_id).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(out_dir, f"batch-{batch_id}")),
-            lambda: kept.write.mode("overwrite").parquet(
-                os.path.join(state_dir_v, f"batch-{batch_id}")
-            ),
-            lambda: agg.write.mode("overwrite").parquet(
-                os.path.join(agg_dir, f"batch-{batch_id}")
-            ),
-        )
-        json.dump(
-            {"clock_us": clock},
-            open(os.path.join(meta_dir, f"batch-{batch_id}.json"), "w"),
-        )
-        kept.unpersist()
-        agg.unpersist()
-        open(marker, "w").close()
-        old = batch_id - keep_versions
-        if old >= 0:
-            for d in (state_dir_v, agg_dir):
-                shutil.rmtree(os.path.join(d, f"batch-{old}"),
-                              ignore_errors=True)
+        prev_agg = read_version(spark, agg_dir, batch_id - 1, _AGG_SCHEMA)
+        return Publish([
+            overwrite(_changelog(prev_agg, agg, batch_id),
+                      batch_dir(out_dir, batch_id)),
+            overwrite(kept, batch_dir(state_dir_v, batch_id)),
+            overwrite(agg, batch_dir(agg_dir, batch_id)),
+        ], meta={"clock_us": clock}, release=[kept, agg])
 
-    stream = (
-        spark.readStream
-        .schema("op_id long, op_ts timestamp, key long, grp string, "
-                "op string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if not os.path.isdir(out_dir):
-        return spark.createDataFrame([], _OUT_SCHEMA)
-    return (
-        spark.read.schema(_OUT_SCHEMA)
-        .option("recursiveFileLookup", "true").parquet(out_dir)
-        .select("op", "grp", "n_keys", "total", "batch_id")
-    )
+    return commit.drain(spark, src, OPS_SCHEMA, process, out_dir, _OUT_SCHEMA)

@@ -6,7 +6,7 @@ FlinkCEP / Flink SQL's MATCH_RECOGNIZE runs on unbounded streams: the
 NFA consumes rows per key as watermarks advance and emits a match only
 when no earlier-timestamped row can still arrive. This module is the
 Spark-first incremental twin of `operators/cep.py`, on the round-8
-drops machinery (admission, markers, per-batch publishes).
+drops machinery (admission, per-batch publishes under batch_commit).
 
 The frozen-prefix argument that makes incremental emission sound:
 
@@ -28,21 +28,21 @@ The frozen-prefix argument that makes incremental emission sound:
     `match_recognize` over the admitted rows — which is what the
     DuckDB oracle replays.
 
-  state layout (marker-committed, the shared round-8 conventions):
+  state layout (the batch_commit protocol's conventions):
     rows/batch_id=k/     admitted rows of drop k (classified char
                          attached — DEFINEs are row-local, so
                          classification at admission is stable)
     consumed/batch-k/    per-key consumed char offsets AFTER batch k
                          (only keys that ever emitted; tiny)
     out/batch_id=k/      matches finalized at batch k
-    offsets/batch-k.json watermark; commits/batch-k  marker LAST
+    offsets/batch-k.json watermark
 
   per micro-batch k: ADMIT (ts > W_{k-1}) -> append rows/batch_id=k ->
   ADVANCE W_k -> AFFECTED keys = keys with stored rows in
   (W_{k-1}, W_k] (their frozen prefix grew; nothing else can change) ->
   rebuild those keys' frozen strings, scan from consumed offset, emit
   final matches + updated offsets -> measures via keyed range join on
-  the frozen rows -> publish, marker LAST. End of input: flush from
+  the frozen rows -> publish. End of input: flush from
   the consumed offsets over the full sequences (batch_id = n_chunks).
 
 Cost model at 100 TB: per batch, only keys whose frozen prefix grew
@@ -56,9 +56,7 @@ hidden). Nothing is driver-side except the bounded watermark scalars.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -72,12 +70,17 @@ from flink_kafka_table_api_spark.streaming.chunk_stats import (
     ChunkStats,
     stat_max,
 )
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    overwrite,
+    partition_dir,
+)
 from flink_kafka_table_api_spark.streaming.late_data import (
-    run_concurrently,
     stage_chunked_by,
     ts_shift,
 )
-from flink_kafka_table_api_spark.caching import replan_cached_plans
 
 
 def stream_match_recognize(
@@ -94,7 +97,6 @@ def stream_match_recognize(
     pattern: str,
     measures: dict[str, Column],
     chunk_col: str = "__chunk",
-    keep_versions: int = 3,
 ) -> DataFrame:
     """MATCH_RECOGNIZE over a stream of `n_chunks` drops under an
     event-time watermark of `delay`: PARTITION BY `key_col` ORDER BY
@@ -137,8 +139,10 @@ def stream_match_recognize(
     rows_store = os.path.join(state_dir, "rows")
     consumed = os.path.join(state_dir, "consumed")
     out = os.path.join(state_dir, "out")
-    marker_dir = os.path.join(state_dir, "commits")
-    offsets_dir = os.path.join(state_dir, "offsets")
+    commit = BatchCommit(
+        state_dir, scoped=(consumed,), partitioned=(rows_store, out),
+        versioned=(consumed,), meta_dir=os.path.join(state_dir, "offsets"),
+    )
 
     @F.pandas_udf("array<struct<s: int, e: int, final: boolean>>")
     def scan(seq, frozen_len, offset):
@@ -168,13 +172,6 @@ def stream_match_recognize(
 
         return pd.Series(map(one, zip(seq, frozen_len, offset)))
 
-    def meta_after(batch_id: int) -> dict:
-        if batch_id < 0:
-            return {"watermark": None, "max_seen": None}
-        return json.load(
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"))
-        )
-
     def read_rows() -> DataFrame | None:
         parts = [
             e.name for e in os.scandir(rows_store)
@@ -187,7 +184,7 @@ def stream_match_recognize(
         )
 
     def read_consumed(batch_id: int) -> DataFrame | None:
-        p = os.path.join(consumed, f"batch-{batch_id}")
+        p = batch_dir(consumed, batch_id)
         if not os.path.isdir(p):
             return None
         return spark.read.schema(
@@ -200,15 +197,14 @@ def stream_match_recognize(
         prev_consumed: DataFrame | None,
         batch_id: int,
         flush: bool,
-    ) -> None:
+    ) -> Publish:
         """Scan `keys`' sequences (all stored rows when `flush`, else
         the frozen prefix up to `horizon`) from the consumed offsets;
-        publish final matches to out/batch_id=`batch_id` and the new
-        offsets to consumed/batch-`batch_id`."""
+        publish final matches to out/batch_id=`batch_id` and (unless
+        `flush`) the new offsets to consumed/batch-`batch_id`."""
         stored = read_rows()
         if stored is None:
             stored = spark.createDataFrame([], rows_schema)
-        new_cons = prev_consumed
         scoped = (
             stored if keys is None
             else stored.join(keys, key_col, "left_semi")
@@ -296,50 +292,19 @@ def stream_match_recognize(
                     ).cast("int").alias("__off"),
                 )
             )
-        if flush:
-            matches_df.write.mode("overwrite").parquet(
-                os.path.join(out, f"batch_id={batch_id}")
-            )
-            rows.unpersist()
-        else:
-            # matches + offsets are independent DAGs over the persisted
-            # spans frame to DISTINCT paths — overlapped so the batch
-            # pays the slower write, not the sum (guide §2.6; the
-            # caller's marker still follows both)
-            cons_df = (
-                new_cons if new_cons is not None
-                else spark.createDataFrame([], f"{key_col} long, __off int")
-            )
-            run_concurrently(
-                lambda: matches_df.write.mode("overwrite").parquet(
-                    os.path.join(out, f"batch_id={batch_id}")
-                ),
-                lambda: cons_df.write.mode("overwrite").parquet(
-                    os.path.join(consumed, f"batch-{batch_id}")
-                ),
-            )
-            rows.unpersist()
-        spans.unpersist()
+        writes = [overwrite(matches_df, partition_dir(out, batch_id))]
+        if not flush:
+            writes.append(overwrite(new_cons, batch_dir(consumed, batch_id)))
+        return Publish(writes, release=[rows, spans])
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        os.makedirs(offsets_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return
-        for d in (
-            os.path.join(rows_store, f"batch_id={batch_id}"),
-            os.path.join(consumed, f"batch-{batch_id}"),
-            os.path.join(out, f"batch_id={batch_id}"),
-        ):
-            shutil.rmtree(d, ignore_errors=True)
-        prev = meta_after(batch_id - 1)
+    def process(batch: DataFrame, batch_id: int) -> Publish:
+        prev = commit.meta(batch_id - 1, {"watermark": None, "max_seen": None})
         admitted = (
             batch if prev["watermark"] is None
             else batch.filter(F.col(ts_col) > prev["watermark"])
         )
         admitted.write.mode("overwrite").parquet(
-            os.path.join(rows_store, f"batch_id={batch_id}")
+            partition_dir(rows_store, batch_id)
         )
         # sidecar; in-batch aggregate only if the files don't resolve
         srows = stats.for_batch(ckpt, batch_id)
@@ -363,44 +328,19 @@ def stream_match_recognize(
             if prev["watermark"] is not None:
                 grown = grown.filter(F.col(ts_col) > prev["watermark"])
             affected = grown.select(key_col).distinct()
-        emit(
+        return emit(
             affected if affected is not None
             else spark.createDataFrame([], f"{key_col} long"),
             new_wm, read_consumed(batch_id - 1), batch_id, flush=False,
-        )
-        json.dump(
-            {"watermark": new_wm, "max_seen": max_seen},
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"), "w"),
-        )
-        open(marker, "w").close()
-        old = batch_id - keep_versions
-        if old >= 0:
-            shutil.rmtree(
-                os.path.join(consumed, f"batch-{old}"), ignore_errors=True
-            )
+        )._replace(meta={"watermark": new_wm, "max_seen": max_seen})
 
-    stream = (
-        spark.readStream.schema(rows_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    commit.drain(spark, src, rows_schema, process)
+    commit.run(
+        n_chunks,
+        lambda: emit(None, None, read_consumed(n_chunks - 1), n_chunks,
+                     flush=True),
+        suffix="-flush",
     )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    flush_marker = os.path.join(marker_dir, f"batch-{n_chunks}-flush")
-    if not os.path.exists(flush_marker):
-        shutil.rmtree(
-            os.path.join(out, f"batch_id={n_chunks}"), ignore_errors=True
-        )
-        emit(None, None, read_consumed(n_chunks - 1), n_chunks,
-             flush=True)
-        open(flush_marker, "w").close()
 
     parts = [
         e.name for e in os.scandir(out)

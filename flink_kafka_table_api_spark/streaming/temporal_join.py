@@ -10,9 +10,8 @@ currency conversion). This module is the Spark-first equivalent, built
 directly on the round-8 CDC apply machinery (streaming/cdc_apply.py):
 
   per micro-batch k (foreachBatch, driven by the PROBE stream):
-    1. SKIP/SCRUB: the marker protocol (replays no-op; crashes
-       recompute cleanly — state version k AND output partition k are
-       both batch-scoped);
+    1. COMMIT: the batch_commit protocol — state version k AND output
+       partition k are both batch-scoped;
     2. APPLY ops drop k: watermark-admit (op_ts > W_{k-1}), per-key
        argmax reduce, fold into state version k — changelog_winners /
        merge_state_version, the exact CDC-apply fold;
@@ -21,7 +20,7 @@ directly on the round-8 CDC apply machinery (streaming/cdc_apply.py):
        keys enrich to NULL. Ops drop k is applied BEFORE probe drop k
        joins (the Flink processing-time contract: a probe sees the
        latest dimension version its own batch installed);
-    4. PUBLISH out/batch_id=k, ADVANCE the watermark, MARKER last.
+    4. PUBLISH out/batch_id=k, ADVANCE the watermark.
 
 Determinism: given the drop boundaries, the enrichment of every probe
 row is a pure function of (its drop index, the admitted ops in drops
@@ -41,9 +40,7 @@ pruned to a bounded tail.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -57,12 +54,17 @@ from flink_kafka_table_api_spark.streaming.chunk_stats import (
     ChunkStats,
     stat_max,
 )
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    has_data,
+    overwrite,
+)
 from flink_kafka_table_api_spark.streaming.late_data import (
-    run_concurrently,
     stage_chunked_by,
     ts_shift,
 )
-from flink_kafka_table_api_spark.caching import replan_cached_plans
 
 PROBE_COLUMNS = ["probe_id", "probe_ts", "key"]
 
@@ -133,7 +135,6 @@ def stream_temporal_join(
     n_chunks: int,
     delay: str,
     chunk_col: str = "__chunk",
-    keep_versions: int = 3,
     semantics: str = "processing",
 ) -> DataFrame:
     """Join `probes_chunked` (probe_id, probe_ts, key, `chunk_col`)
@@ -172,35 +173,18 @@ def stream_temporal_join(
     state = os.path.join(state_dir, "state")
     hist = os.path.join(state_dir, "hist")
     out = os.path.join(state_dir, "out")
-    marker_dir = os.path.join(state_dir, "commits")
-    offsets_dir = os.path.join(state_dir, "offsets")
+    commit = BatchCommit(
+        state_dir, scoped=(state,), partitioned=(hist, out),
+        versioned=(state,), meta_dir=os.path.join(state_dir, "offsets"),
+    )
 
-    def meta_after(batch_id: int) -> dict:
-        if batch_id < 0:
-            return {"watermark": None, "max_seen": None}
-        return json.load(
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"))
-        )
-
-    def process(probe_batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        os.makedirs(offsets_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replayed after recovery: already joined+published
-        shutil.rmtree(
-            os.path.join(state, f"batch-{batch_id}"), ignore_errors=True
-        )
-        shutil.rmtree(
-            os.path.join(hist, f"batch_id={batch_id}"), ignore_errors=True
-        )
-        shutil.rmtree(
-            os.path.join(out, f"batch_id={batch_id}"), ignore_errors=True
-        )
+    def process(probe_batch: DataFrame, batch_id: int) -> Publish:
         # 1. apply ops drop k BEFORE the probe join
         ops_file = f"chunk{batch_id:04d}.parquet"
         ops = spark.read.parquet(os.path.join(ops_src, ops_file))
-        prev = meta_after(batch_id - 1)
+        prev = commit.meta(
+            batch_id - 1, {"watermark": None, "max_seen": None}
+        )
         admitted = (
             ops if prev["watermark"] is None
             else ops.filter(F.col("op_ts") > prev["watermark"])
@@ -211,13 +195,12 @@ def stream_temporal_join(
         # the middle. The persisted in-memory frame carries the
         # identical rows (a parquet round-trip is value-preserving), so
         # the state publish and the enriched publish are independent
-        # DAGs to DISTINCT paths — overlapped per guide §2.6 (the
-        # marker still follows both).
+        # DAGs to DISTINCT paths.
         if semantics == "processing":
             # the CDC fold: one snapshot version per drop
             merged = merge_state_version(
                 spark,
-                os.path.join(state, f"batch-{batch_id - 1}"),
+                batch_dir(state, batch_id - 1),
                 changelog_winners(
                     admitted.withColumn("__n", F.lit(1)), "__n"
                 ),
@@ -235,9 +218,7 @@ def stream_temporal_join(
             enriched = probe_batch.join(snapshot, "key", "left").select(
                 "probe_id", "probe_ts", "key", "dim_value", "dim_op_id",
             )
-            state_write = lambda: merged.write.mode(  # noqa: E731
-                "overwrite"
-            ).parquet(os.path.join(state, f"batch-{batch_id}"))
+            state_write = overwrite(merged, batch_dir(state, batch_id))
         else:
             # the versioned-table append: admitted ops accumulate as the
             # queryable dimension HISTORY (batch-scoped partitions).
@@ -246,11 +227,7 @@ def stream_temporal_join(
             admitted = admitted.select(*OPS_COLUMNS).persist()
             prior_hist = (
                 spark.read.parquet(hist).drop("batch_id")
-                if os.path.isdir(hist) and any(
-                    e.name.startswith("batch_id=")
-                    for e in os.scandir(hist)
-                )
-                else None
+                if has_data(hist) else None
             )
             full_hist = (
                 admitted if prior_hist is None
@@ -265,13 +242,6 @@ def stream_temporal_join(
                 .partitionBy("batch_id")
                 .parquet(hist)
             )
-        run_concurrently(
-            state_write,
-            lambda: enriched.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .partitionBy("batch_id")
-            .parquet(out),
-        )
         # 3. advance the watermark from ops SEEN (dropped ops advance
         # it); sidecar — in-batch aggregate only if the file is unknown
         orows = ops_stats.for_file(ops_file)
@@ -287,42 +257,20 @@ def stream_temporal_join(
         new_wm = None
         if max_seen is not None:
             new_wm = ts_shift(max_seen, delay)
-        json.dump(
-            {"watermark": new_wm, "max_seen": max_seen},
-            open(os.path.join(offsets_dir, f"batch-{batch_id}.json"), "w"),
-        )
-        open(marker, "w").close()
-        old = batch_id - keep_versions
-        if old >= 0:
-            shutil.rmtree(
-                os.path.join(state, f"batch-{old}"), ignore_errors=True
-            )
+        return Publish([
+            state_write,
+            lambda: enriched.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("append")
+            .partitionBy("batch_id")
+            .parquet(out),
+        ], meta={"watermark": new_wm, "max_seen": max_seen},
+            release=[merged if semantics == "processing" else admitted])
 
-    stream = (
-        spark.readStream
-        .schema("probe_id long, probe_ts timestamp, key long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(probe_src)
-    )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", os.path.join(state_dir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    if not os.path.isdir(out) or not any(
-        e.name.startswith("batch_id=") for e in os.scandir(out)
-    ):
-        return spark.createDataFrame(
-            [], "probe_id long, probe_ts timestamp, key long, "
-            "dim_value double, dim_op_id long, batch_id long",
-        )
-    return spark.read.parquet(out).select(
-        "probe_id", "probe_ts", "key", "dim_value", "dim_op_id",
-        F.col("batch_id").cast("long").alias("batch_id"),
+    return commit.drain(
+        spark, probe_src, "probe_id long, probe_ts timestamp, key long",
+        process, out,
+        "probe_id long, probe_ts timestamp, key long, dim_value double, "
+        "dim_op_id long, batch_id long",
     )
 
 

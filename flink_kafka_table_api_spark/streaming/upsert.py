@@ -9,8 +9,8 @@ Semantics:
 - each batch: read current table, anti-join out the updated keys, union the
   batch's rows, atomic swap (write tmp -> rename);
 - idempotence: a replayed batch (same batchId after checkpoint recovery)
-  is skipped via a committed-batch marker file — the manual version of the
-  transaction log Delta would provide.
+  is skipped via the batch_commit marker (``<table>__commits/batch-N``) —
+  the manual version of the transaction log Delta would provide.
 
 Scale note: rewrite cost is O(table) per batch, which is right for
 aggregate/materialized-view sized outputs (the common case: the HEAVY data
@@ -25,6 +25,11 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
+
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+)
 
 
 def latest_per_key(
@@ -82,14 +87,9 @@ def upsert_to_parquet(
     dropDuplicates keeps an ARBITRARY row, which is only correct under the
     one-row-per-key-per-batch contract."""
     spark = updates.sparkSession
-    marker_dir = table_path + "__commits"
+    commit = BatchCommit(checkpoint_dir, marker_dir=table_path + "__commits")
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replayed batch after recovery: already merged
-        batch = latest_per_key(batch_df, key_cols, order_col)
+    def swap(batch: DataFrame) -> None:
         if os.path.exists(table_path):
             current = spark.read.parquet(table_path)
             keys = batch.select(*key_cols)
@@ -113,7 +113,10 @@ def upsert_to_parquet(
             fs.rename(old, dst)  # best-effort restore
             raise IOError(f"upsert: rename {tmp} -> {table_path} failed")
         fs.delete(old, True)
-        open(marker, "w").close()
+
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch = latest_per_key(batch_df, key_cols, order_col)
+        commit.run(batch_id, lambda: Publish([lambda: swap(batch)]))
 
     return (
         updates.writeStream.foreachBatch(merge_batch)

@@ -47,8 +47,8 @@ boundaries, the same determinism trade every sibling module makes):
                 both conditions replayed by the oracle as
                 max(first k with W_k >= end, last admit batch));
                 everything else flushes as batch_id = n_chunks;
-    6. PUBLISH: out/batch-k + deferred/batch-k + wm/batch-k.json,
-                marker LAST (the sibling crash contract).
+    6. PUBLISH: out/batch-k + pending/batch-k + deferred/batch-k +
+                wm/batch-k.json under the batch_commit protocol.
 
 What the gate form observes: the 'click' source delivers its ENTIRE
 30-day range in drop 0 (a firehose source); with drift = 3 days its
@@ -79,7 +79,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -89,12 +88,17 @@ from flink_kafka_table_api_spark.streaming.idle_watermark import (
     merge_pending,
     window_partials,
 )
+from flink_kafka_table_api_spark.streaming.batch_commit import (
+    BatchCommit,
+    Publish,
+    batch_dir,
+    overwrite,
+    read_version,
+)
 from flink_kafka_table_api_spark.streaming.late_data import (
-    run_concurrently,
     stage_chunked_by,
     ts_shift,
 )
-from flink_kafka_table_api_spark.caching import replan_cached_plans
 
 _ROWS_SCHEMA = "source string, ts timestamp, value double"
 
@@ -112,7 +116,6 @@ def stream_watermark_alignment(
     ts_col: str = "ts",
     value_col: str = "value",
     chunk_col: str = "__chunk",
-    keep_versions: int = 3,
 ) -> DataFrame:
     """Tumbling per-(source, window) aggregation of a multi-source
     stream under watermark ALIGNMENT: a source's rows admit only while
@@ -137,32 +140,14 @@ def stream_watermark_alignment(
     out_dir = os.path.join(state_dir, "out")
     pend_dir = os.path.join(state_dir, "pending")
     defer_dir = os.path.join(state_dir, "deferred")
-    wm_dir = os.path.join(state_dir, "wm")
-    marker_dir = os.path.join(state_dir, "commits")
+    commit = BatchCommit(
+        state_dir, scoped=(out_dir, pend_dir, defer_dir),
+        versioned=(pend_dir, defer_dir),
+        meta_dir=os.path.join(state_dir, "wm"),
+    )
 
-    def _meta_after(batch_id: int) -> dict:
-        p = os.path.join(wm_dir, f"batch-{batch_id}.json")
-        if batch_id < 0 or not os.path.exists(p):
-            return {"max_admitted": {}}
-        return json.load(open(p))
-
-    def _read_store(base: str, batch_id: int, schema: str) -> DataFrame:
-        p = os.path.join(base, f"batch-{batch_id}")
-        if batch_id < 0 or not os.path.isdir(p):
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(p)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        os.makedirs(wm_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # replay of a committed batch: no-op
-        for d in (out_dir, pend_dir, defer_dir):
-            shutil.rmtree(
-                os.path.join(d, f"batch-{batch_id}"), ignore_errors=True
-            )
-        prev = _meta_after(batch_id - 1)
+    def process(batch: DataFrame, batch_id: int) -> Publish:
+        prev = commit.meta(batch_id - 1, {"max_admitted": {}})
         # lateness contract for FRESH arrivals (emitted windows stay
         # final); W_{k-1} = min over seen sources of admitted max - delay
         fresh = batch
@@ -172,7 +157,7 @@ def stream_watermark_alignment(
                 F.col("ts") > F.lit(w_prev).cast("timestamp")
             )
         avail = fresh.unionByName(
-            _read_store(defer_dir, batch_id - 1, _ROWS_SCHEMA)
+            read_version(spark, defer_dir, batch_id - 1, _ROWS_SCHEMA)
         ).persist()
         # 2. GATE — the admission ceiling from carried per-source maxima
         # (|sources| scalars in the offsets json, the quota.py bounded-
@@ -203,7 +188,7 @@ def stream_watermark_alignment(
             wm = ts_shift(min(max_admitted.values()), delay)
         # 4. MERGE
         merged = merge_pending(
-            _read_store(pend_dir, batch_id - 1, _PENDING_SCHEMA),
+            read_version(spark, pend_dir, batch_id - 1, _PENDING_SCHEMA),
             window_partials(admitted, window),
         ).persist()
         # 5. EMIT — watermark passed AND no row of the window deferred.
@@ -228,72 +213,37 @@ def stream_watermark_alignment(
             ready.select("source", "window_start", "window_end"),
             ["source", "window_start", "window_end"], "left_anti",
         )
-        # three independent DAGs over the persisted frames to DISTINCT
-        # paths — overlapped (guide §2.6; marker still follows all). The
-        # deferred count rides its write as an observed metric instead
-        # of a separate count job.
+        # the deferred count rides its write as an observed metric
+        # instead of a separate count job
         obs = Observation()
-        run_concurrently(
-            lambda: ready
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch-{batch_id}")),
-            lambda: carry.write.mode("overwrite").parquet(
-                os.path.join(pend_dir, f"batch-{batch_id}")
+        return Publish([
+            overwrite(
+                ready.withColumn("batch_id", F.lit(batch_id).cast("long")),
+                batch_dir(out_dir, batch_id),
             ),
-            lambda: deferred.select("source", "ts", "value")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(defer_dir, f"batch-{batch_id}")),
-        )
-        # 6. PUBLISH — meta, then the marker as the commit point
-        json.dump(
-            {"max_admitted": max_admitted,
-             "n_deferred": int(obs.get["n"])},
-            open(os.path.join(wm_dir, f"batch-{batch_id}.json"), "w"),
-        )
-        merged.unpersist()
-        avail.unpersist()
-        open(marker, "w").close()
-        old = batch_id - keep_versions
-        if old >= 0:
-            for d in (pend_dir, defer_dir):
-                shutil.rmtree(os.path.join(d, f"batch-{old}"),
-                              ignore_errors=True)
+            overwrite(carry, batch_dir(pend_dir, batch_id)),
+            overwrite(
+                deferred.select("source", "ts", "value")
+                .observe(obs, F.count(F.lit(1)).alias("n")),
+                batch_dir(defer_dir, batch_id),
+            ),
+        ], meta=lambda: {
+            "max_admitted": max_admitted, "n_deferred": int(obs.get["n"]),
+        }, release=[merged, avail])
 
-    stream = (
-        spark.readStream
-        .schema(_ROWS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    emitted = commit.drain(
+        spark, src, _ROWS_SCHEMA, process,
+        out_dir, _PENDING_SCHEMA + ", batch_id long",
     )
-    with replan_cached_plans(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", os.path.join(state_dir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    last = max(
-        (int(e.name[len("batch-"):])
-         for e in os.scandir(marker_dir)),
-        default=-1,
-    )
+    last = commit.last()
     # terminal flush: deferred backlog joins the pending store, then
     # everything unemitted leaves as batch_id = n_chunks
     leftover = merge_pending(
-        _read_store(pend_dir, last, _PENDING_SCHEMA),
+        read_version(spark, pend_dir, last, _PENDING_SCHEMA),
         window_partials(
-            _read_store(defer_dir, last, _ROWS_SCHEMA), window
+            read_version(spark, defer_dir, last, _ROWS_SCHEMA), window
         ),
     ).withColumn("batch_id", F.lit(n_chunks).cast("long"))
-    emitted = (
-        spark.read.schema(_PENDING_SCHEMA + ", batch_id long")
-        .option("recursiveFileLookup", "true").parquet(out_dir)
-        if os.path.isdir(out_dir) else
-        spark.createDataFrame([], _PENDING_SCHEMA + ", batch_id long")
-    )
     return emitted.unionByName(leftover).select(
         "source", "window_start", "window_end", "n_events",
         F.col("sum_value").cast("double").alias("sum_value"),

@@ -21,6 +21,7 @@ from flink_kafka_table_api_spark.catalog import read_table
 from flink_kafka_table_api_spark.queries import (
     stream_cdc_apply_sql as _events_ops_oracle,
 )
+from flink_kafka_table_api_spark.streaming import batch_commit
 from flink_kafka_table_api_spark.streaming.cdc_apply import stream_cdc_apply
 
 SF = "/root/testdata/sf0.001"
@@ -93,15 +94,16 @@ def test_crash_replay_is_clean(spark, tmp_path):
     assert sorted(tuple(r) for r in out2.collect()) == want
 
 
-def test_version_tail_is_bounded(spark, tmp_path):
+def test_version_tail_is_bounded(spark, tmp_path, monkeypatch):
     rows = [
         (i, 100 + i, f"2024-01-0{i + 1} 10:00:00", i % 2, "U", float(i))
         for i in range(5)
     ]
     state = str(tmp_path / "s3")
+    monkeypatch.setattr(batch_commit, "KEEP_VERSIONS", 2)
     stream_cdc_apply(
         spark, _chunked_ops(spark, rows), state, n_chunks=5,
-        delay="30 days", keep_versions=2,
+        delay="30 days",
     )
     versions = sorted(os.listdir(os.path.join(state, "state")))
     assert versions == ["batch-3", "batch-4"]
@@ -256,17 +258,18 @@ def test_bootstrap_from_filtered_snapshot_is_wrong(spark, tmp_path):
     assert 7 in {r.key for r in boot.collect()}  # resurrected: the trap
 
 
-def test_reset_refuses_a_pruned_merge_basis(spark, tmp_path):
-    """keep_versions=1 leaves only the last state version; resetting to
+def test_reset_refuses_a_pruned_merge_basis(spark, tmp_path, monkeypatch):
+    """KEEP_VERSIONS=1 leaves only the last state version; resetting to
     a batch whose predecessor version was pruned must fail loudly (the
     silent alternative rebases the tail's merge on nothing), while a
     full reset_from(0) stays valid and reproduces the original."""
     from flink_kafka_table_api_spark.streaming.reprocess import reset_from
 
     state = str(tmp_path / "pruned")
+    monkeypatch.setattr(batch_commit, "KEEP_VERSIONS", 1)
     out = stream_cdc_apply(
         spark, _chunked_ops(spark, BOOT_ROWS), state,
-        n_chunks=3, delay="2 days", keep_versions=1,
+        n_chunks=3, delay="2 days",
     )
     want = sorted(tuple(r) for r in out.collect())
     assert sorted(os.listdir(os.path.join(state, "state"))) == ["batch-2"]
@@ -275,6 +278,6 @@ def test_reset_refuses_a_pruned_merge_basis(spark, tmp_path):
     reset_from(state, 0)
     out2 = stream_cdc_apply(
         spark, _chunked_ops(spark, BOOT_ROWS), state,
-        n_chunks=3, delay="2 days", keep_versions=1,
+        n_chunks=3, delay="2 days",
     )
     assert sorted(tuple(r) for r in out2.collect()) == want

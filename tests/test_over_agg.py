@@ -18,6 +18,7 @@ import duckdb
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.queries import BENCH_ONLY, QUERIES, stream_over_agg_sql
+from flink_kafka_table_api_spark.streaming import batch_commit
 
 SF = "/root/testdata/sf0.001"
 
@@ -98,9 +99,10 @@ def test_crash_replay_is_clean(spark, tmp_path):
     assert sorted(tuple(r) for r in out2.collect()) == want
 
 
-def test_state_tails_are_bounded(spark, tmp_path):
+def test_state_tails_are_bounded(spark, tmp_path, monkeypatch):
     state = str(tmp_path / "s3")
-    _run(spark, ROWS, state, keep_versions=1)
+    monkeypatch.setattr(batch_commit, "KEEP_VERSIONS", 1)
+    _run(spark, ROWS, state)
     for d in ("context", "pending"):
         assert sorted(os.listdir(os.path.join(state, d))) == ["batch-2"]
 
@@ -169,9 +171,10 @@ def test_over_rows_semantics_fixture(spark, tmp_path):
     }
 
 
-def test_over_rows_context_is_count_bounded(spark, tmp_path):
+def test_over_rows_context_is_count_bounded(spark, tmp_path, monkeypatch):
     state = str(tmp_path / "r2")
-    _run_rows(spark, ROWS, state, n_preceding=1, keep_versions=1)
+    monkeypatch.setattr(batch_commit, "KEEP_VERSIONS", 1)
+    _run_rows(spark, ROWS, state, n_preceding=1)
     ctx = spark.read.parquet(os.path.join(state, "context", "batch-2"))
     # at most n_preceding rows per key survive in the context tail
     per_key = ctx.groupBy("key").count().collect()
