@@ -33,13 +33,16 @@ from flink_kafka_table_api_spark.queries import (  # noqa: E402
     BENCH_ONLY,
     QUERIES,
 )
-from flink_kafka_table_api_spark.session import get_spark  # noqa: E402
+from flink_kafka_table_api_spark.session import (  # noqa: E402
+    DEFAULT_CPUS,
+    get_spark,
+)
 
 # registered contract queries + the bench-only xxhash64 perf twins
 RUNNABLE = {**QUERIES, **BENCH_ONLY}
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = DEFAULT_CPUS  # $SPARK_GRAFT_CPUS, else the host's cores
 
 # Headline set: one representative per operator family (SURVEY.md §2.2).
 HEADLINE = [

@@ -58,8 +58,7 @@ def replan_cached_plans(spark):
     parallelism instead of the full shuffle-partition fan-out — measured
     in r10 on stream_curation_ooo: 8798 -> 3731 tasks, job-time sum
     57 -> 21 s. Session-wide, however, the r11 interleaved A/B on the
-    23-query comparable set (scripts/flag_ab.py, medians of 3
-    invocations per side) measured ON ~7% slower overall — the flag
+    23-query comparable set (medians of 3 invocations per side) measured ON ~7% slower overall — the flag
     coalesces CPU-expensive cached frames (the LSH pipeline's shingle
     sets) below useful parallelism on the batch paths — matching the
     r10 driver's 11 regressed batch queries. So: default OFF

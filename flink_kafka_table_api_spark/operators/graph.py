@@ -341,15 +341,18 @@ def kcore(
 def kcore_sql(edges_sql: str, *, k: int = 3, max_rounds: int = 8) -> str:
     """DuckDB replay of :func:`kcore` — rounds unroll as a WITH chain of
     degree-filter/semi-join steps; pure integer arithmetic, bit-exact by
-    construction."""
-    parts = [f"e0 AS ({edges_sql})"]
+    construction. Every round reads the previous edge list three times
+    (directly and through k{i} twice), and DuckDB 1.0 inlines a CTE at
+    each reference, so each step is MATERIALIZED: inlined, the chain
+    grows as 3^max_rounds."""
+    parts = [f"e0 AS MATERIALIZED ({edges_sql})"]
     for i in range(max_rounds):
         parts.append(
-            f"k{i} AS (SELECT src FROM e{i} GROUP BY src "
+            f"k{i} AS MATERIALIZED (SELECT src FROM e{i} GROUP BY src "
             f"HAVING COUNT(*) >= {k})"
         )
         parts.append(
-            f"e{i + 1} AS (SELECT e.src, e.dst FROM e{i} e "
+            f"e{i + 1} AS MATERIALIZED (SELECT e.src, e.dst FROM e{i} e "
             f"WHERE e.src IN (SELECT src FROM k{i}) "
             f"AND e.dst IN (SELECT src FROM k{i}))"
         )

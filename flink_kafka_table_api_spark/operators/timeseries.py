@@ -510,7 +510,9 @@ def _burst_scored_sql(*, burst_mult: float = 2.0) -> str:
     floor/mult/add (never round(): Spark's round on DOUBLE re-reads the
     shortest decimal repr via BigDecimal.valueOf, which is boundary-
     unsafe cross-engine). Ends with the `idx` CTE (grp, day, c, n, e0,
-    e1, i, n_i) so callers append their own recursive folds."""
+    e1, i, n_i) so callers append their own recursive folds; `idx` is
+    MATERIALIZED because DuckDB 1.0 otherwise re-inlines the whole chain
+    down to the events scan in every iteration of a fold that reads it."""
     q = BURST_QUANTUM
     return f"""
     WITH RECURSIVE daily AS (
@@ -552,7 +554,7 @@ def _burst_scored_sql(*, burst_mult: float = 2.0) -> str:
                + 0.5) AS BIGINT) ELSE 0 END AS e1
       FROM filled f JOIN stats s ON f.grp = s.grp
     ),
-    idx AS (
+    idx AS MATERIALIZED (
       SELECT grp, day, c, n, e0, e1,
              CAST(row_number() OVER (PARTITION BY grp ORDER BY day)
                   AS BIGINT) AS i,

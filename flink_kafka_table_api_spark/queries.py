@@ -1947,13 +1947,16 @@ def _lsh_pairs_oracle(bands: int = 4, rows_per_band: int = 2,
         + " AS band_hash FROM sigs"
         for b in range(bands)
     )
+    # DuckDB 1.0 inlines a CTE at every reference (sigs is read by each
+    # band, bands twice): MATERIALIZED evaluates each one once
     return f"""
-    WITH sigs AS ({sig}), all_bands AS ({band_rows}),
+    WITH sigs AS MATERIALIZED ({sig}),
+    all_bands AS MATERIALIZED ({band_rows}),
     ok_buckets AS (
       SELECT band_id, band_hash FROM all_bands
       GROUP BY band_id, band_hash HAVING COUNT(*) <= {max_bucket_size}
     ),
-    bands AS (
+    bands AS MATERIALIZED (
       SELECT b.* FROM all_bands b
       JOIN ok_buckets USING (band_id, band_hash)
     )
@@ -2096,7 +2099,7 @@ def _neardup_verified_oracle(src: str = "documents") -> str:
     pairs = _lsh_pairs_oracle(src=src)
     return f"""
     WITH cand AS ({pairs}),
-    shsets AS (
+    shsets AS MATERIALIZED (
       SELECT doc_id, {dd.shingles_sql('text', 3)} AS sh FROM {src}
     )
     SELECT cand.a, cand.b, round({_JACC3}, 6) AS jaccard
@@ -2236,10 +2239,13 @@ def q_stream_curation(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _dedup_clusters_oracle() -> str:
+    # pairs and bidir are MATERIALIZED in every transitive-closure oracle
+    # here: the recursive term reads bidir once per iteration, and DuckDB
+    # 1.0 would re-inline the whole LSH pipeline behind it each time
     pairs = _neardup_verified_oracle()
     return f"""
-    WITH RECURSIVE pairs AS ({pairs}),
-    bidir(a, b) AS (
+    WITH RECURSIVE pairs AS MATERIALIZED ({pairs}),
+    bidir(a, b) AS MATERIALIZED (
       SELECT a, b FROM pairs UNION SELECT b, a FROM pairs
     ),
     verts(id) AS (SELECT DISTINCT a FROM bidir),
@@ -2256,8 +2262,8 @@ def _dedup_clusters_oracle() -> str:
 def _leakage_split_oracle() -> str:
     pairs = _neardup_verified_oracle()
     return f"""
-    WITH RECURSIVE pairs AS ({pairs}),
-    bidir(a, b) AS (
+    WITH RECURSIVE pairs AS MATERIALIZED ({pairs}),
+    bidir(a, b) AS MATERIALIZED (
       SELECT a, b FROM pairs UNION SELECT b, a FROM pairs
     ),
     verts(id) AS (SELECT DISTINCT a FROM bidir),
@@ -3023,8 +3029,8 @@ def _curation_oracle(quality_threshold: float = 0.5) -> str:
       FROM documents d JOIN quality q ON d.doc_id = q.doc_id
       WHERE q.quality_score >= {quality_threshold}
     ),
-    pairs AS ({pairs}),
-    bidir(a, b) AS (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
+    pairs AS MATERIALIZED ({pairs}),
+    bidir(a, b) AS MATERIALIZED (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
     verts(id) AS (SELECT DISTINCT a FROM bidir),
     reach(id, r) AS (
       SELECT id, id FROM verts
@@ -3087,8 +3093,8 @@ def _curate_pack_oracle(
       SELECT t.doc_id, t.text FROM train t JOIN quality q ON t.doc_id = q.doc_id
       WHERE q.quality_score >= {quality_threshold}
     ),
-    pairs AS ({pairs}),
-    bidir(a, b) AS (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
+    pairs AS MATERIALIZED ({pairs}),
+    bidir(a, b) AS MATERIALIZED (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
     verts(id) AS (SELECT DISTINCT a FROM bidir),
     reach(id, r) AS (
       SELECT id, id FROM verts
@@ -6303,8 +6309,7 @@ def q_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
 
 # Formerly round-8 staged operators (oracles pre-validated in
 # tests/test_r8_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in round 7 or sit in the
-# committed round-8 gate (_NEXT_GATE_SCHEDULE note below).
+# staging ledger, so these registered in rounds 7-8.
 
 @retired_query("dup_ngram_coverage", tx.dup_ngram_coverage_sql(n=2))
 def q_dup_ngram_coverage(spark: SparkSession, sf: str) -> DataFrame:
@@ -10063,8 +10068,7 @@ def q_dedup_suite(spark: SparkSession, sf: str) -> DataFrame:
 
 # Formerly round-13 staged operators (oracles pre-validated in
 # tests/test_r13_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in round 7 or sit in the
-# committed round-8 gate (_NEXT_GATE_SCHEDULE note below).
+# staging ledger, so these registered in rounds 7-8.
 
 @retired_query("readability", tx.readability_scores_sql())
 def q_readability(spark: SparkSession, sf: str) -> DataFrame:
@@ -10095,8 +10099,7 @@ def q_rake_keywords(spark: SparkSession, sf: str) -> DataFrame:
 
 # Formerly round-14 staged operators (oracles pre-validated in
 # tests/test_r14_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in round 7 or sit in the
-# committed round-8 gate (_NEXT_GATE_SCHEDULE note below).
+# staging ledger, so these registered in rounds 7-8.
 
 @query("burst_detection", tsr.burst_detection_sql())
 def q_burst_detection(spark: SparkSession, sf: str) -> DataFrame:
@@ -10241,8 +10244,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf: str) -> DataFrame:
 
 # Formerly round-15 staged operators (oracles pre-validated in
 # tests/test_r15_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in round 7 or sit in the
-# committed round-8 gate (_NEXT_GATE_SCHEDULE note below).
+# staging ledger, so these registered in rounds 7-8.
 
 @query("ks_source_drift", cu.ks_source_drift_sql())
 def q_ks_source_drift(spark: SparkSession, sf: str) -> DataFrame:
@@ -10347,8 +10349,7 @@ def q_ann_basic_suite(spark: SparkSession, sf: str) -> DataFrame:
 
 # Formerly round-16 staged operators (oracles pre-validated in
 # tests/test_r16_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in round 7 or sit in the
-# committed round-8 gate (_NEXT_GATE_SCHEDULE note below).
+# staging ledger, so these registered in rounds 7-8.
 
 @query("holt_forecast", tsr.holt_forecast_sql())
 def q_holt_forecast(spark: SparkSession, sf: str) -> DataFrame:
@@ -10408,8 +10409,7 @@ def q_snapshot_diff(spark: SparkSession, sf: str) -> DataFrame:
 
 # Formerly round-17 staged operators (oracles pre-validated in
 # tests/test_r17_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in round 7 or sit in the
-# committed round-8 gate (_NEXT_GATE_SCHEDULE note below).
+# staging ledger, so these registered in rounds 7-8.
 
 def _hits_edges(spark: SparkSession, sf: str) -> DataFrame:
     """Directed quadratic+linear generator graph on customer keys:
@@ -10534,8 +10534,7 @@ def q_benford_audit(spark: SparkSession, sf: str) -> DataFrame:
 
 # Formerly round-18 staged operators (oracles pre-validated in
 # tests/test_r18_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in round 7 or sit in the
-# committed round-8 gate (_NEXT_GATE_SCHEDULE note below).
+# staging ledger, so these registered in rounds 7-8.
 
 @query("k_anonymity", vd.k_anonymity_audit_sql(
     "customer", ["c_nationkey", "c_mktsegment"], "c_acctbal"
@@ -10606,8 +10605,7 @@ def q_psi_drift(spark: SparkSession, sf: str) -> DataFrame:
 
 # Formerly round-19 staged operators (oracles pre-validated in
 # tests/test_r19_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in round 7 or sit in the
-# committed round-8 gate (_NEXT_GATE_SCHEDULE note below).
+# staging ledger, so these registered in rounds 7-8.
 
 @query("rfm_segments", rfm_segments_sql())
 def q_rfm_segments(spark: SparkSession, sf: str) -> DataFrame:
@@ -10648,8 +10646,7 @@ def q_assoc_rules(spark: SparkSession, sf: str) -> DataFrame:
 
 # Formerly round-20 staged operators (oracles pre-validated in
 # tests/test_r20_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in round 7 or sit in the
-# committed round-8 gate (_NEXT_GATE_SCHEDULE note below).
+# staging ledger, so these registered in rounds 7-8.
 
 # Phase-II level-shift derivation matching q_ewma_control (pre-
 # validated in tests/test_r20_prevalidated.py).
@@ -10996,139 +10993,12 @@ query("graph_suite", graph_suite_sql())(q_graph_suite)
 # Driver contract surface
 # ---------------------------------------------------------------------------
 
-# The driver's correctness gate checks the FIRST 50 entries of queries() in
-# dict order. The registry outgrew the 50-slot × 2-round evidence window,
-# so freshness is managed as a committed TWO-round plan (the relaxation
-# the round-4 VERDICT prescribed): `_PRIORITY[:50]` is THIS round's gate,
-# and `_NEXT_GATE_SCHEDULE` is next round's committed gate — the names
-# whose evidence will be oldest once this round's artifact lands.
-# tests/test_registry_coverage.py enforces that the union
-# (last two CORRECTNESS artifacts, GREEN rows only) ∪ gate ∪ next-schedule
-# covers every registered name, that never-green names sit in the ACTUAL
-# gate (a schedule slot is not evidence), and that the two lists don't
-# overlap.
-#
-# Round-10 slot math (VERDICT r9 item 3): 1 burst_detection (2-round
-# never-green, slot 1) + 2 bisection probes + 34 committed rotations
-# + 4 staged round-9 capability registrations + 9 r7-stale freshness
-# slots = 50 exactly. The 9 freshness picks favor consolidation suites
-# (one green row re-certifies every composed component oracle) and
-# include the two suites EXTENDED by this round's retirements, so
-# their new composed SQL earns driver evidence the same round it
-# changes. (Historical gate compositions r7-r9 live in git history.)
-_PRIORITY: list[str] = [
-    # Round-10 gate (VERDICT r9 items 1-3): the 2-round never-green red
-    # FIRST, its two bisection probes right behind it, then the 34
-    # committed rotations, the 4 staged round-9 capability
-    # registrations (never-green rule: a first registration sits in the
-    # ACTUAL gate), and 9 freshness slots for the oldest r7-stale names
-    # (the consolidation suites — one green suite row re-certifies
-    # every oracle composed into it — plus the streaming flagship and
-    # the decision-typed cusum relative of burst).
-    #
-    # -- the r8+r9 red row, rewritten this round: quantum 1e6 -> 1e3
-    # (BURST_QUANTUM rationale) and the Viterbi reduced to a scalar
-    # integer walk in BOTH engines (VERDICT r9 items 1a/1b) --
-    "burst_detection",
-    # -- driver-environment bisection probes (VERDICT r9 item 2): the
-    # quantization stage alone, then the forward walk alone — the
-    # driver's one-bit hash signal becomes a stage-level diagnosis.
-    # RETIRE both once burst_detection lands a green driver row --
-    "burst_costs_probe", "burst_walk_probe",
-    # -- the 34 committed rotations (r6-freshest names: the TPC-H
-    # per-query cohort, multimodal/UDTF/mix/audit operators,
-    # zorder_write) --
-    "ann_ivf_variants", "audio_features", "contamination_audit",
-    "corpus_mix", "embedding_quantize", "frame_sample",
-    "importance_weights",
-    "incremental_neardup", "pii_redact", "pmi_collocations",
-    "source_token_cap", "stream_stream_joins", "temperature_mix",
-    "text_clean", "time_decay_score", "top_bigrams", "tpch_q10_returns",
-    "tpch_q11_important_stock", "tpch_q12_priority", "tpch_q13_custdist",
-    "tpch_q14_promo", "tpch_q15_top_supplier", "tpch_q16_supplier_cnt",
-    "tpch_q19_disjunctive", "tpch_q20_promotion_stock", "tpch_q21_waiting",
-    "tpch_q2_min_cost_supplier", "tpch_q5_local_supplier",
-    "tpch_q6_forecast", "tpch_q7_volume", "tpch_q8_market_share",
-    "tpch_q9_product_profit", "udtf_sentences", "zorder_write",
-    # -- the 4 round-9-built capabilities, first registrations
-    # (both-SF oracle parity committed in tests/test_watermark_alignment
-    # .py, test_agg_retract.py, test_quantile_monitor.py,
-    # test_allowed_lateness.py + the r10 registration parity file) --
-    "stream_watermark_alignment", "stream_agg_retract",
-    "stream_quantile_monitor", "stream_allowed_lateness",
-    # -- 9 freshness slots from the 48-name r7-stale pool (the rest
-    # ride _NEXT_GATE_SCHEDULE): the widest consolidation suites —
-    # including the two EXTENDED this round by retirements
-    # (graph_suite absorbs link_prediction + adamic_adar;
-    # text_stats_suite absorbs dup_ngram_coverage + readability +
-    # gazetteer_tag), whose new composed oracles must earn driver
-    # evidence immediately — plus the streaming flagship and
-    # cusum_drift (decision-typed — keep its margin-audited family
-    # under fresh driver evidence while burst re-lands) --
-    "stream_approved", "cusum_drift", "dedup_suite", "join_suite",
-    "window_suite", "graph_suite", "tpch_scalar_suite",
-    "subquery_suite", "text_stats_suite",
-]
-
-# Next round's committed gate (round 11, VERDICT r9 item 4). When
-# CORRECTNESS_r10 lands the evidence window becomes {r8, r9, r10}: the
-# 34 names below — the r7-stale pool minus the 9 that run in THIS
-# round's gate freshness slots and minus the 5 that RETIRED into
-# gate-resident suites this round (VERDICT r9 item 4: the registry
-# outgrew the 3-round x 50-slot green window, so standalone stragglers
-# fold into the _suite_sql mechanism: link_prediction + adamic_adar
-# -> graph_suite, dup_ngram_coverage + readability + gazetteer_tag ->
-# text_stats_suite) — fall out of the window and rotate here. 34 names
-# against 50 slots leaves ~16 slots of round-11 slack for new
-# registrations (any round-10-built capability stages as a BENCH twin
-# and takes an actual r11 gate slot under the never-green rule). ONE
-# round-10-built capability is staged for such a slot:
-# `stream_state_ttl` (streaming/state_ttl.py — Flink's
-# table.exec.state.ttl idle-state retention on the update-mode GROUP
-# BY, replayed deterministically as event-time TTL against the
-# delivered high-watermark; bounded-state guarantee: carried state ∝
-# keys active within the horizon), BENCH twin + snapshot-diff+cutoff
-# oracle pre-validated at sf0.001 AND sf0.01 in
-# tests/test_state_ttl.py; register it as @query with an r11 gate
-# slot. If burst_detection goes green in CORRECTNESS_r10, the two
-# bisection probes RETIRE in r11 (drop their @query registrations —
-# the rewritten burst subsumes them), freeing 2 more slots.
-_NEXT_GATE_SCHEDULE: list[str] = [
-    # (adamic_adar / link_prediction / dup_ngram_coverage / readability
-    # / gazetteer_tag left this list by RETIRING into graph_suite /
-    # text_stats_suite — both suites run in THIS round's gate;
-    # funcs_suite joined it after ceding its r10 freshness slot to the
-    # extended text_stats_suite)
-    "agg_suite", "ann_basic_suite", "approx_suite",
-    "binning_suite", "bpe_suite", "chunk_suite", "containment_pairs",
-    "edit_similarity_join",
-    "embedding_dedup_suite", "er_clusters", "event_paths",
-    "exact_dedup_suite", "fingerprint_suite", "frequent_pairs",
-    "funcs_suite", "journey_suite",
-    "llm_curation_suite", "lsh_recall_audit", "nb_scores",
-    "ngram_novelty", "pq_ann", "profile_suite",
-    "retrieval_suite", "sampling_suite", "seasonal_anomaly", "set_ops",
-    "simhash_suite", "source_kl_divergence", "stream_misc_suite",
-    "substring_dups", "vocab_coverage",
-    "weighted_sample", "winnow_matches", "zipf_gini_audit",
-]
-
-
-def _ordered(reg: dict) -> dict:
-    missing = [n for n in _PRIORITY if n not in QUERIES]
-    if missing:  # registration drift guard — fail loudly, not silently
-        raise KeyError(f"_PRIORITY names not registered: {missing}")
-    out = {n: reg[n] for n in _PRIORITY if n in reg}
-    out.update((n, v) for n, v in reg.items() if n not in out)
-    return out
-
-
 def queries() -> dict[str, Q]:
-    return _ordered(dict(QUERIES))
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    return _ordered(dict(ORACLES))
+    return dict(ORACLES)
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -6,33 +6,49 @@ the Spark configuration that matters at 100 TB here, so every entry point
 (tests, bench, driver) runs with the same posture:
 
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing)
-- explicit shuffle partitioning (sized by caller; 32 locally, thousands on a
-  real cluster)
+- explicit shuffle partitioning (sized by caller; the host's cores locally,
+  thousands on a real cluster)
 - UTC session timezone (timestamp parity with the oracle, SURVEY.md §7.4)
 - Arrow enabled for the few Pandas-UDF operators (multimodal decode)
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import SparkSession
 
-# Defaults are sized for the local[32] test harness. On a real cluster the
-# caller overrides master/shuffle_partitions (rule of thumb: 2-3x total
-# executor cores, or let AQE coalesce from a high initial number).
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Local defaults are sized from the host: every core this process may run
+# on, and a heap of half the physical memory (whole GiB, at least 1g,
+# capped at 16g). In local mode spark.driver.memory IS the whole JVM heap
+# (driver + executors + broadcast builds share it), and Spark's 1g default
+# is undersized: an AQE-chosen broadcast build that fits the 64 MB
+# threshold can still OOM a 1g heap once JVM object overhead multiplies it
+# (seen in an 8x-scale run's prescreen join, in BroadcastExchange). The
+# other half of memory is left to the JVM's off-heap use, the Python
+# workers and the OS. The heap is only effective at JVM launch: a
+# getOrCreate against an existing session keeps that session's heap. On a
+# real cluster the caller overrides master/shuffle_partitions (rule of
+# thumb: 2-3x total executor cores, or let AQE coalesce from a high
+# initial number) and the submitter sizes driver/executor memory.
+# SPARK_GRAFT_CPUS and SPARK_GRAFT_DRIVER_MEM override both per deployment.
 
-# In local mode spark.driver.memory IS the whole JVM heap (driver +
-# executors + broadcast builds share it), and Spark's 1g default is wildly
-# undersized for a 32-core/128 GiB harness: an AQE-chosen broadcast build
-# that fits the 64 MB threshold can still OOM the 1g heap once JVM object
-# overhead multiplies it (observed: the 8x scale experiment's prescreen
-# join died in BroadcastExchange). Only effective at JVM launch — a
-# getOrCreate against an existing session keeps that session's heap; on a
-# real cluster the submitter sizes driver/executor memory explicitly.
-DEFAULT_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+
+def _host_cpus() -> int:
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _host_driver_mem() -> str:
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys // 2 // 2**30))}g"
+
+
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus())
+DEFAULT_DRIVER_MEM = (
+    os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem()
+)
 
 
 # Confs every query path depends on for CORRECTNESS (not tuning): these are
@@ -85,8 +101,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # canChangeCachedPlanOutputPartitioning is NOT set here any more
         # (r11): session-wide it regressed the batch comparable set ~7%
-        # (interleaved A/B, scripts/flag_ab.py — AQE coalesces
-        # CPU-expensive cached frames below useful parallelism), while its
+        # (interleaved A/B: AQE coalesces CPU-expensive cached frames
+        # below useful parallelism), while its
         # proven win is the streaming foreachBatch pipelines' per-batch
         # persisted frames. caching.replan_cached_plans scopes it to
         # exactly those runs.
@@ -104,13 +120,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
     )
-    # Env passthrough for scale-dependent tuning experiments (A/B without
-    # code edits): SPARK_GRAFT_EXTRA_CONF='{"spark.conf.key": "value", ...}'.
-    # Applied before extra_conf so explicit callers win.
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
-    if env_conf:
-        for k, v in json.loads(env_conf).items():
-            builder = builder.config(k, str(v))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -22,10 +22,10 @@ records, and timestamp logical types — per the public Avro 1.11 spec:
   length (the same bytes java.math.BigInteger.toByteArray() emits, so the
   JVM UDF path in java/fkta/ and this codec are bit-identical)
 
-The Spark integration (`sources/kafka.py`) prefers the JVM `from_avro` when
-the jar is present and falls back to this codec via an Arrow-batched
-mapInPandas — slower per byte, but correct and dependency-free. At 100 TB
-you install spark-avro; the fallback keeps tests and small jobs honest.
+The Spark integration (`sources/kafka.py`) decodes and encodes in the JVM,
+through the in-repo codec UDF (`sources/java_udf.py`). This module is the
+plain-Python reference codec: the OCF reader/writer in `sources/avro_file.py`
+uses it, and tests check the JVM codec's rows and bytes against it.
 """
 
 from __future__ import annotations

@@ -22,7 +22,7 @@ Codecs: null and deflate (stdlib zlib) — the two the spec requires.
 Writing distributes one OCF per partition via mapPartitions to a shared
 filesystem path (the local/POSIX analog of what every distributed writer
 does); at true 100 TB you install spark-avro and keep this as the
-infra-free twin, same trade-off as sources/kafka.py's fallback decoder.
+infra-free twin.
 """
 
 from __future__ import annotations

@@ -1,30 +1,23 @@
-"""Build + register the in-repo JVM Avro codec UDFs (java/fkta/*.java).
+"""Build and register the engine's one Avro codec: the JVM UDFs in
+java/fkta/.
 
-Why this exists: the documented 100 TB decode path is spark-avro's
-``from_avro`` codegen expression, but that artifact is external and this
-sandbox has no network to fetch it (see tests/test_infra_gated.py's
-round-5 vendoring note). What the sandbox DOES have is ``javac`` (Java 17)
-and the core ``avro-1.12`` jar that ships inside pyspark itself — enough
-to compile a real JVM-side decoder/encoder from the ~200 lines of Java in
-``java/fkta/``. That gives three decode paths, fastest available wins:
-
-1. spark-avro ``from_avro``  — whole-stage codegen, zero per-row calls
-   (needs the external jar; env-gated parity test).
-2. ``fkta.ConfluentAvroDecode`` Java UDF  — per-row call but entirely
-   JVM-side: no Arrow transfer, no Python interpreter, and Avro's OWN
-   ``GenericDatumReader(writer, reader)`` schema resolution. Compiled
-   here, on demand, from committed source.
-3. Pure-Python codec via Arrow mapInPandas  — dependency-free fallback,
-   full registry support (sources/avro_codec.py).
-
-Parity among all reachable paths is asserted by tests/test_java_udf_avro.py
-(decode equality and bit-identical encodes vs the Python codec).
+``decode_avro_column``, ``encode_avro_column`` and
+``upsert_kafka_payload`` run every payload through
+``fkta.ConfluentAvroDecode`` and ``fkta.ConfluentAvroEncode``; there is no
+other codec path. The UDFs are compiled with ``javac`` against the
+``avro-1.12`` jar that ships inside pyspark, so no external artifact
+(spark-avro) is needed. The decoder owns the whole schema-id policy
+(allowlist, writer map, live registry, mixed-id guard) as per-task
+instance state; see its class doc. sources/avro_codec.py stays as the
+plain-Python reference codec that the tests compare against.
 
 Build model: compile iff the jar is missing or older than any .java
-source, into ``build/`` (gitignored — the jar is an artifact, the source
-is the deliverable). Registration is per-SparkSession: ``ADD JAR`` once,
-then one ``registerJavaFunction`` per reader schema (a Java UDF has ONE
-return type, and the returned struct depends on the schema).
+source, into ``build/`` (gitignored: the jar is an artifact, the source is
+the deliverable). Registration is per SparkSession: ``ADD JAR`` once, one
+``registerJavaFunction`` for the encoder, and one per decode policy. A
+decode function's struct return type depends on the reader schema, and
+its instances keep schema-id state, so two policies never share a
+function name.
 """
 
 from __future__ import annotations
@@ -37,7 +30,8 @@ import subprocess
 import tempfile
 from typing import Optional
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
 _REPO_ROOT = os.path.dirname(
@@ -75,9 +69,9 @@ def _pyspark_jars_dir() -> str:
 def ensure_built(force: bool = False) -> Optional[str]:
     """Compile java/fkta/*.java into build/fkta-avro-udf.jar if missing or
     stale. Returns the jar path, or None when it cannot be built (no javac,
-    no sources, compile error) — callers then fall back to the Python
-    codec. Failures are remembered so a broken toolchain costs one attempt
-    per process, not one per query."""
+    no sources, compile error); registration then raises. Failures are
+    remembered so a broken toolchain costs one attempt per process, not
+    one per query."""
     global _BUILD_FAILED
     sources = _java_sources()
     if not sources or _BUILD_FAILED:
@@ -117,69 +111,96 @@ def ensure_built(force: bool = False) -> Optional[str]:
         return None
 
 
-def _add_jar(spark: SparkSession, jar: str) -> bool:
-    app_id = spark.sparkContext.applicationId
-    if app_id in _JARS_ADDED:
-        return True
-    try:
-        spark.sql(f"ADD JAR 'file://{jar}'")
-        _JARS_ADDED.add(app_id)
-        return True
-    except Exception:
-        return False
-
-
-def decode_fn_name(reader_schema_json: str) -> str:
-    digest = hashlib.md5(reader_schema_json.encode()).hexdigest()[:10]
-    return f"fkta_avro_decode_{digest}"
-
-
-def ensure_decode_registered(
-    spark: SparkSession, reader_schema_json: str
-) -> Optional[str]:
-    """Register the decode UDF for this reader schema (one registration per
-    schema — the UDF's struct return type depends on it). Returns the SQL
-    function name, or None when the JVM path is unavailable."""
-    from flink_kafka_table_api_spark.avro_schema import avro_to_struct
-
-    fname = decode_fn_name(reader_schema_json)
+def _register(spark: SparkSession, fname: str, cls: str, return_type) -> str:
     app_id = spark.sparkContext.applicationId
     if (app_id, fname) in _REGISTERED:
         return fname
     jar = ensure_built()
-    if jar is None or not _add_jar(spark, jar):
-        return None
-    try:
-        spark.udf.registerJavaFunction(
-            fname, DECODE_CLASS, avro_to_struct(reader_schema_json)
+    if jar is None:
+        raise RuntimeError(
+            "the JVM Avro codec in java/fkta/ could not be built: it needs "
+            "javac and jar from a JDK on PATH"
         )
-    except Exception:
-        return None
+    if app_id not in _JARS_ADDED:
+        spark.sql(f"ADD JAR 'file://{jar}'")
+        _JARS_ADDED.add(app_id)
+    spark.udf.registerJavaFunction(fname, cls, return_type)
     _REGISTERED.add((app_id, fname))
     return fname
 
 
-def ensure_encode_registered(spark: SparkSession) -> Optional[str]:
-    """Register the encode UDF (single name — it always returns binary)."""
-    app_id = spark.sparkContext.applicationId
-    if (app_id, ENCODE_FN) in _REGISTERED:
-        return ENCODE_FN
-    jar = ensure_built()
-    if jar is None or not _add_jar(spark, jar):
-        return None
-    try:
-        spark.udf.registerJavaFunction(ENCODE_FN, ENCODE_CLASS, BinaryType())
-    except Exception:
-        return None
-    _REGISTERED.add((app_id, ENCODE_FN))
-    return ENCODE_FN
+def decode_policy(
+    reader_schema_json: str,
+    *,
+    header_len: int = 5,
+    writer_schemas: dict[int, str] | None = None,
+    expected_schema_ids: list[int] | None = None,
+    schema_registry_url: str | None = None,
+) -> bytes:
+    """The decode UDF's policy argument: a UTF-8 JSON object. It travels
+    as a binary literal, which Spark hands to the UDF without a per-row
+    conversion."""
+    return json.dumps({
+        "reader": reader_schema_json,
+        "header": header_len,
+        "writers": (
+            {str(int(i)): s for i, s in sorted(writer_schemas.items())}
+            if writer_schemas else None
+        ),
+        "expected": (
+            sorted(int(i) for i in expected_schema_ids)
+            if expected_schema_ids is not None else None
+        ),
+        "registry": (
+            schema_registry_url.rstrip("/") if schema_registry_url else None
+        ),
+    }, sort_keys=True).encode()
 
 
-def writer_map_json(writer_schemas: dict[int, str] | None) -> Optional[str]:
-    """Normalize {id: schema-json} to the JSON-object argument the decode
-    UDF takes (string keys, schema values passed through as JSON text)."""
-    if not writer_schemas:
-        return None
-    return json.dumps(
-        {str(int(i)): s for i, s in sorted(writer_schemas.items())}
+def decode_fn_name(policy: bytes) -> str:
+    return f"fkta_avro_decode_{hashlib.md5(policy).hexdigest()[:10]}"
+
+
+def ensure_decode_registered(
+    spark: SparkSession, reader_schema_json: str, policy: bytes | None = None
+) -> str:
+    """Register the decode UDF for this policy (default: framed, nothing
+    declared) and return its SQL function name. Raises RuntimeError when
+    the codec jar cannot be built."""
+    from flink_kafka_table_api_spark.avro_schema import avro_to_struct
+
+    if policy is None:
+        policy = decode_policy(reader_schema_json)
+    return _register(spark, decode_fn_name(policy), DECODE_CLASS,
+                     avro_to_struct(reader_schema_json))
+
+
+def ensure_encode_registered(spark: SparkSession) -> str:
+    """Register the encode UDF (one name: it always returns binary)."""
+    return _register(spark, ENCODE_FN, ENCODE_CLASS, BinaryType())
+
+
+def decode_column(
+    spark: SparkSession, payload: Column, reader_schema_json: str, **declared
+) -> Column:
+    """``payload`` decoded to the reader schema's struct; ``declared`` is
+    decode_policy's keywords."""
+    policy = decode_policy(reader_schema_json, **declared)
+    fname = ensure_decode_registered(spark, reader_schema_json, policy)
+    return F.call_udf(fname, payload, F.lit(policy))
+
+
+def encode_column(
+    spark: SparkSession, avro_schema_json: str, schema_id: int | None = None
+) -> Column:
+    """The columns named by the schema's fields, Avro-encoded, with the
+    Confluent header when ``schema_id`` is given. The struct is built in
+    the schema's field order, because the encoder reads fields by
+    position."""
+    fields = [f["name"] for f in json.loads(avro_schema_json)["fields"]]
+    return F.call_udf(
+        ensure_encode_registered(spark),
+        F.struct(*[F.col(f) for f in fields]),
+        F.lit(avro_schema_json),
+        F.lit(schema_id).cast("int"),
     )

@@ -20,17 +20,16 @@ Kafka prefix passthrough mirrors the reference's createKafkaProperties
 client untouched — Spark uses the exact same convention.
 
 The Kafka connector itself (spark-sql-kafka) still needs its jar and a
-broker; Avro decode/encode does NOT need external jars — beyond the
-optional spark-avro fast path there is an in-repo javac-compiled JVM codec
-(java/fkta/, sources/java_udf.py) and a pure-Python fallback, so the wire
-format runs everywhere (no broker exists in the test container — framing
-and codecs are fully tested standalone, broker integration is env-gated,
-same trade-off the reference makes with Testcontainers).
+broker. Avro decode and encode need no external jar: they run through one
+codec, the in-repo javac-compiled JVM UDFs (java/fkta/,
+sources/java_udf.py), so the wire format runs everywhere. No broker
+exists in the test container, so framing and codecs are tested
+standalone and broker integration is env-gated, the same trade-off the
+reference makes with Testcontainers.
 """
 
 from __future__ import annotations
 
-import io
 import json
 import struct
 import urllib.request
@@ -38,6 +37,8 @@ import urllib.request
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from flink_kafka_table_api_spark.sources import java_udf
 
 CONFLUENT_MAGIC = 0x00
 CONFLUENT_HEADER_LEN = 5  # magic(1) + schema-id(4, big-endian)
@@ -94,34 +95,12 @@ class SchemaRegistryClient:
             return payload["id"], payload["schema"]
 
     def get_by_id(self, schema_id: int) -> str:
-        """Writer-schema lookup by the id embedded in the Confluent header —
-        the call Flink's avro-confluent format makes per message id."""
+        """Writer-schema lookup by the id embedded in the Confluent header;
+        the decode UDF makes the same call in the JVM."""
         with urllib.request.urlopen(
             f"{self.url}/schemas/ids/{schema_id}"
         ) as resp:
             return json.loads(resp.read())["schema"]
-
-
-def _require_avro_functions():
-    try:
-        from pyspark.sql.avro.functions import from_avro, to_avro  # noqa: PLC0415
-        return from_avro, to_avro
-    except Exception as exc:  # pragma: no cover - classpath-dependent
-        raise RuntimeError(
-            "spark-avro package not on the classpath; start the session with "
-            "spark.jars.packages=org.apache.spark:spark-avro_2.13:<spark-version>"
-        ) from exc
-
-
-def _jvm_avro_usable(df: DataFrame, body: Column, schema_json: str) -> bool:
-    """The pyspark from_avro import succeeds even without the spark-avro jar;
-    the failure only surfaces at analysis. Probe analysis on a LIMIT 0 plan."""
-    try:
-        from_avro, _ = _require_avro_functions()
-        df.limit(0).select(from_avro(body, schema_json).alias("v")).schema
-        return True
-    except Exception:
-        return False
 
 
 def decode_avro_column(
@@ -136,214 +115,47 @@ def decode_avro_column(
 ) -> DataFrame:
     """Decode an Avro-encoded binary column into its record fields.
 
-    Three decode paths, fastest available wins (sources/java_udf.py):
+    Every decode runs in the JVM, through the in-repo
+    ``fkta.ConfluentAvroDecode`` UDF (sources/java_udf.py); it raises
+    RuntimeError when that UDF cannot be built. The UDF owns the
+    schema-id policy of framed payloads, per task:
 
-    1. spark-avro ``from_avro`` — whole-stage codegen, zero per-row calls
-       (external jar; single-schema topics only).
-    2. the in-repo ``fkta.ConfluentAvroDecode`` Java UDF — compiled with
-       javac against pyspark's bundled avro jar; per-row but entirely
-       JVM-side (no Arrow transfer, no Python), with Avro's own
-       writer→reader resolution when ``writer_schemas`` maps the framed
-       ids to their schema JSON. Taken only when the caller DECLARED an
-       id expectation (``writer_schemas`` / ``expected_schema_ids``) or
-       the payloads are unframed — a row-at-a-time UDF cannot pre-scan
-       for the undeclared-mixed-ids case, which path 3 guards.
-    3. the pure-Python codec via Arrow mapInPandas — dependency-free
-       fallback and the only path that resolves ids against a LIVE
-       ``schema_registry_url`` at scan time.
+    - ``expected_schema_ids``: an allowlist. Any other id raises
+      ``unexpected Avro schema id``. Declaring several ids asserts that all
+      of them decode with the reader schema (e.g. one schema registered
+      under several subjects).
+    - ``writer_schemas`` ({schema_id: writer schema JSON}): each message
+      decodes with the writer schema of its framed id, projected onto
+      ``avro_schema_json`` (the reader schema) by Avro's resolution rules.
+      This decodes a mixed-version topic without a live registry. An id
+      missing from the map raises ``unknown Avro schema id``.
+    - ``schema_registry_url``: writer schemas missing from the map are
+      fetched by id from the registry (``GET /schemas/ids/{id}``, cached
+      per executor JVM), as Flink's avro-confluent format does
+      (reference TransactionProcessor.java:112-115).
+    - nothing declared: the first id a task sees is pinned, and any other
+      id raises ``mixed Avro schema ids`` rather than mis-decode bytes
+      written under another schema. A payload that does not decode with
+      the reader schema raises an error naming mixed ids or an evolved
+      writer schema as the likely causes.
 
-    ``writer_schemas`` ({schema_id: writer schema JSON}) serves topics
-    whose message ids are known up front (e.g. fetched once from the
-    registry on the driver): both the Java-UDF and Python paths then
-    decode mixed-version topics without any executor-side HTTP. Unknown
-    ids fail loudly on every path.
-
-    Schema evolution (the reason the Confluent header carries an id at
-    all — reference TransactionProcessor.java:112-115): when
-    ``schema_registry_url`` is given and the payloads are framed, every
-    message is decoded with its WRITER schema — resolved from the embedded
-    id via the registry (cached per id, one lookup per id per task) — then
-    projected onto ``avro_schema_json`` (the reader schema) under the Avro
-    spec's resolution rules. A topic carrying several registered schema
-    versions therefore decodes correctly instead of crashing or silently
-    misreading bytes. Unknown ids fail loudly (registry 404 propagates).
-
-    Without a registry there is nothing to resolve against, so mixed ids
-    are a hard error, not a silent mis-decode: pass
-    ``expected_schema_ids`` (e.g. the id you registered at produce time)
-    to enforce the check in BOTH decode paths — it compiles to a
-    codegen-side ``CASE WHEN id IN (...) THEN value ELSE raise_error``
-    guard, which is the strongest check available on the JVM path (a
-    single from_avro expression cannot branch per writer schema). The
-    Python fallback additionally rejects mixed distinct ids seen anywhere
-    within a task's scan (across all of its Arrow batches) even with no
-    expectation declared; declaring several ``expected_schema_ids`` is an
-    explicit assertion that all of them are decodable with the reader
-    schema (e.g. one schema registered under several subjects), so ids
-    within that allowlist do NOT trip the mixed-id error — matching what
-    the JVM path accepts. Mixing across PARTITIONS is only caught by
-    ``expected_schema_ids`` (checked row-by-row, codegen-side) or a
-    registry — partitions cannot compare notes without an action.
+    Ids are compared within a task. Mixing across partitions is caught
+    only by ``expected_schema_ids``, ``writer_schemas`` or a registry.
+    Unframed payloads carry no id, so the id keywords do not apply.
     """
-    from flink_kafka_table_api_spark.avro_schema import avro_to_struct
-
-    if expected_schema_ids is not None and confluent_framed:
-        sid = extract_schema_id(F.col(value_col))
-        guarded = F.when(
-            sid.isin([int(i) for i in expected_schema_ids]), F.col(value_col)
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("unexpected Avro schema id "),
-                    sid.cast("string"),
-                    F.lit(
-                        f"; expected one of {sorted(expected_schema_ids)}"
-                        " (pass schema_registry_url to resolve by id)"
-                    ),
-                )
-            ).cast("binary")
+    declared = {}
+    if confluent_framed:
+        declared = dict(
+            writer_schemas=writer_schemas,
+            expected_schema_ids=expected_schema_ids,
+            schema_registry_url=schema_registry_url,
         )
-        df = df.withColumn(value_col, guarded)
-
-    body = (
-        strip_confluent_header(F.col(value_col))
-        if confluent_framed
-        else F.col(value_col)
+    decoded = java_udf.decode_column(
+        df.sparkSession, F.col(value_col), avro_schema_json,
+        header_len=CONFLUENT_HEADER_LEN if confluent_framed else 0,
+        **declared,
     )
-    use_registry = schema_registry_url is not None and confluent_framed
-    if (
-        not use_registry
-        and writer_schemas is None
-        and _jvm_avro_usable(df, body, avro_schema_json)
-    ):
-        from_avro, _ = _require_avro_functions()
-        return df.select(from_avro(body, avro_schema_json).alias("v")).select("v.*")
-
-    # The in-repo Java UDF is row-at-a-time, so it cannot reproduce the
-    # Python fallback's batch-level mixed-id pre-scan; route to it only
-    # when the caller DECLARED an expectation (writer map -> unknown ids
-    # throw in the UDF; id allowlist -> the codegen guard above enforces
-    # membership; unframed -> no ids exist). Undeclared framed topics
-    # keep the guarded Python path.
-    declared = (
-        not confluent_framed
-        or writer_schemas is not None
-        or expected_schema_ids is not None
-    )
-    if not use_registry and declared:
-        from flink_kafka_table_api_spark.sources import java_udf
-
-        fname = java_udf.ensure_decode_registered(
-            df.sparkSession, avro_schema_json
-        )
-        if fname is not None:
-            wm = (
-                java_udf.writer_map_json(writer_schemas)
-                if confluent_framed
-                else None
-            )
-            decoded = F.call_udf(
-                fname,
-                F.col(value_col),
-                F.lit(avro_schema_json),
-                F.lit(wm).cast("string"),
-                F.lit(CONFLUENT_HEADER_LEN if confluent_framed else 0),
-            )
-            return df.select(decoded.alias("v")).select("v.*")
-
-    spark_schema = avro_to_struct(avro_schema_json)
-    field_names = [f.name for f in spark_schema.fields]
-    header = CONFLUENT_HEADER_LEN if confluent_framed else 0
-    registry_url = schema_registry_url
-    allowed_ids = (
-        frozenset(int(i) for i in expected_schema_ids)
-        if expected_schema_ids is not None
-        else None
-    )
-    preloaded_writers = (
-        {int(i): s for i, s in writer_schemas.items()}
-        if writer_schemas
-        else None
-    )
-
-    def decode_batches(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        from flink_kafka_table_api_spark.sources.avro_codec import (  # noqa: PLC0415
-            _decode,
-            _decode_resolved,
-        )
-
-        reader_parsed = json.loads(avro_schema_json)
-        # per-task writer-schema cache: id -> parsed-dict-or-None (None
-        # marks "identical to reader", skipping resolution overhead);
-        # parsed ONCE per id per task — never json.loads per message.
-        # Pre-seeded from writer_schemas when the caller fetched the
-        # topic's ids up front (then no executor-side HTTP ever happens).
-        writer_cache: dict[int, dict | None] = {}
-        if preloaded_writers:
-            for wid, wjson in preloaded_writers.items():
-                parsed = json.loads(wjson)
-                writer_cache[wid] = (
-                    None if parsed == reader_parsed else parsed
-                )
-        client = (
-            SchemaRegistryClient(registry_url) if registry_url else None
-        )
-        resolve_by_id = client is not None or bool(writer_cache)
-
-        def writer_for(schema_id: int) -> dict | None:
-            if schema_id not in writer_cache:
-                if client is None:
-                    raise ValueError(
-                        f"unknown Avro schema id {schema_id}; known ids "
-                        f"{sorted(writer_cache)} and no schema_registry_url"
-                        " to fetch more"
-                    )
-                fetched = json.loads(client.get_by_id(schema_id))
-                writer_cache[schema_id] = (
-                    None if fetched == reader_parsed else fetched
-                )
-            return writer_cache[schema_id]
-
-        # no-resolution guard state spans ALL batches of this task (Arrow
-        # splits a partition into ~10k-row batches; a per-batch check
-        # would miss v1-batch/v2-batch splits). Cross-PARTITION mixing
-        # cannot be detected without an action — that is what
-        # expected_schema_ids (checked codegen-side on every row) or a
-        # schema_registry_url / writer_schemas map is for; the docstring
-        # says so.
-        seen_ids: set[int] = set()
-        for pdf in batches:
-            raws = [bytes(v) for v in pdf[value_col]]
-            if header and not resolve_by_id:
-                seen_ids.update(struct.unpack(">I", r[1:5])[0] for r in raws)
-                if len(seen_ids) > 1 and not (
-                    allowed_ids is not None and seen_ids <= allowed_ids
-                ):
-                    # check BEFORE decoding so the error names the cause,
-                    # not a downstream EOF
-                    raise ValueError(
-                        "mixed Avro schema ids in topic "
-                        f"({sorted(seen_ids)}) but no schema_registry_url"
-                        " to resolve writer schemas — refusing to mis-decode"
-                    )
-            records = []
-            for raw in raws:
-                payload = io.BytesIO(raw[header:])
-                if header and resolve_by_id:
-                    sid = struct.unpack(">I", raw[1:5])[0]
-                    writer = writer_for(sid)
-                    records.append(
-                        _decode(payload, reader_parsed)
-                        if writer is None
-                        else _decode_resolved(payload, writer, reader_parsed)
-                    )
-                else:
-                    records.append(_decode(payload, reader_parsed))
-            yield pd.DataFrame(records, columns=field_names)
-
-    return df.select(value_col).mapInPandas(decode_batches, schema=spark_schema)
+    return df.select(decoded.alias("v")).select("v.*")
 
 
 def encode_avro_column(
@@ -353,57 +165,13 @@ def encode_avro_column(
     schema_id: int | None = None,
 ) -> DataFrame:
     """Inverse of decode_avro_column: rows -> single binary 'value' column,
-    Confluent-framed when a schema_id is given. Same three-path ladder as
-    the decoder: spark-avro to_avro > in-repo Java UDF (bit-identical to
-    the Python codec, proven by tests/test_java_udf_avro.py) > pure-Python
-    codec."""
-    cols = df.columns
-    if _jvm_avro_usable(df, F.lit(b""), avro_schema_json):
-        _, to_avro = _require_avro_functions()
-        payload = to_avro(F.struct(*cols), avro_schema_json)
-        if schema_id is not None:
-            payload = F.concat(F.lit(frame_header(schema_id)), payload)
-        return df.select(payload.alias("value"))
-
-    from flink_kafka_table_api_spark.sources import java_udf
-
-    fname = java_udf.ensure_encode_registered(df.sparkSession)
-    if fname is not None:
-        # the Java encoder reads row fields POSITIONALLY against the avro
-        # schema's field order, so build the struct in that order (the
-        # Python fallback matches by name; same contract either way)
-        field_order = [
-            f["name"] for f in json.loads(avro_schema_json)["fields"]
-        ]
-        payload = F.call_udf(
-            fname,
-            F.struct(*[F.col(c) for c in field_order]),
-            F.lit(avro_schema_json),
-            F.lit(schema_id).cast("int"),
-        )
-        return df.select(payload.alias("value"))
-
-    header = frame_header(schema_id) if schema_id is not None else b""
-
-    def encode_batches(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        from flink_kafka_table_api_spark.sources.avro_codec import (  # noqa: PLC0415
-            encode_record,
-        )
-
-        for pdf in batches:
-            payloads = []
-            for row in pdf.itertuples(index=False):
-                rec = {}
-                for name, val in zip(cols, row):
-                    if isinstance(val, pd.Timestamp):
-                        val = val.to_pydatetime()
-                    rec[name] = val
-                payloads.append(header + encode_record(avro_schema_json, rec))
-            yield pd.DataFrame({"value": payloads})
-
-    return df.mapInPandas(encode_batches, schema="value binary")
+    Confluent-framed when a schema_id is given. Runs the in-repo
+    ``fkta.ConfluentAvroEncode`` UDF, whose bytes equal the reference codec
+    in sources/avro_codec.py (tests/test_java_udf_avro.py)."""
+    return df.select(
+        java_udf.encode_column(df.sparkSession, avro_schema_json, schema_id)
+        .alias("value")
+    )
 
 
 def read_topic(
@@ -422,11 +190,10 @@ def read_topic(
 ) -> DataFrame:
     """O1/O11: read a topic as a streaming (unbounded) or batch (bounded)
     DataFrame, decoding Confluent-framed Avro values when a schema is given.
-    With a ``schema_registry_url`` the writer schema is resolved per
-    message from the framed id (full evolution support, see
-    decode_avro_column); ``writer_schemas`` pre-resolves known ids so the
-    JVM decode path handles mixed-version topics without a live registry;
-    ``expected_schema_ids`` adds a fail-loud id guard.
+    The id keywords are decode_avro_column's schema-id policy: a
+    ``schema_registry_url`` resolves each message's writer schema from its
+    framed id, ``writer_schemas`` pre-resolves known ids without a live
+    registry, and ``expected_schema_ids`` is a fail-loud id allowlist.
     """
     reader = (spark.read if bounded else spark.readStream).format("kafka")
     reader = (

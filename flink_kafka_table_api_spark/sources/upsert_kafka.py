@@ -20,32 +20,30 @@ remove". This module implements both directions:
                             per key bytes (one max_by hash aggregate —
                             the same fold Kafka log compaction itself
                             performs), tombstones dropped, values
-                            decoded through the shared 3-path ladder
-                            (spark-avro > in-repo Java UDF > pure-
-                            Python Arrow codec).
+                            decoded by decode_avro_column.
+
+Keys and values are encoded by the engine's one Avro codec, the in-repo
+JVM UDF (sources/java_udf.py).
 
 Round-trip contract, pinned by tests/test_upsert_kafka.py: framing the
 Top-N retract log and materializing the topic equals applying the
 changelog directly (streaming/retract.py:apply_changelog) — i.e. a
 Kafka reader of the compacted topic sees exactly the maintained Top-N.
 
-At 100 TB: encoding is one projection (codegen'd via spark-avro when
-present, Arrow-batched otherwise); materialization is one keyed hash
-aggregate over the topic — the read cost any compacted-topic consumer
-pays. Nothing driver-side.
+At 100 TB: encoding is one projection; materialization is one keyed
+hash aggregate over the topic — the read cost any compacted-topic
+consumer pays. Nothing driver-side.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import json
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.sources.kafka import (
-    _jvm_avro_usable,
-    _require_avro_functions,
-    decode_avro_column,
-    frame_header,
-)
+from flink_kafka_table_api_spark.sources import java_udf
+from flink_kafka_table_api_spark.sources.kafka import decode_avro_column
 
 
 def upsert_kafka_payload(
@@ -64,71 +62,22 @@ def upsert_kafka_payload(
     fields as the message value — NULL for -D tombstones — and carry
     `offset_col` through (the per-key total order; a real broker
     assigns it, the bounded twin derives it from batch_id). Returns
-    (key binary, value binary, offset long)."""
-    import json as _json
-
-    value_fields = [
-        f["name"] for f in _json.loads(value_schema_json)["fields"]
-    ]
-    keep = log.filter(F.col(op_col) != "-U")
-    tomb = F.col(op_col) == "-D"
-    if _jvm_avro_usable(log, F.lit(b""), value_schema_json):
-        _, to_avro = _require_avro_functions()
-        key = to_avro(F.struct(*key_cols), key_schema_json)
-        if key_schema_id is not None:
-            key = F.concat(F.lit(frame_header(key_schema_id)), key)
-        val = to_avro(F.struct(*value_fields), value_schema_json)
-        if schema_id is not None:
-            val = F.concat(F.lit(frame_header(schema_id)), val)
-        return keep.select(
-            key.alias("key"),
-            F.when(tomb, F.lit(None).cast("binary")).otherwise(val)
-            .alias("value"),
-            F.col(offset_col).cast("long").alias("offset"),
+    (key binary, value binary, offset long). The key schema's fields must
+    be among `key_cols`."""
+    key_fields = [f["name"] for f in json.loads(key_schema_json)["fields"]]
+    if not set(key_fields) <= set(key_cols):
+        raise ValueError(
+            f"key schema fields {key_fields} are not all in key_cols "
+            f"{key_cols}"
         )
-
-    key_header = (
-        frame_header(key_schema_id) if key_schema_id is not None else b""
-    )
-    val_header = frame_header(schema_id) if schema_id is not None else b""
-    cols = keep.columns
-
-    def encode_batches(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        from flink_kafka_table_api_spark.sources.avro_codec import (  # noqa: PLC0415
-            encode_record,
-        )
-
-        for pdf in batches:
-            keys, vals, offs = [], [], []
-            for row in pdf.itertuples(index=False):
-                rec = {}
-                for name, v in zip(cols, row):
-                    if isinstance(v, pd.Timestamp):
-                        v = v.to_pydatetime()
-                    rec[name] = v
-                keys.append(
-                    key_header + encode_record(
-                        key_schema_json, {c: rec[c] for c in key_cols}
-                    )
-                )
-                if rec[op_col] == "-D":
-                    vals.append(None)
-                else:
-                    vals.append(
-                        val_header + encode_record(
-                            value_schema_json,
-                            {c: rec[c] for c in value_fields},
-                        )
-                    )
-                offs.append(rec[offset_col])
-            yield pd.DataFrame(
-                {"key": keys, "value": vals, "offset": offs}
-            )
-
-    return keep.mapInPandas(
-        encode_batches, schema="key binary, value binary, offset long"
+    spark = log.sparkSession
+    value = java_udf.encode_column(spark, value_schema_json, schema_id)
+    return log.filter(F.col(op_col) != "-U").select(
+        java_udf.encode_column(spark, key_schema_json, key_schema_id)
+        .alias("key"),
+        F.when(F.col(op_col) == "-D", F.lit(None).cast("binary"))
+        .otherwise(value).alias("value"),
+        F.col(offset_col).cast("long").alias("offset"),
     )
 
 

@@ -25,17 +25,16 @@ import org.apache.spark.sql.Row;
 import org.apache.spark.sql.api.java.UDF3;
 
 /**
- * JVM-side encoder: Spark struct -> (optionally Confluent-framed) Avro
- * binary. The inverse of {@link ConfluentAvroDecode}; compiled in-repo
- * against pyspark's bundled avro-1.12 jar (see ConfluentAvroDecode's
- * class doc for why no external spark-avro artifact is used).
+ * The engine's one Avro encoder: Spark struct to (optionally
+ * Confluent-framed) Avro binary. The inverse of {@link ConfluentAvroDecode},
+ * compiled in-repo against pyspark's bundled avro-1.12 jar
+ * (sources/java_udf.py).
  *
  * Arguments: (struct row, writer schema JSON, schema id or null). A
  * non-null schema id prepends the Confluent wire header: magic 0x00 +
  * int32 big-endian id (reference TransactionProcessor.java:112-115).
- * Fields are taken POSITIONALLY from the row, which registerJavaFunction
- * callers guarantee by building the struct in schema field order
- * (sources/kafka.py does).
+ * Fields are taken by position from the row, so callers build the struct
+ * in the schema's field order (java_udf.encode_column does).
  */
 public class ConfluentAvroEncode implements UDF3<Row, String, Integer, byte[]> {
 

@@ -1,8 +1,9 @@
 """End-to-end Avro-Confluent codec tests WITHOUT brokers or the spark-avro
-jar: the pure-Python codec (sources/avro_codec.py) encodes the reference's
-5-row fixture into Confluent-framed payloads, the engine decodes them
-through decode_avro_column (mapInPandas fallback path) and runs the full
-reference pipeline on the result — O2 exercised for real, not just framing.
+jar: the pure-Python reference codec (sources/avro_codec.py) encodes the
+reference's 5-row fixture into Confluent-framed payloads, the engine
+decodes them through decode_avro_column (the JVM codec UDF) and runs the
+full reference pipeline on the result — O2 exercised for real, not just
+framing.
 """
 
 from __future__ import annotations
@@ -83,7 +84,7 @@ def test_codec_edge_values():
 
 
 def test_confluent_framed_pipeline_end_to_end(spark):
-    """Framed payloads -> decode_avro_column (python fallback) -> the
+    """Framed payloads -> decode_avro_column (JVM codec UDF) -> the
     reference pipeline. This is the reference's whole job minus the broker
     (reference TransactionProcessor.java:89-192)."""
     framed = [

@@ -7,8 +7,8 @@ WITH the infra proves it with one command.
 
 How to run outside the sandbox:
 
-  # JVM spark-avro codegen path (the documented 100 TB decode path):
-  #   download org.apache.spark:spark-avro_2.13:<spark-version> and
+  # spark-avro's from_avro as an external reference for the in-repo JVM
+  # codec UDF: download org.apache.spark:spark-avro_2.13:<spark-version> and
   SPARK_AVRO_JAR=/path/to/spark-avro_2.13-4.1.2.jar \
       python -m pytest tests/test_infra_gated.py -m spark_avro -v
   # (vendoring attempted round 5, 2026-08-14: the sandbox resolves no DNS
@@ -17,9 +17,9 @@ How to run outside the sandbox:
   #  avro-1.12.1 jars ship with pyspark. Environment-blocked, not
   #  deferred. What the sandbox CAN do — and now does, ungated — is
   #  compile the in-repo JVM codec from java/fkta/ with javac against
-  #  that bundled avro jar: tests/test_java_udf_avro.py executes a real
-  #  JVM-side decode/encode path and asserts parity with the Python
-  #  codec. This test remains for the from_avro CODEGEN path proper.)
+  #  that bundled avro jar: tests/test_java_udf_avro.py executes the
+  #  engine's one codec path and checks it against the Python reference
+  #  codec. This test compares it with spark-avro's from_avro.)
 
   # Live Kafka broker + Schema Registry smoke (the reference's
   # TransactionFlinkTest shape — produce, run pipeline, bounded read-back):
@@ -59,10 +59,12 @@ SCHEMA = json.dumps({
 @pytest.mark.skipif(
     not SPARK_AVRO_JAR, reason="set SPARK_AVRO_JAR=/path/to/spark-avro.jar"
 )
-def test_jvm_and_python_avro_paths_agree(tmp_path):
-    """Both decode paths — JVM from_avro codegen (production) and the
-    pure-Python fallback (infra-free tests) — must produce identical rows
-    for the same Confluent-framed payloads."""
+def test_spark_avro_and_in_repo_codec_agree(tmp_path):
+    """spark-avro's ``from_avro`` (an external reference decoder) and
+    ``decode_avro_column`` (the in-repo JVM codec UDF) must produce
+    identical rows for the same Confluent-framed payloads."""
+    from pyspark.sql.avro.functions import from_avro
+
     from flink_kafka_table_api_spark.sources import kafka as ka
     from flink_kafka_table_api_spark.sources.avro_codec import encode_record
 
@@ -82,31 +84,20 @@ def test_jvm_and_python_avro_paths_agree(tmp_path):
         ]
         raw = spark.createDataFrame([(p,) for p in payloads], "value binary")
 
-        body = ka.strip_confluent_header(None)
-        assert ka._jvm_avro_usable(raw, body, SCHEMA), (
-            "spark-avro jar present but from_avro analysis failed — wrong "
-            "jar version for this Spark?"
-        )
-        jvm_out = {
+        reference = {
+            (r.transactionId, r.amount, r.status)
+            for r in raw.select(
+                from_avro(ka.strip_confluent_header(None), SCHEMA).alias("v")
+            ).select("v.*").collect()
+        }
+        in_repo = {
             (r.transactionId, r.amount, r.status)
             for r in ka.decode_avro_column(raw, SCHEMA).collect()
         }
 
-        # force the Python fallback on the same payloads by monkeypatching
-        # the usability probe
-        orig = ka._jvm_avro_usable
-        ka._jvm_avro_usable = lambda *a, **k: False
-        try:
-            py_out = {
-                (r.transactionId, r.amount, r.status)
-                for r in ka.decode_avro_column(raw, SCHEMA).collect()
-            }
-        finally:
-            ka._jvm_avro_usable = orig
-
         expected = {(r["transactionId"], r["amount"], r["status"]) for r in rows}
-        assert jvm_out == expected
-        assert py_out == expected
+        assert reference == expected
+        assert in_repo == expected
     finally:
         spark.stop()
 

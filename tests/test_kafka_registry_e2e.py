@@ -99,6 +99,11 @@ class _StubRegistry(BaseHTTPRequestHandler):
         raise KeyError("schema not registered")
 
 
+def _plans_jvm_decode(df) -> bool:
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return "fkta_avro_decode" in plan and "MapInPandas" not in plan
+
+
 @pytest.fixture()
 def registry_url():
     _StubRegistry.store = {}
@@ -202,6 +207,7 @@ def test_mixed_schema_versions_resolve_by_embedded_id(spark, registry_url):
         raw, SCHEMA_V2, confluent_framed=True,
         schema_registry_url=registry_url,
     )
+    assert _plans_jvm_decode(decoded)
     got = {
         (r.transactionId, r.amount, r.status, r.currency)
         for r in decoded.collect()
@@ -237,10 +243,8 @@ def test_mixed_ids_without_registry_fail_loudly(spark, registry_url):
 def test_multi_expected_ids_decode_without_registry(spark, registry_url):
     """Declaring several expected_schema_ids is an explicit assertion that
     all of them decode with the reader schema (e.g. one schema registered
-    under two subjects -> two ids). The Python fallback must then accept
-    the id mix like the JVM guard does, instead of tripping the mixed-id
-    error (ADVICE r4: the multi-id allowlist was unusable on the fallback
-    path)."""
+    under two subjects -> two ids), so the decode UDF accepts the id mix
+    instead of tripping the mixed-id error."""
     df = spark.createDataFrame(
         [("t1", 10.5, "APPROVED"), ("t2", 99.0, "PENDING")],
         "transactionId string, amount double, status string",
@@ -256,12 +260,11 @@ def test_multi_expected_ids_decode_without_registry(spark, registry_url):
     assert len(ids) == 2  # genuinely mixed on the wire
     raw = spark.createDataFrame(
         [(x,) for x in v1 + v2], "value binary").coalesce(1)
-    got = {
-        (r.transactionId, r.amount, r.status)
-        for r in decode_avro_column(
-            raw, SCHEMA, confluent_framed=True, expected_schema_ids=ids,
-        ).collect()
-    }
+    decoded = decode_avro_column(
+        raw, SCHEMA, confluent_framed=True, expected_schema_ids=ids,
+    )
+    assert _plans_jvm_decode(decoded)
+    got = {(r.transactionId, r.amount, r.status) for r in decoded.collect()}
     assert got == {("t1", 10.5, "APPROVED"), ("t2", 99.0, "PENDING")}
     # without the allowlist the same mix still fails loudly
     with pytest.raises(Exception, match="mixed Avro schema ids"):
@@ -269,8 +272,8 @@ def test_multi_expected_ids_decode_without_registry(spark, registry_url):
 
 
 def test_expected_schema_ids_guard_raises_on_foreign_id(spark, registry_url):
-    """The codegen-side id guard (the strongest check available on the JVM
-    from_avro path) rejects payloads whose framed id is not expected."""
+    """The decode UDF's id allowlist rejects payloads whose framed id is
+    not expected."""
     df = spark.createDataFrame(
         [("t1", 10.5, "APPROVED")],
         "transactionId string, amount double, status string",

@@ -1,55 +1,15 @@
-"""Rotation-discipline guard (VERDICT r3 item 5, relaxed per VERDICT r4,
-window widened per VERDICT r6 item 1): the driver's correctness gate only
-checks the first 50 entries of queries() per round. Freshness is managed
-as a committed TWO-round plan over a THREE-round evidence window
-(sustainable registry ≈ 200 names — the widening that let the whole
-staged r7–r20 cohort register in rounds 7–8 instead of dripping through
-round 20), and this test makes the plan binding:
-
-  every registered query must appear in the union of
-    (a) the GREEN rows (hash match, no error) of the THREE most recent
-        CORRECTNESS_r*.json driver artifacts — a red row is the
-        opposite of evidence (VERDICT r5 item 3),
-    (b) the first 50 entries of the CURRENT rotation (= this round's
-        gate, which the driver will check at round end), and
-    (c) `_NEXT_GATE_SCHEDULE` — the committed gate for the FOLLOWING
-        round;
-
-  a query that has NEVER had a green driver row must sit in (b), the
-  actual gate — a schedule slot is a promise, not evidence;
-
-  and every query must carry an oracle: ROWS_ONLY_REASONS must stay
-  EMPTY (VERDICT r6 item 5 — the carve-out went dead when
-  audio_features gained a contract oracle, and a dead carve-out is a
-  latent loophole).
-
-Adding a new query therefore forces it into the upcoming gate (or the
-test fails), renaming a query breaks the link to its old evidence loudly
-instead of silently, and the schedule cannot silently absorb overflow
-forever: its slots count only until the next artifact lands, at which
-point anything still unchecked resurfaces here.
+"""Registry guards: every registered query carries an oracle, the
+rows-only carve-out stays empty, bench.py's headline names resolve, and
+the green-evidence predicate rejects red and errored driver rows.
 """
 
 from __future__ import annotations
-
-import glob
-import json
-import os
 
 from flink_kafka_table_api_spark.queries import (
     ORACLES,
     QUERIES,
     ROWS_ONLY_REASONS,
-    _NEXT_GATE_SCHEDULE,
-    queries,
 )
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-GATE_WIDTH = 50
-
-
-def _artifacts() -> list[str]:
-    return sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
 
 
 def _green(name: str, row: dict) -> bool:
@@ -60,66 +20,6 @@ def _green(name: str, row: dict) -> bool:
     (VERDICT r6 item 5): every registered query carries an oracle, so
     the only evidence is a hash-match row."""
     return bool(row.get("hash_match")) and not row.get("err")
-
-
-EVIDENCE_WINDOW = 3  # artifacts; widened from 2 per VERDICT r6 item 1
-
-
-def _recent_driver_entries() -> set[str]:
-    names: set[str] = set()
-    for f in _artifacts()[-EVIDENCE_WINDOW:]:
-        d = json.load(open(f))
-        names |= {n for n, row in d.items() if _green(n, row)}
-    return names
-
-
-def _ever_checked() -> set[str]:
-    names: set[str] = set()
-    for f in _artifacts():
-        d = json.load(open(f))
-        names |= {n for n, row in d.items() if _green(n, row)}
-    return names
-
-
-def test_every_query_has_recent_or_scheduled_driver_evidence():
-    recent = _recent_driver_entries()
-    gate = set(list(queries())[:GATE_WIDTH])
-    scheduled = set(_NEXT_GATE_SCHEDULE)
-    uncovered = sorted(set(QUERIES) - recent - gate - scheduled)
-    assert not uncovered, (
-        f"{len(uncovered)} queries have no driver CORRECTNESS entry in the "
-        f"last {EVIDENCE_WINDOW} rounds, no slot in the upcoming "
-        f"{GATE_WIDTH}-slot gate, "
-        f"and no slot in the committed next-round schedule: {uncovered}. "
-        "Rotate _PRIORITY or _NEXT_GATE_SCHEDULE (queries.py)."
-    )
-
-
-def test_never_checked_queries_are_in_the_actual_gate():
-    """A brand-new query must enter the real gate, not the next-round
-    promise list — otherwise evidence for it is deferred a full round."""
-    gate = set(list(queries())[:GATE_WIDTH])
-    never = sorted(set(QUERIES) - _ever_checked() - gate)
-    assert not never, (
-        f"queries with no driver evidence EVER that are not in the "
-        f"upcoming gate: {never}. Put them in _PRIORITY[:{GATE_WIDTH}]."
-    )
-
-
-def test_next_gate_schedule_is_sane():
-    sched = _NEXT_GATE_SCHEDULE
-    assert len(sched) == len(set(sched)), "duplicate names in schedule"
-    assert len(sched) <= GATE_WIDTH, (
-        f"next-round schedule holds {len(sched)} names but the gate has "
-        f"only {GATE_WIDTH} slots — it cannot be honored"
-    )
-    unknown = sorted(set(sched) - set(QUERIES))
-    assert not unknown, f"schedule names not registered: {unknown}"
-    overlap = sorted(set(sched) & set(list(queries())[:GATE_WIDTH]))
-    assert not overlap, (
-        f"names in BOTH the current gate and the next-round schedule "
-        f"waste a slot: {overlap}"
-    )
 
 
 def test_every_query_is_oracle_bearing():
@@ -137,13 +37,6 @@ def test_rows_only_registry_stays_empty():
         "evidence predicate (_green) no longer honors rows-only rows; "
         "give them real oracles or consciously restore the carve-out."
     )
-
-
-def test_gate_is_exactly_50_distinct_registered_names():
-    gate = list(queries())[:GATE_WIDTH]
-    assert len(set(gate)) == GATE_WIDTH
-    for name in gate:
-        assert name in QUERIES
 
 
 def test_bench_contract_names_resolve():

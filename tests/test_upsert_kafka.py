@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from flink_kafka_table_api_spark.sources.avro_codec import encode_record
+from flink_kafka_table_api_spark.sources.kafka import frame_header
 from flink_kafka_table_api_spark.sources.upsert_kafka import (
     materialize_upsert_topic,
     upsert_kafka_payload,
@@ -136,3 +138,30 @@ def test_confluent_framing_headers(spark):
         ).collect()
     )
     assert got == [(1, 5.0)]
+
+
+def test_key_and_value_bytes_equal_the_reference_codec(spark):
+    """The JVM encoder's key and value bytes equal the plain-Python
+    reference codec's output behind the Confluent header, with the value
+    struct built in the schema's field order although the log's columns
+    come in another order."""
+    log = spark.createDataFrame(
+        [(1, 2, 5.0, "+I", 0), (2, 1, 3.5, "+U", 1), (3, 1, 2.0, "-D", 2)],
+        "rnk int, key long, total double, op string, batch_id long",
+    )
+    frames = upsert_kafka_payload(
+        log, key_cols=["key"], key_schema_json=KEY_SCHEMA,
+        value_schema_json=VALUE_SCHEMA, offset_col="batch_id",
+        schema_id=7, key_schema_id=3,
+    ).orderBy("offset").collect()
+    assert [bytes(r.key) for r in frames] == [
+        frame_header(3) + encode_record(KEY_SCHEMA, {"key": k})
+        for k in (2, 1, 1)
+    ]
+    assert [None if r.value is None else bytes(r.value) for r in frames] == [
+        frame_header(7) + encode_record(
+            VALUE_SCHEMA, {"key": 2, "total": 5.0, "rnk": 1}),
+        frame_header(7) + encode_record(
+            VALUE_SCHEMA, {"key": 1, "total": 3.5, "rnk": 2}),
+        None,
+    ]
