@@ -8,7 +8,7 @@ leak: MEMORY_AND_DISK evicts under pressure, but storage-memory churn is
 real at scale).
 
 ``tracked_persist`` registers every such cache; ``release_cached`` frees
-them all. Call sites with a natural query boundary (bench.py per query,
+them all. Call sites with a natural query boundary (perfbench per pass,
 the driver between correctness checks, a notebook between jobs) call
 ``release_cached()`` after the consuming action."""
 

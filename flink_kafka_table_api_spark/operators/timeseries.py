@@ -645,9 +645,9 @@ def _burst_gamma(gamma_scale: float) -> int:
     return int(round(math.log(gamma_scale) * BURST_QUANTUM))
 
 
-def _burst_walk_col(g: int) -> "tuple[Column, Column]":
+def _burst_walk_col(g: int) -> "Column":
     """Given sorted per-group cost structs `xs` (day, c, n, e0, e1),
-    build (walk, states) columns.
+    build the per-day burst-state column.
 
     The two-state Viterbi reduces to a SCALAR integer walk (round-10
     reformulation, VERDICT r9 item 1b). With c0/c1 the usual forward
@@ -713,7 +713,7 @@ def _burst_walk_col(g: int) -> "tuple[Column, Column]":
             lambda acc: acc["states"],
         )
     )
-    return walk, states
+    return states
 
 
 def burst_detection(
@@ -773,7 +773,7 @@ def burst_detection(
             )
         ).alias("xs")
     )
-    _, states = _burst_walk_col(g)
+    states = _burst_walk_col(g)
     return (
         ser.select("grp", F.arrays_zip("xs", states.alias("st")).alias("z"))
         .select("grp", F.explode("z").alias("e"))
@@ -820,105 +820,6 @@ def burst_detection_sql(
     SELECT x.grp AS event_type, x.day, x.c AS n_events,
            x.n AS day_total, b.s = 1 AS burst
     FROM idx x JOIN bwd b ON x.grp = b.grp AND x.i = b.i
-    """
-
-
-def burst_costs_probe(
-    events: DataFrame,
-    *,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    burst_mult: float = 2.0,
-) -> DataFrame:
-    """Bisection probe #1 (VERDICT r9 item 2): the burst_detection
-    pipeline TRUNCATED after cost quantization — (event_type, day,
-    n_events, day_total, e0, e1), no Viterbi. Registered as a gate
-    query so the DRIVER's DuckDB evaluates the quantization stage in
-    isolation: costs green + walk red localizes the r8/r9 divergence to
-    recursive-CTE semantics; costs red localizes it to ln/arithmetic
-    upstream; both green with burst red localizes it to the backtrack.
-
-    The r10 bisection verdict (walk GREEN, costs RED) localized the
-    divergence to the one typed column this probe emits and the walk
-    doesn't: day_total carried DuckDB's un-cast HUGEINT SUM — fixed in
-    _burst_scored_sql (r11). Retirement is deferred: the r11 gate is
-    FROZEN to CORRECTNESS_r10's exact 50 names (VERDICT r10 item 2 —
-    dropping a declared name counts as a regression), so the probes
-    stay registered and green until a future gate rotation."""
-    return _burst_scored(
-        events, group_col=group_col, ts_col=ts_col, burst_mult=burst_mult
-    ).select(
-        F.col("grp").alias(group_col),
-        "day",
-        F.col("c").alias("n_events"),
-        F.col("n").alias("day_total"),
-        "e0", "e1",
-    )
-
-
-def burst_costs_probe_sql(*, burst_mult: float = 2.0) -> str:
-    """DuckDB oracle for :func:`burst_costs_probe`: the shared `scored`
-    stage alone (via `idx`, which adds only row numbers)."""
-    return _burst_scored_sql(burst_mult=burst_mult) + """
-    SELECT grp AS event_type, day, c AS n_events, n AS day_total, e0, e1
-    FROM idx
-    """
-
-
-def burst_walk_probe(
-    events: DataFrame,
-    *,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    burst_mult: float = 2.0,
-    gamma_scale: float = 30.0,
-) -> DataFrame:
-    """Bisection probe #2 (VERDICT r9 item 2): the burst_detection
-    pipeline through the FORWARD walk — (event_type, day, d) with
-    d = D_t from the scalar recurrence — but not the backtrack. See
-    :func:`burst_costs_probe` for the localization table."""
-    g = _burst_gamma(gamma_scale)
-    scored = _burst_scored(
-        events, group_col=group_col, ts_col=ts_col, burst_mult=burst_mult
-    )
-    ser = scored.groupBy("grp").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("day").alias("day"), F.col("c").alias("c"),
-                    F.col("n").alias("n"), F.col("e0").alias("e0"),
-                    F.col("e1").alias("e1"),
-                )
-            )
-        ).alias("xs")
-    )
-    walk, _ = _burst_walk_col(g)
-    return (
-        ser.select("grp", F.arrays_zip("xs", walk.alias("d")).alias("z"))
-        .select("grp", F.explode("z").alias("e"))
-        .select(
-            F.col("grp").alias(group_col),
-            F.col("e.xs.day").alias("day"),
-            F.col("e.d").alias("d"),
-        )
-    )
-
-
-def burst_walk_probe_sql(
-    *, burst_mult: float = 2.0, gamma_scale: float = 30.0
-) -> str:
-    """DuckDB oracle for :func:`burst_walk_probe`: the forward-walk
-    recursive CTE alone."""
-    g = _burst_gamma(gamma_scale)
-    return _burst_scored_sql(burst_mult=burst_mult) + f""",
-    walk AS (
-      SELECT grp, i, n_i, day, e1 - e0 + {g} AS d FROM idx WHERE i = 1
-      UNION ALL
-      SELECT s.grp, s.i, s.n_i, s.day,
-             s.e1 - s.e0 + least(greatest(w.d, 0), {g}) AS d
-      FROM walk w JOIN idx s ON s.grp = w.grp AND s.i = w.i + 1
-    )
-    SELECT grp AS event_type, day, d FROM walk
     """
 
 

@@ -44,6 +44,7 @@ from flink_kafka_table_api_spark.operators.relational import (
     anti_join,
     hierarchy_levels,
     asof_join_last,
+    equi_depth_bins_sql,
     join_dim,
     merge_upsert,
     range_join_binned,
@@ -209,69 +210,13 @@ def _release_previous_caches(fn: Q) -> Q:
     return wrapped
 
 
-# Queries registered WITHOUT an oracle get only the driver's weaker
-# rows-only check, so each must carry an explicit reason; the registry
-# test (tests/test_registry_coverage.py) fails on an unexplained one.
-ROWS_ONLY_REASONS: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None, *,
-          rows_only_reason: str | None = None):
+def query(name: str, oracle: str):
+    """Register `fn` as query `name`, checked against the DuckDB `oracle`."""
     def deco(fn: Q) -> Q:
         QUERIES[name] = _release_previous_caches(fn)
-        if oracle is not None:
-            ORACLES[name] = oracle
-        elif rows_only_reason:
-            ROWS_ONLY_REASONS[name] = rows_only_reason
-        else:
-            raise ValueError(
-                f"query {name!r} needs an oracle or a rows_only_reason"
-            )
+        ORACLES[name] = oracle
         return fn
     return deco
-
-
-# Perf-twin queries that exist only to benchmark the production (xxhash64)
-# hash path against the oracle-reproducible (md5) one. They are NOT part of
-# the driver contract surface — same algorithms, different hash constants —
-# so they live outside queries()/oracle_sql() and are picked up by bench.py.
-BENCH_ONLY: dict[str, Q] = {}
-
-
-def bench_query(name: str):
-    def deco(fn: Q) -> Q:
-        BENCH_ONLY[name] = _release_previous_caches(fn)
-        return fn
-    return deco
-
-
-# Oracles of queries retired into consolidation suites (round 7, per the
-# round-6 VERDICT's ledger-compression mandate). A retiree leaves the
-# driver contract surface (its values are hash-checked every time its
-# suite's gate row runs — the suite SQL composes the retired oracle
-# VERBATIM), but it stays bench-runnable and its oracle stays available
-# for that composition.
-RETIRED_ORACLES: dict[str, str] = {}
-
-
-def retired_query(name: str, oracle: str):
-    """A query retired into a consolidation suite: bench twin + composable
-    oracle, no registry slot. Same call shape as @query so a retirement
-    is a one-word decorator change."""
-    def deco(fn: Q) -> Q:
-        BENCH_ONLY[name] = _release_previous_caches(fn)
-        RETIRED_ORACLES[name] = oracle
-        return fn
-    return deco
-
-
-def _oracle_of(name: str) -> str:
-    """Component-oracle lookup for suite-SQL composition: registered
-    oracle if the component still holds a registry slot, else its
-    retired oracle (bit-identical — retirement moves the string, never
-    edits it)."""
-    got = ORACLES.get(name)
-    return got if got is not None else RETIRED_ORACLES[name]
 
 
 # ---------------------------------------------------------------------------
@@ -372,7 +317,7 @@ def q_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
 # exercises the same Expand + two-phase plan with TWO distinct columns)
 
 
-@retired_query(
+@query(
     "agg_rollup_cube",
     f"""
     SELECT 'rollup' AS grp_src, l_returnflag, l_linestatus,
@@ -401,7 +346,7 @@ def q_agg_rollup_cube(spark: SparkSession, sf: str) -> DataFrame:
     return r.unionByName(c)
 
 
-@retired_query(
+@query(
     "grouping_sets",
     f"""
     SELECT l_returnflag, l_linestatus, COUNT(*) AS n_items,
@@ -448,7 +393,7 @@ def q_join_inner(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "join_left",
     """
     SELECT c_custkey, COUNT(o_orderkey) AS n_orders
@@ -466,7 +411,7 @@ def q_join_left(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "join_semi",
     """
     SELECT c_custkey, c_name, c_mktsegment FROM customer
@@ -484,7 +429,7 @@ def q_join_semi(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "join_anti",
     """
     SELECT c_custkey, c_name FROM customer
@@ -495,6 +440,25 @@ def q_join_anti(spark: SparkSession, sf: str) -> DataFrame:
     cust = _t(spark, sf, "customer")
     orders = _t(spark, sf, "orders")
     return anti_join(cust, orders, cust.c_custkey == orders.o_custkey).select(
+        "c_custkey", "c_name"
+    )
+
+
+@query(
+    "join_anti_urgent",
+    """
+    SELECT c_custkey, c_name FROM customer
+    WHERE NOT EXISTS (SELECT 1 FROM orders
+                      WHERE o_custkey = c_custkey
+                        AND o_orderpriority = '1-URGENT')
+    """,
+)
+def q_join_anti_urgent(spark: SparkSession, sf: str) -> DataFrame:
+    """The anti complement of join_semi. join_anti returns 0 rows at
+    every shipped sf (every customer has orders); this one does not."""
+    cust = _t(spark, sf, "customer")
+    urgent = _t(spark, sf, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
+    return anti_join(cust, urgent, cust.c_custkey == urgent.o_custkey).select(
         "c_custkey", "c_name"
     )
 
@@ -537,7 +501,7 @@ def q_star_join(spark: SparkSession, sf: str) -> DataFrame:
 # Window functions / sort / top-k (EXT)
 # ---------------------------------------------------------------------------
 
-@retired_query(
+@query(
     "window_topk",
     """
     SELECT o_custkey, o_orderkey, o_totalprice, CAST(rn AS BIGINT) AS rn
@@ -573,7 +537,7 @@ def q_window_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "window_running",
     """
     SELECT event_id, user_id,
@@ -599,7 +563,7 @@ def q_window_running(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "window_frames",
     """
     SELECT o_orderkey, o_custkey, o_totalprice,
@@ -639,7 +603,7 @@ def q_window_frames(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "percentiles",
     """
     SELECT o_orderpriority,
@@ -660,7 +624,7 @@ def q_percentiles(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "agg_minmax_by",
     """
     SELECT o_orderpriority,
@@ -682,7 +646,7 @@ def q_agg_minmax_by(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "scalar_subquery",
     """
     SELECT o_orderkey, o_totalprice,
@@ -818,7 +782,7 @@ def _set_sides(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
 # semantics) with an `op` tag column — one oracle-checked row stream per
 # variant, same operator coverage as six separate registrations.
 
-@retired_query(
+@query(
     "set_ops_all",
     f"""
     SELECT 'union_all' AS op, o_custkey FROM ({_SET_A} UNION ALL {_SET_B})
@@ -845,7 +809,7 @@ def q_set_ops_all(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "set_ops_distinct",
     f"""
     SELECT 'union' AS op, o_custkey FROM ({_SET_A} UNION {_SET_B})
@@ -901,7 +865,7 @@ def q_predicates(spark: SparkSession, sf: str) -> DataFrame:
     ).select("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity")
 
 
-@retired_query(
+@query(
     "datetime_funcs",
     """
     SELECT o_orderkey,
@@ -939,7 +903,7 @@ def q_datetime_funcs(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "scalar_funcs",
     """
     SELECT p_partkey,
@@ -1018,7 +982,7 @@ def q_not_null_audit(spark: SparkSession, sf: str) -> DataFrame:
 # replaced the former date_funcs + datetime_parse pair)
 
 
-@retired_query(
+@query(
     "json_funcs",
     """
     SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
@@ -1223,7 +1187,7 @@ def q_dsir_select(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "funnel_conversion",
     """
     WITH s1 AS (
@@ -1281,7 +1245,7 @@ def q_funnel_conversion(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "cohort_retention",
     """
     WITH first AS (
@@ -1367,7 +1331,7 @@ def q_activity_islands(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "value_histogram",
     """
     SELECT CAST(CASE WHEN l_extendedprice >= 100000.0 THEN 19
@@ -1398,7 +1362,7 @@ def q_value_histogram(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "table_profile",
     """
     SELECT col, nulls, distincts FROM (
@@ -1628,7 +1592,7 @@ def q_avro_file_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "approx_percentiles",
     """
     SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1858,7 +1822,7 @@ def q_salted_join(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "join_full_outer",
     """
     SELECT o.o_orderkey, o.o_custkey, c.c_custkey, c.c_name
@@ -1883,7 +1847,7 @@ def q_join_full_outer(spark: SparkSession, sf: str) -> DataFrame:
 # Deduplication family (EXT, BASELINE.json north star)
 # ---------------------------------------------------------------------------
 
-@retired_query(
+@query(
     "dedup_exact",
     """
     SELECT user_id, event_type, event_id, ts, value FROM events
@@ -1918,7 +1882,7 @@ def _minhash_oracle(num_hashes: int = 8, shingle_k: int = 3,
     """
 
 
-@retired_query("dedup_minhash", _minhash_oracle())
+@query("dedup_minhash", _minhash_oracle())
 def q_dedup_minhash(spark: SparkSession, sf: str) -> DataFrame:
     """MinHash signatures (k=8, 3-token shingles) — SURVEY §2.2 near-dup."""
     return dd.minhash_signatures(
@@ -1967,7 +1931,7 @@ def _lsh_pairs_oracle(bands: int = 4, rows_per_band: int = 2,
     """
 
 
-@retired_query("lsh_candidate_pairs", _lsh_pairs_oracle())
+@query("lsh_candidate_pairs", _lsh_pairs_oracle())
 def q_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """MinHash-LSH banding: 8 hashes folded into 4 bands of 2 — candidate
     pairs collide in >=1 band. The bucket join is the scale contract: work
@@ -1980,36 +1944,14 @@ def q_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
     return dd.lsh_candidate_pairs(bands, "doc_id")
 
 
-@bench_query("dedup_minhash_fast")  # bench-only: xxhash64 is Spark-specific
-def q_dedup_minhash_fast(spark: SparkSession, sf: str) -> DataFrame:
-    """Production MinHash path: same algorithm as dedup_minhash but with
-    codegen'd xxhash64 instead of the md5-based portable hash (the md5 is
-    only needed where a DuckDB oracle must reproduce results)."""
-    return dd.minhash_signatures(
-        _t(spark, sf, "documents"), "doc_id", "text",
-        num_hashes=8, shingle_k=3, portable=False,
-    )
-
-
-@bench_query("neardup_verified_fast")  # bench-only: xxhash64 is Spark-specific
-def q_neardup_verified_fast(spark: SparkSession, sf: str) -> DataFrame:
-    """Production near-dup pipeline: signatures -> bands -> candidates ->
-    exact-Jaccard verify, all with the fast hash."""
-    return dd.lsh_verified_pairs(
-        _t(spark, sf, "documents"), "doc_id", "text",
-        num_hashes=8, bands=4, rows_per_band=2, shingle_k=3,
-        threshold=0.5, portable=False,
-    )
-
-
-@retired_query("dedup_simhash", dd.simhash_sql("doc_id", "text", bits=32))
+@query("dedup_simhash", dd.simhash_sql("doc_id", "text", bits=32))
 def q_dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     """32-bit SimHash signature per document, portable-hash bit voting."""
     return dd.simhash(_t(spark, sf, "documents"), "doc_id", "text",
                       bits=32, portable=True)
 
 
-@retired_query(
+@query(
     "simhash_pairs",
     f"""
     WITH sigs AS ({dd.simhash_sql('doc_id', 'text', bits=32)}),
@@ -2109,7 +2051,7 @@ def _neardup_verified_oracle(src: str = "documents") -> str:
     """
 
 
-@retired_query("neardup_verified", _neardup_verified_oracle())
+@query("neardup_verified", _neardup_verified_oracle())
 def q_neardup_verified(spark: SparkSession, sf: str) -> DataFrame:
     """End-to-end MinHash-LSH near-dup detection: signatures -> bands ->
     candidates -> exact-Jaccard verify (threshold 0.5). O(corpus) + bucket
@@ -2335,7 +2277,7 @@ def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
 _COS = cosine_sql("x.embedding", "y.embedding")
 
 
-@retired_query(
+@query(
     "embedding_neardup",
     f"""
     SELECT x.label AS label, x.vec_id AS a, y.vec_id AS b,
@@ -2353,7 +2295,7 @@ def q_embedding_neardup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "semantic_dedup",
     f"""
     WITH centroids AS (
@@ -2393,7 +2335,7 @@ def q_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
 _Q_COS = cosine_sql("v.embedding", "q.q_embedding")
 
 
-@retired_query(
+@query(
     "ann_bruteforce",
     f"""
     SELECT v.vec_id, round({_Q_COS}, 6) AS cosine_sim
@@ -2432,7 +2374,7 @@ def q_ann_quantized(spark: SparkSession, sf: str) -> DataFrame:
 _PLANES = sim.hyperplanes(num_planes=4, dim=64)
 
 
-@retired_query(
+@query(
     "ann_lsh",
     f"""
     WITH bucketed AS (
@@ -2492,7 +2434,6 @@ def _ivf_index_for(spark: SparkSession, sf: str) -> str:
     return _IVF_INDEX_CACHE[key]
 
 
-@bench_query("ann_ivf")
 def q_ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
     """IVF-style ANN against a MATERIALIZED inverted file: the corpus is
     assigned to 8 deterministic centroids once and written partitioned by
@@ -2743,9 +2684,7 @@ def q_ann_ivf_variants(spark: SparkSession, sf: str) -> DataFrame:
     Each variant keeps its own physical plan (pinned in
     tests/test_scale_plans.py); the union is driver-side assembly of
     five tiny top-k results, so the consolidated query costs the same
-    as the five standalone ones did. `ann_ivf` itself remains in
-    bench.py's headline set as a BENCH_ONLY twin for cross-round
-    performance continuity."""
+    as the five standalone ones did."""
 
     def tag(df: DataFrame, name: str, score_col: str) -> DataFrame:
         return df.select(
@@ -2899,7 +2838,7 @@ def _lang_scores_sql() -> tuple[str, str, str]:
 _LANG_INNER, _LANG_PRED, _LANG_BEST = _lang_scores_sql()
 
 
-@retired_query(
+@query(
     "lang_id",
     f"""
     SELECT doc_id, lang, {_LANG_PRED} AS predicted_lang,
@@ -2912,7 +2851,7 @@ def q_lang_id(spark: SparkSession, sf: str) -> DataFrame:
     return tx.with_lang_id(_t(spark, sf, "documents"))
 
 
-@retired_query(
+@query(
     "text_quality",
     f"""
     WITH base AS (
@@ -2963,7 +2902,7 @@ def q_text_quality(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "token_count",
     f"""
     SELECT doc_id,
@@ -2988,7 +2927,7 @@ def q_token_count(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "fingerprint",
     f"""
     SELECT doc_id,
@@ -3046,7 +2985,7 @@ def _curation_oracle(quality_threshold: float = 0.5) -> str:
     """
 
 
-@retired_query("llm_curation", _curation_oracle())
+@query("llm_curation", _curation_oracle())
 def q_llm_curation(spark: SparkSession, sf: str) -> DataFrame:
     """The composed LLM data-curation pipeline: quality gate -> LSH near-dup
     clustering -> canonical selection (plans/llm_curation.py). One flow, all
@@ -3117,7 +3056,7 @@ def _curate_pack_oracle(
     """
 
 
-@retired_query("llm_curation_packed", _curate_pack_oracle())
+@query("llm_curation_packed", _curate_pack_oracle())
 def q_llm_curation_packed(spark: SparkSession, sf: str) -> DataFrame:
     """The v2 end-to-end training-data flow: benchmark decontamination ->
     quality gate -> LSH near-dup canonicalization -> fixed-budget sequence
@@ -3257,7 +3196,7 @@ def _run_stream_to_table(
     return spark.table(name)
 
 
-@retired_query(
+@query(
     "stream_tumbling",
     f"""
     WITH agg AS (
@@ -3288,7 +3227,7 @@ def q_stream_tumbling(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "stream_window_topk",
     f"""
     WITH agg AS (
@@ -3343,7 +3282,7 @@ def q_stream_window_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "stream_session",
     f"""
     WITH flagged AS (
@@ -3385,7 +3324,7 @@ def q_stream_session(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "stream_sliding",
     f"""
     WITH agg AS (
@@ -3466,7 +3405,7 @@ def q_stream_sessions_stateful(spark: SparkSession, sf: str) -> DataFrame:
     return _run_stream_to_table(out, spark, "append")
 
 
-@retired_query(
+@query(
     "approx_distinct",
     """
     SELECT event_type,
@@ -3780,7 +3719,7 @@ def q_stream_stream_joins(spark: SparkSession, sf: str) -> DataFrame:
     return parts[0].unionAll(parts[1]).unionAll(parts[2])
 
 
-@retired_query(
+@query(
     "stream_static_join",
     f"""
     WITH agg AS (
@@ -3942,7 +3881,7 @@ def q_udtf_sentences(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "multi_distinct",
     """
     SELECT event_type,
@@ -3965,7 +3904,7 @@ def q_multi_distinct(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "window_analytic",
     """
     SELECT o_orderkey, o_orderpriority,
@@ -5221,7 +5160,7 @@ def q_top_ngram_fraction(spark: SparkSession, sf: str) -> DataFrame:
     return tx.top_ngram_char_fraction(_t(spark, sf, "documents"), k=2)
 
 
-@retired_query(
+@query(
     "length_band_filter",
     """
     WITH b AS (
@@ -5349,7 +5288,7 @@ def _bpe_oracle(n_merges: int, final_select: str | None = None) -> str:
     return "WITH " + ",\n    ".join(parts) + "\n    " + final_select
 
 
-@retired_query("bpe_train_merges", _bpe_oracle(12))
+@query("bpe_train_merges", _bpe_oracle(12))
 def q_bpe_train_merges(spark: SparkSession, sf: str) -> DataFrame:
     """BPE tokenizer training (Sennrich et al. ACL 2016 —
     operators/text.py:bpe_train): learn the first 12 merge rules over
@@ -5363,7 +5302,7 @@ def q_bpe_train_merges(spark: SparkSession, sf: str) -> DataFrame:
     return tx.bpe_train(_t(spark, sf, "documents"), n_merges=12)
 
 
-@retired_query(
+@query(
     "bpe_encode_counts",
     _bpe_oracle(12, final_select=(
         "SELECT piece, CAST(SUM(freq) AS BIGINT) AS n_occurrences "
@@ -5413,7 +5352,7 @@ def q_jl_projection(spark: SparkSession, sf: str) -> DataFrame:
 _HN_COS = cosine_sql("v.embedding", "a.a_emb")
 
 
-@retired_query(
+@query(
     "hard_negatives",
     f"""
     WITH anchors AS (
@@ -5445,7 +5384,7 @@ def q_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query("dedup_keep_best", _dedup_keep_best_oracle())
+@query("dedup_keep_best", _dedup_keep_best_oracle())
 def q_dedup_keep_best(spark: SparkSession, sf: str) -> DataFrame:
     """Quality-aware near-dup canonicalization: LSH-verified pairs ->
     connected components -> keep the HIGHEST-quality member per cluster
@@ -5489,7 +5428,7 @@ def q_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
     return cu.pack_sequences(_t(spark, sf, "documents"), budget=256)
 
 
-@retired_query(
+@query(
     "stratified_sample",
     f"""
     SELECT doc_id, lang FROM documents
@@ -5532,7 +5471,7 @@ _SHUF_H = "(('0x' || substr(md5('fkta-shuffle:' || CAST(doc_id AS VARCHAR)), 1, 
 _CAP_H = "(('0x' || substr(md5('fkta-cap:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT)"
 
 
-@retired_query(
+@query(
     "corpus_shuffle",
     f"""
     SELECT doc_id,
@@ -5641,7 +5580,7 @@ def q_pii_redact(spark: SparkSession, sf: str) -> DataFrame:
     return cu.pii_redact(fixture)
 
 
-@retired_query(
+@query(
     "chunk_dedup",
     f"""
     WITH chunks AS (
@@ -5717,7 +5656,7 @@ def q_cdc_chunk_dedup(spark: SparkSession, sf: str) -> DataFrame:
     return dd.cdc_chunk_stats(_t(spark, sf, "documents"), boundary_mod=8)
 
 
-@retired_query(
+@query(
     "substring_dup_stats",
     f"""
     WITH t AS (
@@ -5786,7 +5725,7 @@ def q_substring_dup_stats(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query(
+@query(
     "strip_dup_substrings",
     f"""
     WITH t AS (
@@ -5848,7 +5787,7 @@ def q_strip_dup_substrings(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query("doc_chunks", cu.doc_chunks_sql("documents"))
+@query("doc_chunks", cu.doc_chunks_sql("documents"))
 def q_doc_chunks(spark: SparkSession, sf: str) -> DataFrame:
     """RAG-prep chunking: overlapping 32-token windows every 24 tokens
     (8-token overlap, tail never dropped). Narrow bounded explode — at
@@ -5956,7 +5895,7 @@ def _hier_parent_sql(x: str) -> str:
     )
 
 
-@retired_query(
+@query(
     "hybrid_search",
     f"""
     WITH bm AS ({rt.bm25_scores_sql(_BM25_TERMS)}),
@@ -6201,7 +6140,7 @@ def _pagerank_oracle() -> str:
     return pagerank_sql(_pagerank_edges_sql(), iterations=5)
 
 
-@retired_query("pagerank", _pagerank_oracle())
+@query("pagerank", _pagerank_oracle())
 def q_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     """PageRank (5 synchronous rounds, d=0.85) over a synthetic
     bounded-degree symmetric graph on customer keys (operators/graph.py).
@@ -6273,7 +6212,7 @@ def _triangle_oracle() -> str:
 def _ring_chord_edges(spark: SparkSession, sf: str) -> DataFrame:
     """The symmetric bounded-degree ring-with-chords graph on customer
     keys (ring k-(k+1), k-(k+2), chord k-(3k+1) mod N) shared by the
-    triangle_count gate query and the graph bench twins."""
+    triangle_count and label_propagation queries."""
     cust = _t(spark, sf, "customer").select("c_custkey")
     n = cust.count()
     k = F.col("c_custkey").cast("long")
@@ -6292,7 +6231,7 @@ def _ring_chord_edges(spark: SparkSession, sf: str) -> DataFrame:
     ).distinct()
 
 
-@retired_query("triangle_count", _triangle_oracle())
+@query("triangle_count", _triangle_oracle())
 def q_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
     """Per-node triangle counts (operators/graph.py `triangle_count` —
     degree-ordered orientation, Schank-Wagner) over a synthetic
@@ -6311,7 +6250,7 @@ def q_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
 # tests/test_r8_prevalidated.py): the round-6 VERDICT compressed the
 # staging ledger, so these registered in rounds 7-8.
 
-@retired_query("dup_ngram_coverage", tx.dup_ngram_coverage_sql(n=2))
+@query("dup_ngram_coverage", tx.dup_ngram_coverage_sql(n=2))
 def q_dup_ngram_coverage(spark: SparkSession, sf: str) -> DataFrame:
     """Gopher duplicate-2-gram coverage over documents (operators/
     text.py `dup_ngram_coverage`): one zero-shuffle codegen'd projection
@@ -6319,7 +6258,10 @@ def q_dup_ngram_coverage(spark: SparkSession, sf: str) -> DataFrame:
     return tx.dup_ngram_coverage(_t(spark, sf, "documents"), n=2)
 
 
-@bench_query("label_propagation")
+@query(
+    "label_propagation",
+    gr.label_propagation_sql(_triangle_edges_sql(), iterations=4),
+)
 def q_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic LPA communities (operators/graph.py
     `label_propagation`, 4 rounds) over the ring-with-chords customer
@@ -6351,8 +6293,6 @@ def q_source_kl_divergence(spark: SparkSession, sf: str) -> DataFrame:
     return cu.source_kl_divergence(_t(spark, sf, "documents"))
 
 
-# Round-7 pre-validated operators as BENCH_ONLY twins (same rationale)
-
 @query("weighted_sample", cu.weighted_sample_sql(weight_expr="n_chars", target_n=1000))
 def q_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
     """PPS Bernoulli sampling by character mass (operators/curation.py
@@ -6369,92 +6309,8 @@ def q_frequent_pairs(spark: SparkSession, sf: str) -> DataFrame:
     return tx.frequent_pairs(_t(spark, sf, "documents"), min_support=10)
 
 
-def set_ops_sql() -> str:
-    """Oracle for the staged round-9 consolidation of the two set-op
-    slots: both registered oracles (each itself a 3-variant tagged
-    merge) composed verbatim under a family tag — 6 set-operation
-    variants in ONE registry slot."""
-    return f"""
-    SELECT 'all' AS family, op, o_custkey FROM ({_oracle_of("set_ops_all")})
-    UNION ALL
-    SELECT 'distinct', op, o_custkey FROM ({_oracle_of("set_ops_distinct")})
-    """
-
-
-@query("set_ops", set_ops_sql())
-def q_set_ops(spark: SparkSession, sf: str) -> DataFrame:
-    """STAGED round-9 consolidation: the multiset and distinct set-op
-    slots merged under a family tag (6 variants, one slot — frees 1
-    registry slot on registration). Pre-validated vs set_ops_sql() in
-    tests/test_r8_prevalidated.py."""
-    return (
-        q_set_ops_all(spark, sf)
-        .select(F.lit("all").alias("family"), "op", "o_custkey")
-        .unionByName(
-            q_set_ops_distinct(spark, sf).select(
-                F.lit("distinct").alias("family"), "op", "o_custkey"
-            )
-        )
-    )
-
-
-def substring_dups_sql() -> str:
-    """Oracle for the staged round-9 consolidation of the ExactSubstr
-    pair: the stats and removal oracles composed verbatim, NULL-padded
-    onto one schema (the graph_suite recipe)."""
-    return f"""
-    SELECT 'stats' AS block, doc_id, n_tokens, n_windows, n_dup_windows,
-           n_dup_spans, covered_dup_tokens, dup_window_fraction,
-           CAST(NULL AS BIGINT) AS n_kept_tokens,
-           CAST(NULL AS BIGINT) AS n_removed_tokens,
-           CAST(NULL AS VARCHAR) AS clean_text
-    FROM ({_oracle_of("substring_dup_stats")})
-    UNION ALL
-    SELECT 'strip', doc_id, n_tokens, NULL, NULL, NULL, NULL,
-           CAST(NULL AS DOUBLE), n_kept_tokens, n_removed_tokens,
-           clean_text
-    FROM ({_oracle_of("strip_dup_substrings")})
-    """
-
-
-@query("substring_dups", substring_dups_sql())
-def q_substring_dups(spark: SparkSession, sf: str) -> DataFrame:
-    """STAGED round-9 consolidation: ExactSubstr window-dup statistics +
-    removal as NULL-padded typed blocks (frees 1 registry slot on
-    registration). Pre-validated vs substring_dups_sql() in
-    tests/test_r8_prevalidated.py."""
-    nul = lambda t: F.lit(None).cast(t)  # noqa: E731
-    st_ = q_substring_dup_stats(spark, sf).select(
-        F.lit("stats").alias("block"),
-        "doc_id",
-        "n_tokens",
-        "n_windows",
-        "n_dup_windows",
-        "n_dup_spans",
-        "covered_dup_tokens",
-        "dup_window_fraction",
-        nul("long").alias("n_kept_tokens"),
-        nul("long").alias("n_removed_tokens"),
-        nul("string").alias("clean_text"),
-    )
-    sp = q_strip_dup_substrings(spark, sf).select(
-        F.lit("strip").alias("block"),
-        "doc_id",
-        "n_tokens",
-        nul("long").alias("n_windows"),
-        nul("long").alias("n_dup_windows"),
-        nul("long").alias("n_dup_spans"),
-        nul("long").alias("covered_dup_tokens"),
-        nul("double").alias("dup_window_fraction"),
-        "n_kept_tokens",
-        "n_removed_tokens",
-        "clean_text",
-    )
-    return st_.unionAll(sp)
-
-
 def _twotier_edges(spark: SparkSession, sf: str) -> DataFrame:
-    """Two-tier graph on customer keys for the k-core block: a sparse
+    """Two-tier graph on customer keys for the k-core query: a sparse
     ring k-(k+1) over everyone plus a dense community among every-10th
     node (each core node linked to its next 5 multiples of 10, ~10
     symmetric core edges). The periphery (degree <= 4) peels in ONE
@@ -6503,222 +6359,12 @@ def _twotier_edges_sql() -> str:
     """
 
 
-def graph_suite_sql() -> str:
-    """Oracle for the staged round-8 graph consolidation: the pagerank
-    and triangle_count oracles composed VERBATIM (so the merge is
-    bit-identical to the two it retires) plus the label_propagation
-    oracle over the same ring-with-chords relation, NULL-padded onto the
-    unified (block, node, rank, n_triangles, label) schema — the
-    heterogeneous-blocks variant of the ann_ivf_variants precedent
-    (NULL columns per block instead of casting everything to one double,
-    so each block keeps its exact type)."""
-    from flink_kafka_table_api_spark.operators.graph import (
-        kcore_sql,
-        label_propagation_sql,
-    )
-
-    lpa = label_propagation_sql(_triangle_edges_sql(), iterations=4)
-    core = kcore_sql(_twotier_edges_sql(), k=4, max_rounds=4)
-    nul_link = (
-        "CAST(NULL AS BIGINT) AS node_v, "
-        "CAST(NULL AS BIGINT) AS common_neighbors, "
-        "CAST(NULL AS BIGINT) AS deg_u, CAST(NULL AS BIGINT) AS deg_v, "
-        "CAST(NULL AS DOUBLE) AS jaccard, CAST(NULL AS DOUBLE) AS aa_score"
-    )
-    return f"""
-    SELECT 'pagerank' AS block, node, rank,
-           CAST(NULL AS BIGINT) AS n_triangles, CAST(NULL AS BIGINT) AS label,
-           CAST(NULL AS BIGINT) AS degree, {nul_link}
-    FROM ({_oracle_of("pagerank")})
-    UNION ALL
-    SELECT 'triangles', node, CAST(NULL AS DOUBLE), n_triangles, NULL, NULL,
-           NULL, NULL, NULL, NULL, NULL, NULL
-    FROM ({_oracle_of("triangle_count")})
-    UNION ALL
-    SELECT 'lpa', node, CAST(NULL AS DOUBLE), NULL, label, NULL,
-           NULL, NULL, NULL, NULL, NULL, NULL
-    FROM ({lpa})
-    UNION ALL
-    SELECT 'kcore', node, CAST(NULL AS DOUBLE), NULL, NULL, degree,
-           NULL, NULL, NULL, NULL, NULL, NULL
-    FROM ({core})
-    UNION ALL
-    SELECT 'link_cn', node_u, CAST(NULL AS DOUBLE), NULL, NULL, NULL,
-           node_v, common_neighbors, deg_u, deg_v, jaccard,
-           CAST(NULL AS DOUBLE)
-    FROM ({_oracle_of("link_prediction")})
-    UNION ALL
-    SELECT 'link_aa', node_u, CAST(NULL AS DOUBLE), NULL, NULL, NULL,
-           node_v, common_neighbors, NULL, NULL, CAST(NULL AS DOUBLE),
-           aa_score
-    FROM ({_oracle_of("adamic_adar")})
-    """
-
-
-# NOTE: graph_suite registers LATE (beside the spec-driven suite loop,
-# end of module): its round-10 extension composes the retired
-# link_prediction / adamic_adar oracles, whose @retired_query
-# declarations — and the _two_gen_edges_sql builder they share — are
-# defined further down this module.
-def q_graph_suite(spark: SparkSession, sf: str) -> DataFrame:
-    """Consolidation (registered round 7): the graph family (pagerank /
-    triangle_count / label_propagation) as ONE tagged multi-assert query
-    — each block runs its existing gate/bench construction unchanged and
-    the union NULL-pads the per-block value columns. When registered it
-    retired pagerank + triangle_count (round 7) and absorbs
-    label_propagation's and kcore's registrations; round 10 retires
-    link_prediction + adamic_adar into it the same way (the two
-    link-prediction scorers over the shared two-generator graph) — all
-    component values are hash-checked inside this suite's gate row.
-    Pre-validated vs graph_suite_sql() in tests/test_r8_prevalidated.py
-    (original blocks) and tests/test_suite_levers.py (extended)."""
-    from flink_kafka_table_api_spark.caching import tracked_persist
-    from flink_kafka_table_api_spark.operators.graph import (
-        adamic_adar_scores,
-        common_neighbor_scores,
-        kcore,
-        label_propagation,
-        triangle_count,
-    )
-
-    nul = lambda t: F.lit(None).cast(t)  # noqa: E731
-    link_pad = [
-        nul("long").alias("node_v"),
-        nul("long").alias("common_neighbors"),
-        nul("long").alias("deg_u"), nul("long").alias("deg_v"),
-        nul("double").alias("jaccard"), nul("double").alias("aa_score"),
-    ]
-    pr = q_pagerank(spark, sf).select(
-        F.lit("pagerank").alias("block"),
-        "node",
-        "rank",
-        nul("long").alias("n_triangles"),
-        nul("long").alias("label"),
-        nul("long").alias("degree"),
-        *link_pad,
-    )
-    # the triangle and LPA blocks share the ring-with-chords relation:
-    # build (and persist) it ONCE — the per-block wrappers would each
-    # rerun the count + distinct edge derivation (review finding)
-    edges = tracked_persist(_ring_chord_edges(spark, sf))
-    tr = triangle_count(edges).select(
-        F.lit("triangles").alias("block"),
-        "node",
-        nul("double").alias("rank"),
-        "n_triangles",
-        nul("long").alias("label"),
-        nul("long").alias("degree"),
-        *link_pad,
-    )
-    lp = label_propagation(edges, iterations=4, checkpoint_every=4).select(
-        F.lit("lpa").alias("block"),
-        "node",
-        nul("double").alias("rank"),
-        nul("long").alias("n_triangles"),
-        "label",
-        nul("long").alias("degree"),
-        *link_pad,
-    )
-    # k-core runs on the two-tier graph where the bounded-round peel is
-    # structurally convergent (see _twotier_edges)
-    co = kcore(_twotier_edges(spark, sf), k=4, max_rounds=4).select(
-        F.lit("kcore").alias("block"),
-        "node",
-        nul("double").alias("rank"),
-        nul("long").alias("n_triangles"),
-        nul("long").alias("label"),
-        "degree",
-        *link_pad,
-    )
-    # the two link-prediction blocks share the two-generator relation:
-    # build it once (the edges-persist reasoning above)
-    tg = tracked_persist(_two_gen_edges(spark, sf))
-    cn = common_neighbor_scores(tg, top_k=100).select(
-        F.lit("link_cn").alias("block"),
-        F.col("node_u").alias("node"),
-        nul("double").alias("rank"),
-        nul("long").alias("n_triangles"),
-        nul("long").alias("label"),
-        nul("long").alias("degree"),
-        "node_v", "common_neighbors", "deg_u", "deg_v", "jaccard",
-        nul("double").alias("aa_score"),
-    )
-    aa = adamic_adar_scores(tg, top_k=100).select(
-        F.lit("link_aa").alias("block"),
-        F.col("node_u").alias("node"),
-        nul("double").alias("rank"),
-        nul("long").alias("n_triangles"),
-        nul("long").alias("label"),
-        nul("long").alias("degree"),
-        "node_v", "common_neighbors",
-        nul("long").alias("deg_u"), nul("long").alias("deg_v"),
-        nul("double").alias("jaccard"),
-        "aa_score",
-    )
-    return (
-        pr.unionAll(tr).unionAll(lp).unionAll(co).unionAll(cn)
-        .unionAll(aa)
-    )
-
-
-def stream_windows_sql() -> str:
-    """Oracle for the staged round-8 consolidation of the three stream
-    window shapes (the ann_ivf_variants/stream_stream_joins precedent):
-    each registered oracle wrapped with its tag and projected onto the
-    unified (win_kind, window_start, window_end, group_key, n_events,
-    sum_value) schema. Composing from ORACLES keeps the merged oracle
-    bit-identical to the three it will retire."""
-    return f"""
-    SELECT 'tumbling' AS win_kind, window_start, window_end,
-           event_type AS group_key, n_events, sum_value
-    FROM ({_oracle_of("stream_tumbling")})
-    UNION ALL
-    SELECT 'session', session_start, session_end,
-           CAST(user_id AS VARCHAR), n_events, sum_value
-    FROM ({_oracle_of("stream_session")})
-    UNION ALL
-    SELECT 'sliding', window_start, window_end,
-           CAST(NULL AS VARCHAR), n_events, sum_value
-    FROM ({_oracle_of("stream_sliding")})
-    """
-
-
-@query("stream_windows", stream_windows_sql())
-def q_stream_windows(spark: SparkSession, sf: str) -> DataFrame:
-    """STAGED round-8 consolidation: the tumbling / session / sliding
-    window family as ONE tagged multi-assert query — three REAL
-    Structured Streaming runs (each its own watermark + state store +
-    availableNow lifecycle, exactly the runs the three registered
-    queries make today), tagged and unioned batch-side onto a unified
-    schema. When registered it retires stream_tumbling / stream_session /
-    stream_sliding, freeing 2 registry slots with identical capability
-    coverage. Pre-validated vs stream_windows_sql() in
-    tests/test_r8_prevalidated.py."""
-    t = q_stream_tumbling(spark, sf).select(
-        F.lit("tumbling").alias("win_kind"),
-        "window_start",
-        "window_end",
-        F.col("event_type").alias("group_key"),
-        "n_events",
-        "sum_value",
-    )
-    s = q_stream_session(spark, sf).select(
-        F.lit("session").alias("win_kind"),
-        F.col("session_start").alias("window_start"),
-        F.col("session_end").alias("window_end"),
-        F.col("user_id").cast("string").alias("group_key"),
-        "n_events",
-        "sum_value",
-    )
-    sl = q_stream_sliding(spark, sf).select(
-        F.lit("sliding").alias("win_kind"),
-        "window_start",
-        "window_end",
-        F.lit(None).cast("string").alias("group_key"),
-        "n_events",
-        "sum_value",
-    )
-    return t.unionAll(s).unionAll(sl)
+@query("kcore", gr.kcore_sql(_twotier_edges_sql(), k=4, max_rounds=4))
+def q_kcore(spark: SparkSession, sf: str) -> DataFrame:
+    """4-core of the two-tier customer graph (operators/graph.py
+    `kcore`, at most 4 peeling rounds): the ring periphery peels, the
+    dense tier survives."""
+    return gr.kcore(_twotier_edges(spark, sf), k=4, max_rounds=4)
 
 
 def stream_late_events_sql(*, delay_days: int = 2) -> str:
@@ -7072,9 +6718,8 @@ def q_stream_scd2(spark: SparkSession, sf: str) -> DataFrame:
     last-writer-wins reads and LSM-style shadow-then-delete compaction.
     The versioned-table shape Flink's event-time temporal join reads
     (FOR SYSTEM_TIME AS OF on a versioned table), maintained
-    incrementally. BENCH twin; registers as @query in a round-9/10
-    gate slot with the admission+LEAD-chaining replay pre-validated in
-    tests/test_scd2_stream.py."""
+    incrementally. Oracle: the admission+LEAD-chaining replay, also checked
+    in tests/test_scd2_stream.py."""
     from flink_kafka_table_api_spark.streaming.scd2_stream import (
         stream_scd2,
     )
@@ -7157,9 +6802,8 @@ def q_stream_ann_ingest(spark: SparkSession, sf: str) -> DataFrame:
     capability): embeddings delivered as 3 micro-batch drops, each
     published exactly-once (marker protocol) into the cluster-partitioned
     IVF index; the query routes driver-side and scans only the probed
-    cluster partition across all batch publishes. BENCH twin; registers
-    as @query in the committed round-9 gate with the full-value
-    assignment+routing+re-rank replay pre-validated in
+    cluster partition across all batch publishes. Oracle: the full-value
+    assignment+routing+re-rank replay, also checked in
     tests/test_stream_ann_ingest.py."""
     from flink_kafka_table_api_spark.streaming.ann_ingest import (
         stream_ann_ingest,
@@ -7241,9 +6885,8 @@ def q_stream_temporal_join(spark: SparkSession, sf: str) -> DataFrame:
     events themselves as the probe stream in natural day terciles —
     each probe drop enriched FOR SYSTEM_TIME AS OF its own batch
     (Flink Table API temporal-join semantics made deterministic by the
-    drop boundaries). BENCH twin; registers as @query in a round-9/10
-    gate slot with the admission+per-probe-argmax replay pre-validated
-    in tests/test_temporal_join.py."""
+    drop boundaries). Oracle: the admission+per-probe-argmax replay, also
+    checked in tests/test_temporal_join.py."""
     from flink_kafka_table_api_spark.streaming.temporal_join import (
         stream_temporal_join,
     )
@@ -7368,9 +7011,8 @@ def q_stream_event_temporal_join(spark: SparkSession, sf: str) -> DataFrame:
     passes its OWN event time, then joins the version valid AT that
     time — Flink's FOR SYSTEM_TIME AS OF p.event_time against a
     versioned table, with the emission-batch schedule part of the
-    checked result. BENCH twin; registers as @query in a round-9/10
-    gate slot with the full replay (both admissions + LEAD chaining +
-    point-in-time join + horizons) pre-validated in
+    checked result. Oracle: the full replay (both admissions + LEAD chaining
+    + point-in-time join + horizons), also checked in
     tests/test_event_temporal_join.py."""
     from flink_kafka_table_api_spark.streaming.event_temporal_join import (
         stream_event_temporal_join,
@@ -7487,9 +7129,8 @@ def q_stream_topn_retract(spark: SparkSession, sf: str) -> DataFrame:
     SUM(value)-per-user Top-10 maintained across 3 event drops, emitted
     as the RowKind changelog (+I/-U/+U/-D; toRetractStream semantics,
     org.apache.flink.types.RowKind — public API). Totals accumulate in
-    DECIMAL(25,6) (the repo-wide order-free rule). BENCH twin;
-    registers as @query in a round-9/10 gate slot with the
-    snapshot-diff replay pre-validated in tests/test_retract_topn.py."""
+    DECIMAL(25,6) (the repo-wide order-free rule). Oracle: the snapshot-diff
+    replay, also checked in tests/test_retract_topn.py."""
     from flink_kafka_table_api_spark.streaming.retract import (
         stream_topn_retract,
     )
@@ -7560,8 +7201,7 @@ def q_match_recognize(spark: SparkSession, sf: str) -> DataFrame:
     per-key string -> regex-scan plan; the oracle detects the same
     matches with window functions (last non-click row before each
     purchase must be a view at distance >= 2) — two different
-    algorithms, full-value checked. BENCH twin; registers as @query in
-    a round-9/10 gate slot, pre-validated in tests/test_cep.py."""
+    algorithms, full-value checked. Also checked in tests/test_cep.py."""
     from flink_kafka_table_api_spark.operators.cep import match_recognize
 
     ev = _t(spark, sf, "events")
@@ -7652,8 +7292,7 @@ def q_stream_match_recognize(spark: SparkSession, sf: str) -> DataFrame:
     a row past its end; open-tail matches stay pending and absorb late
     splices). The flush makes the total equal the batch
     match_recognize over admitted rows, which is what the oracle
-    replays. BENCH twin; registers as @query in a round-9/10 gate slot,
-    pre-validated in tests/test_stream_cep.py."""
+    replays. Also checked in tests/test_stream_cep.py."""
     from flink_kafka_table_api_spark.streaming.stream_cep import (
         stream_match_recognize,
     )
@@ -7750,9 +7389,8 @@ def q_data_expectations(spark: SparkSession, sf: str) -> DataFrame:
     unique, accepted_values, in_range, and three referential-integrity
     relationships — compiled so every aggregate-shaped rule on a table
     fuses into ONE scan (plan-pinned) and each relationship is one
-    anti-join count. BENCH twin; registers as @query in a round-9/10
-    gate slot with every count replayed by the DuckDB oracle
-    pre-validated in tests/test_expectations.py."""
+    anti-join count. Oracle: every count replayed by the DuckDB oracle, also
+    checked in tests/test_expectations.py."""
     from flink_kafka_table_api_spark.operators.expectations import (
         TESTDATA_CONTRACT,
         expectations_report,
@@ -7812,9 +7450,8 @@ def q_stream_profile(spark: SparkSession, sf: str) -> DataFrame:
     mergeable column partials (counts, typed ranges, HLL sketches) over
     4 event drops, folded into the live profile; the gate form joins a
     verification-only exact-distinct pass and asserts the HLL++ 4-sigma
-    tolerance boolean (the approx_distinct precedent). BENCH twin;
-    registers as @query in the committed round-9 gate with the exact
-    per-column replay pre-validated in tests/test_stream_profile.py."""
+    tolerance boolean (the approx_distinct precedent). Oracle: the exact
+    per-column replay, also checked in tests/test_stream_profile.py."""
     from flink_kafka_table_api_spark.streaming.profile_monitor import (
         EVENTS_SPEC,
         stream_profile,
@@ -7891,8 +7528,7 @@ def q_cumulate_windows(spark: SparkSession, sf: str) -> DataFrame:
     day-so-far totals — CUMULATE(step=6h, size=1d). Two-stage plan: ONE
     step-tumbling partial aggregate (never the 4x input explosion of
     the naive port), then the output-sized spine + running merge.
-    BENCH twin; registers as @query in a round-9/10 gate slot with the
-    oracle pre-validated in tests/test_cumulate.py. Reference scope:
+    Oracle also checked in tests/test_cumulate.py. Reference scope:
     Flink's windowing TVF planning the reference delegates
     (TransactionProcessor.java:106)."""
     from flink_kafka_table_api_spark.streaming.cumulate import cumulate
@@ -8005,9 +7641,8 @@ def q_stream_cumulate(spark: SparkSession, sf: str) -> DataFrame:
     state eviction, emission), then the batch cumulate merge over the
     CLOSED slices (stage 2, streaming/cumulate.py). Emitted rows are
     the day-so-far totals the cumulate TVF would have fired, bounded by
-    the terminal watermark. BENCH twin; registers as @query in a
-    round-9/10 gate slot with the admission+spine+merge replay
-    pre-validated in tests/test_cumulate.py."""
+    the terminal watermark. Oracle: the admission+spine+merge replay, also
+    checked in tests/test_cumulate.py."""
     from flink_kafka_table_api_spark.streaming.cumulate import (
         cumulate_finalize,
     )
@@ -8124,9 +7759,8 @@ def q_stream_over_agg(spark: SparkSession, sf: str) -> DataFrame:
     chunk rule), watermark 2 days, preceding range 1 day per user_id.
     Spark streaming has no window functions; the foreachBatch state
     machine carries exactly Flink's OVER-window state (preceding-range
-    context + out-of-orderness buffer). BENCH twin; registers as
-    @query in a round-9/10 gate slot with the admission+window replay
-    pre-validated in tests/test_over_agg.py."""
+    context + out-of-orderness buffer). Oracle: the admission+window replay,
+    also checked in tests/test_over_agg.py."""
     from flink_kafka_table_api_spark.streaming.over_agg import (
         stream_over_agg,
     )
@@ -8206,8 +7840,7 @@ def q_stream_over_rows(spark: SparkSession, sf: str) -> DataFrame:
     ts ROWS BETWEEN 5 PRECEDING AND CURRENT ROW)` — with stream_over_agg
     this completes Flink's OVER-window class (RANGE + ROWS). The
     context tail is the key's LAST 5 emitted rows (count-bounded state)
-    instead of a time range. BENCH twin; registers as @query in a
-    round-9/10 gate slot with the replay pre-validated in
+    instead of a time range. Oracle: the replay, also checked in
     tests/test_over_agg.py."""
     from flink_kafka_table_api_spark.streaming.over_agg import (
         stream_over_rows_agg,
@@ -8297,9 +7930,8 @@ def q_stream_window_dedup(spark: SparkSession, sf: str) -> DataFrame:
     (1-day window, user_id) min_by over the (ts, event_id) total order,
     APPEND mode, availableNow — the argmin aggregate is the
     deduplication (no per-row rank state), so the streaming state is
-    one winner row per open (window, key). BENCH twin; registers as
-    @query in a round-9/10 gate slot with the replay pre-validated in
-    tests/test_window_dedup.py."""
+    one winner row per open (window, key). Oracle: the replay, also checked
+    in tests/test_window_dedup.py."""
     from flink_kafka_table_api_spark.streaming.late_data import (
         stage_chunked_by,
     )
@@ -8405,9 +8037,8 @@ def q_stream_session_dynamic(spark: SparkSession, sf: str) -> DataFrame:
     alive 45 min, purchases 30, everything else 15 — so session
     boundaries depend on WHICH events are inside, not just their
     spacing, and session_end = max(ts + gap) over the merged interval.
-    APPEND mode, watermark-closed sessions only. BENCH twin; registers
-    as @query in a round-9/10 gate slot with the running-max replay
-    pre-validated in tests/test_window_dedup.py."""
+    APPEND mode, watermark-closed sessions only. Oracle: the running-max
+    replay, also checked in tests/test_window_dedup.py."""
     stream = _stream_table(spark, sf, "events")
     gap = (
         F.when(F.col("event_type") == "error", "45 minutes")
@@ -8516,9 +8147,8 @@ def q_stream_window_join(spark: SparkSession, sf: str) -> DataFrame:
     (round-10 optimization; guide §1.4 — never compute the same join
     twice). Unlike the interval join, state is scoped per WINDOW and
     evicts at window close; the outer row's NULL click emits only once
-    the global watermark passes the window end. BENCH twin; registers
-    as @query in a round-9/10 gate slot with the oracle pre-validated
-    in tests/test_window_dedup.py."""
+    the global watermark passes the window end. Oracle also checked in
+    tests/test_window_dedup.py."""
     lo = _window_join_run(spark, sf, "left_outer")
     cols = ["window_start", "error_id", "click_id", "user_id"]
     inner = lo.filter(F.col("click_id").isNotNull())
@@ -8558,9 +8188,8 @@ def q_stream_source_quota(spark: SparkSession, sf: str) -> DataFrame:
     carried per-source consumed counter (|sources| rows of state,
     broadcast at each batch). Documents arrive as 3 id-ordered drops;
     budget 1500 tokens/source, so the counter genuinely carries across
-    batch boundaries (live-signal pinned in tests). BENCH twin;
-    registers as @query in a round-9/10 gate slot with the prefix-sum
-    replay pre-validated in tests/test_quota.py."""
+    batch boundaries (live-signal pinned in tests). Oracle: the prefix-sum
+    replay, also checked in tests/test_quota.py."""
     from flink_kafka_table_api_spark.streaming.quota import (
         stream_source_quota,
     )
@@ -9210,7 +8839,7 @@ def stream_state_ttl_sql(*, ttl_days: int = 1) -> str:
     """
 
 
-@bench_query("stream_state_ttl")
+@query("stream_state_ttl", stream_state_ttl_sql())
 def q_stream_state_ttl(spark: SparkSession, sf: str) -> DataFrame:
     """Per-key state TTL on the update-mode GROUP BY
     (streaming/state_ttl.py, round-10 capability — Flink's
@@ -9224,10 +8853,9 @@ def q_stream_state_ttl(spark: SparkSession, sf: str) -> DataFrame:
     maximum run 1-3 days (17/150 keys idle >= 1 day at sf0.01, 1/15 at
     sf0.001, NONE >= 3 days), so 1 day keeps both paths live — most
     keys survive, some age out — at both gate SFs (asserted in the
-    tests against the TTL-less sibling's snapshots). BENCH
-    twin staged for a round-11 gate slot with the snapshot-diff+cutoff
-    oracle stream_state_ttl_sql, pre-validated at sf0.001 AND sf0.01
-    in tests/test_state_ttl.py."""
+    tests against the TTL-less sibling's snapshots). Oracle: the
+    snapshot-diff+cutoff replay stream_state_ttl_sql, checked at sf0.001
+    AND sf0.01 in tests/test_state_ttl.py."""
     from flink_kafka_table_api_spark.streaming.state_ttl import (
         stream_agg_state_ttl,
     )
@@ -9332,8 +8960,7 @@ def q_pii_scrub(spark: SparkSession, sf: str) -> DataFrame:
     carries a deterministic doc_id-derived PII injection (2/3 of docs)
     so validity genuinely varies: out-of-range octets and
     Luhn-failing card numbers are redacted but not counted. One
-    narrow zero-shuffle projection pass. BENCH twin; registers as
-    @query in a round-9/10 gate slot with the oracle pre-validated in
+    narrow zero-shuffle projection pass. Oracle also checked in
     tests/test_pii_scrub.py."""
     from flink_kafka_table_api_spark.operators.text import pii_scrub
 
@@ -9364,7 +8991,7 @@ def q_pii_scrub(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query("gazetteer_tag", tx.gazetteer_tag_sql({"spark": "ENGINE", "join": "OP", "hash join": "OP2", "table scan merge": "OP3", "customer": "ENTITY"}))
+@query("gazetteer_tag", tx.gazetteer_tag_sql({"spark": "ENGINE", "join": "OP", "hash join": "OP2", "table scan merge": "OP3", "customer": "ENTITY"}))
 def q_gazetteer_tag(spark: SparkSession, sf: str) -> DataFrame:
     """Dictionary entity tagging (operators/text.py `gazetteer_tag`)
     over a 5-term, mixed-width gazetteer on the documents corpus."""
@@ -9382,26 +9009,6 @@ def q_event_paths(spark: SparkSession, sf: str) -> DataFrame:
     from flink_kafka_table_api_spark.operators.timeseries import event_paths
 
     return event_paths(_t(spark, sf, "events"))
-
-
-@bench_query("pq_ann_search")
-def q_pq_ann_search(spark: SparkSession, sf: str) -> DataFrame:
-    """Full PQ pipeline (operators/similarity.py): train 8x16 codebooks
-    (2 Lloyd iterations), encode the corpus to 8-byte codes, ADC top-10
-    for a fixed query — the 32x-compression ANN tier. Bench twin of the
-    registered `pq_ann` contract query (this form measures the search
-    path; the contract form asserts the invariants)."""
-    from flink_kafka_table_api_spark.operators.similarity import (
-        pq_encode,
-        pq_search,
-        pq_train,
-    )
-
-    vecs = _t(spark, sf, "embeddings")
-    cb = pq_train(vecs, m=8, k=16, n_iter=2)
-    enc = pq_encode(vecs, cb)
-    q = [0.1] * 64
-    return pq_search(enc, cb, q, 10)
 
 
 @query(
@@ -9577,185 +9184,7 @@ def containment_pairs_sql(*, threshold: float = 0.5) -> str:
     """
 
 
-def join_suite_sql() -> str:
-    """Oracle for the staged round-10 consolidation of the outer/semi/
-    anti join family: all four registered oracles composed verbatim as
-    NULL-padded typed blocks (the substring_dups recipe) — 4 join kinds
-    in ONE registry slot."""
-    return f"""
-    SELECT 'left' AS block,
-           CAST(NULL AS BIGINT) AS o_orderkey,
-           CAST(NULL AS BIGINT) AS o_custkey,
-           c_custkey,
-           CAST(NULL AS VARCHAR) AS c_name,
-           CAST(NULL AS VARCHAR) AS c_mktsegment,
-           CAST(n_orders AS BIGINT) AS n_orders
-    FROM ({_oracle_of("join_left")})
-    UNION ALL
-    SELECT 'semi', NULL, NULL, c_custkey, c_name, c_mktsegment,
-           CAST(NULL AS BIGINT)
-    FROM ({_oracle_of("join_semi")})
-    UNION ALL
-    SELECT 'anti', NULL, NULL, c_custkey, c_name, NULL, NULL
-    FROM ({_oracle_of("join_anti")})
-    UNION ALL
-    SELECT 'anti_urgent', NULL, NULL, c_custkey, c_name, NULL, NULL
-    FROM customer
-    WHERE NOT EXISTS (SELECT 1 FROM orders
-                      WHERE o_custkey = c_custkey
-                        AND o_orderpriority = '1-URGENT')
-    UNION ALL
-    SELECT 'full_outer', o_orderkey, o_custkey, c_custkey, c_name,
-           NULL, NULL
-    FROM ({_oracle_of("join_full_outer")})
-    """
-
-
-@query("join_suite", join_suite_sql())
-def q_join_suite(spark: SparkSession, sf: str) -> DataFrame:
-    """STAGED round-10 consolidation: the left / semi / anti /
-    full-outer join slots merged as NULL-padded typed blocks (frees 3
-    registry slots on registration; join_inner_agg, star_join and the
-    specialty joins keep their own slots). Pre-validated vs
-    join_suite_sql() in tests/test_r10_prevalidated.py."""
-    nul = lambda t: F.lit(None).cast(t)  # noqa: E731
-    left = q_join_left(spark, sf).select(
-        F.lit("left").alias("block"),
-        nul("long").alias("o_orderkey"),
-        nul("long").alias("o_custkey"),
-        "c_custkey",
-        nul("string").alias("c_name"),
-        nul("string").alias("c_mktsegment"),
-        F.col("n_orders").cast("long").alias("n_orders"),
-    )
-    semi = q_join_semi(spark, sf).select(
-        F.lit("semi").alias("block"),
-        nul("long").alias("o_orderkey"),
-        nul("long").alias("o_custkey"),
-        "c_custkey",
-        "c_name",
-        "c_mktsegment",
-        nul("long").alias("n_orders"),
-    )
-    anti = q_join_anti(spark, sf).select(
-        F.lit("anti").alias("block"),
-        nul("long").alias("o_orderkey"),
-        nul("long").alias("o_custkey"),
-        "c_custkey",
-        "c_name",
-        nul("string").alias("c_mktsegment"),
-        nul("long").alias("n_orders"),
-    )
-    cust = _t(spark, sf, "customer")
-    urgent = _t(spark, sf, "orders").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    # the retired join_anti block is 0 rows at every shipped sf (all
-    # customers have orders) — keep it verbatim for retiree equivalence
-    # AND add the LIVE anti complement of the semi block, so the suite's
-    # anti-join evidence is non-vacuous
-    anti_u = anti_join(
-        cust, urgent, cust.c_custkey == urgent.o_custkey
-    ).select(
-        F.lit("anti_urgent").alias("block"),
-        nul("long").alias("o_orderkey"),
-        nul("long").alias("o_custkey"),
-        "c_custkey",
-        "c_name",
-        nul("string").alias("c_mktsegment"),
-        nul("long").alias("n_orders"),
-    )
-    fo = q_join_full_outer(spark, sf).select(
-        F.lit("full_outer").alias("block"),
-        "o_orderkey",
-        "o_custkey",
-        "c_custkey",
-        "c_name",
-        nul("string").alias("c_mktsegment"),
-        nul("long").alias("n_orders"),
-    )
-    return (
-        left.unionAll(semi).unionAll(anti).unionAll(anti_u).unionAll(fo)
-    )
-
-
-def window_suite_sql() -> str:
-    """Oracle for the staged round-10 consolidation of the window-
-    function family: top-k, running frame, offset/range/ntile frames,
-    and distribution analytics composed verbatim as NULL-padded typed
-    blocks — the full non-streaming window surface in ONE slot."""
-    return f"""
-    SELECT 'topk' AS block,
-           o_orderkey, o_custkey,
-           CAST(NULL AS BIGINT) AS event_id,
-           CAST(NULL AS BIGINT) AS user_id,
-           CAST(NULL AS VARCHAR) AS o_orderpriority,
-           o_totalprice, rn,
-           CAST(NULL AS DOUBLE) AS run_sum,
-           CAST(NULL AS DOUBLE) AS prev_price,
-           CAST(NULL AS DOUBLE) AS next_price,
-           CAST(NULL AS DOUBLE) AS price_delta,
-           CAST(NULL AS DOUBLE) AS near_price_sum,
-           CAST(NULL AS BIGINT) AS price_quartile,
-           CAST(NULL AS DOUBLE) AS pct_rank,
-           CAST(NULL AS DOUBLE) AS cum_dist,
-           CAST(NULL AS DOUBLE) AS cheapest_in_priority,
-           CAST(NULL AS DOUBLE) AS dearest_in_priority
-    FROM ({_oracle_of("window_topk")})
-    UNION ALL
-    SELECT 'running', NULL, NULL, event_id, user_id, NULL, NULL, NULL,
-           run_sum, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-           NULL
-    FROM ({_oracle_of("window_running")})
-    UNION ALL
-    SELECT 'frames', o_orderkey, o_custkey, NULL, NULL, NULL,
-           o_totalprice, NULL, NULL, prev_price, next_price,
-           price_delta, near_price_sum, price_quartile, NULL, NULL,
-           NULL, NULL
-    FROM ({_oracle_of("window_frames")})
-    UNION ALL
-    SELECT 'analytic', o_orderkey, NULL, NULL, NULL, o_orderpriority,
-           NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, pct_rank,
-           cum_dist, cheapest_in_priority, dearest_in_priority
-    FROM ({_oracle_of("window_analytic")})
-    """
-
-
-@query("window_suite", window_suite_sql())
-def q_window_suite(spark: SparkSession, sf: str) -> DataFrame:
-    """STAGED round-10 consolidation: the four window-function slots
-    (topk / running / frames / analytic) merged as NULL-padded typed
-    blocks (frees 3 registry slots on registration; stream_window_topk
-    stays its own streaming slot). Pre-validated vs window_suite_sql()
-    in tests/test_r10_prevalidated.py."""
-    nul = lambda t: F.lit(None).cast(t)  # noqa: E731
-    pad = {
-        "o_orderkey": "long", "o_custkey": "long", "event_id": "long",
-        "user_id": "long", "o_orderpriority": "string",
-        "o_totalprice": "double", "rn": "long", "run_sum": "double",
-        "prev_price": "double", "next_price": "double",
-        "price_delta": "double", "near_price_sum": "double",
-        "price_quartile": "long", "pct_rank": "double",
-        "cum_dist": "double", "cheapest_in_priority": "double",
-        "dearest_in_priority": "double",
-    }
-
-    def block(tag: str, df: DataFrame) -> DataFrame:
-        cols = [F.lit(tag).alias("block")] + [
-            (F.col(c) if c in df.columns else nul(t)).alias(c)
-            for c, t in pad.items()
-        ]
-        return df.select(*cols)
-
-    return (
-        block("topk", q_window_topk(spark, sf))
-        .unionAll(block("running", q_window_running(spark, sf)))
-        .unionAll(block("frames", q_window_frames(spark, sf)))
-        .unionAll(block("analytic", q_window_analytic(spark, sf)))
-    )
-
-
-@bench_query("winnowing")
+@query("winnowing", tx.winnowing_sql(k=8, w=4))
 def q_winnowing(spark: SparkSession, sf: str) -> DataFrame:
     """Winnowing document fingerprints (operators/text.py
     `winnowing_fingerprints`, Schleimer '03 robust winnowing, k=8 w=4):
@@ -9777,7 +9206,7 @@ def q_seasonal_anomaly(spark: SparkSession, sf: str) -> DataFrame:
     return seasonal_anomaly(_t(spark, sf, "events"))
 
 
-@retired_query("link_prediction", gr.common_neighbor_scores_sql(_two_gen_edges_sql(), top_k=100))
+@query("link_prediction", gr.common_neighbor_scores_sql(_two_gen_edges_sql(), top_k=100))
 def q_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     """Common-neighbor/Jaccard link prediction (operators/graph.py
     `common_neighbor_scores`, top-100) over the two-generator
@@ -9817,7 +9246,7 @@ def q_winnow_matches(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query("adamic_adar", gr.adamic_adar_scores_sql(_two_gen_edges_sql(), top_k=100))
+@query("adamic_adar", gr.adamic_adar_scores_sql(_two_gen_edges_sql(), top_k=100))
 def q_adamic_adar(spark: SparkSession, sf: str) -> DataFrame:
     """Adamic-Adar degree-weighted link prediction (operators/graph.py
     `adamic_adar_scores`, top-100) over the two-generator bounded-degree
@@ -9883,7 +9312,10 @@ def q_lsh_recall_audit(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@bench_query("equi_depth_bins")
+@query(
+    "equi_depth_bins",
+    equi_depth_bins_sql("orders", "o_totalprice", n_bins=10),
+)
 def q_equi_depth_bins(spark: SparkSession, sf: str) -> DataFrame:
     """Equi-depth (quantile) binning with per-bin stats
     (operators/relational.py `equi_depth_bins`, 10 bins over
@@ -9915,7 +9347,7 @@ def q_pmi_collocations(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@retired_query("char_entropy", tx.char_entropy_sql())
+@query("char_entropy", tx.char_entropy_sql())
 def q_char_entropy(spark: SparkSession, sf: str) -> DataFrame:
     """Per-document Shannon character entropy + char counts
     (operators/text.py `char_entropy`): the gibberish/boilerplate
@@ -9976,101 +9408,11 @@ def q_zipf_gini_audit(spark: SparkSession, sf: str) -> DataFrame:
     return tx.zipf_gini_audit(_t(spark, sf, "documents"))
 
 
-def dedup_suite_sql() -> str:
-    """Oracle for the staged round-12 consolidation of the MinHash-LSH
-    pipeline stages: the three registered oracles composed verbatim as
-    NULL-padded typed blocks (the join_suite/graph_suite recipe) —
-    signatures + candidate pairs + verified near-dups in ONE registry
-    slot."""
-    nul8 = ",\n           ".join(
-        f"CAST(NULL AS BIGINT) AS mh_{j}" for j in range(8)
-    )
-    mh8 = ", ".join(f"mh_{j}" for j in range(8))
-    return f"""
-    SELECT 'signatures' AS block, doc_id, {mh8},
-           CAST(NULL AS BIGINT) AS a, CAST(NULL AS BIGINT) AS b,
-           CAST(NULL AS DOUBLE) AS jaccard
-    FROM ({_minhash_oracle()})
-    UNION ALL
-    SELECT 'candidates', CAST(NULL AS BIGINT),
-           {nul8},
-           a, b, CAST(NULL AS DOUBLE)
-    FROM ({_lsh_pairs_oracle()})
-    UNION ALL
-    SELECT 'verified', CAST(NULL AS BIGINT),
-           {nul8},
-           a, b, jaccard
-    FROM ({_neardup_verified_oracle()})
-    """
-
-
-@query("dedup_suite", dedup_suite_sql())
-def q_dedup_suite(spark: SparkSession, sf: str) -> DataFrame:
-    """STAGED round-12 consolidation: the dedup_minhash /
-    lsh_candidate_pairs / neardup_verified slots merged as NULL-padded
-    typed blocks (frees 2 registry slots on registration). The suite is
-    CHEAPER than its three components run separately: the signature
-    table is computed once and persisted, the candidate table once, and
-    the verify stage shingles only candidate suspects — the sharing the
-    three standalone queries cannot express. Pre-validated vs
-    dedup_suite_sql() in tests/test_r12_prevalidated.py."""
-    from flink_kafka_table_api_spark.caching import tracked_persist
-
-    docs = _t(spark, sf, "documents")
-    sigs = tracked_persist(dd.minhash_signatures(
-        docs, "doc_id", "text", num_hashes=8, shingle_k=3, portable=True,
-    ))
-    cand = tracked_persist(dd.lsh_candidate_pairs(
-        dd.lsh_bands(sigs, "doc_id", bands=4, rows_per_band=2), "doc_id"
-    ))
-    ids = (
-        cand.select(F.col("a").alias("doc_id"))
-        .union(cand.select(F.col("b").alias("doc_id")))
-        .distinct()
-    )
-    sets = tracked_persist(
-        docs.join(F.broadcast(ids), "doc_id", "left_semi").select(
-            "doc_id", dd.shingles("text", 3).alias("__sh")
-        )
-    )
-    verified = (
-        cand
-        .join(sets.select(F.col("doc_id").alias("a"),
-                          F.col("__sh").alias("__sa")), "a")
-        .join(sets.select(F.col("doc_id").alias("b"),
-                          F.col("__sh").alias("__sb")), "b")
-        .withColumn(
-            "jaccard",
-            F.round(dd.jaccard(F.col("__sa"), F.col("__sb")), 6),
-        )
-        .filter(F.col("jaccard") >= 0.5)
-        .select("a", "b", "jaccard")
-    )
-    nul = lambda t: F.lit(None).cast(t)  # noqa: E731
-    mh_cols = [f"mh_{j}" for j in range(8)]
-    sig_block = sigs.select(
-        F.lit("signatures").alias("block"), "doc_id", *mh_cols,
-        nul("long").alias("a"), nul("long").alias("b"),
-        nul("double").alias("jaccard"),
-    )
-    cand_block = cand.select(
-        F.lit("candidates").alias("block"), nul("long").alias("doc_id"),
-        *[nul("long").alias(c) for c in mh_cols],
-        "a", "b", nul("double").alias("jaccard"),
-    )
-    ver_block = verified.select(
-        F.lit("verified").alias("block"), nul("long").alias("doc_id"),
-        *[nul("long").alias(c) for c in mh_cols],
-        "a", "b", "jaccard",
-    )
-    return sig_block.unionByName(cand_block).unionByName(ver_block)
-
-
 # Formerly round-13 staged operators (oracles pre-validated in
 # tests/test_r13_prevalidated.py): the round-6 VERDICT compressed the
 # staging ledger, so these registered in rounds 7-8.
 
-@retired_query("readability", tx.readability_scores_sql())
+@query("readability", tx.readability_scores_sql())
 def q_readability(spark: SparkSession, sf: str) -> DataFrame:
     """Flesch Reading Ease + Flesch-Kincaid grade per document
     (operators/text.py `readability_scores`): three integer counts
@@ -10113,35 +9455,6 @@ def q_burst_detection(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     return burst_detection(_t(spark, sf, "events"))
-
-
-@query("burst_costs_probe", tsr.burst_costs_probe_sql())
-def q_burst_costs_probe(spark: SparkSession, sf: str) -> DataFrame:
-    """Driver-environment bisection probe #1 (VERDICT r9 item 2): the
-    burst_detection pipeline truncated after integer cost quantization
-    — no Viterbi. Green here + burst red localizes the 2-round driver
-    divergence downstream of ln/floor; red here localizes it upstream.
-    Retire once burst_detection lands a green driver row."""
-    from flink_kafka_table_api_spark.operators.timeseries import (
-        burst_costs_probe,
-    )
-
-    return burst_costs_probe(_t(spark, sf, "events"))
-
-
-@query("burst_walk_probe", tsr.burst_walk_probe_sql())
-def q_burst_walk_probe(spark: SparkSession, sf: str) -> DataFrame:
-    """Driver-environment bisection probe #2 (VERDICT r9 item 2): the
-    burst pipeline through the forward scalar walk (recursive-CTE side)
-    but not the backtrack. With probe #1 this converts the driver's
-    one-bit hash signal into a stage-level diagnosis: costs green +
-    walk red -> recursive-CTE semantics; both green + burst red ->
-    backtrack. Retire once burst_detection is green."""
-    from flink_kafka_table_api_spark.operators.timeseries import (
-        burst_walk_probe,
-    )
-
-    return burst_walk_probe(_t(spark, sf, "events"))
 
 
 def _cluster_silhouette_oracle() -> str:
@@ -10272,79 +9585,6 @@ def q_shingle_overlap_matrix(spark: SparkSession, sf: str) -> DataFrame:
     provenance audit; per-group ranked heads + one bounded
     intersection join."""
     return dd.shingle_overlap_matrix(_t(spark, sf, "documents"))
-
-
-def tpch_scalar_suite_sql() -> str:
-    """Oracle for the staged consolidation of the three scalar-shaped
-    TPC-H slots (q6 / q14 / q19 — each a one-row answer): the
-    registered oracles composed verbatim as NULL-padded typed blocks
-    (the join_suite recipe). Frees 2 slots on registration — the
-    round-13 funding lever alongside dedup_suite."""
-    return f"""
-    SELECT 'q6' AS block, revenue, n_lines,
-           CAST(NULL AS DOUBLE) AS promo_revenue_pct
-    FROM ({_oracle_of("tpch_q6_forecast")})
-    UNION ALL
-    SELECT 'q14', CAST(NULL AS DOUBLE), CAST(NULL AS BIGINT),
-           promo_revenue_pct
-    FROM ({_oracle_of("tpch_q14_promo")})
-    UNION ALL
-    SELECT 'q19', revenue, n_lines, CAST(NULL AS DOUBLE)
-    FROM ({_oracle_of("tpch_q19_disjunctive")})
-    """
-
-
-@query("tpch_scalar_suite", tpch_scalar_suite_sql())
-def q_tpch_scalar_suite(spark: SparkSession, sf: str) -> DataFrame:
-    """STAGED consolidation: the three scalar-shaped TPC-H slots
-    (q6 forecast / q14 promo ratio / q19 disjunctive revenue) merged
-    as NULL-padded typed blocks — each block keeps its registered
-    query verbatim (scan-pruned q6, decimal-exact q14 ratio, the
-    q19 disjunction-factored join). Pre-validated vs
-    tpch_scalar_suite_sql() in tests/test_r13_prevalidated.py."""
-    nul = lambda t: F.lit(None).cast(t)  # noqa: E731
-    b6 = q_tpch_q6(spark, sf).select(
-        F.lit("q6").alias("block"), "revenue", "n_lines",
-        nul("double").alias("promo_revenue_pct"),
-    )
-    b14 = q_tpch_q14(spark, sf).select(
-        F.lit("q14").alias("block"), nul("double").alias("revenue"),
-        nul("long").alias("n_lines"), "promo_revenue_pct",
-    )
-    b19 = q_tpch_q19(spark, sf).select(
-        F.lit("q19").alias("block"), "revenue", "n_lines",
-        nul("double").alias("promo_revenue_pct"),
-    )
-    return b6.unionByName(b14).unionByName(b19)
-
-
-def ann_basic_suite_sql() -> str:
-    """Oracle for the staged consolidation of the two flat-scan ANN
-    slots (identical (vec_id, cosine_sim) shapes): brute-force exact
-    top-10 and the hyperplane-LSH bucketed top-10 as typed blocks.
-    Frees 1 slot on registration (the ann_ivf_variants precedent,
-    applied to the non-IVF family members)."""
-    return f"""
-    SELECT 'bruteforce' AS block, vec_id, cosine_sim
-    FROM ({_oracle_of("ann_bruteforce")})
-    UNION ALL
-    SELECT 'lsh', vec_id, cosine_sim
-    FROM ({_oracle_of("ann_lsh")})
-    """
-
-
-@query("ann_basic_suite", ann_basic_suite_sql())
-def q_ann_basic_suite(spark: SparkSession, sf: str) -> DataFrame:
-    """STAGED consolidation: ann_bruteforce + ann_lsh as typed blocks
-    (same output schema, one registry slot). Pre-validated vs
-    ann_basic_suite_sql() in tests/test_r13_prevalidated.py."""
-    b = q_ann_bruteforce(spark, sf).select(
-        F.lit("bruteforce").alias("block"), "vec_id", "cosine_sim"
-    )
-    l = q_ann_lsh(spark, sf).select(
-        F.lit("lsh").alias("block"), "vec_id", "cosine_sim"
-    )
-    return b.unionByName(l)
 
 
 # Formerly round-16 staged operators (oracles pre-validated in
@@ -10712,281 +9952,6 @@ def q_grid_density(spark: SparkSession, sf: str) -> DataFrame:
     return grid_density_clusters(
         _t(spark, sf, "embeddings"), cell=0.04, min_pts=4
     )
-
-
-# ---------------------------------------------------------------------------
-# Consolidation suites (ALL REGISTERED in round 7 — the r6 VERDICT's
-# ledger compression)
-# ---------------------------------------------------------------------------
-# Every suite below is a NULL-padded typed-block union of its component
-# queries (components run verbatim; oracles composed verbatim), the
-# graph_suite/join_suite/dedup_suite recipe generalized into one
-# spec-driven builder. Registering a suite retired its components in the
-# same commit (retired_query: bench twin + composable oracle, no
-# registry slot).
-
-_SUITE_SPECS = {
-    "simhash_suite": [
-        ("dedup_simhash", [("doc_id", "BIGINT"), ("simhash", "BIGINT")]),
-        ("simhash_pairs", [("lang", "VARCHAR"), ("a", "BIGINT"), ("b", "BIGINT"), ("hamming", "BIGINT")]),
-    ],
-    "bpe_suite": [
-        ("bpe_train_merges", [("rank", "INTEGER"), ("left", "VARCHAR"), ("right", "VARCHAR"), ("merged", "VARCHAR"), ("pair_freq", "BIGINT")]),
-        ("bpe_encode_counts", [("piece", "VARCHAR"), ("n_occurrences", "BIGINT")]),
-    ],
-    "funcs_suite": [
-        ("scalar_funcs", [("p_partkey", "BIGINT"), ("u_name", "VARCHAR"), ("l_type", "VARCHAR"), ("name_prefix", "VARCHAR"), ("name_len", "BIGINT"), ("brand_type", "VARCHAR"), ("snake_name", "VARCHAR"), ("trimmed", "VARCHAR"), ("sqrt_price", "DOUBLE"), ("log_size", "DOUBLE"), ("price_dev", "DOUBLE"), ("price_centile_ceil", "BIGINT"), ("size_decade", "BIGINT"), ("size_sq", "DOUBLE"), ("brand_value", "VARCHAR"), ("map_size", "INTEGER"), ("sorted_keys", "VARCHAR"), ("type_or_default", "VARCHAR")]),
-        ("datetime_funcs", [("o_orderkey", "BIGINT"), ("o_year", "BIGINT"), ("o_month", "BIGINT"), ("o_day", "BIGINT"), ("month_start", "DATE"), ("days_since_epoch_start", "BIGINT"), ("date_str", "VARCHAR"), ("reparsed", "TIMESTAMP"), ("epoch_s", "BIGINT")]),
-        ("json_funcs", [("k", "BIGINT"), ("n_events", "BIGINT"), ("n_users", "BIGINT"), ("sum_k_regex", "BIGINT"), ("sum_k_json", "BIGINT")]),
-    ],
-    "agg_suite": [
-        ("agg_rollup_cube", [("grp_src", "VARCHAR"), ("l_returnflag", "VARCHAR"), ("l_linestatus", "VARCHAR"), ("n_items", "BIGINT"), ("sum_qty", "DOUBLE")]),
-        ("grouping_sets", [("l_returnflag", "VARCHAR"), ("l_linestatus", "VARCHAR"), ("n_items", "BIGINT"), ("sum_qty", "DOUBLE")]),
-        ("multi_distinct", [("event_type", "VARCHAR"), ("n_users", "BIGINT"), ("n_days", "BIGINT"), ("n_events", "BIGINT")]),
-        ("agg_minmax_by", [("o_orderpriority", "VARCHAR"), ("cheapest_order", "BIGINT"), ("priciest_order", "BIGINT"), ("min_price", "DOUBLE"), ("max_price", "DOUBLE")]),
-    ],
-    "binning_suite": [
-        ("value_histogram", [("bucket", "BIGINT"), ("n", "BIGINT"), ("lo", "DOUBLE"), ("hi", "DOUBLE")]),
-        ("equi_depth_bins", [("bin_id", "BIGINT"), ("lo_cut", "DOUBLE"), ("hi_cut", "DOUBLE"), ("n_rows", "BIGINT"), ("bin_min", "DOUBLE"), ("bin_max", "DOUBLE")]),
-    ],
-    "text_stats_suite": [
-        ("lang_id", [("doc_id", "BIGINT"), ("lang", "VARCHAR"), ("predicted_lang", "VARCHAR"), ("lang_score", "DOUBLE")]),
-        ("text_quality", [("doc_id", "BIGINT"), ("n_tokens", "INTEGER"), ("mean_word_len", "DOUBLE"), ("stopword_ratio", "DOUBLE"), ("alnum_ratio", "DOUBLE"), ("quality_score", "DOUBLE"), ("n_grams", "BIGINT"), ("repetition_ratio", "DOUBLE")]),
-        ("char_entropy", [("doc_id", "BIGINT"), ("n_chars", "BIGINT"), ("distinct_chars", "BIGINT"), ("entropy", "DOUBLE")]),
-        ("token_count", [("doc_id", "BIGINT"), ("n_tokens", "BIGINT"), ("n_distinct", "BIGINT"), ("n_bpe_ish", "BIGINT")]),
-        # round-10 retirements (VERDICT r9 item 4): three more narrow
-        # per-document passes over the same documents scan
-        ("dup_ngram_coverage", [("doc_id", "BIGINT"), ("n_tokens", "BIGINT"), ("n_grams", "BIGINT"), ("dup_grams", "BIGINT"), ("dup_gram_occurrences", "BIGINT"), ("covered_tokens", "BIGINT"), ("dup_token_frac", "DOUBLE"), ("dup_char_frac", "DOUBLE")]),
-        ("readability", [("doc_id", "BIGINT"), ("n_words", "BIGINT"), ("n_sentences", "BIGINT"), ("n_syllables", "BIGINT"), ("flesch_reading_ease", "DOUBLE"), ("fk_grade", "DOUBLE")]),
-        ("gazetteer_tag", [("doc_id", "BIGINT"), ("term", "VARCHAR"), ("entity_type", "VARCHAR"), ("n_mentions", "BIGINT"), ("first_pos", "BIGINT")]),
-    ],
-    "approx_suite": [
-        ("approx_distinct", [("event_type", "VARCHAR"), ("exact_users", "BIGINT"), ("within_tolerance", "BOOLEAN")]),
-        ("approx_percentiles", [("event_type", "VARCHAR"), ("n", "BIGINT"), ("p50_within", "BOOLEAN"), ("p95_within", "BOOLEAN")]),
-        ("percentiles", [("o_orderpriority", "VARCHAR"), ("p50", "DOUBLE"), ("p90", "DOUBLE"), ("p99", "DOUBLE")]),
-    ],
-    "subquery_suite": [
-        ("exists_orders", [("o_orderpriority", "VARCHAR"), ("order_count", "BIGINT")]),
-        ("corr_avg_subquery", [("l_partkey", "BIGINT"), ("small_lot_revenue", "DOUBLE"), ("n_small", "BIGINT")]),
-        ("scalar_subquery", [("o_orderkey", "BIGINT"), ("o_totalprice", "DOUBLE"), ("n_items", "BIGINT")]),
-        ("cold_customers", [("c_mktsegment", "VARCHAR"), ("numcust", "BIGINT"), ("totacctbal", "DOUBLE")]),
-    ],
-    "llm_curation_suite": [
-        ("llm_curation", [("doc_id", "BIGINT"), ("lang", "VARCHAR"), ("n_tokens", "INTEGER"), ("quality_score", "DOUBLE")]),
-        ("llm_curation_packed", [("doc_id", "BIGINT"), ("n_tokens", "BIGINT"), ("seq_id", "BIGINT")]),
-    ],
-    "exact_dedup_suite": [
-        ("dedup_exact", [("user_id", "BIGINT"), ("event_type", "VARCHAR"), ("event_id", "BIGINT"), ("ts", "TIMESTAMP"), ("value", "DOUBLE")]),
-        ("dedup_keep_best", [("doc_id", "BIGINT"), ("cluster", "BIGINT"), ("quality_score", "DOUBLE"), ("is_kept", "BOOLEAN")]),
-    ],
-    "chunk_suite": [
-        ("doc_chunks", [("doc_id", "BIGINT"), ("chunk_idx", "BIGINT"), ("chunk_text", "VARCHAR")]),
-        ("chunk_dedup", [("doc_id", "BIGINT"), ("n_chunks", "BIGINT"), ("n_dup_chunks", "BIGINT"), ("dup_ratio", "DOUBLE")]),
-    ],
-    "embedding_dedup_suite": [
-        ("embedding_neardup", [("label", "INTEGER"), ("a", "BIGINT"), ("b", "BIGINT"), ("cosine_sim", "DOUBLE")]),
-        ("semantic_dedup", [("vec_id", "BIGINT"), ("cluster", "BIGINT")]),
-    ],
-    "sampling_suite": [
-        ("stratified_sample", [("doc_id", "BIGINT"), ("lang", "VARCHAR")]),
-        ("corpus_shuffle", [("doc_id", "BIGINT"), ("shuffle_pos", "BIGINT")]),
-    ],
-    "stream_misc_suite": [
-        ("stream_static_join", [("window_start", "TIMESTAMP"), ("c_mktsegment", "VARCHAR"), ("n_events", "BIGINT"), ("sum_value", "DOUBLE")]),
-        ("stream_window_topk", [("window_start", "TIMESTAMP"), ("event_type", "VARCHAR"), ("n_events", "BIGINT"), ("rank", "INTEGER")]),
-    ],
-    "fingerprint_suite": [
-        ("fingerprint", [("doc_id", "BIGINT"), ("fingerprint", "BIGINT"), ("fingerprint_hex", "VARCHAR")]),
-        ("winnowing", [("doc_id", "BIGINT"), ("n_kgrams", "BIGINT"), ("n_windows", "BIGINT"), ("n_fingerprints", "BIGINT"), ("fp_checksum", "BIGINT"), ("fp_density", "DOUBLE")]),
-    ],
-    "retrieval_suite": [
-        ("hybrid_search", [("doc_id", "BIGINT"), ("lex_rank", "BIGINT"), ("vec_rank", "BIGINT"), ("rrf", "DOUBLE")]),
-        ("hard_negatives", [("anchor_id", "BIGINT"), ("negative_id", "BIGINT"), ("cosine_sim", "DOUBLE"), ("rank", "INTEGER")]),
-    ],
-    "profile_suite": [
-        ("table_profile", [("col", "VARCHAR"), ("nulls", "BIGINT"), ("distincts", "BIGINT")]),
-        ("length_band_filter", [("doc_id", "BIGINT"), ("source", "VARCHAR"), ("n_chars", "BIGINT")]),
-    ],
-    "journey_suite": [
-        ("funnel_conversion", [("step", "VARCHAR"), ("users", "BIGINT")]),
-        ("cohort_retention", [("cohort_week", "DATE"), ("week_offset", "BIGINT"), ("active_users", "BIGINT")]),
-    ],
-}
-
-_DUCK_TO_SPARK = {
-    "BIGINT": "long", "INTEGER": "long", "VARCHAR": "string",
-    "DOUBLE": "double", "BOOLEAN": "boolean", "DATE": "date",
-    "TIMESTAMP": "timestamp",
-}
-
-
-def _suite_component_sql(name: str) -> str:
-    """Oracle SQL of a suite component: the registered oracle verbatim,
-    or (for the one not-yet-registered component) the same builder call
-    its BENCH_ONLY twin uses."""
-    if name == "equi_depth_bins":
-        from flink_kafka_table_api_spark.operators.relational import (
-            equi_depth_bins_sql,
-        )
-
-        return equi_depth_bins_sql("orders", "o_totalprice", n_bins=10)
-    if name == "winnowing":
-        # never registers standalone; the fingerprint_suite lever
-        # composes the same builder call its BENCH_ONLY twin uses
-        from flink_kafka_table_api_spark.operators.text import (
-            winnowing_sql,
-        )
-
-        return winnowing_sql(k=8, w=4)
-    return _oracle_of(name)
-
-
-def _suite_columns(spec) -> list[tuple[str, str]]:
-    """Ordered union of (column, duck_type) across a suite's blocks;
-    first occurrence wins the type (UNION ALL widens INTEGER/BIGINT
-    identically in both engines)."""
-    cols: list[tuple[str, str]] = []
-    seen: set[str] = set()
-    for _, comp_cols in spec:
-        for c, t in comp_cols:
-            if c not in seen:
-                seen.add(c)
-                cols.append((c, t))
-    return cols
-
-
-def _suite_df(spark: SparkSession, sf: str, suite: str) -> DataFrame:
-    """NULL-padded typed-block union of a suite's component queries
-    (the dedup_suite/join_suite recipe, generalized): each block is the
-    component's registered query verbatim plus a `block` tag, padded
-    with typed NULLs to the suite's column union."""
-    spec = _SUITE_SPECS[suite]
-    cols = _suite_columns(spec)
-    runnable = {**QUERIES, **BENCH_ONLY}
-    out = None
-    for name, comp_cols in spec:
-        df = runnable[name](spark, sf)
-        have = {c for c, _ in comp_cols}
-        sel = [F.lit(name).alias("block")] + [
-            (F.col(c) if c in have
-             else F.lit(None).cast(_DUCK_TO_SPARK[t])).alias(c)
-            for c, t in cols
-        ]
-        b = df.select(*sel)
-        out = b if out is None else out.unionByName(b)
-    return out
-
-
-def _suite_sql(suite: str) -> str:
-    """Oracle for a suite: the component oracles composed VERBATIM as
-    NULL-padded typed blocks (identifiers double-quoted — `left`,
-    `rank` etc. are keywords)."""
-    spec = _SUITE_SPECS[suite]
-    cols = _suite_columns(spec)
-    parts = []
-    for name, comp_cols in spec:
-        have = {c for c, _ in comp_cols}
-        exprs = ", ".join(
-            [f"'{name}' AS block"]
-            + [
-                (f'"{c}"' if c in have else f'CAST(NULL AS {t}) AS "{c}"')
-                for c, t in cols
-            ]
-        )
-        parts.append(
-            f"SELECT {exprs}\n    FROM ({_suite_component_sql(name)})"
-        )
-    return "\n    UNION ALL\n    ".join(parts)
-
-
-# Tag comments: what each suite consolidates (all registered round 7;
-# the "registered r7" tags below replaced the old per-round funding
-# ledger).
-_SUITE_DOCS = {
-    "simhash_suite": "SimHash family (dedup_simhash + simhash_pairs — "
-        "per-doc fingerprints and the hamming pair stage of the same "
-        "pipeline; 2 -> 1, registered r7)",
-    "bpe_suite": "BPE tokenizer pipeline stages (train merges + encode "
-        "counts share the merge-table computation; 2 -> 1, registered r7)",
-    "funcs_suite": "scalar function packs (string/math + datetime + "
-        "JSON — three probe queries of the same class; 3 -> 1, funds "
-        "r12)",
-    "agg_suite": "grouping-variant aggregates (rollup/cube + grouping "
-        "sets + multi-distinct + min/max_by; 4 -> 1, registered r7)",
-    "binning_suite": "histogram family (equi-width value_histogram + "
-        "equi-depth quantile bins; 2 -> 1, funds r14 — composable only "
-        "after equi_depth_bins registers in r11)",
-    "text_stats_suite": "per-document narrow text-stat passes (lang_id "
-        "+ text_quality + char_entropy + token_count — zero-shuffle "
-        "projections over the same scan; 4 -> 1, registered r7; "
-        "round 10 retires dup_ngram_coverage + readability + "
-        "gazetteer_tag into it — 7 -> 1 — and the extended suite takes "
-        "an r10 gate slot so its new composed oracle earns driver "
-        "evidence immediately)",
-    "approx_suite": "quantile/cardinality estimation family "
-        "(HLL-tolerance + approx-percentile-tolerance + exact "
-        "percentiles; 3 -> 1, registered r7)",
-    "subquery_suite": "TPC-H subquery-shape variants (EXISTS + "
-        "correlated-avg + scalar + NOT-IN — the four decorrelation "
-        "shapes; 4 -> 1, registered r7)",
-    "llm_curation_suite": "curation pipeline + its packed superset "
-        "(llm_curation is a stage prefix of llm_curation_packed; "
-        "2 -> 1, registered r7)",
-    "exact_dedup_suite": "exact-dedup family (row-identity dedup + "
-        "keep-best-in-cluster; 2 -> 1, registered r7)",
-    "chunk_suite": "chunking pipeline stages (doc_chunks produces what "
-        "chunk_dedup audits; 2 -> 1, registered r7)",
-    "embedding_dedup_suite": "embedding-cosine near-dup family "
-        "(threshold pairs + cluster assignment; 2 -> 1, registered r7)",
-    "sampling_suite": "deterministic sampling family (hash-stratified "
-        "sample + hash-shuffle positions; 2 -> 1, registered r7)",
-    "stream_misc_suite": "bounded-stream misc family (stream-static "
-        "enrichment join + per-window streaming top-k; 2 -> 1, funds "
-        "r19)",
-    "fingerprint_suite": "document fingerprint family (rolling-hash "
-        "fingerprint + Schleimer winnowing checksum — winnowing "
-        "registers r10, so this lever is valid from r11 on; 2 -> 1, "
-        "funds r19)",
-    "retrieval_suite": "retrieval family (BM25+RRF hybrid search + "
-        "embedding hard-negative mining; 2 -> 1, registered r7)",
-    "profile_suite": "data-quality probe family (per-column "
-        "null/distinct profile + length-band document classification "
-        "— not_null_audit was rejected for this lever: its clean-data "
-        "output is 0 rows, which the suite contract forbids (every "
-        "block must contribute); 2 -> 1, registered r7)",
-    "journey_suite": "user-journey family (funnel step conversion + "
-        "weekly cohort retention; 2 -> 1, registered r7)",
-}
-
-
-def _make_suite_query(suite: str):
-    def q(spark: SparkSession, sf: str) -> DataFrame:
-        return _suite_df(spark, sf, suite)
-
-    q.__name__ = f"q_{suite}"
-    q.__doc__ = (
-        f"PRE-BUILT slot-funding consolidation: {_SUITE_DOCS[suite]}. "
-        "NULL-padded typed blocks of the component queries VERBATIM "
-        "(the dedup_suite/join_suite recipe); oracle composed by "
-        "_suite_sql from the registered component oracles; "
-        "parity-tested at sf0.001 (tests/test_suite_levers.py) and at "
-        "the driver's gate scale sf0.01 (row counts in the cap note)."
-    )
-    return q
-
-
-# Round 7 (VERDICT r6 item 1, ledger compression): every spec-driven
-# consolidation suite REGISTERS now — oracle composed by _suite_sql from
-# the component oracles verbatim — and its components retire in the same
-# commit (their @query forms became @retired_query above: bench twin +
-# composable oracle, no registry slot).
-for _suite_name in _SUITE_SPECS:
-    query(_suite_name, _suite_sql(_suite_name))(_make_suite_query(_suite_name))
-
-# graph_suite registers here rather than beside its definition: its
-# round-10 extension (link_prediction + adamic_adar retiring into it,
-# VERDICT r9 item 4) composes retired oracles declared mid-module.
-query("graph_suite", graph_suite_sql())(q_graph_suite)
 
 
 # ---------------------------------------------------------------------------

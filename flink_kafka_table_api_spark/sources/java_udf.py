@@ -13,11 +13,11 @@ plain-Python reference codec that the tests compare against.
 
 Build model: compile iff the jar is missing or older than any .java
 source, into ``build/`` (gitignored: the jar is an artifact, the source is
-the deliverable). Registration is per SparkSession: ``ADD JAR`` once, one
-``registerJavaFunction`` for the encoder, and one per decode policy. A
-decode function's struct return type depends on the reader schema, and
-its instances keep schema-id state, so two policies never share a
-function name.
+the deliverable). Registration is per SparkSession: ``ADD JAR`` once,
+then one ``registerJavaFunction`` per decode policy and one per encode
+spec (schema and id). A decode function's struct return type depends on
+the reader schema, and both UDFs keep their parsed schema as instance
+state, so two policies or specs never share a function name.
 """
 
 from __future__ import annotations
@@ -42,7 +42,6 @@ _JAR_PATH = os.path.join(_REPO_ROOT, "build", "fkta-avro-udf.jar")
 
 DECODE_CLASS = "fkta.ConfluentAvroDecode"
 ENCODE_CLASS = "fkta.ConfluentAvroEncode"
-ENCODE_FN = "fkta_avro_encode"
 
 # process-local registration caches, keyed by Spark applicationId so a
 # fresh session after a restart re-registers cleanly
@@ -175,9 +174,27 @@ def ensure_decode_registered(
                      avro_to_struct(reader_schema_json))
 
 
-def ensure_encode_registered(spark: SparkSession) -> str:
-    """Register the encode UDF (one name: it always returns binary)."""
-    return _register(spark, ENCODE_FN, ENCODE_CLASS, BinaryType())
+def encode_spec(avro_schema_json: str, schema_id: int | None = None) -> bytes:
+    """The encode UDF's spec argument: a UTF-8 JSON object, passed as a
+    binary literal like the decode policy."""
+    return json.dumps({
+        "schema": avro_schema_json,
+        "id": int(schema_id) if schema_id is not None else None,
+    }, sort_keys=True).encode()
+
+
+def encode_fn_name(spec: bytes) -> str:
+    return f"fkta_avro_encode_{hashlib.md5(spec).hexdigest()[:10]}"
+
+
+def ensure_encode_registered(
+    spark: SparkSession, avro_schema_json: str, schema_id: int | None = None
+) -> str:
+    """Register the encode UDF for this schema and id and return its SQL
+    function name. Raises RuntimeError when the codec jar cannot be
+    built."""
+    spec = encode_spec(avro_schema_json, schema_id)
+    return _register(spark, encode_fn_name(spec), ENCODE_CLASS, BinaryType())
 
 
 def decode_column(
@@ -199,8 +216,7 @@ def encode_column(
     position."""
     fields = [f["name"] for f in json.loads(avro_schema_json)["fields"]]
     return F.call_udf(
-        ensure_encode_registered(spark),
+        ensure_encode_registered(spark, avro_schema_json, schema_id),
         F.struct(*[F.col(f) for f in fields]),
-        F.lit(avro_schema_json),
-        F.lit(schema_id).cast("int"),
+        F.lit(encode_spec(avro_schema_json, schema_id)),
     )

@@ -1,6 +1,7 @@
 package fkta;
 
 import java.io.ByteArrayOutputStream;
+import java.io.IOException;
 import java.math.BigDecimal;
 import java.nio.ByteBuffer;
 import java.sql.Date;
@@ -11,7 +12,9 @@ import java.util.ArrayList;
 import java.util.HashMap;
 import java.util.List;
 import java.util.Map;
-import java.util.concurrent.ConcurrentHashMap;
+
+import com.fasterxml.jackson.databind.JsonNode;
+import com.fasterxml.jackson.databind.ObjectMapper;
 
 import org.apache.avro.LogicalType;
 import org.apache.avro.LogicalTypes;
@@ -22,7 +25,7 @@ import org.apache.avro.generic.GenericRecord;
 import org.apache.avro.io.BinaryEncoder;
 import org.apache.avro.io.EncoderFactory;
 import org.apache.spark.sql.Row;
-import org.apache.spark.sql.api.java.UDF3;
+import org.apache.spark.sql.api.java.UDF2;
 
 /**
  * The engine's one Avro encoder: Spark struct to (optionally
@@ -30,41 +33,62 @@ import org.apache.spark.sql.api.java.UDF3;
  * compiled in-repo against pyspark's bundled avro-1.12 jar
  * (sources/java_udf.py).
  *
- * Arguments: (struct row, writer schema JSON, schema id or null). A
- * non-null schema id prepends the Confluent wire header: magic 0x00 +
- * int32 big-endian id (reference TransactionProcessor.java:112-115).
- * Fields are taken by position from the row, so callers build the struct
- * in the schema's field order (java_udf.encode_column does).
+ * Arguments: (struct row, spec). The spec is a literal UTF-8 JSON object
+ * {"schema": writer schema JSON, "id": schema id or null}. A non-null id
+ * prepends the Confluent wire header: magic 0x00 + int32 big-endian id
+ * (reference TransactionProcessor.java:112-115). Fields are taken by
+ * position from the row, so callers build the struct in the schema's
+ * field order (java_udf.encode_column does).
+ *
+ * As in {@link ConfluentAvroDecode}, sources/java_udf.py registers one
+ * function name per distinct spec, so an instance only ever sees one
+ * spec. It parses the spec on its first row and then reuses one writer,
+ * output buffer and encoder for every row of its task.
  */
-public class ConfluentAvroEncode implements UDF3<Row, String, Integer, byte[]> {
+public class ConfluentAvroEncode implements UDF2<Row, byte[], byte[]> {
 
-  private static final Map<String, Schema> SCHEMAS = new ConcurrentHashMap<>();
+  private static final ObjectMapper JSON = new ObjectMapper();
 
-  private static Schema parse(String json) {
-    return SCHEMAS.computeIfAbsent(json, j -> new Schema.Parser().parse(j));
-  }
+  // per-instance (so per-task) state; transient, so the copy Spark
+  // serializes from the driver always arrives unparsed
+  private transient Schema schema;
+  private transient byte[] header;
+  private transient GenericDatumWriter<GenericRecord> writer;
+  private transient ByteArrayOutputStream out;
+  private transient BinaryEncoder enc;
 
   @Override
-  public byte[] call(Row row, String schemaJson, Integer schemaId)
-      throws Exception {
+  public byte[] call(Row row, byte[] spec) throws Exception {
     if (row == null) {
       return null;
     }
-    Schema schema = parse(schemaJson);
-    GenericRecord rec = (GenericRecord) toAvro(row, schema);
-    ByteArrayOutputStream out = new ByteArrayOutputStream();
-    if (schemaId != null) {
-      out.write(0x00);
-      int id = schemaId.intValue();
-      out.write((id >>> 24) & 0xff);
-      out.write((id >>> 16) & 0xff);
-      out.write((id >>> 8) & 0xff);
-      out.write(id & 0xff);
+    if (schema == null) {
+      init(spec);
     }
-    BinaryEncoder enc = EncoderFactory.get().binaryEncoder(out, null);
-    new GenericDatumWriter<GenericRecord>(schema).write(rec, enc);
+    GenericRecord rec = (GenericRecord) toAvro(row, schema);
+    out.reset();
+    out.write(header);
+    enc = EncoderFactory.get().binaryEncoder(out, enc);
+    writer.write(rec, enc);
     enc.flush();
     return out.toByteArray();
+  }
+
+  private void init(byte[] spec) throws IOException {
+    JsonNode s = JSON.readTree(spec);
+    Schema parsed = new Schema.Parser().parse(s.get("schema").asText());
+    JsonNode id = s.get("id");
+    if (id == null || id.isNull()) {
+      header = new byte[0];
+    } else {
+      int i = id.asInt();
+      header = new byte[] {
+          0x00, (byte) (i >>> 24), (byte) (i >>> 16), (byte) (i >>> 8),
+          (byte) i};
+    }
+    writer = new GenericDatumWriter<>(parsed);
+    out = new ByteArrayOutputStream();
+    schema = parsed;
   }
 
   /** Catalyst-external value -> Avro generic value. */

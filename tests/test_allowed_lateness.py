@@ -19,7 +19,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.queries import (
-    BENCH_ONLY,
     QUERIES,
     stream_allowed_lateness_sql,
 )
@@ -169,7 +168,7 @@ def test_replay_of_committed_batches_is_a_noop(spark, tmp_path):
 @pytest.mark.parametrize("sf", ["/root/testdata/sf0.001",
                                 "/root/testdata/sf0.01"])
 def test_oracle_parity_on_testdata(spark, sf):
-    out = {**QUERIES, **BENCH_ONLY}["stream_allowed_lateness"](spark, sf)
+    out = QUERIES["stream_allowed_lateness"](spark, sf)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'")

@@ -17,14 +17,12 @@ from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.functions.portable import DEC
 from flink_kafka_table_api_spark.queries import (
-    BENCH_ONLY,
     QUERIES,
     cumulate_windows_sql,
     stream_cumulate_sql,
 )
 from flink_kafka_table_api_spark.streaming.cumulate import cumulate
 
-RUNNABLE = {**BENCH_ONLY, **QUERIES}
 
 SF = "/root/testdata/sf0.001"
 
@@ -83,7 +81,7 @@ def test_cumulate_semantics_fixture(spark):
     ],
 )
 def test_oracle_parity_on_testdata(spark, name, sql):
-    out = RUNNABLE[name](spark, SF)
+    out = QUERIES[name](spark, SF)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(

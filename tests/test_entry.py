@@ -30,18 +30,11 @@ def test_query_boundary_releases_tracked_caches(spark):
 
     sf = "/root/testdata/sf0.001"
     qs = e.queries()
-    # neardup_verified / lsh_candidate_pairs retired into dedup_suite in
-    # round 7 — they live on as bench twins, and retired_query wraps the
-    # SAME release-previous-caches boundary as @query, so the behavior
-    # under test is unchanged.
-    from flink_kafka_table_api_spark.queries import BENCH_ONLY
-
-    run = {**BENCH_ONLY, **qs}
     caching.release_cached()
-    run["neardup_verified"](spark, sf).count()
+    qs["neardup_verified"](spark, sf).count()
     n_after_lsh = len(caching._TRACKED)
     assert n_after_lsh > 0  # the LSH pipeline persists intermediates
-    run["lsh_candidate_pairs"](spark, sf).count()
+    qs["lsh_candidate_pairs"](spark, sf).count()
     # boundary released the first query's caches before tracking its own
     assert len(caching._TRACKED) <= n_after_lsh
     qs["filter_project"](spark, sf).count()

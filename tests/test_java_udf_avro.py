@@ -95,7 +95,7 @@ def test_jar_builds_and_registers(spark):
     assert fname is not None
     # idempotent: second call returns the cached registration
     assert java_udf.ensure_decode_registered(spark, V2) == fname
-    assert java_udf.ensure_encode_registered(spark) is not None
+    assert java_udf.ensure_encode_registered(spark, V2) is not None
 
 
 def test_unbuildable_codec_fails_loudly(spark, monkeypatch):

@@ -67,8 +67,7 @@ def test_declared_oracles_never_emit_hugeint(oracle_con):
     assert not bad, f"HUGEINT reaches oracle output: {bad}"
 
 
-@pytest.mark.parametrize("name", ["burst_detection", "burst_costs_probe",
-                                  "burst_walk_probe"])
+@pytest.mark.parametrize("name", ["burst_detection"])
 def test_burst_family_oracle_types_match_spark(oracle_con, spark, name):
     qs, os_ = entry.queries(), entry.oracle_sql()
     stypes = dict(qs[name](spark, SF).dtypes)

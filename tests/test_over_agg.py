@@ -17,12 +17,10 @@ import shutil
 import duckdb
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.queries import BENCH_ONLY, QUERIES, stream_over_agg_sql
+from flink_kafka_table_api_spark.queries import QUERIES, stream_over_agg_sql
 from flink_kafka_table_api_spark.streaming import batch_commit
 
 SF = "/root/testdata/sf0.001"
-
-RUNNABLE = {**BENCH_ONLY, **QUERIES}
 
 
 def _chunked_rows(spark, rows):
@@ -108,7 +106,7 @@ def test_state_tails_are_bounded(spark, tmp_path, monkeypatch):
 
 
 def test_oracle_parity_on_testdata(spark):
-    out = RUNNABLE["stream_over_agg"](spark, SF)
+    out = QUERIES["stream_over_agg"](spark, SF)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
@@ -184,7 +182,7 @@ def test_over_rows_context_is_count_bounded(spark, tmp_path, monkeypatch):
 def test_over_rows_oracle_parity_on_testdata(spark):
     from flink_kafka_table_api_spark.queries import stream_over_rows_sql
 
-    out = RUNNABLE["stream_over_rows"](spark, SF)
+    out = QUERIES["stream_over_rows"](spark, SF)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")

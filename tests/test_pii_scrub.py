@@ -12,11 +12,10 @@ import duckdb
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.operators.text import pii_scrub
-from flink_kafka_table_api_spark.queries import BENCH_ONLY, QUERIES, pii_scrub_sql
+from flink_kafka_table_api_spark.queries import QUERIES, pii_scrub_sql
 
 SF = "/root/testdata/sf0.001"
 
-RUNNABLE = {**BENCH_ONLY, **QUERIES}
 
 DOCS = [
     # 4111111111111111 is the canonical Luhn-valid test PAN; flipping
@@ -81,7 +80,7 @@ def test_fixture_matches_oracle_fragments(spark):
 
 
 def test_oracle_parity_on_testdata(spark):
-    out = RUNNABLE["pii_scrub"](spark, SF)
+    out = QUERIES["pii_scrub"](spark, SF)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(

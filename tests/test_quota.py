@@ -15,7 +15,6 @@ import duckdb
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.queries import (
-    BENCH_ONLY,
     QUERIES,
     stream_source_quota_sql,
 )
@@ -24,7 +23,6 @@ from flink_kafka_table_api_spark.streaming.quota import (
     stream_source_quota,
 )
 
-RUNNABLE = {**BENCH_ONLY, **QUERIES}
 
 SF = "/root/testdata/sf0.001"
 
@@ -83,7 +81,7 @@ def test_crash_replay_is_clean(spark, tmp_path):
 
 
 def test_oracle_parity_on_testdata(spark):
-    out = RUNNABLE["stream_source_quota"](spark, SF)
+    out = QUERIES["stream_source_quota"](spark, SF)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(

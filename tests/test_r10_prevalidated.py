@@ -402,67 +402,3 @@ def test_containment_catches_subset_jaccard_misses(spark):
     assert len(rows) == 1
     r = rows[0]
     assert r.containment_a > 0.99 and r.jaccard < 0.3
-
-
-# ---------------------------------------------------------------------------
-# round-10 slot-freeing consolidations (join_suite / window_suite)
-# ---------------------------------------------------------------------------
-
-def _full_con():
-    con = duckdb.connect()
-    for t in ("customer", "orders", "events"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'"
-        )
-    return con
-
-
-def _canon(v):
-    # the driver's compare canonicalizes values to STRINGS before
-    # sorting — required here too: NULL-padded blocks make raw tuple
-    # sorts compare None against int, which Python refuses
-    if isinstance(v, float):
-        v = 0.0 if v == 0 else v
-    return str(v)
-
-
-def test_join_suite_consolidation_matches_composed_oracle(spark):
-    from flink_kafka_table_api_spark.queries import (
-        join_suite_sql,
-        q_join_suite,
-    )
-
-    got = sorted(
-        tuple(_canon(v) for v in r)
-        for r in q_join_suite(spark, SF).collect()
-    )
-    exp = sorted(
-        tuple(_canon(v) for v in r)
-        for r in _full_con().execute(join_suite_sql()).fetchall()
-    )
-    blocks = {r[0] for r in got}
-    # anti is empty at sf0.001 (every customer has orders there); it has
-    # rows at the driver's sf0.01 — parity still covers the empty block
-    assert {"left", "semi", "anti_urgent", "full_outer"} <= blocks <= {
-        "left", "semi", "anti", "anti_urgent", "full_outer"
-    }
-    assert got == exp
-
-
-def test_window_suite_consolidation_matches_composed_oracle(spark):
-    from flink_kafka_table_api_spark.queries import (
-        q_window_suite,
-        window_suite_sql,
-    )
-
-    got = sorted(
-        tuple(_canon(v) for v in r)
-        for r in q_window_suite(spark, SF).collect()
-    )
-    exp = sorted(
-        tuple(_canon(v) for v in r)
-        for r in _full_con().execute(window_suite_sql()).fetchall()
-    )
-    blocks = {r[0] for r in got}
-    assert blocks == {"topk", "running", "frames", "analytic"}
-    assert got == exp

@@ -1,9 +1,9 @@
 """Committed two-SF oracle parity for the round-10 registrations
 (the ADVICE r8 item 1 convention, continued): every name that enters
 the driver contract this round — the rewritten burst_detection (quantum
-1e3 + scalar-walk Viterbi), its two driver-environment bisection
-probes, and the four round-9-built streaming capabilities flipping from
-BENCH twins to @query — runs at sf0.001 AND sf0.01 through the SAME
+1e3 + scalar-walk Viterbi), the four round-9-built streaming
+capabilities, and the graph and per-document text-stat queries whose
+oracles round 10 extended — runs at sf0.001 AND sf0.01 through the SAME
 registry surface the driver reads (QUERIES/ORACLES), compared with the
 driver harness's normalizations (columns sorted by name, rows sorted,
 floats %.6g, timestamps to milliseconds).
@@ -23,17 +23,17 @@ R10_REGISTRATIONS = [
     # the 2-round never-green name, rewritten this round (VERDICT r9
     # items 1a/1b: quantum 1e6 -> 1e3, Viterbi -> scalar integer walk)
     "burst_detection",
-    # its stage-level bisection probes (VERDICT r9 item 2)
-    "burst_costs_probe", "burst_walk_probe",
     # the four round-9 capabilities (first registrations)
     "stream_watermark_alignment", "stream_agg_retract",
     "stream_quantile_monitor", "stream_allowed_lateness",
-    # the two suites EXTENDED by round-10 retirements (their composed
-    # oracles changed, so prior green evidence covers the old SQL):
-    # graph_suite absorbs link_prediction + adamic_adar,
-    # text_stats_suite absorbs dup_ngram_coverage + readability +
-    # gazetteer_tag
-    "graph_suite", "text_stats_suite",
+    # the graph family (extended in round 10 by link_prediction +
+    # adamic_adar)
+    "pagerank", "triangle_count", "label_propagation", "kcore",
+    "link_prediction", "adamic_adar",
+    # the per-document text stats (extended in round 10 by
+    # dup_ngram_coverage + readability + gazetteer_tag)
+    "lang_id", "text_quality", "char_entropy", "token_count",
+    "dup_ngram_coverage", "readability", "gazetteer_tag",
 ]
 
 TABLES = (

@@ -270,26 +270,3 @@ def test_zipf_gini_audit_distribution_shapes(spark):
     assert s.gini > 0.3
     assert s.zipf_slope < -1.0
     assert s.top1_share == round(32 / 43, 6)
-
-
-# ---------------------------------------------------------------------------
-# dedup_suite (staged consolidation)
-# ---------------------------------------------------------------------------
-
-def test_dedup_suite_matches_composed_oracle(spark, con):
-    """The staged round-12 consolidation: signatures + candidates +
-    verified blocks value-identical to the three registered oracles
-    composed, sharing one signature/candidate computation."""
-    from flink_kafka_table_api_spark.queries import (
-        BENCH_ONLY,
-        QUERIES,
-        dedup_suite_sql,
-    )
-
-    sdf = {**BENCH_ONLY, **QUERIES}["dedup_suite"](spark, SF)
-    got = sorted(tuple(r) for r in sdf.collect())
-    exp = sorted(tuple(r) for r in con.execute(dedup_suite_sql()).fetchall())
-    assert len(got) == len(exp) > 500
-    assert got == exp
-    blocks = {r[0] for r in got}
-    assert blocks == {"signatures", "candidates", "verified"}

@@ -169,48 +169,3 @@ def test_rake_prefers_cohesive_phrases_and_drops_stopwords(spark):
     # deg/freq = 3 per word -> phrase score 9
     assert by["deep neural network"].score == 9.0
     assert by["compiler"].score == 1.0
-
-
-# ---------------------------------------------------------------------------
-# slot-funding consolidations (staged for the round-13..15 plans)
-# ---------------------------------------------------------------------------
-
-def test_tpch_scalar_suite_matches_composed_oracle(spark):
-    from flink_kafka_table_api_spark.queries import (
-        BENCH_ONLY,
-        QUERIES,
-        tpch_scalar_suite_sql,
-    )
-
-    c = duckdb.connect()
-    for t in ("lineitem", "part"):
-        c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    got = sorted(
-        tuple(r) for r in {**BENCH_ONLY, **QUERIES}["tpch_scalar_suite"](spark, SF).collect()
-    )
-    exp = sorted(
-        tuple(r) for r in c.execute(tpch_scalar_suite_sql()).fetchall()
-    )
-    assert len(got) == 3
-    assert got == exp
-
-
-def test_ann_basic_suite_matches_composed_oracle(spark):
-    from flink_kafka_table_api_spark.queries import (
-        BENCH_ONLY,
-        QUERIES,
-        ann_basic_suite_sql,
-    )
-
-    c = duckdb.connect()
-    c.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{SF}/embeddings.parquet'"
-    )
-    got = sorted(
-        tuple(r) for r in {**BENCH_ONLY, **QUERIES}["ann_basic_suite"](spark, SF).collect()
-    )
-    exp = sorted(
-        tuple(r) for r in c.execute(ann_basic_suite_sql()).fetchall()
-    )
-    assert len(got) == 20  # two top-10 blocks
-    assert got == exp

@@ -309,74 +309,6 @@ def test_staged_operators_null_edges_match_duckdb(spark):
     assert got_kl == want_kl and set(got_kl) == {"s2"}
 
 
-# ---------------------------------------------------------------------------
-# stream_windows: the staged round-8 consolidation (frees 2 slots)
-# ---------------------------------------------------------------------------
-
-def test_stream_windows_consolidation_matches_composed_oracle(spark):
-    import math
-
-    from flink_kafka_table_api_spark.catalog import TABLES
-    from flink_kafka_table_api_spark.queries import (
-        q_stream_windows,
-        stream_windows_sql,
-    )
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-
-    def canon(v):
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else (0.0 if v == 0 else v)
-        return v
-
-    sdf = q_stream_windows(spark, SF)
-    got = sorted(tuple(str(canon(x)) for x in r) for r in sdf.collect())
-    res = con.execute(stream_windows_sql())
-    want = sorted(tuple(str(canon(x)) for x in r) for r in res.fetchall())
-    assert sdf.columns == [d[0] for d in res.description]
-    assert got == want and len(got) > 0
-    # all three window shapes must be represented
-    kinds = {r[0] for r in got}
-    assert kinds == {"tumbling", "session", "sliding"}
-
-
-def test_graph_suite_consolidation_matches_composed_oracle(spark):
-    import math
-
-    from flink_kafka_table_api_spark.queries import (
-        graph_suite_sql,
-        q_graph_suite,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW customer AS SELECT * FROM '{SF}/customer.parquet'"
-    )
-
-    def canon(v):
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else (0.0 if v == 0 else v)
-        return v
-
-    sdf = q_graph_suite(spark, SF)
-    got = sorted(tuple(str(canon(x)) for x in r) for r in sdf.collect())
-    res = con.execute(graph_suite_sql())
-    want = sorted(tuple(str(canon(x)) for x in r) for r in res.fetchall())
-    assert sdf.columns == [d[0] for d in res.description]
-    assert got == want and len(got) > 0
-    kinds = {r[0] for r in got}
-    # round 10 extended the suite with the two link-prediction
-    # retirements (link_cn = common-neighbor/Jaccard, link_aa =
-    # Adamic-Adar) over the shared two-generator graph
-    assert kinds == {"pagerank", "triangles", "lpa", "kcore",
-                     "link_cn", "link_aa"}
-    # the k-core block is non-trivial: the dense tier survives, the
-    # ring periphery peels (15 of 150 sf0.001 customers are core nodes)
-    assert sum(1 for r in got if r[0] == "kcore") == 15
-
-
 def test_nb_score_heldout_matches_python_replay(spark):
     train_rows = (
         [(i, "alpha beta gamma", "A") for i in range(6)]
@@ -499,47 +431,22 @@ def test_kcore_matches_reference_and_oracle(spark):
     assert gr.kcore(df2, k=3).count() == 0
 
 
-def test_round9_consolidations_match_composed_oracles(spark):
-    """The two staged round-9 slot-freeing merges (set_ops — 6 variants
-    in one slot; substring_dups — ExactSubstr stats + removal as typed
-    blocks) must be value-identical to their verbatim-composed
-    oracles."""
-    import math
-
-    from flink_kafka_table_api_spark.catalog import TABLES
-    from flink_kafka_table_api_spark.queries import (
-        q_set_ops,
-        q_substring_dups,
-        set_ops_sql,
-        substring_dups_sql,
-    )
+def test_kcore_query_keeps_only_the_dense_tier():
+    """The registered kcore query is non-trivial at sf0.001: the ring
+    periphery peels and the dense tier survives (15 of 150 customers
+    are core nodes). Spark's output equals this oracle in
+    tests/test_oracle_parity.py."""
+    from flink_kafka_table_api_spark.queries import ORACLES
 
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-
-    def canon(v):
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else (0.0 if v == 0 else v)
-        return v
-
-    for fn, sql, tags in (
-        (q_set_ops, set_ops_sql(), {"all", "distinct"}),
-        (q_substring_dups, substring_dups_sql(), {"stats", "strip"}),
-    ):
-        sdf = fn(spark, SF)
-        got = sorted(tuple(str(canon(x)) for x in r) for r in sdf.collect())
-        res = con.execute(sql)
-        want = sorted(
-            tuple(str(canon(x)) for x in r) for r in res.fetchall()
-        )
-        assert sdf.columns == [d[0] for d in res.description]
-        assert got == want and len(got) > 0
-        assert {r[0] for r in got} == tags
+    con.execute(
+        f"CREATE VIEW customer AS SELECT * FROM '{SF}/customer.parquet'"
+    )
+    assert len(con.execute(ORACLES["kcore"]).fetchall()) == 15
 
 
 # ---------------------------------------------------------------------------
-# round-9 staged operators (consume the 2 slots the r9 consolidations free)
+# round-9 staged operators
 # ---------------------------------------------------------------------------
 
 GAZ = {"spark": "ENGINE", "join": "OP", "hash join": "OP2",

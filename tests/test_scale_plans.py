@@ -7,12 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.queries import BENCH_ONLY, QUERIES
-
-# Round 7 retired many suite components from the driver registry; their
-# callables live on as bench twins with identical plans, and these pins
-# guard the PLAN SHAPE, so resolve names across both maps.
-RUNNABLE = {**BENCH_ONLY, **QUERIES}
+from flink_kafka_table_api_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
 
@@ -26,39 +21,39 @@ def _optimized(df) -> str:
 
 
 def test_filter_reaches_parquet_scan(spark):
-    df = RUNNABLE["approved_transactions"](spark, SF)
+    df = QUERIES["approved_transactions"](spark, SF)
     plan = _plan(df)
     assert "PushedFilters" in plan
     assert "o_orderstatus" in plan.split("PushedFilters")[1][:200]
 
 
 def test_projection_prunes_scan_columns(spark):
-    df = RUNNABLE["filter_project"](spark, SF)
+    df = QUERIES["filter_project"](spark, SF)
     read_schema = _plan(df).split("ReadSchema:")[1]
     assert "l_comment" not in read_schema
     assert "l_tax" not in read_schema  # dropped by the projection
 
 
 def test_star_join_broadcasts_dims(spark):
-    plan = _plan(RUNNABLE["star_join"](spark, SF))
+    plan = _plan(QUERIES["star_join"](spark, SF))
     assert plan.count("BroadcastHashJoin") >= 2  # nation, region pinned
     assert "SortMergeJoin" not in plan
 
 
 def test_sort_limit_is_take_ordered(spark):
-    plan = _plan(RUNNABLE["sort_limit"](spark, SF))
+    plan = _plan(QUERIES["sort_limit"](spark, SF))
     assert "TakeOrderedAndProject" in plan
     assert "Exchange" not in plan  # no shuffle for global top-k
 
 
 def test_ann_query_broadcasts_query_vector(spark):
-    plan = _plan(RUNNABLE["ann_bruteforce"](spark, SF))
+    plan = _plan(QUERIES["ann_bruteforce"](spark, SF))
     assert "BroadcastNestedLoopJoin" in plan
     assert "TakeOrderedAndProject" in plan
 
 
 def test_reference_pipeline_has_no_shuffle(spark):
-    plan = _plan(RUNNABLE["approved_transactions"](spark, SF))
+    plan = _plan(QUERIES["approved_transactions"](spark, SF))
     assert "Exchange" not in plan  # narrow-only: scan->filter->project
 
 
@@ -107,7 +102,7 @@ def test_bucketed_join_avoids_shuffle(spark, tmp_path):
 def test_tpch_q3_broadcasts_customer_filter(spark):
     """The selective dim side must broadcast; the only SMJ-scale shuffle
     allowed is the orders<->lineitem key."""
-    plan = _plan(RUNNABLE["tpch_q3_shipping"](spark, SF))
+    plan = _plan(QUERIES["tpch_q3_shipping"](spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan  # top-10 without a global sort
 
@@ -115,13 +110,13 @@ def test_tpch_q3_broadcasts_customer_filter(spark):
 def test_decontaminate_is_broadcast_anti_join(spark):
     """The benchmark n-gram set is tiny by construction — the keep path
     must be a broadcast LEFT ANTI join (no shuffle of the train corpus)."""
-    plan = _plan(RUNNABLE["decontaminate"](spark, SF))
+    plan = _plan(QUERIES["decontaminate"](spark, SF))
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
 def test_stratified_sample_is_narrow(spark):
     """Hash-mod sampling is one narrow pass: no exchange anywhere."""
-    plan = _plan(RUNNABLE["stratified_sample"](spark, SF))
+    plan = _plan(QUERIES["stratified_sample"](spark, SF))
     assert "Exchange" not in plan
 
 
@@ -298,7 +293,7 @@ def test_stream_windows_run_in_append_mode(spark):
 
     from flink_kafka_table_api_spark.catalog import read_table
 
-    out = RUNNABLE["stream_tumbling"](spark, SF)
+    out = QUERIES["stream_tumbling"](spark, SF)
     max_end = out.agg(F.max("window_end")).first()[0]
     max_ts = read_table(spark, SF, "events").agg(F.max("ts")).first()[0]
     assert max_end <= max_ts - datetime.timedelta(seconds=5)
@@ -307,7 +302,7 @@ def test_stream_windows_run_in_append_mode(spark):
 def test_tpch_q10_is_take_ordered_with_pushed_filters(spark):
     """Q10's top-20 must compile to TakeOrderedAndProject (no global sort
     materialization) and both selective filters must reach their scans."""
-    plan = _plan(RUNNABLE["tpch_q10_returns"](spark, SF))
+    plan = _plan(QUERIES["tpch_q10_returns"](spark, SF))
     assert "TakeOrderedAndProject" in plan
     assert "(l_returnflag" in plan  # pushed into the lineitem scan
     assert "(o_orderdate" in plan  # quarter bound pushed into orders
@@ -318,7 +313,7 @@ def test_tpch_q19_disjunct_implicants_reach_scans(spark):
     Catalyst must factor per-table implicants out of the disjunction and
     push them: quantity bounds to lineitem, brand/size bounds to part.
     Loses either one -> the join reads the full fact table at 100 TB."""
-    plan = _plan(RUNNABLE["tpch_q19_disjunctive"](spark, SF))
+    plan = _plan(QUERIES["tpch_q19_disjunctive"](spark, SF))
     li_scan = [s for s in plan.split("FileScan parquet ")
                if s.startswith("[l_partkey")][0].split("ReadSchema")[0]
     part_scan = [s for s in plan.split("FileScan parquet ")
@@ -363,7 +358,7 @@ def test_stream_left_join_withholds_open_tail(spark):
 def test_embedding_quantize_is_single_narrow_scan(spark):
     """Quantization audit: one parquet scan, one aggregate exchange (the
     tiny per-label rollup), no joins, no Python."""
-    plan = _plan(RUNNABLE["embedding_quantize"](spark, SF))
+    plan = _plan(QUERIES["embedding_quantize"](spark, SF))
     assert plan.count("FileScan parquet") == 1
     assert "Join" not in plan
     assert "Python" not in plan and "ArrowEval" not in plan
@@ -424,7 +419,7 @@ def test_ann_ivf_quantized_scan_reads_int8_not_floats(spark):
 def test_tpch_q6_is_pure_scan(spark):
     """Q6 must stay scan-bound: no joins, every predicate in PushedFilters,
     one scalar-aggregate exchange at most."""
-    plan = _plan(RUNNABLE["tpch_q6_forecast"](spark, SF))
+    plan = _plan(QUERIES["tpch_q6_forecast"](spark, SF))
     assert "Join" not in plan
     pushed = plan.split("PushedFilters: ")[1]
     assert "l_discount" in pushed and "l_quantity" in pushed
@@ -435,7 +430,7 @@ def test_tpch_q2_correlated_min_is_one_window_pass(spark):
     over the partkey partition (one shuffle), not an aggregate + self-join
     (two); dims ride broadcasts and the top-100 must be
     TakeOrderedAndProject, not a global sort."""
-    plan = _plan(RUNNABLE["tpch_q2_min_cost_supplier"](spark, SF))
+    plan = _plan(QUERIES["tpch_q2_min_cost_supplier"](spark, SF))
     assert "Window" in plan
     assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan
@@ -446,7 +441,7 @@ def test_tpch_q9_part_slice_pushed_and_nation_broadcast(spark):
     (StringStartsWith pushdown) and nation must broadcast — at 100 TB the
     6-way join is only viable because the name slice prunes lineitem before
     the orders shuffle."""
-    plan = _plan(RUNNABLE["tpch_q9_product_profit"](spark, SF))
+    plan = _plan(QUERIES["tpch_q9_product_profit"](spark, SF))
     part_scan = [s for s in plan.split("FileScan parquet ")
                  if s.startswith("[p_partkey")][0]
     assert "StringStartsWith(p_name,red" in part_scan
@@ -458,7 +453,7 @@ def test_tpch_q11_persists_shared_aggregate(spark):
     does not dedup shared subplans, so the plan must read the SECOND
     reference from the tracked persist (InMemoryTableScan) and apply the
     scalar threshold as a 1-row broadcast — not recompute the join tree."""
-    plan = _plan(RUNNABLE["tpch_q11_important_stock"](spark, SF))
+    plan = _plan(QUERIES["tpch_q11_important_stock"](spark, SF))
     # BOTH references (threshold build side + filtered output side) must
     # read the cache; the cached child plan's own FileScan prints under
     # each InMemoryRelation, so count cache reads, not scans
@@ -470,7 +465,7 @@ def test_tpch_q20_nested_ins_are_semi_joins(spark):
     """Q20's two IN-subqueries must both compile to left-semi joins (no
     dedup-then-inner-join), and the part-name prefix must be pushed into
     the part scan."""
-    plan = _plan(RUNNABLE["tpch_q20_promotion_stock"](spark, SF))
+    plan = _plan(QUERIES["tpch_q20_promotion_stock"](spark, SF))
     assert plan.count("LeftSemi") >= 2
     assert "StringStartsWith(p_name,red" in plan
 
@@ -479,7 +474,7 @@ def test_pii_redact_and_doc_chunks_are_narrow(spark):
     """Both compliance-pass shapes must run at scan speed: zero exchanges,
     zero Python — pure codegen'd regexp/array expressions."""
     for name in ("pii_redact", "doc_chunks"):
-        plan = _plan(RUNNABLE[name](spark, SF))
+        plan = _plan(QUERIES[name](spark, SF))
         assert "Exchange" not in plan, name
         assert "Python" not in plan and "ArrowEval" not in plan, name
         assert plan.count("FileScan parquet") == 1, name
@@ -488,7 +483,7 @@ def test_pii_redact_and_doc_chunks_are_narrow(spark):
 def test_importance_weights_broadcasts_ratio_table(spark):
     """The fitted n_buckets-row ratio table must broadcast to the scoring
     join — the corpus side stays narrow until its per-doc aggregate."""
-    plan = _plan(RUNNABLE["importance_weights"](spark, SF))
+    plan = _plan(QUERIES["importance_weights"](spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "Python" not in plan and "ArrowEval" not in plan
 
@@ -532,7 +527,7 @@ def test_ts_pattern_topk_is_one_keyed_sort_plus_take_ordered(spark):
     """The pattern search must be window algebra: exactly one exchange
     (the series key), folds in codegen (no Python), and the global top-k
     as TakeOrderedAndProject — never a full sort or a self-join."""
-    plan = _plan(RUNNABLE["ts_pattern_topk"](spark, SF))
+    plan = _plan(QUERIES["ts_pattern_topk"](spark, SF))
     assert "TakeOrderedAndProject" in plan
     assert "Join" not in plan
     assert "Python" not in plan and "ArrowEval" not in plan
@@ -541,7 +536,7 @@ def test_ts_pattern_topk_is_one_keyed_sort_plus_take_ordered(spark):
 def test_sentiment_lexicon_is_narrow_fold(spark):
     """Lexicon scoring is a codegen'd fold: no explode, no join, no
     Python, no exchange."""
-    plan = _plan(RUNNABLE["sentiment_lexicon"](spark, SF))
+    plan = _plan(QUERIES["sentiment_lexicon"](spark, SF))
     assert "Exchange" not in plan
     assert "Generate" not in plan  # no explode
     assert "Python" not in plan and "ArrowEval" not in plan
@@ -618,7 +613,7 @@ def test_table_profile_is_single_scan_expand(spark):
     """Profiling N columns must stay ONE scan: the multi-distinct
     aggregate compiles to an Expand two-phase plan, not per-column
     scans."""
-    plan = _plan(RUNNABLE["table_profile"](spark, SF))
+    plan = _plan(QUERIES["table_profile"](spark, SF))
     assert plan.count("FileScan parquet") == 1
     assert "Expand" in plan
 
@@ -627,20 +622,20 @@ def test_bloom_decontaminate_broadcasts_bitmap_not_grams(spark):
     """The Bloom path's point: the only broadcast is the fixed-size bitmap
     (word -> bits) join; the exact verify join on gram strings must NOT be
     a broadcast of the full benchmark gram set."""
-    plan = _plan(RUNNABLE["bloom_decontaminate"](spark, SF))
+    plan = _plan(QUERIES["bloom_decontaminate"](spark, SF))
     assert "BroadcastHashJoin" in plan  # bitmap probe join
     # the membership groupBy (doc, gram, hits==k) survives as an aggregate
     assert "bit_or" in plan or "bitor" in plan.lower()
 
 
 def test_hard_negatives_broadcasts_anchors(spark):
-    plan = _plan(RUNNABLE["hard_negatives"](spark, SF))
+    plan = _plan(QUERIES["hard_negatives"](spark, SF))
     assert "BroadcastNestedLoopJoin" in plan  # anchors broadcast, corpus streams
     assert "SortMergeJoin" not in plan
 
 
 def test_length_band_filter_broadcasts_bounds(spark):
-    plan = _plan(RUNNABLE["length_band_filter"](spark, SF))
+    plan = _plan(QUERIES["length_band_filter"](spark, SF))
     assert "BroadcastHashJoin" in plan  # per-source bounds table
     assert "SortMergeJoin" not in plan
 
@@ -648,7 +643,7 @@ def test_length_band_filter_broadcasts_bounds(spark):
 def test_dedup_keep_best_windows_label_tables_only(spark):
     """The quality argmax must window over the (id, cluster, score) label
     table — document text must never reach the window sort."""
-    df = RUNNABLE["dedup_keep_best"](spark, SF)
+    df = QUERIES["dedup_keep_best"](spark, SF)
     plan = _plan(df)
     assert "RunningWindowFunction" in plan or "Window" in plan
     assert "text" not in _optimized(df).split("Window")[0]
@@ -657,7 +652,7 @@ def test_dedup_keep_best_windows_label_tables_only(spark):
 def test_top_ngram_fraction_is_partial_aggregated(spark):
     """The argmax is min(struct(...)) — a hash aggregate with map-side
     partials — not a row_number window over an exploded corpus."""
-    plan = _plan(RUNNABLE["top_ngram_fraction"](spark, SF))
+    plan = _plan(QUERIES["top_ngram_fraction"](spark, SF))
     assert "HashAggregate" in plan
     assert "Window" not in plan
 
@@ -666,7 +661,7 @@ def test_substring_dup_stats_is_broadcast_semi_joined(spark):
     """ExactSubstr stats: the duplicated-hash set joins back as a
     BROADCAST (it is sparse by construction), the per-doc stats join is
     broadcast too, and the scan reads only (doc_id, text)."""
-    plan = _plan(RUNNABLE["substring_dup_stats"](spark, SF))
+    plan = _plan(QUERIES["substring_dup_stats"](spark, SF))
     assert "LeftSemi" in plan
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
@@ -678,7 +673,7 @@ def test_substring_dup_stats_is_broadcast_semi_joined(spark):
 def test_strip_dup_substrings_no_cartesian(spark):
     """ExactSubstr removal: survivor semi-join + anti-join shapes, no
     cartesian products anywhere in the rebuild pipeline."""
-    plan = _plan(RUNNABLE["strip_dup_substrings"](spark, SF))
+    plan = _plan(QUERIES["strip_dup_substrings"](spark, SF))
     assert "LeftSemi" in plan
     assert "LeftAnti" in plan
     assert "CartesianProduct" not in plan
@@ -688,7 +683,7 @@ def test_window_topk_is_aggregate_not_sort_window(spark):
     """top_k_per_group_agg: the plan must be the hash-aggregate shape —
     map-side partial collect_list (combiner), ONE keyed exchange, and no
     Window/partition-wide Sort operator at all."""
-    plan = _plan(RUNNABLE["window_topk"](spark, SF))
+    plan = _plan(QUERIES["window_topk"](spark, SF))
     assert "partial_collect_list" in plan  # map-side combine present
     assert "Window" not in plan
     assert plan.count("Exchange") == 1
@@ -698,7 +693,7 @@ def test_bpe_merge_table_is_driver_literal(spark):
     """bpe_train (driver path for small vocabularies): the returned
     merge table is literal data — consuming it must not re-run the
     corpus scan (no FileScan in its plan)."""
-    plan = _plan(RUNNABLE["bpe_train_merges"](spark, SF))
+    plan = _plan(QUERIES["bpe_train_merges"](spark, SF))
     assert "FileScan" not in plan
 
 
@@ -718,7 +713,7 @@ def test_hybrid_search_candidate_lists_are_take_ordered(spark):
     """RRF candidate generation must compile to TakeOrderedAndProject
     (distributed per-partition top-depth + driver merge), never a global
     sort Exchange over the corpus."""
-    plan = _plan(RUNNABLE["hybrid_search"](spark, SF))
+    plan = _plan(QUERIES["hybrid_search"](spark, SF))
     assert plan.count("TakeOrderedAndProject") >= 2
     assert "rangepartitioning" not in plan.lower()
 
@@ -754,7 +749,7 @@ def test_hierarchy_rollup_rounds_are_logarithmic(spark):
 
     rel.DataFrame.localCheckpoint = counting
     try:
-        RUNNABLE["hierarchy_rollup"](spark, SF).count()
+        QUERIES["hierarchy_rollup"](spark, SF).count()
     finally:
         rel.DataFrame.localCheckpoint = orig
     # 1 seed checkpoint + one per round; depth 11 -> exactly 5 rounds
@@ -766,7 +761,7 @@ def test_char_entropy_is_single_narrow_pass(spark):
     """Entropy is a per-row fold: one scan, no joins, no Python, and the
     only Exchange is the parallelism repartition of the single-file
     testdata input (a many-file production scan wouldn't need it)."""
-    plan = _plan(RUNNABLE["char_entropy"](spark, SF))
+    plan = _plan(QUERIES["char_entropy"](spark, SF))
     assert plan.count("FileScan parquet") == 1
     assert "Join" not in plan
     assert "Python" not in plan and "ArrowEval" not in plan
@@ -776,7 +771,7 @@ def test_pmi_unigram_table_is_computed_once(spark):
     """The unigram table feeds both join sides and the corpus-N row; it
     must come from ONE persisted aggregate (3 InMemoryTableScans), not
     three re-tokenizations of the corpus. No Python anywhere."""
-    plan = _plan(RUNNABLE["pmi_collocations"](spark, SF))
+    plan = _plan(QUERIES["pmi_collocations"](spark, SF))
     assert plan.count("InMemoryTableScan") == 3
     assert "Python" not in plan and "ArrowEval" not in plan
 
@@ -788,7 +783,7 @@ def test_triangle_count_has_no_nlj_and_single_tri_pass(spark):
     triangle list, not a 3-way union that would re-run the closure
     join per branch (pinned: exactly 3 reads of the persisted oriented
     edge set — wedge left + wedge right + closure)."""
-    plan = _plan(RUNNABLE["triangle_count"](spark, SF))
+    plan = _plan(QUERIES["triangle_count"](spark, SF))
     assert "NestedLoop" not in plan and "Cartesian" not in plan
     assert "Generate explode" in plan or "explode" in plan
     assert plan.count("InMemoryTableScan") == 12  # 3 oriented + nested e
@@ -798,18 +793,14 @@ def test_rfm_segments_single_fact_aggregate(spark):
     """The orders fact feeds exactly ONE customer-keyed hash aggregate;
     everything downstream is 1-row broadcasts + a codegen'd tile fold —
     no window, no sort, no second fact shuffle."""
-    from flink_kafka_table_api_spark.queries import BENCH_ONLY, QUERIES
-
-    plan = _plan({**BENCH_ONLY, **QUERIES}["rfm_segments"](spark, SF))
+    plan = _plan(QUERIES["rfm_segments"](spark, SF))
     assert "Window" not in plan and "Sort" not in plan
     # the two 1-row frames (corpus max date, cut arrays) broadcast
     assert plan.count("BroadcastExchange") >= 2
 
 
 def test_assoc_rules_topk_is_take_ordered_with_broadcast_df(spark):
-    from flink_kafka_table_api_spark.queries import BENCH_ONLY, QUERIES
-
-    plan = _plan({**BENCH_ONLY, **QUERIES}["assoc_rules"](spark, SF))
+    plan = _plan(QUERIES["assoc_rules"](spark, SF))
     assert "TakeOrderedAndProject" in plan  # never a global sort
     # the vocabulary-sized df table broadcasts per rule side + N row
     assert plan.count("BroadcastHashJoin") >= 2
@@ -820,9 +811,7 @@ def test_mann_whitney_window_runs_on_value_grid_only(spark):
     the value-grid aggregate, never over corpus rows: in the plan the
     Window's child chain contains the grouped cache, and per-group sums
     arrive via hash aggregate."""
-    from flink_kafka_table_api_spark.queries import BENCH_ONLY, QUERIES
-
-    plan = _plan({**BENCH_ONLY, **QUERIES}["mann_whitney"](spark, SF))
+    plan = _plan(QUERIES["mann_whitney"](spark, SF))
     assert plan.count("Window") == 1
     assert "InMemoryTableScan" in plan  # the persisted (grp, v) cells
 
@@ -830,9 +819,7 @@ def test_mann_whitney_window_runs_on_value_grid_only(spark):
 def test_grid_density_labels_via_broadcast(spark):
     """The dense-cell label table broadcasts back onto the point frame
     (the only second corpus-sized stage is broadcast-side)."""
-    from flink_kafka_table_api_spark.queries import BENCH_ONLY, QUERIES
-
-    plan = _plan({**BENCH_ONLY, **QUERIES}["grid_density"](spark, SF))
+    plan = _plan(QUERIES["grid_density"](spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -843,7 +830,7 @@ def test_match_recognize_is_one_arrow_scan_plus_keyed_join(spark):
     Python), the span join back is a keyed equi-join on the partition
     key (never a cartesian/NLJ over rows), and there is no driver-side
     collect in the plan at all."""
-    plan = _plan(RUNNABLE["match_recognize"](spark, SF))
+    plan = _plan(QUERIES["match_recognize"](spark, SF))
     assert plan.count("ArrowEvalPython") == 1
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -939,7 +926,7 @@ def test_cumulate_is_partials_plus_spine_never_exploded_input(spark):
     naive port), the only Generate is the output-sized spine, the merge
     is union+fold (no join), and the partials compute ONCE (both union
     branches read the persisted partials, not a second input scan)."""
-    plan = _plan(RUNNABLE["cumulate_windows"](spark, SF))
+    plan = _plan(QUERIES["cumulate_windows"](spark, SF))
     assert "partial_count(1)" in plan          # map-side combine, stage 1
     assert plan.count("Generate") == 1          # spine only
     assert "Join" not in plan                   # merge is union + fold
@@ -949,7 +936,7 @@ def test_cumulate_is_partials_plus_spine_never_exploded_input(spark):
 def test_pii_scrub_is_single_narrow_pass(spark):
     """PII scrub: one codegen'd projection over the scan — no shuffle,
     no join, and only (doc_id, text) read."""
-    plan = _plan(RUNNABLE["pii_scrub"](spark, SF))
+    plan = _plan(QUERIES["pii_scrub"](spark, SF))
     assert "Exchange" not in plan
     assert "Join" not in plan
     read_schema = plan.split("ReadSchema:")[1]

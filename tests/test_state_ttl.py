@@ -19,7 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.queries import (
-    BENCH_ONLY,
+    QUERIES,
     stream_state_ttl_sql,
 )
 from flink_kafka_table_api_spark.streaming.state_ttl import (
@@ -179,7 +179,7 @@ def test_crash_replay_is_clean(spark, tmp_path):
 @pytest.mark.parametrize("sf", ["/root/testdata/sf0.001",
                                 "/root/testdata/sf0.01"])
 def test_oracle_parity_on_testdata(spark, sf):
-    out = BENCH_ONLY["stream_state_ttl"](spark, sf)
+    out = QUERIES["stream_state_ttl"](spark, sf)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'")

@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.catalog import read_table
 from flink_kafka_table_api_spark.queries import (
-    BENCH_ONLY,
     QUERIES,
     stream_watermark_alignment_sql,
 )
@@ -142,7 +141,7 @@ def test_replay_of_committed_batches_is_a_noop(spark, tmp_path):
 @pytest.mark.parametrize("sf", ["/root/testdata/sf0.001",
                                 "/root/testdata/sf0.01"])
 def test_oracle_parity_on_testdata(spark, sf):
-    out = {**QUERIES, **BENCH_ONLY}["stream_watermark_alignment"](spark, sf)
+    out = QUERIES["stream_watermark_alignment"](spark, sf)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'")

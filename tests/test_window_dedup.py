@@ -10,18 +10,16 @@ from __future__ import annotations
 import duckdb
 
 from flink_kafka_table_api_spark.queries import (
-    BENCH_ONLY,
     QUERIES,
     stream_window_dedup_sql,
 )
 
-RUNNABLE = {**BENCH_ONLY, **QUERIES}
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_oracle_parity_on_testdata(spark):
-    out = RUNNABLE["stream_window_dedup"](spark, SF)
+    out = QUERIES["stream_window_dedup"](spark, SF)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
@@ -86,7 +84,7 @@ def test_dynamic_session_oracle_parity(spark):
         stream_session_dynamic_sql,
     )
 
-    out = RUNNABLE["stream_session_dynamic"](spark, SF)
+    out = QUERIES["stream_session_dynamic"](spark, SF)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
@@ -123,7 +121,7 @@ def test_window_join_oracle_parity(spark):
     while trailing-window unmatched errors stay withheld."""
     from flink_kafka_table_api_spark.queries import stream_window_join_sql
 
-    out = RUNNABLE["stream_window_join"](spark, SF)
+    out = QUERIES["stream_window_join"](spark, SF)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
