@@ -4,7 +4,7 @@ Thin shim over flink_kafka_table_api_spark.queries — the engine's query
 registry. The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+values).
 """
 
 from __future__ import annotations

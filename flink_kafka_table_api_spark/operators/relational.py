@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # Dimension tables small enough to broadcast at ANY scale factor: TPC-H
@@ -124,17 +124,6 @@ def top_k_per_group_agg(
             .cast(tie_type).alias(tie_col),
             (F.col("__p") + 1).alias(rank_alias),
         )
-    )
-
-
-def running_window(
-    partition_by: Sequence[str], order_by: Sequence[Column]
-) -> WindowSpec:
-    """UNBOUNDED PRECEDING..CURRENT ROW frame (running totals)."""
-    return (
-        Window.partitionBy(*partition_by)
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
 
 

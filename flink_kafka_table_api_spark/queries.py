@@ -15,10 +15,10 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.catalog import normalize_nanos_ts, read_table
+from flink_kafka_table_api_spark.catalog import read_table
 from flink_kafka_table_api_spark.functions.portable import (
     DEC,
     portable_hash64,
@@ -51,9 +51,7 @@ from flink_kafka_table_api_spark.operators.relational import (
     rfm_segments_sql,
     semi_join,
     sessionize,
-    top_k_per_group,
 )
-from flink_kafka_table_api_spark.plans.pipeline import amount_in_usd
 from flink_kafka_table_api_spark.sources.files import stream_parquet_dir
 from flink_kafka_table_api_spark.streaming import windows as sw
 
@@ -72,8 +70,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _events_min_date(spark: SparkSession, sf_dir: str):
     """min(to_date(ts)) over events — the day-tercile chunk anchor every
     watermarked stream_* fixture derives, answered from the parquet
-    FOOTER statistics instead of a full-scan preamble job per bench run
-    (sources/footer_stats.py; guide §1.2). Exact: to_date is monotone in
+    FOOTER statistics instead of a full-scan preamble job per run
+    (sources/footer_stats.py). Exact: to_date is monotone in
     ts and the session timezone is pinned UTC, so the date of min(ts) IS
     min(to_date(ts)). Falls back to the real Spark aggregate whenever the
     statistics don't resolve to a datetime-like bound (directory tables
@@ -110,6 +108,169 @@ def _documents_id_bounds(
         .first()
     )
     return r[0], r[1]
+
+
+# The out-of-order delivery schedule of the stream_* fixtures (README,
+# "Out-of-order streaming fixtures"), written once per engine side: the
+# Spark builders below stage the input, the *_sql fragments after them
+# let each DuckDB oracle replay it independently.
+
+
+def _day_tercile(d0) -> Column:
+    """An events row's natural drop: its day index from ``d0`` in 10-day
+    terciles, capped at drop 2."""
+    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
+    return F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
+
+
+def _late_drop(
+    natural: Column, id_col: str = "event_id", *, probe: bool = False
+) -> Column:
+    """The drop that delivers a row: ``natural`` shifted two drops late
+    when ``id_col`` is a multiple of 61 and one drop late when it is a
+    multiple of 37 (probe streams: 53 and 41), capped at drop 2."""
+    i = F.col(id_col)
+    two, one = (i % 53 == 0, i % 41 == 0) if probe else (
+        i % 61 == 0, i % 37 == 0)
+    shift = F.when(two, F.lit(2)).when(one, F.lit(1)).otherwise(F.lit(0))
+    return F.least(natural + shift, F.lit(2))
+
+
+def _doc_tercile(spark: SparkSession, sf: str) -> tuple[Column, int]:
+    """A document's natural drop, its doc-id tercile, and the tercile
+    width."""
+    m0, m1 = _documents_id_bounds(spark, sf)
+    w = -((m1 - m0 + 1) // -3)  # ceil
+    return F.least(F.expr(f"div(doc_id - {m0}, {w})"), F.lit(2)), w
+
+
+def _changelog_ops(ev: DataFrame, chunk: Column, *extra: Column) -> DataFrame:
+    """The events table as a keyed changelog delivered by ``chunk``:
+    key=user_id, an 'error' event deletes the key, any other upserts it."""
+    return ev.select(
+        F.col("event_id").alias("op_id"),
+        F.col("ts").cast("timestamp").alias("op_ts"),
+        F.col("user_id").alias("key"),
+        *extra,
+        F.when(F.col("event_type") == "error", "D").otherwise("U")
+        .alias("op"),
+        "value",
+        chunk.alias("__chunk"),
+    )
+
+
+def _day_tercile_sql() -> str:
+    """SQL twin of :func:`_day_tercile` over an events row."""
+    return (
+        "LEAST(CAST(datediff('day', (SELECT MIN(CAST(ts AS DATE)) "
+        "FROM events), CAST(ts AS DATE)) // 10 AS BIGINT), 2)"
+    )
+
+
+def _doc_prm_sql() -> str:
+    """CTE ``prm``: the doc-id tercile origin ``m0`` and width ``w``."""
+    return """prm AS (
+      SELECT MIN(doc_id) AS m0,
+             CAST(CEIL((MAX(doc_id) - MIN(doc_id) + 1) / 3.0) AS BIGINT)
+               AS w
+      FROM documents
+    )"""
+
+
+def _doc_tercile_sql(doc_id: str = "doc_id") -> str:
+    """SQL twin of :func:`_doc_tercile`'s drop over CTE ``prm``."""
+    return f"LEAST(({doc_id} - prm.m0) // prm.w, 2)"
+
+
+def _late_shift_sql(id_col: str = "event_id", *, probe: bool = False) -> str:
+    """How many drops late the schedule delivers a row (0, 1 or 2)."""
+    two, one = (f"{id_col} % 53", f"{id_col} % 41") if probe else (
+        f"{id_col} % 61", f"{id_col} % 37")
+    return f"(CASE WHEN {two} = 0 THEN 2 WHEN {one} = 0 THEN 1 ELSE 0 END)"
+
+
+def _late_drop_sql(
+    natural: str | None = None, id_col: str = "event_id", *,
+    probe: bool = False,
+) -> str:
+    """SQL twin of :func:`_late_drop`; ``natural`` defaults to the day
+    tercile."""
+    natural = natural or _day_tercile_sql()
+    return f"LEAST({natural} + {_late_shift_sql(id_col, probe=probe)}, 2)"
+
+
+def _changelog_ops_sql() -> str:
+    """SELECT list of :func:`_changelog_ops` over an events row."""
+    return (
+        "event_id AS op_id, ts AS op_ts, user_id AS key, "
+        "CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op, value"
+    )
+
+
+def _admitted_sql(
+    name: str, src: str, delay: str, *, ts: str = "ts",
+    admit_by: str | None = None, lag: int = 1,
+    floor: str = "TIMESTAMP '1970-01-01'",
+) -> str:
+    """Two CTEs replaying watermark admission over CTE ``src`` (delivered
+    rows with a ``chunk`` column): ``{name}_mx`` holds each drop's max
+    ``ts``, and ``{name}`` keeps the rows of ``src`` whose ``admit_by``
+    (default: the row's ``ts``) lies above the watermark in force when
+    their drop arrived, max(ts over drops <= chunk - lag) - ``delay``,
+    or above ``floor`` before any watermark exists.
+
+    lag=1 is the per-row admission of the foreachBatch operators (the
+    watermark lags one batch); lag=2 with ``admit_by`` = the row's
+    window end is Spark's own stateful eviction, which drops a row only
+    once its window's state was evicted one batch earlier."""
+    key = admit_by or f"r.{ts}"
+    return f"""
+    {name}_mx AS (SELECT chunk, MAX({ts}) AS m FROM {src} GROUP BY chunk),
+    {name} AS (
+      SELECT r.* FROM {src} r
+      WHERE {key} > COALESCE(
+        (SELECT MAX(x.m) FROM {name}_mx x WHERE x.chunk <= r.chunk - {lag})
+          - {delay},
+        {floor})
+    )"""
+
+
+def _rowkind_diff_sql(snaps: str, key: str, cols: tuple[str, ...]) -> str:
+    """The tail of a WITH clause that diffs consecutive per-batch
+    snapshots into the RowKind changelog: CTE ``snaps`` holds one row
+    per (k, ``key``) for batches k = 0..2 with value columns ``cols``. A
+    key new at batch k emits '+I', a key gone emits '-D', a key whose
+    values changed emits '-U' (old) and '+U' (new). ``total`` leaves as
+    DOUBLE."""
+    def side(s: str) -> str:
+        return ", ".join(
+            f"CAST({s}_{c} AS DOUBLE) AS {c}" if c == "total"
+            else f"{s}_{c} AS {c}" for c in cols
+        )
+    changed = " OR ".join(f"o_{c} <> n_{c}" for c in cols)
+    both = f"ok IS NOT NULL AND nk IS NOT NULL AND ({changed})"
+    return f"""
+    paired AS (
+      SELECT COALESCE(n.k, o.k + 1) AS batch_id,
+             COALESCE(n.{key}, o.{key}) AS {key}, o.k AS ok, n.k AS nk,
+             {", ".join(f"o.{c} AS o_{c}, n.{c} AS n_{c}" for c in cols)}
+      FROM {snaps} n
+      FULL OUTER JOIN {snaps} o ON o.k = n.k - 1 AND o.{key} = n.{key}
+      WHERE COALESCE(n.k, o.k + 1) <= 2
+    )
+    SELECT '+I' AS op, {key}, {side("n")},
+           CAST(batch_id AS BIGINT) AS batch_id
+    FROM paired WHERE ok IS NULL
+    UNION ALL
+    SELECT '-D', {key}, {side("o")}, CAST(batch_id AS BIGINT)
+    FROM paired WHERE nk IS NULL
+    UNION ALL
+    SELECT '-U', {key}, {side("o")}, CAST(batch_id AS BIGINT)
+    FROM paired WHERE {both}
+    UNION ALL
+    SELECT '+U', {key}, {side("n")}, CAST(batch_id AS BIGINT)
+    FROM paired WHERE {both}
+    """
 
 
 def _as_stream_dir(sf_dir: str, name: str) -> str:
@@ -155,7 +316,7 @@ def _as_stream_dir(sf_dir: str, name: str) -> str:
         os.makedirs(d, exist_ok=True)
         for f in sorted(expected):
             target = os.path.join(src, f) if os.path.isdir(src) else src
-            # loud guard (ADVICE r8): a single-file source that does not
+            # loud guard: a single-file source that does not
             # exist would otherwise stage a DANGLING symlink (expected is
             # non-empty by construction) and fail later as an opaque
             # Spark read error instead of here.
@@ -2065,10 +2226,10 @@ def q_neardup_verified(spark: SparkSession, sf: str) -> DataFrame:
 
 def _scratch_dir(tag: str, sf: str) -> str:
     """Deterministic per-(query, sf) scratch dir for streaming-state
-    queries, scrubbed at call start: repeated bench/driver runs reuse ONE
-    directory instead of leaking a full streaming state per run (round-7
-    ADVICE), and the scrub keeps every run a cold, honestly-timed one
-    rather than a marker-skip replay."""
+    queries, scrubbed at call start: repeated runs reuse ONE directory
+    instead of leaking a full streaming state per run, and the scrub
+    keeps every run a cold, honestly-timed one rather than a marker-skip
+    replay."""
     import hashlib
     import shutil
     import tempfile
@@ -2115,7 +2276,7 @@ def q_incremental_neardup(spark: SparkSession, sf: str) -> DataFrame:
 def stream_curation_sql(
     *, quality_threshold: float = 0.5, budget: int = 256
 ) -> str:
-    """Oracle for `stream_curation` (staged for the round-8 gate): the
+    """Oracle for `stream_curation`: the
     batch replay of the incremental pipeline — keep-first-copy near-dup
     filter (drop the NEWER side of every verified pair, exactly the
     orientation IncrementalDedup emits when batches arrive in id order),
@@ -2161,12 +2322,12 @@ def stream_curation_sql(
 @query("stream_curation", stream_curation_sql())
 def q_stream_curation(spark: SparkSession, sf: str) -> DataFrame:
     """End-to-end INCREMENTAL curation pipeline
-    (streaming/curation_pipeline.py, round-6 VERDICT item 6): file-stream
-    source (2 deterministic micro-batches) -> incremental near-dup against
-    the accumulated band index -> quality gate -> packed sink via
-    replay-safe foreachBatch merge with a carried token offset. Staged
-    for the round-8 gate; the oracle is the single-pass batch replay —
-    proving per-batch incremental state reproduces the full recompute."""
+    (streaming/curation_pipeline.py): file-stream source (2
+    deterministic micro-batches) -> incremental near-dup against the
+    accumulated band index -> quality gate -> packed sink via
+    replay-safe foreachBatch merge with a carried token offset. The
+    oracle is the single-pass batch replay, so per-batch incremental
+    state must reproduce the full recompute."""
     from flink_kafka_table_api_spark.streaming.curation_pipeline import (
         stream_curate_pack,
     )
@@ -2267,7 +2428,6 @@ def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
         threshold=0.5, portable=True,
     )
     return dd.connected_components(pairs)
-
 
 
 # ---------------------------------------------------------------------------
@@ -2439,7 +2599,7 @@ def q_ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
     assigned to 8 deterministic centroids once and written partitioned by
     cluster (`sim.ivf_build_index`); the query routes driver-side to a
     literal cluster id and the scan prunes to that single partition
-    (PartitionFilters in PLANS.md §ann_ivf), exact re-rank inside it.
+    (PartitionFilters in its physical plan), exact re-rank inside it.
     nprobe=1; at 100 TB each query touches 1/k of the data at the scan,
     never a full-corpus assignment pass."""
     emb = _t(spark, sf, "embeddings")
@@ -2660,9 +2820,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q_ann_ivf_variants(spark: SparkSession, sf: str) -> DataFrame:
     """The whole IVF/quantized ANN family as ONE tagged multi-assert gate
-    query (round-5 VERDICT item 5: consolidate the 5-slot family into one
-    registry slot with identical capability coverage — the
-    agg_rollup_cube/set_ops_all precedent). Variants, each a 10-row
+    query (the agg_rollup_cube/set_ops_all shape). Variants, each a 10-row
     value-level block against the same DuckDB replay the retired
     standalone queries carried:
 
@@ -2792,8 +2950,7 @@ def q_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     dependent) — but this query projects the survivors to their key
     columns and distincts, and the surviving KEY SET is deterministic:
     every key's first arrival emits exactly one row. That makes the
-    order-insensitive oracle batch DISTINCT over the same keys (the
-    round-4 VERDICT's suggested upgrade). Caveat pinned here on purpose:
+    order-insensitive oracle batch DISTINCT over the same keys. Caveat pinned here on purpose:
     key-set equality additionally needs no key to have ALL its
     occurrences dropped as late, which holds for the availableNow file
     replay used everywhere in this repo (single-file sources replay in
@@ -3133,9 +3290,8 @@ def q_audio_features(spark: SparkSession, sf: str) -> DataFrame:
     features over opaque payloads via Arrow-batched numpy (decode stubbed
     behind the deterministic int8 fake; operators/multimodal.py).
 
-    Formerly the registry's one rows-only query; now a per-document
-    CONTRACT oracle in the heavy_hitters/ann_ivf_trained mold (round-5
-    VERDICT item 2). The per-window byte math itself is not
+    The oracle is a per-document CONTRACT oracle in the
+    heavy_hitters/ann_ivf_trained mold. The per-window byte math itself is not
     DuckDB-expressible (no byte extraction from BLOBs), so the oracle
     checks what IS: (a) the windowing algebra value-for-value — each
     document yields exactly ceil(max(octet_length, 1) / 256) windows
@@ -3688,9 +3844,7 @@ def _stream_stream_join_run(
 )
 def q_stream_stream_joins(spark: SparkSession, sf: str) -> DataFrame:
     """The stream-stream join family (inner / left-outer / full-outer) as
-    ONE tagged multi-assert gate query (round-5 VERDICT item 5: the
-    3-slot family consolidated into one registry slot with identical
-    capability coverage). Three REAL Structured Streaming runs — each a
+    ONE tagged multi-assert query. Three REAL Structured Streaming runs — each a
     watermarked availableNow join with its own state store — tagged and
     unioned batch-side.
 
@@ -5233,8 +5387,8 @@ def _bpe_oracle(n_merges: int, final_select: str | None = None) -> str:
     symbol lists with an indexed lambda. Every chained CTE is
     MATERIALIZED: DuckDB inlines plain CTEs per reference, and a
     12-step chain re-expands the whole prefix exponentially (>120 s;
-    0.35 s materialized) — the DuckDB cousin of the Catalyst
-    CollapseProject quadratic recorded in PLANS.md."""
+    0.35 s materialized) — the DuckDB cousin of Catalyst's
+    CollapseProject quadratic."""
     toks = tx.tokens_sql("text")
     parts = [f"""w0 AS MATERIALIZED (
       SELECT w, string_split(w, '') AS syms, COUNT(*) AS freq FROM (
@@ -6246,10 +6400,6 @@ def q_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
     return triangle_count(_ring_chord_edges(spark, sf))
 
 
-# Formerly round-8 staged operators (oracles pre-validated in
-# tests/test_r8_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in rounds 7-8.
-
 @query("dup_ngram_coverage", tx.dup_ngram_coverage_sql(n=2))
 def q_dup_ngram_coverage(spark: SparkSession, sf: str) -> DataFrame:
     """Gopher duplicate-2-gram coverage over documents (operators/
@@ -6270,8 +6420,8 @@ def q_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
         label_propagation,
     )
 
-    # end-only checkpoint for the shallow 4-round run (the pagerank gate
-    # query's reasoning; period-invariance pinned in the r8 tests)
+    # end-only checkpoint for the shallow 4-round run (the pagerank
+    # query's reasoning; period-invariance is pinned in the tests)
     return label_propagation(
         _ring_chord_edges(spark, sf), iterations=4, checkpoint_every=4
     )
@@ -6367,49 +6517,40 @@ def q_kcore(spark: SparkSession, sf: str) -> DataFrame:
     return gr.kcore(_twotier_edges(spark, sf), k=4, max_rounds=4)
 
 
-def stream_late_events_sql(*, delay_days: int = 2) -> str:
-    """Oracle for `stream_late_events`: a DuckDB replay of Spark's
-    watermark admit/drop/emit semantics over the deterministic
-    out-of-order delivery (streaming/late_data.py module docstring, the
-    empirically pinned model):
+def _staged_stream(
+    spark: SparkSession, chunked: DataFrame, state: str, schema: str
+) -> DataFrame:
+    """``chunked`` staged as its 3 drop files under ``state`` and read back
+    as a file stream that delivers one drop per micro-batch."""
+    from flink_kafka_table_api_spark.streaming.late_data import (
+        stage_chunked_by,
+    )
 
-      chunk  = LEAST(LEAST(day_index // 10, 2) + late_shift, 2) with
-               late_shift 2 for event_id %% 61 == 0, 1 for %% 37 == 0
-               (the very-late / one-drop-late slices);
-      W_k    = max(ts over chunks 0..k-1) - delay (watermark lags one
-               batch);
-      a row in chunk k is DROPPED iff its window was already evicted,
-      i.e. window_end <= W_{k-1} = max(ts over chunks 0..k-2) - delay;
-      emitted windows are those with window_end <= max(ALL ts) - delay
-      (the final empty availableNow batch; dropped rows still advance
-      the watermark — stats are collected upstream of the filter)."""
+    src = stage_chunked_by(
+        chunked, os.path.join(state, "src"), n_chunks=3,
+        columns=[c.split()[0] for c in schema.split(",")],
+    )
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(src)
+    )
+
+
+def stream_late_events_sql(*, delay_days: int = 2) -> str:
+    """Oracle for `stream_late_events`: Spark's native watermark replayed
+    over the delivery schedule (the model is pinned in
+    streaming/late_data.py). A row drops iff its 1-day window was
+    evicted before its drop arrived (lag=2 admission); the emitted
+    windows are those the terminal watermark max(ts) - delay closed.
+    Dropped rows still advance the watermark."""
     return f"""
-    WITH base AS (
-      SELECT event_id, ts, event_type, value,
-             datediff('day',
-                      (SELECT MIN(CAST(ts AS DATE)) FROM events),
-                      CAST(ts AS DATE)) AS d_idx
+    WITH chun AS (
+      SELECT event_id, ts, event_type, value, {_late_drop_sql()} AS chunk
       FROM events
     ),
-    chun AS (
-      SELECT *, LEAST(LEAST(CAST(d_idx // 10 AS BIGINT), 2)
-             + (CASE WHEN event_id % 61 = 0 THEN 2
-                     WHEN event_id % 37 = 0 THEN 1 ELSE 0 END), 2) AS chunk
-      FROM base
-    ),
-    mx AS (SELECT chunk, MAX(ts) AS mts FROM chun GROUP BY chunk),
-    horizon AS (
-      SELECT c.chunk,
-             (SELECT MAX(m.mts) FROM mx m WHERE m.chunk <= c.chunk - 2)
-               - INTERVAL {delay_days} DAY AS evicted_before
-      FROM (SELECT DISTINCT chunk FROM chun) c
-    ),
-    admitted AS (
-      SELECT ch.ts, ch.event_type, ch.value
-      FROM chun ch JOIN horizon h ON ch.chunk = h.chunk
-      WHERE h.evicted_before IS NULL
-         OR date_trunc('day', ch.ts) + INTERVAL 1 DAY > h.evicted_before
-    ),
+    {_admitted_sql("admitted", "chun", f"INTERVAL {delay_days} DAY",
+                   admit_by="date_trunc('day', r.ts) + INTERVAL 1 DAY",
+                   lag=2)},
     agg AS (
       -- CAST: DuckDB date_trunc('day') yields DATE, Spark's window
       -- boundaries are TIMESTAMPs
@@ -6429,43 +6570,22 @@ def stream_late_events_sql(*, delay_days: int = 2) -> str:
 
 @query("stream_late_events", stream_late_events_sql())
 def q_stream_late_events(spark: SparkSession, sf: str) -> DataFrame:
-    """Watermarked LATE-data handling through the REAL streaming engine
-    (round-8 capability, VERDICT r7 item 7): the events corpus staged as
-    3 micro-batch drops where event_id %% 37 == 0 rows arrive one drop
-    late (inside the watermark horizon: merged into open windows) and
-    event_id %% 61 == 0 rows arrive two drops late (beyond it: dropped
-    by the watermark), then watermark(2 days) -> tumbling 1-day window
-    -> APPEND -> availableNow. The oracle replays the pinned
-    admit/drop/emit model — see streaming/late_data.py. Generalizes the
-    reference's continuous-insert lifecycle
-    (TransactionProcessor.java:192,215-223) to out-of-order arrival."""
-    from flink_kafka_table_api_spark.streaming.late_data import (
-        stage_chunked_by,
-    )
-
+    """Late data through Spark's own streaming engine: events in the
+    delivery schedule, watermark(2 days) -> tumbling 1-day window per
+    event_type -> APPEND -> availableNow. One-drop-late rows merge into
+    open windows; some two-drops-late rows find their window evicted and
+    drop. The reference's continuous-insert lifecycle
+    (TransactionProcessor.java:192,215-223) under out-of-order arrival."""
     ev = _t(spark, sf, "events").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "event_type", "value",
     )
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    shift = (
-        F.when(F.col("event_id") % 61 == 0, F.lit(2))
-        .when(F.col("event_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
+    chunked = ev.withColumn(
+        "__chunk", _late_drop(_day_tercile(_events_min_date(spark, sf)))
     )
-    chunked = ev.withColumn("__chunk", F.least(natural + shift, F.lit(2)))
-    state = _scratch_dir("latestream", sf)
-    src = stage_chunked_by(
-        chunked, os.path.join(state, "src"), n_chunks=3,
-        columns=["event_id", "ts", "event_type", "value"],
-    )
-    stream = (
-        spark.readStream
-        .schema("event_id long, ts timestamp, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = _staged_stream(
+        spark, chunked, _scratch_dir("latestream", sf),
+        "event_id long, ts timestamp, event_type string, value double",
     )
     windowed = sw.tumbling(
         sw.with_watermark(stream, "ts", "2 days"), "ts", "1 day",
@@ -6480,41 +6600,25 @@ def q_stream_late_events(spark: SparkSession, sf: str) -> DataFrame:
 def stream_curation_ooo_sql(
     *, quality_threshold: float = 0.5, budget: int = 256
 ) -> str:
-    """Oracle for `stream_curation_ooo` (streaming/ooo_curation.py):
-    replay the deterministic out-of-order delivery (3 id-tercile drops,
-    doc_id % 37 rows one drop late, % 61 rows two drops late), the
-    doc-id watermark trajectory (admission at batch k requires
-    doc_id > max(id seen through batch k-1) - delay, where delay =
-    max(1, tercile_width // 4)), then ONE batch pass over the admitted
-    subset: capped-LSH keep-smallest-id near-dup filter, the
-    llm_curation quality gate, fixed-budget packing in id order — and
-    the terminal-watermark horizon (docs above max(all ids) - delay stay
-    buffered, unpacked, like unemitted streaming windows)."""
+    """Oracle for `stream_curation_ooo` (streaming/ooo_curation.py): the
+    delivery schedule over doc-id terciles, per-row admission against
+    the doc-id watermark with delay max(1, tercile_width // 4), then ONE
+    batch pass over the admitted docs: capped-LSH keep-smallest-id
+    near-dup filter, the llm_curation quality gate and fixed-budget
+    packing in id order. Docs above the terminal watermark
+    max(doc_id) - delay stay buffered, like unemitted windows."""
     toks = tx.tokens_sql("text")
     pairs = _neardup_verified_oracle("adm")
     return f"""
-    WITH prm AS (
-      SELECT MIN(doc_id) AS m0,
-             CAST(CEIL((MAX(doc_id) - MIN(doc_id) + 1) / 3.0) AS BIGINT)
-               AS w
-      FROM documents
-    ),
+    WITH {_doc_prm_sql()},
     chun AS (
       SELECT d.doc_id, d.text,
-             LEAST(LEAST((d.doc_id - p.m0) // p.w, 2)
-                   + (CASE WHEN d.doc_id % 61 = 0 THEN 2
-                           WHEN d.doc_id % 37 = 0 THEN 1 ELSE 0 END),
-                   2) AS chunk
-      FROM documents d, prm p
+             {_late_drop_sql(_doc_tercile_sql("d.doc_id"), "d.doc_id")}
+               AS chunk
+      FROM documents d, prm
     ),
-    mx AS (SELECT chunk, MAX(doc_id) AS mxid FROM chun GROUP BY chunk),
-    adm AS (
-      SELECT c.doc_id, c.text FROM chun c, prm p
-      WHERE c.doc_id > COALESCE(
-        (SELECT MAX(m.mxid) FROM mx m WHERE m.chunk < c.chunk)
-          - GREATEST(1, p.w // 4),
-        -1)
-    ),
+    {_admitted_sql("adm", "chun", "(SELECT GREATEST(1, w // 4) FROM prm)",
+                   ts="doc_id", floor="-1")},
     pairs AS ({pairs}),
     kept AS (
       SELECT d.doc_id, d.text FROM adm d, prm p
@@ -6552,69 +6656,38 @@ def stream_curation_ooo_sql(
 
 @query("stream_curation_ooo", stream_curation_ooo_sql())
 def q_stream_curation_ooo(spark: SparkSession, sf: str) -> DataFrame:
-    """OUT-OF-ORDER incremental curation (round-8 capability, VERDICT r7
-    item 7's "real crawl drops aren't in order"): the documents corpus
-    staged as 3 id-tercile drops with deterministic late slices
-    (doc_id %% 37 one drop late — partially inside the watermark
-    horizon; %% 61 two drops late — beyond it), run through the
-    watermarked pipeline in streaming/ooo_curation.py: admit by doc-id
-    watermark, dedup incrementally, FINALIZE each closed id interval
-    with keep-SMALLEST-ID (not keep-first-arrival), quality-gate, pack
-    in id order from the carried offset. The oracle is one batch pass
-    over the watermark-admitted subset."""
+    """Incremental curation under out-of-order crawl drops: the
+    documents in the delivery schedule over doc-id terciles, run through
+    streaming/ooo_curation.py. It admits by doc-id watermark, dedups
+    incrementally, finalizes each closed id interval keeping the
+    SMALLEST id (not the first arrival), quality-gates and packs in id
+    order from the carried offset."""
     from flink_kafka_table_api_spark.streaming.ooo_curation import (
         stream_curate_pack_ooo,
     )
 
-    docs = _t(spark, sf, "documents").select("doc_id", "text")
-    m0, m1 = _documents_id_bounds(spark, sf)
-    w = -((m1 - m0 + 1) // -3)  # ceil
-    delay = max(1, w // 4)
-    natural = F.least(F.expr(f"div(doc_id - {m0}, {w})"), F.lit(2))
-    shift = (
-        F.when(F.col("doc_id") % 61 == 0, F.lit(2))
-        .when(F.col("doc_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
+    natural, w = _doc_tercile(spark, sf)
+    chunked = _t(spark, sf, "documents").select(
+        "doc_id", "text", _late_drop(natural, "doc_id").alias("__chunk")
     )
-    chunked = docs.withColumn("__chunk", F.least(natural + shift, F.lit(2)))
-    state = _scratch_dir("ooocur", sf)
     return stream_curate_pack_ooo(
-        spark, chunked, state, n_chunks=3, delay=delay,
-        threshold=0.5, quality_threshold=0.5, budget=256, portable=True,
+        spark, chunked, _scratch_dir("ooocur", sf), n_chunks=3,
+        delay=max(1, w // 4), threshold=0.5, quality_threshold=0.5,
+        budget=256, portable=True,
     )
 
 
 def stream_cdc_apply_sql(delay_days: int = 2) -> str:
-    """Oracle for `stream_cdc_apply`: events as a changelog
-    (key=user_id, 'error'=delete, everything else=upsert), the
-    stream_late_events chunk rule (day terciles, %37 one drop late,
-    %61 two drops late), admission op_ts > max(op_ts over earlier
-    chunks) - delay, per-key argmax by (op_ts, op_id), tombstones out.
-    Moved verbatim from tests/test_cdc_apply.py for the round-9
-    registration (the test imports it from here now)."""
+    """Oracle for `stream_cdc_apply`: the events changelog in the
+    delivery schedule, per-row admission, then the per-key argmax by
+    (op_ts, op_id) with tombstones removed."""
     return f"""
-    WITH ops AS (
-      SELECT event_id AS op_id, ts AS op_ts, user_id AS key,
-             CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-             value,
-             datediff('day', (SELECT MIN(CAST(ts AS DATE)) FROM events),
-                      CAST(ts AS DATE)) AS d_idx
+    WITH chun AS (
+      SELECT {_changelog_ops_sql()}, {_late_drop_sql()} AS chunk
       FROM events
     ),
-    chun AS (
-      SELECT *, LEAST(LEAST(CAST(d_idx // 10 AS BIGINT), 2)
-             + (CASE WHEN op_id % 61 = 0 THEN 2
-                     WHEN op_id % 37 = 0 THEN 1 ELSE 0 END), 2) AS chunk
-      FROM ops
-    ),
-    mx AS (SELECT chunk, MAX(op_ts) AS mts FROM chun GROUP BY chunk),
-    adm AS (
-      SELECT c.* FROM chun c
-      WHERE c.op_ts > COALESCE(
-        (SELECT MAX(m.mts) FROM mx m WHERE m.chunk < c.chunk)
-          - INTERVAL {delay_days} DAY,
-        TIMESTAMP '1970-01-01')
-    ),
+    {_admitted_sql("adm", "chun", f"INTERVAL {delay_days} DAY",
+                   ts="op_ts")},
     win AS (
       SELECT key, op_id AS last_op_id, op_ts AS last_op_ts,
              op AS last_op, value AS last_value,
@@ -6631,68 +6704,32 @@ def stream_cdc_apply_sql(delay_days: int = 2) -> str:
 
 @query("stream_cdc_apply", stream_cdc_apply_sql())
 def q_stream_cdc_apply(spark: SparkSession, sf: str) -> DataFrame:
-    """CDC changelog apply (streaming/cdc_apply.py, round-8 capability):
-    events as a keyed changelog (key=user_id, 'error'=delete, else
-    upsert) delivered as 3 out-of-order drops (the stream_late_events
-    chunk rule), materialized into the current-state snapshot under a
-    2-day event-time watermark. Registered round 9 (the committed
-    schedule) with the admission+argmax replay oracle pre-validated in
-    tests/test_cdc_apply.py."""
+    """CDC changelog apply (streaming/cdc_apply.py): the events changelog
+    in the delivery schedule, materialized into the current-state
+    snapshot under a 2-day event-time watermark."""
     from flink_kafka_table_api_spark.streaming.cdc_apply import (
         stream_cdc_apply,
     )
 
-    ev = _t(spark, sf, "events")
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    shift = (
-        F.when(F.col("event_id") % 61 == 0, F.lit(2))
-        .when(F.col("event_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
+    chunk = _late_drop(_day_tercile(_events_min_date(spark, sf)))
+    ops = _changelog_ops(_t(spark, sf, "events"), chunk)
+    return stream_cdc_apply(
+        spark, ops, _scratch_dir("cdcapply", sf), n_chunks=3,
+        delay="2 days",
     )
-    ops = ev.select(
-        F.col("event_id").alias("op_id"),
-        F.col("ts").cast("timestamp").alias("op_ts"),
-        F.col("user_id").alias("key"),
-        F.when(F.col("event_type") == "error", "D").otherwise("U")
-        .alias("op"),
-        "value",
-        F.least(natural + shift, F.lit(2)).alias("__chunk"),
-    )
-    state = _scratch_dir("cdcapply", sf)
-    return stream_cdc_apply(spark, ops, state, n_chunks=3, delay="2 days")
 
 
 def stream_scd2_sql(delay_days: int = 2) -> str:
-    """Oracle for `stream_scd2`: the cdc_apply changelog derivation and
-    chunk rule, admission op_ts > max(op_ts over earlier chunks) -
-    delay, then LEAD-window interval chaining; deletes close intervals
-    and emit no row. Moved verbatim from tests/test_scd2_stream.py for
-    the round-9 registration."""
+    """Oracle for `stream_scd2`: the stream_cdc_apply changelog and
+    admission, then LEAD-window interval chaining per key; deletes close
+    intervals and emit no row."""
     return f"""
-    WITH ops AS (
-      SELECT event_id AS op_id, ts AS op_ts, user_id AS key,
-             CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-             value,
-             datediff('day', (SELECT MIN(CAST(ts AS DATE)) FROM events),
-                      CAST(ts AS DATE)) AS d_idx
+    WITH chun AS (
+      SELECT {_changelog_ops_sql()}, {_late_drop_sql()} AS chunk
       FROM events
     ),
-    chun AS (
-      SELECT *, LEAST(LEAST(CAST(d_idx // 10 AS BIGINT), 2)
-             + (CASE WHEN op_id % 61 = 0 THEN 2
-                     WHEN op_id % 37 = 0 THEN 1 ELSE 0 END), 2) AS chunk
-      FROM ops
-    ),
-    mx AS (SELECT chunk, MAX(op_ts) AS mts FROM chun GROUP BY chunk),
-    adm AS (
-      SELECT c.* FROM chun c
-      WHERE c.op_ts > COALESCE(
-        (SELECT MAX(m.mts) FROM mx m WHERE m.chunk < c.chunk)
-          - INTERVAL {delay_days} DAY,
-        TIMESTAMP '1970-01-01')
-    ),
+    {_admitted_sql("adm", "chun", f"INTERVAL {delay_days} DAY",
+                   ts="op_ts")},
     chain AS (
       SELECT key, op_id, op, value,
              op_ts AS effective_from,
@@ -6710,41 +6747,22 @@ def stream_scd2_sql(delay_days: int = 2) -> str:
 
 @query("stream_scd2", stream_scd2_sql())
 def q_stream_scd2(spark: SparkSession, sf: str) -> DataFrame:
-    """Streaming SCD2 history maintenance (streaming/scd2_stream.py,
-    round-8 capability): the same events changelog as stream_cdc_apply,
-    but materialized into the full TYPE-2 history — one row per
-    admitted upsert with [effective_from, effective_to) validity,
-    deletes closing intervals — maintained as per-batch deltas with
-    last-writer-wins reads and LSM-style shadow-then-delete compaction.
-    The versioned-table shape Flink's event-time temporal join reads
-    (FOR SYSTEM_TIME AS OF on a versioned table), maintained
-    incrementally. Oracle: the admission+LEAD-chaining replay, also checked
-    in tests/test_scd2_stream.py."""
+    """Streaming SCD2 history (streaming/scd2_stream.py): the
+    stream_cdc_apply changelog materialized into the full type-2
+    history, one row per admitted upsert with [effective_from,
+    effective_to) validity and deletes closing intervals. It is kept as
+    per-batch deltas with last-writer-wins reads and shadow-then-delete
+    compaction: the versioned table that Flink's event-time temporal
+    join (FOR SYSTEM_TIME AS OF) reads."""
     from flink_kafka_table_api_spark.streaming.scd2_stream import (
         stream_scd2,
     )
 
-    ev = _t(spark, sf, "events")
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    shift = (
-        F.when(F.col("event_id") % 61 == 0, F.lit(2))
-        .when(F.col("event_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
-    )
-    ops = ev.select(
-        F.col("event_id").alias("op_id"),
-        F.col("ts").cast("timestamp").alias("op_ts"),
-        F.col("user_id").alias("key"),
-        F.when(F.col("event_type") == "error", "D").otherwise("U")
-        .alias("op"),
-        "value",
-        F.least(natural + shift, F.lit(2)).alias("__chunk"),
-    )
-    state = _scratch_dir("scd2stream", sf)
+    chunk = _late_drop(_day_tercile(_events_min_date(spark, sf)))
+    ops = _changelog_ops(_t(spark, sf, "events"), chunk)
     return stream_scd2(
-        spark, ops, state, n_chunks=3, delay="2 days", compact_every=2,
+        spark, ops, _scratch_dir("scd2stream", sf), n_chunks=3,
+        delay="2 days", compact_every=2,
     )
 
 
@@ -6753,10 +6771,9 @@ def stream_ann_ingest_sql(n_chunks: int = 3) -> str:
     arg_min coarse assignment over the WHOLE corpus (assignment is a
     stateless per-row function, so the accumulated streaming index
     equals the batch assignment exactly), driver-literal routing of the
-    vec_id=0 query to its nearest centroid, exact round-6 cosine
-    re-rank within the probed cluster, plus rowcount conservation
-    across every published batch. Moved verbatim from
-    tests/test_stream_ann_ingest.py for the round-9 registration."""
+    vec_id=0 query to its nearest centroid, exact cosine re-rank within
+    the probed cluster, plus rowcount conservation across every
+    published batch."""
     cos_vc = cosine_sql("v.embedding", "c.c_emb")
     cos_qc = cosine_sql("q.q_emb", "c.c_emb")
     cos_vq = cosine_sql("v.embedding", "q.q_emb")
@@ -6798,8 +6815,8 @@ def stream_ann_ingest_sql(n_chunks: int = 3) -> str:
 
 @query("stream_ann_ingest", stream_ann_ingest_sql())
 def q_stream_ann_ingest(spark: SparkSession, sf: str) -> DataFrame:
-    """Streaming ANN index ingest (streaming/ann_ingest.py, round-8
-    capability): embeddings delivered as 3 micro-batch drops, each
+    """Streaming ANN index ingest (streaming/ann_ingest.py):
+    embeddings delivered as 3 micro-batch drops, each
     published exactly-once (marker protocol) into the cluster-partitioned
     IVF index; the query routes driver-side and scans only the probed
     cluster partition across all batch publishes. Oracle: the full-value
@@ -6824,40 +6841,20 @@ def q_stream_ann_ingest(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def stream_temporal_join_sql() -> str:
-    """Oracle for `stream_temporal_join`: the cdc_apply changelog
-    derivation with the %61/%37 chunk shifts, admission per chunk, the
-    events themselves as the probe stream in NATURAL day terciles, each
-    probe joined FOR SYSTEM_TIME AS OF its own batch via per-probe
-    argmax over ops admitted in chunks <= the probe's. Moved verbatim
-    from tests/test_temporal_join.py for the round-9 registration."""
-    return """
-    WITH base AS (
-      SELECT event_id, ts, user_id, event_type, value,
-             datediff('day', (SELECT MIN(CAST(ts AS DATE)) FROM events),
-                      CAST(ts AS DATE)) AS d_idx
+    """Oracle for `stream_temporal_join`: the stream_cdc_apply changelog
+    and admission, probed by the events themselves in their natural day
+    terciles. Each probe joins FOR SYSTEM_TIME AS OF its own batch: the
+    argmax over ops admitted in drops <= the probe's."""
+    return f"""
+    WITH ops AS (
+      SELECT {_changelog_ops_sql()}, {_late_drop_sql()} AS chunk
       FROM events
     ),
-    ops AS (
-      SELECT event_id AS op_id, ts AS op_ts, user_id AS key,
-             CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-             value,
-             LEAST(LEAST(CAST(d_idx // 10 AS BIGINT), 2)
-               + (CASE WHEN event_id % 61 = 0 THEN 2
-                       WHEN event_id % 37 = 0 THEN 1 ELSE 0 END), 2) AS chunk
-      FROM base
-    ),
-    mx AS (SELECT chunk, MAX(op_ts) AS mts FROM ops GROUP BY chunk),
-    adm AS (
-      SELECT o.* FROM ops o
-      WHERE o.op_ts > COALESCE(
-        (SELECT MAX(m.mts) FROM mx m WHERE m.chunk < o.chunk)
-          - INTERVAL 2 DAY,
-        TIMESTAMP '1970-01-01')
-    ),
+    {_admitted_sql("adm", "ops", "INTERVAL 2 DAY", ts="op_ts")},
     probes AS (
       SELECT event_id AS probe_id, ts AS probe_ts, user_id AS key,
-             LEAST(CAST(d_idx // 10 AS BIGINT), 2) AS pk
-      FROM base
+             {_day_tercile_sql()} AS pk
+      FROM events
     ),
     cand AS (
       SELECT p.probe_id, a.op, a.value, a.op_id,
@@ -6877,104 +6874,68 @@ def stream_temporal_join_sql() -> str:
     """
 
 
-@query("stream_temporal_join", stream_temporal_join_sql())
-def q_stream_temporal_join(spark: SparkSession, sf: str) -> DataFrame:
-    """Processing-time TEMPORAL JOIN against the CDC-maintained
-    dimension (streaming/temporal_join.py, round-8 capability): the
-    events changelog (cdc_apply rule) applied drop-by-drop, with the
-    events themselves as the probe stream in natural day terciles —
-    each probe drop enriched FOR SYSTEM_TIME AS OF its own batch
-    (Flink Table API temporal-join semantics made deterministic by the
-    drop boundaries). Oracle: the admission+per-probe-argmax replay, also
-    checked in tests/test_temporal_join.py."""
-    from flink_kafka_table_api_spark.streaming.temporal_join import (
-        stream_temporal_join,
-    )
-
+def _temporal_join_inputs(
+    spark: SparkSession, sf: str
+) -> tuple[DataFrame, DataFrame]:
+    """The stream_temporal_join inputs: the stream_cdc_apply changelog,
+    and the events as probes in their natural day terciles."""
     ev = _t(spark, sf, "events")
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    shift = (
-        F.when(F.col("event_id") % 61 == 0, F.lit(2))
-        .when(F.col("event_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
-    )
-    ops = ev.select(
-        F.col("event_id").alias("op_id"),
-        F.col("ts").cast("timestamp").alias("op_ts"),
-        F.col("user_id").alias("key"),
-        F.when(F.col("event_type") == "error", "D").otherwise("U")
-        .alias("op"),
-        "value",
-        F.least(natural + shift, F.lit(2)).alias("__chunk"),
-    )
+    natural = _day_tercile(_events_min_date(spark, sf))
     probes = ev.select(
         F.col("event_id").alias("probe_id"),
         F.col("ts").cast("timestamp").alias("probe_ts"),
         F.col("user_id").alias("key"),
         natural.alias("__chunk"),
     )
-    state = _scratch_dir("tempjoin", sf)
+    return _changelog_ops(ev, _late_drop(natural)), probes
+
+
+@query("stream_temporal_join", stream_temporal_join_sql())
+def q_stream_temporal_join(spark: SparkSession, sf: str) -> DataFrame:
+    """Processing-time temporal join against the CDC-maintained
+    dimension (streaming/temporal_join.py): the stream_cdc_apply
+    changelog applied drop by drop, each probe drop enriched FOR
+    SYSTEM_TIME AS OF its own batch (Flink Table API temporal-join
+    semantics, made deterministic by the drop boundaries)."""
+    from flink_kafka_table_api_spark.streaming.temporal_join import (
+        stream_temporal_join,
+    )
+
+    ops, probes = _temporal_join_inputs(spark, sf)
     return stream_temporal_join(
-        spark, ops, probes, state, n_chunks=3, delay="2 days",
+        spark, ops, probes, _scratch_dir("tempjoin", sf), n_chunks=3,
+        delay="2 days",
     )
 
 
 def stream_event_temporal_join_sql(
     dim_delay_days: int = 2, probe_delay_days: int = 1
 ) -> str:
-    """Oracle for `stream_event_temporal_join`: events as both the
-    changelog (the scd2 derivation, %61/%37 chunk shifts) and the probe
-    stream (%53/%41 shifts), per-side admission, per-batch emission
-    horizons H_k = min(W_dim_k, W_probe_k), emission batch = first
-    k >= arrival chunk with H_k >= probe_ts (else 3, the flush), and
-    the point-in-time join against the LEAD-chained history. Moved
-    verbatim from tests/test_event_temporal_join.py for the round-9
-    registration."""
-    d0 = "(SELECT MIN(CAST(ts AS DATE)) FROM events)"
-    nat = (
-        f"LEAST(CAST(datediff('day', {d0}, CAST(ts AS DATE)) // 10 "
-        "AS BIGINT), 2)"
-    )
+    """Oracle for `stream_event_temporal_join`: the stream_cdc_apply
+    changelog as the dimension and the events in the probe schedule as
+    probes, each side admitted under its own watermark. A probe emits at
+    the first batch k >= its drop whose horizon
+    H_k = min(W_dim_k, W_probe_k) reaches its probe_ts (else batch 3,
+    the flush), joined point-in-time against the LEAD-chained history."""
     return f"""
     WITH ops AS (
-      SELECT event_id AS op_id, ts AS op_ts, user_id AS key,
-             CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-             value,
-             LEAST({nat} + (CASE WHEN event_id % 61 = 0 THEN 2
-                                 WHEN event_id % 37 = 0 THEN 1
-                                 ELSE 0 END), 2) AS chunk
+      SELECT {_changelog_ops_sql()}, {_late_drop_sql()} AS chunk
       FROM events
     ),
     probes AS (
       SELECT event_id AS probe_id, ts AS probe_ts, user_id AS key,
-             LEAST({nat} + (CASE WHEN event_id % 53 = 0 THEN 2
-                                 WHEN event_id % 41 = 0 THEN 1
-                                 ELSE 0 END), 2) AS chunk
+             {_late_drop_sql(probe=True)} AS chunk
       FROM events
     ),
-    dmx AS (SELECT chunk, MAX(op_ts) AS m FROM ops GROUP BY chunk),
-    pmx AS (SELECT chunk, MAX(probe_ts) AS m FROM probes GROUP BY chunk),
-    adm_ops AS (
-      SELECT o.* FROM ops o
-      WHERE o.op_ts > COALESCE(
-        (SELECT MAX(m) FROM dmx WHERE chunk < o.chunk)
-          - INTERVAL {dim_delay_days} DAY,
-        TIMESTAMP '1970-01-01')
-    ),
-    adm_probes AS (
-      SELECT p.* FROM probes p
-      WHERE p.probe_ts > COALESCE(
-        (SELECT MAX(m) FROM pmx WHERE chunk < p.chunk)
-          - INTERVAL {probe_delay_days} DAY,
-        TIMESTAMP '1970-01-01')
-    ),
+    {_admitted_sql("adm_ops", "ops", f"INTERVAL {dim_delay_days} DAY",
+                   ts="op_ts")},
+    {_admitted_sql("adm_probes", "probes",
+                   f"INTERVAL {probe_delay_days} DAY", ts="probe_ts")},
     horiz AS (
       SELECT k.k, LEAST(
-        (SELECT MAX(m) FROM dmx WHERE chunk <= k.k)
+        (SELECT MAX(m) FROM adm_ops_mx WHERE chunk <= k.k)
           - INTERVAL {dim_delay_days} DAY,
-        (SELECT MAX(m) FROM pmx WHERE chunk <= k.k)
+        (SELECT MAX(m) FROM adm_probes_mx WHERE chunk <= k.k)
           - INTERVAL {probe_delay_days} DAY) AS h
       FROM (VALUES (0), (1), (2)) AS k(k)
     ),
@@ -7000,58 +6961,39 @@ def stream_event_temporal_join_sql(
     """
 
 
-@query("stream_event_temporal_join", stream_event_temporal_join_sql())
-def q_stream_event_temporal_join(spark: SparkSession, sf: str) -> DataFrame:
-    """Watermark-synchronized EVENT-TIME temporal join
-    (streaming/event_temporal_join.py, round-8 capability): the events
-    changelog (scd2 chunk rule, %61/%37 shifts, 2-day watermark)
-    maintained as the SCD2 versioned dimension, probed by the events
-    themselves as an out-of-order probe stream (%53/%41 shifts, 1-day
-    watermark); each probe buffers until min(dim, probe) watermark
-    passes its OWN event time, then joins the version valid AT that
-    time — Flink's FOR SYSTEM_TIME AS OF p.event_time against a
-    versioned table, with the emission-batch schedule part of the
-    checked result. Oracle: the full replay (both admissions + LEAD chaining
-    + point-in-time join + horizons), also checked in
-    tests/test_event_temporal_join.py."""
-    from flink_kafka_table_api_spark.streaming.event_temporal_join import (
-        stream_event_temporal_join,
-    )
-
+def _event_temporal_join_inputs(
+    spark: SparkSession, sf: str
+) -> tuple[DataFrame, DataFrame]:
+    """The stream_event_temporal_join inputs: the stream_cdc_apply
+    changelog, and the events as probes in the probe schedule."""
     ev = _t(spark, sf, "events")
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    ops = ev.select(
-        F.col("event_id").alias("op_id"),
-        F.col("ts").cast("timestamp").alias("op_ts"),
-        F.col("user_id").alias("key"),
-        F.when(F.col("event_type") == "error", "D").otherwise("U")
-        .alias("op"),
-        "value",
-        F.least(
-            natural
-            + F.when(F.col("event_id") % 61 == 0, F.lit(2))
-            .when(F.col("event_id") % 37 == 0, F.lit(1))
-            .otherwise(F.lit(0)),
-            F.lit(2),
-        ).alias("__chunk"),
-    )
+    natural = _day_tercile(_events_min_date(spark, sf))
     probes = ev.select(
         F.col("event_id").alias("probe_id"),
         F.col("ts").cast("timestamp").alias("probe_ts"),
         F.col("user_id").alias("key"),
-        F.least(
-            natural
-            + F.when(F.col("event_id") % 53 == 0, F.lit(2))
-            .when(F.col("event_id") % 41 == 0, F.lit(1))
-            .otherwise(F.lit(0)),
-            F.lit(2),
-        ).alias("__chunk"),
+        _late_drop(natural, probe=True).alias("__chunk"),
     )
-    state = _scratch_dir("evtempjoin", sf)
+    return _changelog_ops(ev, _late_drop(natural)), probes
+
+
+@query("stream_event_temporal_join", stream_event_temporal_join_sql())
+def q_stream_event_temporal_join(spark: SparkSession, sf: str) -> DataFrame:
+    """Watermark-synchronized event-time temporal join
+    (streaming/event_temporal_join.py): the stream_cdc_apply changelog
+    kept as the SCD2 versioned dimension under a 2-day watermark, probed
+    by the events in the probe schedule under a 1-day watermark. Each
+    probe waits until min(dim, probe) watermark passes its own event
+    time, then joins the version valid at that time: Flink's FOR
+    SYSTEM_TIME AS OF p.event_time, with the emission batch part of the
+    checked result."""
+    from flink_kafka_table_api_spark.streaming.event_temporal_join import (
+        stream_event_temporal_join,
+    )
+
+    ops, probes = _event_temporal_join_inputs(spark, sf)
     return stream_event_temporal_join(
-        spark, ops, probes, state,
+        spark, ops, probes, _scratch_dir("evtempjoin", sf),
         n_chunks=3, dim_delay="2 days", probe_delay="1 day",
         # bin-based range join on the emission lookup: without it a
         # zipf-hot key pays |probes| x |versions| candidates (measured
@@ -7062,18 +7004,13 @@ def q_stream_event_temporal_join(spark: SparkSession, sf: str) -> DataFrame:
 
 def stream_topn_retract_sql(n: int = 10) -> str:
     """Oracle for `stream_topn_retract`: events as the update stream
-    (key=user_id, natural day terciles), per-batch cumulative
-    DECIMAL(25,6) sums, ROW_NUMBER ranking, consecutive-snapshot diff
-    into RowKind ops. Moved verbatim from tests/test_retract_topn.py
-    for the round-9 registration."""
-    d0 = "(SELECT MIN(CAST(ts AS DATE)) FROM events)"
-    nat = (
-        f"LEAST(CAST(datediff('day', {d0}, CAST(ts AS DATE)) // 10 "
-        "AS BIGINT), 2)"
-    )
+    (key=user_id) in natural day terciles, per-batch cumulative
+    DECIMAL(25,6) sums ranked by ROW_NUMBER, and consecutive Top-N
+    snapshots diffed into RowKind ops."""
     return f"""
     WITH rows_ AS (
-      SELECT user_id AS key, value, {nat} AS chunk FROM events
+      SELECT user_id AS key, value, {_day_tercile_sql()} AS chunk
+      FROM events
     ),
     snaps AS (
       SELECT k.k, r.key,
@@ -7091,62 +7028,32 @@ def stream_topn_retract_sql(n: int = 10) -> str:
         FROM snaps)
       WHERE rnk <= {n}
     ),
-    paired AS (
-      SELECT COALESCE(n.k, o.k + 1) AS batch_id,
-             COALESCE(n.key, o.key) AS key,
-             o.total AS ototal, o.rnk AS ornk,
-             n.total AS ntotal, n.rnk AS nrnk
-      FROM topn n
-      FULL OUTER JOIN topn o ON o.k = n.k - 1 AND o.key = n.key
-      WHERE COALESCE(n.k, o.k + 1) <= 2
-    )
-    SELECT '+I' AS op, key, CAST(ntotal AS DOUBLE) AS total,
-           nrnk AS rnk, CAST(batch_id AS BIGINT) AS batch_id
-    FROM paired WHERE ornk IS NULL
-    UNION ALL
-    SELECT '-D', key, CAST(ototal AS DOUBLE), ornk,
-           CAST(batch_id AS BIGINT)
-    FROM paired WHERE nrnk IS NULL
-    UNION ALL
-    SELECT '-U', key, CAST(ototal AS DOUBLE), ornk,
-           CAST(batch_id AS BIGINT)
-    FROM paired
-    WHERE ornk IS NOT NULL AND nrnk IS NOT NULL
-      AND (ototal <> ntotal OR ornk <> nrnk)
-    UNION ALL
-    SELECT '+U', key, CAST(ntotal AS DOUBLE), nrnk,
-           CAST(batch_id AS BIGINT)
-    FROM paired
-    WHERE ornk IS NOT NULL AND nrnk IS NOT NULL
-      AND (ototal <> ntotal OR ornk <> nrnk)
+    {_rowkind_diff_sql("topn", "key", ("total", "rnk"))}
     """
 
 
 @query("stream_topn_retract", stream_topn_retract_sql())
 def q_stream_topn_retract(spark: SparkSession, sf: str) -> DataFrame:
-    """Retract-stream Top-N (streaming/retract.py, round-8 capability):
-    Flink's Rank operator over an UPDATE stream — the running
-    SUM(value)-per-user Top-10 maintained across 3 event drops, emitted
-    as the RowKind changelog (+I/-U/+U/-D; toRetractStream semantics,
-    org.apache.flink.types.RowKind — public API). Totals accumulate in
-    DECIMAL(25,6) (the repo-wide order-free rule). Oracle: the snapshot-diff
-    replay, also checked in tests/test_retract_topn.py."""
+    """Retract-stream Top-N (streaming/retract.py): Flink's Rank operator
+    over an update stream. The running SUM(value)-per-user Top-10 is kept
+    across the 3 natural day-tercile drops and emitted as the RowKind
+    changelog +I/-U/+U/-D (toRetractStream semantics,
+    org.apache.flink.types.RowKind). Totals accumulate in DECIMAL(25,6),
+    the repo-wide order-free rule."""
     from flink_kafka_table_api_spark.streaming.retract import (
         stream_topn_retract,
     )
 
     ev = _t(spark, sf, "events")
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
     rows = ev.select(
         F.col("event_id").alias("row_id"),
         F.col("user_id").alias("key"),
         "value",
-        F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-        .alias("__chunk"),
+        _day_tercile(_events_min_date(spark, sf)).alias("__chunk"),
     )
-    state = _scratch_dir("topnretract", sf)
-    return stream_topn_retract(spark, rows, state, n_chunks=3, n=10)
+    return stream_topn_retract(
+        spark, rows, _scratch_dir("topnretract", sf), n_chunks=3, n=10
+    )
 
 
 def match_recognize_sql() -> str:
@@ -7155,9 +7062,7 @@ def match_recognize_sql() -> str:
     a purchase row closes a match iff the last non-click row before it
     is a view at distance >= 2 (so the run between is all clicks, i.e.
     PATTERN (view click+ purchase) with greedy click+ and
-    skip-past-last-row, which never overlaps for disjoint classes).
-    Moved verbatim from tests/test_cep.py for the round-9
-    registration."""
+    skip-past-last-row, which never overlaps for disjoint classes)."""
     return """
     WITH seq AS (
       SELECT user_id, event_id, ts, value,
@@ -7193,8 +7098,8 @@ def match_recognize_sql() -> str:
 
 @query("match_recognize", match_recognize_sql())
 def q_match_recognize(spark: SparkSession, sf: str) -> DataFrame:
-    """MATCH_RECOGNIZE row-pattern matching (operators/cep.py, round-8
-    capability): the SQL:2016 / Flink SQL CEP surface — per user,
+    """MATCH_RECOGNIZE row-pattern matching (operators/cep.py): the
+    SQL:2016 / Flink SQL CEP surface — per user,
     PATTERN (view click+ purchase) over the events sequence, greedy,
     non-overlapping (AFTER MATCH SKIP PAST LAST ROW), ONE ROW PER MATCH
     with aggregated measures. The engine runs the generic classify ->
@@ -7228,32 +7133,17 @@ def q_match_recognize(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def stream_match_recognize_sql() -> str:
-    """Oracle for `stream_match_recognize`: watermark admission (the
-    scd2 chunk rule), then the SAME window-function funnel detection as
-    the batch CEP oracle — because the flush makes the streamed total
-    equal the batch scan over admitted rows. Moved verbatim from
-    tests/test_stream_cep.py for the round-9 registration."""
-    d0 = "(SELECT MIN(CAST(ts AS DATE)) FROM events)"
-    nat = (
-        f"LEAST(CAST(datediff('day', {d0}, CAST(ts AS DATE)) // 10 "
-        "AS BIGINT), 2)"
-    )
+    """Oracle for `stream_match_recognize`: events in the delivery
+    schedule with per-row admission, then the window-function funnel
+    detection of the batch match_recognize oracle. The flush makes the
+    streamed total equal the batch scan over the admitted rows."""
     return f"""
     WITH raw AS (
       SELECT event_id, ts, user_id, event_type, value,
-             LEAST({nat} + (CASE WHEN event_id % 61 = 0 THEN 2
-                                 WHEN event_id % 37 = 0 THEN 1
-                                 ELSE 0 END), 2) AS chunk
+             {_late_drop_sql()} AS chunk
       FROM events
     ),
-    mx AS (SELECT chunk, MAX(ts) AS m FROM raw GROUP BY chunk),
-    adm AS (
-      SELECT r.* FROM raw r
-      WHERE r.ts > COALESCE(
-        (SELECT MAX(m) FROM mx WHERE chunk < r.chunk)
-          - INTERVAL 2 DAY,
-        TIMESTAMP '1970-01-01')
-    ),
+    {_admitted_sql("adm", "raw", "INTERVAL 2 DAY")},
     seq AS (
       SELECT user_id, event_id, ts, value,
              CASE WHEN event_type = 'view' THEN 'A'
@@ -7284,38 +7174,24 @@ def stream_match_recognize_sql() -> str:
 
 @query("stream_match_recognize", stream_match_recognize_sql())
 def q_stream_match_recognize(spark: SparkSession, sf: str) -> DataFrame:
-    """Streaming MATCH_RECOGNIZE (streaming/stream_cep.py, round-8
-    capability): the funnel PATTERN (view click+ purchase) per user
-    over the events stream delivered as 3 out-of-order drops (%61/%37
-    shifts) under a 2-day watermark — incremental CEP with
-    watermark-gated emission (a match emits when the watermark freezes
-    a row past its end; open-tail matches stay pending and absorb late
-    splices). The flush makes the total equal the batch
-    match_recognize over admitted rows, which is what the oracle
-    replays. Also checked in tests/test_stream_cep.py."""
+    """Streaming MATCH_RECOGNIZE (streaming/stream_cep.py): the funnel
+    PATTERN (view click+ purchase) per user over events in the delivery
+    schedule under a 2-day watermark. A match emits once the watermark
+    freezes a row past its end; open-tail matches stay pending and
+    absorb late rows."""
     from flink_kafka_table_api_spark.streaming.stream_cep import (
         stream_match_recognize,
     )
 
-    ev = _t(spark, sf, "events")
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    chunked = ev.select(
+    chunked = _t(spark, sf, "events").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "user_id", "event_type", "value",
-        F.least(
-            natural
-            + F.when(F.col("event_id") % 61 == 0, F.lit(2))
-            .when(F.col("event_id") % 37 == 0, F.lit(1))
-            .otherwise(F.lit(0)),
-            F.lit(2),
-        ).alias("__chunk"),
+        _late_drop(_day_tercile(_events_min_date(spark, sf)))
+        .alias("__chunk"),
     )
-    state = _scratch_dir("streamcep", sf)
     return stream_match_recognize(
-        spark, chunked, state, n_chunks=3, delay="2 days",
-        key_col="user_id", ts_col="ts", id_col="event_id",
+        spark, chunked, _scratch_dir("streamcep", sf), n_chunks=3,
+        delay="2 days", key_col="user_id", ts_col="ts", id_col="event_id",
         define=[
             ("V", F.col("event_type") == "view"),
             ("K", F.col("event_type") == "click"),
@@ -7333,8 +7209,7 @@ def q_stream_match_recognize(spark: SparkSession, sf: str) -> DataFrame:
 def data_expectations_sql() -> str:
     """Oracle for `data_expectations`: one UNION ALL branch per
     TESTDATA_CONTRACT rule, counts via CASE / COUNT DISTINCT /
-    NOT EXISTS. Moved verbatim from tests/test_expectations.py for the
-    round-9 registration."""
+    NOT EXISTS."""
     def row(rule, table, column, n):
         return f"""
         SELECT '{rule}' AS rule, '{table}' AS "table",
@@ -7384,8 +7259,8 @@ def data_expectations_sql() -> str:
 
 @query("data_expectations", data_expectations_sql())
 def q_data_expectations(spark: SparkSession, sf: str) -> DataFrame:
-    """Declarative data-expectations report (operators/expectations.py,
-    round-8 capability): an 11-rule contract over 7 tables — not_null,
+    """Declarative data-expectations report (operators/expectations.py):
+    an 11-rule contract over 7 tables — not_null,
     unique, accepted_values, in_range, and three referential-integrity
     relationships — compiled so every aggregate-shaped rule on a table
     fuses into ONE scan (plan-pinned) and each relationship is one
@@ -7432,8 +7307,7 @@ def stream_profile_sql() -> str:
     ranges/distincts over the whole corpus, plus the literal TRUE the
     Spark side must EARN via the HLL++ tolerance boolean (the
     approx_distinct precedent — the estimate itself is engine-specific,
-    its accuracy contract is not). Moved verbatim from
-    tests/test_stream_profile.py for the round-9 registration."""
+    its accuracy contract is not)."""
     from flink_kafka_table_api_spark.streaming.profile_monitor import (
         EVENTS_SPEC,
     )
@@ -7446,12 +7320,11 @@ def stream_profile_sql() -> str:
 @query("stream_profile", stream_profile_sql())
 def q_stream_profile(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming incremental profile monitor
-    (streaming/profile_monitor.py, round-8 capability): per-batch
-    mergeable column partials (counts, typed ranges, HLL sketches) over
-    4 event drops, folded into the live profile; the gate form joins a
-    verification-only exact-distinct pass and asserts the HLL++ 4-sigma
-    tolerance boolean (the approx_distinct precedent). Oracle: the exact
-    per-column replay, also checked in tests/test_stream_profile.py."""
+    (streaming/profile_monitor.py): per-batch mergeable column partials
+    (counts, typed ranges, HLL sketches) over 4 event drops, folded into
+    the live profile. The query joins a verification-only exact-distinct
+    pass and reports the HLL++ tolerance boolean (the approx_distinct
+    precedent)."""
     from flink_kafka_table_api_spark.streaming.profile_monitor import (
         EVENTS_SPEC,
         stream_profile,
@@ -7523,8 +7396,8 @@ def cumulate_windows_sql(*, step: int = 21600, size_steps: int = 4) -> str:
 
 @query("cumulate_windows", cumulate_windows_sql())
 def q_cumulate_windows(spark: SparkSession, sf: str) -> DataFrame:
-    """Flink CUMULATE windowing TVF (streaming/cumulate.py, round-8
-    capability): per event_type, the expanding 6h/12h/18h/24h
+    """Flink CUMULATE windowing TVF (streaming/cumulate.py): per
+    event_type, the expanding 6h/12h/18h/24h
     day-so-far totals — CUMULATE(step=6h, size=1d). Two-stage plan: ONE
     step-tumbling partial aggregate (never the 4x input explosion of
     the naive port), then the output-sized spine + running merge.
@@ -7555,40 +7428,22 @@ def q_cumulate_windows(spark: SparkSession, sf: str) -> DataFrame:
 def stream_cumulate_sql(
     *, step: int = 21600, size_steps: int = 4, delay_days: int = 2
 ) -> str:
-    """Oracle for `stream_cumulate`: the stream_late_events admission
-    replay (chunk terciles, %37/%61 late shifts, a row drops iff its
-    STEP slice was already evicted), per-step partials over the admitted
-    rows, the closed-slice bound (slice_end <= max(ALL ts) - delay),
-    then the cumulate spine + running merge over the closed slices."""
+    """Oracle for `stream_cumulate`: the stream_late_events replay with
+    6h step slices in place of 1-day windows (a row drops iff its slice
+    was evicted), per-step partials over the admitted rows closed by
+    the terminal watermark, then the cumulate spine and running merge."""
     size = step * size_steps
+    slice_end = (
+        f"CAST(to_timestamp((epoch(r.ts)::BIGINT // {step} + 1) * {step})"
+        " AS TIMESTAMP)"
+    )
     return f"""
-    WITH base AS (
-      SELECT event_id, ts, event_type, value,
-             datediff('day',
-                      (SELECT MIN(CAST(ts AS DATE)) FROM events),
-                      CAST(ts AS DATE)) AS d_idx
+    WITH chun AS (
+      SELECT event_id, ts, event_type, value, {_late_drop_sql()} AS chunk
       FROM events
     ),
-    chun AS (
-      SELECT *, LEAST(LEAST(CAST(d_idx // 10 AS BIGINT), 2)
-             + (CASE WHEN event_id % 61 = 0 THEN 2
-                     WHEN event_id % 37 = 0 THEN 1 ELSE 0 END), 2) AS chunk
-      FROM base
-    ),
-    mx AS (SELECT chunk, MAX(ts) AS mts FROM chun GROUP BY chunk),
-    horizon AS (
-      SELECT c.chunk,
-             (SELECT MAX(m.mts) FROM mx m WHERE m.chunk <= c.chunk - 2)
-               - INTERVAL {delay_days} DAY AS evicted_before
-      FROM (SELECT DISTINCT chunk FROM chun) c
-    ),
-    admitted AS (
-      SELECT ch.ts, ch.event_type, ch.value
-      FROM chun ch JOIN horizon h ON ch.chunk = h.chunk
-      WHERE h.evicted_before IS NULL
-         OR CAST(to_timestamp((epoch(ch.ts)::BIGINT // {step} + 1)
-                              * {step}) AS TIMESTAMP) > h.evicted_before
-    ),
+    {_admitted_sql("admitted", "chun", f"INTERVAL {delay_days} DAY",
+                   admit_by=slice_end, lag=2)},
     part AS (
       SELECT CAST(to_timestamp((epoch(ts)::BIGINT // {step} + 1) * {step})
                AS TIMESTAMP) AS slice_end,
@@ -7634,20 +7489,14 @@ def stream_cumulate_sql(
 
 @query("stream_cumulate", stream_cumulate_sql())
 def q_stream_cumulate(spark: SparkSession, sf: str) -> DataFrame:
-    """CUMULATE through the REAL streaming engine (round-8 capability):
-    the events corpus staged as 3 out-of-order drops (the
-    stream_late_events chunk rule), watermark(2 days) -> step-tumbling
-    6h APPEND aggregate on the engine (stage 1: Spark's own admission,
-    state eviction, emission), then the batch cumulate merge over the
-    CLOSED slices (stage 2, streaming/cumulate.py). Emitted rows are
-    the day-so-far totals the cumulate TVF would have fired, bounded by
-    the terminal watermark. Oracle: the admission+spine+merge replay, also
-    checked in tests/test_cumulate.py."""
+    """CUMULATE through Spark's own streaming engine: events in the
+    delivery schedule, watermark(2 days) -> step-tumbling 6h APPEND
+    aggregate (stage 1: Spark's own admission, eviction and emission),
+    then the batch cumulate merge over the closed slices (stage 2,
+    streaming/cumulate.py). The emitted rows are the day-so-far totals
+    the CUMULATE TVF fires, bounded by the terminal watermark."""
     from flink_kafka_table_api_spark.streaming.cumulate import (
         cumulate_finalize,
-    )
-    from flink_kafka_table_api_spark.streaming.late_data import (
-        stage_chunked_by,
     )
 
     step, size_steps = 21600, 4
@@ -7655,26 +7504,12 @@ def q_stream_cumulate(spark: SparkSession, sf: str) -> DataFrame:
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "event_type", "value",
     )
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    shift = (
-        F.when(F.col("event_id") % 61 == 0, F.lit(2))
-        .when(F.col("event_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
+    chunked = ev.withColumn(
+        "__chunk", _late_drop(_day_tercile(_events_min_date(spark, sf)))
     )
-    chunked = ev.withColumn("__chunk", F.least(natural + shift, F.lit(2)))
-    state = _scratch_dir("cumustream", sf)
-    src = stage_chunked_by(
-        chunked, os.path.join(state, "src"), n_chunks=3,
-        columns=["event_id", "ts", "event_type", "value"],
-    )
-    stream = (
-        spark.readStream
-        .schema("event_id long, ts timestamp, event_type string, "
-                "value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = _staged_stream(
+        spark, chunked, _scratch_dir("cumustream", sf),
+        "event_id long, ts timestamp, event_type string, value double",
     )
     partial = (
         sw.with_watermark(stream, "ts", "2 days")
@@ -7702,46 +7537,26 @@ def q_stream_cumulate(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def stream_over_agg_sql(
-    *, range_seconds: int = 86400, delay_days: int = 2
-) -> str:
-    """Oracle for `stream_over_agg` (streaming/over_agg.py): replay the
-    deterministic out-of-order delivery (the stream_late_events chunk
-    rule), per-ROW admission ts > max(ts over earlier chunks) - delay,
-    the terminal-watermark emission bound (ts <= max(ALL ts) - delay),
-    then ONE batch window function over the admitted subset — the
-    completeness argument in the module docstring is exactly why the
-    incremental run equals this single pass."""
+def _over_agg_sql(frame: str, delay_days: int) -> str:
+    """Oracle shared by the OVER aggregates (streaming/over_agg.py):
+    events in the delivery schedule with per-row admission, ONE batch
+    window function with ``frame`` over the admitted rows, and the
+    terminal-watermark emission bound ts <= max(ts) - delay. The
+    completeness argument in the module docstring is why the incremental
+    run equals this single pass."""
     return f"""
-    WITH base AS (
+    WITH chun AS (
       SELECT event_id AS row_id, ts, user_id AS key, value,
-             datediff('day',
-                      (SELECT MIN(CAST(ts AS DATE)) FROM events),
-                      CAST(ts AS DATE)) AS d_idx
+             {_late_drop_sql()} AS chunk
       FROM events
     ),
-    chun AS (
-      SELECT *, LEAST(LEAST(CAST(d_idx // 10 AS BIGINT), 2)
-             + (CASE WHEN row_id % 61 = 0 THEN 2
-                     WHEN row_id % 37 = 0 THEN 1 ELSE 0 END), 2) AS chunk
-      FROM base
-    ),
-    mx AS (SELECT chunk, MAX(ts) AS mts FROM chun GROUP BY chunk),
-    adm AS (
-      SELECT c.row_id, c.ts, c.key, c.value FROM chun c
-      WHERE c.ts > COALESCE(
-        (SELECT MAX(m.mts) FROM mx m WHERE m.chunk < c.chunk)
-          - INTERVAL {delay_days} DAY,
-        TIMESTAMP '1970-01-01')
-    ),
+    {_admitted_sql("adm", "chun", f"INTERVAL {delay_days} DAY")},
     agg AS (
       SELECT row_id, ts, key, value,
              CAST(COUNT(*) OVER pre AS BIGINT) AS n_win,
              CAST(SUM(CAST(value AS {DEC})) OVER pre AS DOUBLE) AS sum_win
       FROM adm
-      WINDOW pre AS (PARTITION BY key ORDER BY epoch(ts)::BIGINT
-                     RANGE BETWEEN {range_seconds} PRECEDING
-                     AND CURRENT ROW)
+      WINDOW pre AS (PARTITION BY key {frame})
     )
     SELECT a.* FROM agg a,
          (SELECT MAX(ts) - INTERVAL {delay_days} DAY AS w FROM events) wm
@@ -7749,158 +7564,95 @@ def stream_over_agg_sql(
     """
 
 
-@query("stream_over_agg", stream_over_agg_sql())
-def q_stream_over_agg(spark: SparkSession, sf: str) -> DataFrame:
-    """Event-time OVER aggregation on a stream (streaming/over_agg.py,
-    round-8 capability): Flink's `SUM(value) OVER (PARTITION BY key
-    ORDER BY ts RANGE INTERVAL '1' DAY PRECEDING)` — one output row per
-    input row, emitted once the watermark passes its event time — over
-    the events corpus as 3 out-of-order drops (the stream_late_events
-    chunk rule), watermark 2 days, preceding range 1 day per user_id.
-    Spark streaming has no window functions; the foreachBatch state
-    machine carries exactly Flink's OVER-window state (preceding-range
-    context + out-of-orderness buffer). Oracle: the admission+window replay,
-    also checked in tests/test_over_agg.py."""
-    from flink_kafka_table_api_spark.streaming.over_agg import (
-        stream_over_agg,
+def stream_over_agg_sql(
+    *, range_seconds: int = 86400, delay_days: int = 2
+) -> str:
+    """Oracle for `stream_over_agg`: the event-time RANGE frame."""
+    return _over_agg_sql(
+        f"""ORDER BY epoch(ts)::BIGINT
+                     RANGE BETWEEN {range_seconds} PRECEDING
+                     AND CURRENT ROW""",
+        delay_days,
     )
 
-    ev = _t(spark, sf, "events")
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    shift = (
-        F.when(F.col("event_id") % 61 == 0, F.lit(2))
-        .when(F.col("event_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
-    )
-    rows = ev.select(
+
+def _over_agg_rows(spark: SparkSession, sf: str) -> DataFrame:
+    """The OVER-aggregate input: events in the delivery schedule as
+    (row_id, ts, key=user_id, value)."""
+    return _t(spark, sf, "events").select(
         F.col("event_id").alias("row_id"),
         F.col("ts").cast("timestamp").alias("ts"),
         F.col("user_id").alias("key"),
         "value",
-        F.least(natural + shift, F.lit(2)).alias("__chunk"),
+        _late_drop(_day_tercile(_events_min_date(spark, sf)))
+        .alias("__chunk"),
     )
-    state = _scratch_dir("overagg", sf)
+
+
+@query("stream_over_agg", stream_over_agg_sql())
+def q_stream_over_agg(spark: SparkSession, sf: str) -> DataFrame:
+    """Event-time OVER aggregation on a stream (streaming/over_agg.py):
+    Flink's `SUM(value) OVER (PARTITION BY key ORDER BY ts RANGE
+    INTERVAL '1' DAY PRECEDING)`, one output row per input row, emitted
+    once the watermark passes its event time, over events in the
+    delivery schedule with a 2-day watermark. Spark streaming has no
+    window functions; the foreachBatch state machine carries Flink's
+    OVER-window state (preceding-range context plus out-of-orderness
+    buffer)."""
+    from flink_kafka_table_api_spark.streaming.over_agg import (
+        stream_over_agg,
+    )
+
     return stream_over_agg(
-        spark, rows, state, n_chunks=3, delay="2 days",
-        range_seconds=86400,
+        spark, _over_agg_rows(spark, sf), _scratch_dir("overagg", sf),
+        n_chunks=3, delay="2 days", range_seconds=86400,
     )
 
 
 def stream_over_rows_sql(
     *, n_preceding: int = 5, delay_days: int = 2
 ) -> str:
-    """Oracle for `stream_over_rows` (streaming/over_agg.py, ROWS
-    frame): same admission/emission replay as stream_over_agg_sql, the
-    window frame counted over the deterministic (ts, row_id) total
-    order instead of the event-time range."""
-    return f"""
-    WITH base AS (
-      SELECT event_id AS row_id, ts, user_id AS key, value,
-             datediff('day',
-                      (SELECT MIN(CAST(ts AS DATE)) FROM events),
-                      CAST(ts AS DATE)) AS d_idx
-      FROM events
-    ),
-    chun AS (
-      SELECT *, LEAST(LEAST(CAST(d_idx // 10 AS BIGINT), 2)
-             + (CASE WHEN row_id % 61 = 0 THEN 2
-                     WHEN row_id % 37 = 0 THEN 1 ELSE 0 END), 2) AS chunk
-      FROM base
-    ),
-    mx AS (SELECT chunk, MAX(ts) AS mts FROM chun GROUP BY chunk),
-    adm AS (
-      SELECT c.row_id, c.ts, c.key, c.value FROM chun c
-      WHERE c.ts > COALESCE(
-        (SELECT MAX(m.mts) FROM mx m WHERE m.chunk < c.chunk)
-          - INTERVAL {delay_days} DAY,
-        TIMESTAMP '1970-01-01')
-    ),
-    agg AS (
-      SELECT row_id, ts, key, value,
-             CAST(COUNT(*) OVER pre AS BIGINT) AS n_win,
-             CAST(SUM(CAST(value AS {DEC})) OVER pre AS DOUBLE) AS sum_win
-      FROM adm
-      WINDOW pre AS (PARTITION BY key
-                     ORDER BY epoch(ts)::BIGINT, row_id
+    """Oracle for `stream_over_rows`: the ROWS frame, counted over the
+    deterministic (ts, row_id) total order."""
+    return _over_agg_sql(
+        f"""ORDER BY epoch(ts)::BIGINT, row_id
                      ROWS BETWEEN {n_preceding} PRECEDING
-                     AND CURRENT ROW)
+                     AND CURRENT ROW""",
+        delay_days,
     )
-    SELECT a.* FROM agg a,
-         (SELECT MAX(ts) - INTERVAL {delay_days} DAY AS w FROM events) wm
-    WHERE a.ts <= wm.w
-    """
 
 
 @query("stream_over_rows", stream_over_rows_sql())
 def q_stream_over_rows(spark: SparkSession, sf: str) -> DataFrame:
-    """ROWS-frame OVER aggregation on a stream (streaming/over_agg.py,
-    round-8 capability): Flink's `... OVER (PARTITION BY key ORDER BY
-    ts ROWS BETWEEN 5 PRECEDING AND CURRENT ROW)` — with stream_over_agg
-    this completes Flink's OVER-window class (RANGE + ROWS). The
-    context tail is the key's LAST 5 emitted rows (count-bounded state)
-    instead of a time range. Oracle: the replay, also checked in
-    tests/test_over_agg.py."""
+    """ROWS-frame OVER aggregation on a stream (streaming/over_agg.py):
+    Flink's `... OVER (PARTITION BY key ORDER BY ts ROWS BETWEEN 5
+    PRECEDING AND CURRENT ROW)`, which with stream_over_agg covers
+    Flink's OVER-window class (RANGE and ROWS). The context tail is the
+    key's last 5 emitted rows (count-bounded state)."""
     from flink_kafka_table_api_spark.streaming.over_agg import (
         stream_over_rows_agg,
     )
 
-    ev = _t(spark, sf, "events")
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    shift = (
-        F.when(F.col("event_id") % 61 == 0, F.lit(2))
-        .when(F.col("event_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
-    )
-    rows = ev.select(
-        F.col("event_id").alias("row_id"),
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("user_id").alias("key"),
-        "value",
-        F.least(natural + shift, F.lit(2)).alias("__chunk"),
-    )
-    state = _scratch_dir("overrows", sf)
     return stream_over_rows_agg(
-        spark, rows, state, n_chunks=3, delay="2 days", n_preceding=5,
+        spark, _over_agg_rows(spark, sf), _scratch_dir("overrows", sf),
+        n_chunks=3, delay="2 days", n_preceding=5,
     )
 
 
 def stream_window_dedup_sql(*, delay_days: int = 2) -> str:
     """Oracle for `stream_window_dedup` (Flink's Window Deduplication
-    TVF: ROW_NUMBER()=1 per window+key by event time): the
-    stream_late_events admission replay (1-day windows), per
-    (window, user) argmin by the (ts, event_id) total order, closed
-    windows only."""
+    TVF: ROW_NUMBER() = 1 per window and key by event time): the
+    stream_late_events replay, then per (1-day window, user) the argmin
+    by the (ts, event_id) total order, closed windows only."""
     return f"""
-    WITH base AS (
+    WITH chun AS (
       SELECT event_id, ts, user_id, event_type, value,
-             datediff('day',
-                      (SELECT MIN(CAST(ts AS DATE)) FROM events),
-                      CAST(ts AS DATE)) AS d_idx
+             {_late_drop_sql()} AS chunk
       FROM events
     ),
-    chun AS (
-      SELECT *, LEAST(LEAST(CAST(d_idx // 10 AS BIGINT), 2)
-             + (CASE WHEN event_id % 61 = 0 THEN 2
-                     WHEN event_id % 37 = 0 THEN 1 ELSE 0 END), 2) AS chunk
-      FROM base
-    ),
-    mx AS (SELECT chunk, MAX(ts) AS mts FROM chun GROUP BY chunk),
-    horizon AS (
-      SELECT c.chunk,
-             (SELECT MAX(m.mts) FROM mx m WHERE m.chunk <= c.chunk - 2)
-               - INTERVAL {delay_days} DAY AS evicted_before
-      FROM (SELECT DISTINCT chunk FROM chun) c
-    ),
-    admitted AS (
-      SELECT ch.event_id, ch.ts, ch.user_id, ch.event_type, ch.value
-      FROM chun ch JOIN horizon h ON ch.chunk = h.chunk
-      WHERE h.evicted_before IS NULL
-         OR date_trunc('day', ch.ts) + INTERVAL 1 DAY > h.evicted_before
-    ),
+    {_admitted_sql("admitted", "chun", f"INTERVAL {delay_days} DAY",
+                   admit_by="date_trunc('day', r.ts) + INTERVAL 1 DAY",
+                   lag=2)},
     ranked AS (
       SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS window_start,
              CAST(date_trunc('day', ts) AS TIMESTAMP) + INTERVAL 1 DAY
@@ -7922,44 +7674,24 @@ def stream_window_dedup_sql(*, delay_days: int = 2) -> str:
 
 @query("stream_window_dedup", stream_window_dedup_sql())
 def q_stream_window_dedup(spark: SparkSession, sf: str) -> DataFrame:
-    """Flink's Window Deduplication TVF (the last windowing-TVF class
-    after aggregation/cumulate/Top-N: ROW_NUMBER() OVER (PARTITION BY
-    window, key ORDER BY ts) = 1 — "first event per user per day")
-    through the REAL engine: the events corpus as 3 out-of-order drops
-    (the stream_late_events chunk rule), watermark(2 days) -> per
-    (1-day window, user_id) min_by over the (ts, event_id) total order,
-    APPEND mode, availableNow — the argmin aggregate is the
-    deduplication (no per-row rank state), so the streaming state is
-    one winner row per open (window, key). Oracle: the replay, also checked
-    in tests/test_window_dedup.py."""
-    from flink_kafka_table_api_spark.streaming.late_data import (
-        stage_chunked_by,
-    )
-
+    """Flink's Window Deduplication TVF ("first event per user per day":
+    ROW_NUMBER() OVER (PARTITION BY window, key ORDER BY ts) = 1)
+    through Spark's own streaming engine: events in the delivery
+    schedule, watermark(2 days) -> per (1-day window, user_id) min_by
+    over the (ts, event_id) total order, APPEND, availableNow. The argmin
+    aggregate is the deduplication, so the state is one winner row per
+    open (window, key)."""
     ev = _t(spark, sf, "events").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"),
         "user_id", "event_type", "value",
     )
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    shift = (
-        F.when(F.col("event_id") % 61 == 0, F.lit(2))
-        .when(F.col("event_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
+    chunked = ev.withColumn(
+        "__chunk", _late_drop(_day_tercile(_events_min_date(spark, sf)))
     )
-    chunked = ev.withColumn("__chunk", F.least(natural + shift, F.lit(2)))
-    state = _scratch_dir("windedup", sf)
-    src = stage_chunked_by(
-        chunked, os.path.join(state, "src"), n_chunks=3,
-        columns=["event_id", "ts", "user_id", "event_type", "value"],
-    )
-    stream = (
-        spark.readStream
-        .schema("event_id long, ts timestamp, user_id long, "
-                "event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = _staged_stream(
+        spark, chunked, _scratch_dir("windedup", sf),
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double",
     )
     winner = F.min_by(
         F.struct(
@@ -8142,10 +7874,8 @@ def q_stream_window_join(spark: SparkSession, sf: str) -> DataFrame:
     — exact, because a left outer join's matched rows ARE the inner
     join (same join condition, same per-window state, same emission),
     and the NULL-extended rows are precisely the rows the inner join
-    lacks. Running both join types as separate streaming queries paid
-    the full stream machinery twice for one shared join state
-    (round-10 optimization; guide §1.4 — never compute the same join
-    twice). Unlike the interval join, state is scoped per WINDOW and
+    lacks, so one run serves both join types instead of paying the
+    stream machinery twice for one shared join state. Unlike the interval join, state is scoped per WINDOW and
     evicts at window close; the outer row's NULL click emits only once
     the global watermark passes the window end. Oracle also checked in
     tests/test_window_dedup.py."""
@@ -8181,8 +7911,8 @@ def stream_source_quota_sql(*, budget: int = 1500) -> str:
 
 @query("stream_source_quota", stream_source_quota_sql())
 def q_stream_source_quota(spark: SparkSession, sf: str) -> DataFrame:
-    """Streaming per-source token-budget quota (streaming/quota.py,
-    round-8 capability): the INGEST-side form of the registered
+    """Streaming per-source token-budget quota (streaming/quota.py): the
+    INGEST-side form of the registered
     `source_token_cap` — an ingest gate cannot re-rank the future, so
     admission is first-come-first-served in delivery order against a
     carried per-source consumed counter (|sources| rows of state,
@@ -8194,55 +7924,36 @@ def q_stream_source_quota(spark: SparkSession, sf: str) -> DataFrame:
         stream_source_quota,
     )
 
-    d = _t(spark, sf, "documents")
-    prm = d.agg(
-        F.min("doc_id").alias("m0"),
-        F.ceil((F.max("doc_id") - F.min("doc_id") + 1) / 3.0)
-        .cast("long").alias("w"),
-    ).first()
-    chunked = d.select(
-        "doc_id", "source", "text",
-        F.least(
-            F.floor((F.col("doc_id") - F.lit(prm.m0)) / F.lit(prm.w)),
-            F.lit(2),
-        ).cast("int").alias("__chunk"),
+    natural, _ = _doc_tercile(spark, sf)
+    chunked = _t(spark, sf, "documents").select(
+        "doc_id", "source", "text", natural.cast("int").alias("__chunk"),
     )
-    state = _scratch_dir("srcquota", sf)
     return stream_source_quota(
-        spark, chunked, state, n_chunks=3, budget=1500,
+        spark, chunked, _scratch_dir("srcquota", sf), n_chunks=3,
+        budget=1500,
     )
 
 
 def stream_idle_watermark_sql(*, delay_days: int = 2) -> str:
-    """Oracle for `stream_idle_watermark`
-    (streaming/idle_watermark.py): events as a 5-source stream
-    (source=event_type) in day-tercile drops with the %37/%61 late
-    shifts — EXCEPT 'signup', which goes silent after its first drop
-    (only its natural-tercile-0 rows, unshifted). Replays, per chunk:
-    per-source cumulative DELIVERED maxima, the idleness-aware
-    min-combine over sources active in that chunk (monotone via a
-    running max), admission ts > W_{k-1}, per-(source, 1-day window)
-    DECIMAL aggregation, and the emission batch = max(first chunk whose
-    watermark passed window_end, first chunk with an admitted row of
-    the window), flush = 3."""
-    d0 = "(SELECT MIN(CAST(ts AS DATE)) FROM events)"
-    nat = (
-        f"LEAST(CAST(datediff('day', {d0}, CAST(ts AS DATE)) // 10 "
-        "AS BIGINT), 2)"
-    )
+    """Oracle for `stream_idle_watermark` (streaming/idle_watermark.py):
+    events as a 5-source stream (source=event_type) in the delivery
+    schedule, except that 'signup' goes silent after drop 0 (only its
+    natural drop-0 rows, unshifted). Per drop it replays the per-source
+    cumulative delivered maxima, the min-combine over the sources active
+    in that drop (kept monotone by a running max), admission
+    ts > W_{k-1}, per-(source, 1-day window) DECIMAL aggregation, and the
+    emission batch = max(first drop whose watermark passed window_end,
+    first drop with an admitted row of the window), flush = 3."""
     return f"""
     WITH base AS (
       SELECT event_type AS source, ts, value, event_id,
-             {nat} AS nat_chunk
+             {_day_tercile_sql()} AS nat_chunk
       FROM events
     ),
     rows_ AS (
       SELECT source, ts, value,
              CASE WHEN source = 'signup' THEN 0
-                  ELSE LEAST(nat_chunk
-                       + (CASE WHEN event_id % 61 = 0 THEN 2
-                               WHEN event_id % 37 = 0 THEN 1
-                               ELSE 0 END), 2)
+                  ELSE {_late_drop_sql("nat_chunk")}
              END AS chunk
       FROM base
       WHERE source <> 'signup' OR nat_chunk = 0
@@ -8297,36 +8008,16 @@ def stream_idle_watermark_sql(*, delay_days: int = 2) -> str:
     """
 
 
-@query("stream_idle_watermark", stream_idle_watermark_sql())
-def q_stream_idle_watermark(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-partition watermark alignment with idle-source handling
-    (streaming/idle_watermark.py, round-9 capability — VERDICT r8
-    item 7, Flink's withIdleness): events as a 5-source stream
-    (source=event_type) in 3 day-tercile drops with the %37/%61 late
-    shifts, except 'signup' which goes SILENT after the first drop;
-    per-source watermarks min-combine over the batch's ACTIVE sources,
-    so the idle source does not stall window finalization for the live
-    ones (the batch_id column is the observable effect, pinned in
-    tests/test_idle_watermark.py). Registered in the round-9 gate,
-    replica-validated green at sf0.001 AND sf0.01 before the rotation
-    landed (committed: tests/test_r9_registrations_two_sf.py)."""
-    from flink_kafka_table_api_spark.streaming.idle_watermark import (
-        stream_idle_watermark,
-    )
-
+def _idle_watermark_rows(spark: SparkSession, sf: str) -> DataFrame:
+    """The stream_idle_watermark input: events as (source=event_type,
+    ts, value) in the delivery schedule, with 'signup' delivering only
+    its natural drop-0 rows."""
     ev = _t(spark, sf, "events")
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    shift = (
-        F.when(F.col("event_id") % 61 == 0, F.lit(2))
-        .when(F.col("event_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
-    )
+    natural = _day_tercile(_events_min_date(spark, sf))
     chunk = F.when(
         F.col("event_type") == "signup", F.lit(0)
-    ).otherwise(F.least(natural + shift, F.lit(2)))
-    rows = ev.filter(
+    ).otherwise(_late_drop(natural))
+    return ev.filter(
         (F.col("event_type") != "signup") | (natural == 0)
     ).select(
         F.col("event_type").alias("source"),
@@ -8334,9 +8025,22 @@ def q_stream_idle_watermark(spark: SparkSession, sf: str) -> DataFrame:
         "value",
         chunk.cast("int").alias("__chunk"),
     )
-    state = _scratch_dir("idlewm", sf)
+
+
+@query("stream_idle_watermark", stream_idle_watermark_sql())
+def q_stream_idle_watermark(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-source watermark alignment with idle-source handling
+    (streaming/idle_watermark.py, Flink's withIdleness): the
+    per-source watermarks min-combine over each batch's ACTIVE sources,
+    so the silent 'signup' source does not stall window finalization for
+    the live ones. The batch_id column is the observable effect."""
+    from flink_kafka_table_api_spark.streaming.idle_watermark import (
+        stream_idle_watermark,
+    )
+
     return stream_idle_watermark(
-        spark, rows, state, n_chunks=3, delay="2 days", window="1 day",
+        spark, _idle_watermark_rows(spark, sf), _scratch_dir("idlewm", sf),
+        n_chunks=3, delay="2 days", window="1 day",
     )
 
 
@@ -8344,20 +8048,16 @@ def stream_watermark_alignment_sql(
     *, delay_days: int = 2, drift_days: int = 3
 ) -> str:
     """Oracle for `stream_watermark_alignment`
-    (streaming/watermark_alignment.py): events as a 5-source stream
-    where 'click' delivers one tercile EARLY (chunk = max(tercile-1, 0)
-    — the firehose source that ran ahead), others natural terciles.
-    Unrolls the three batch layers: batch 0 unthrottled; A_k =
-    min(admitted maxima through k-1) + drift gates each later batch;
-    fresh arrivals behind W_{k-1} = min maxima - delay drop (lateness
-    contract); gated rows DEFER and re-judge next batch; flush = 3.
-    Emission batch = max(first k whose aligned watermark passed
-    window_end, the window's last admit batch)."""
-    d0 = "(SELECT MIN(CAST(ts AS DATE)) FROM events)"
-    nat = (
-        f"LEAST(CAST(datediff('day', {d0}, CAST(ts AS DATE)) // 10 "
-        "AS BIGINT), 2)"
-    )
+    (streaming/watermark_alignment.py): events as a 5-source stream in
+    natural day terciles, except that 'click' delivers one tercile EARLY
+    (drop max(tercile - 1, 0): the source that ran ahead). It unrolls
+    the three batches: batch 0 is unthrottled; A_k = min(admitted maxima
+    through k-1) + drift gates each later batch; fresh arrivals behind
+    W_{k-1} = min maxima - delay drop; gated rows defer and are judged
+    again next batch; flush = 3. Emission batch = max(first k whose
+    aligned watermark passed window_end, the window's last admit
+    batch)."""
+    nat = _day_tercile_sql()
     dl = f"INTERVAL {delay_days} DAY"
     dr = f"INTERVAL {drift_days} DAY"
     return f"""
@@ -8377,9 +8077,9 @@ def stream_watermark_alignment_sql(
       WHERE r.c = 1 AND r.ts > (SELECT mn FROM s0) - {dl}
     ),
     m1 AS (
-      -- union-fold, not LEFT JOIN from m0 (ADVICE r9): a source whose
-      -- FIRST delivery is chunk 1 must enter the min-combine the batch
-      -- it is seen, exactly as the engine admits it
+      -- union-fold, not LEFT JOIN from m0: a source whose FIRST
+      -- delivery is chunk 1 must enter the min-combine the batch it is
+      -- seen, exactly as the engine admits it
       SELECT source, MAX(m) AS m FROM (
         SELECT source, m FROM m0
         UNION ALL
@@ -8446,20 +8146,13 @@ def stream_quantile_monitor_sql(*, n_bins: int = 64) -> str:
     0.99). Every arithmetic step is IEEE add/sub/mul/div/floor on
     identical inputs — full-value, no tolerance."""
     return f"""
-    WITH prm AS (
-      SELECT MIN(doc_id) AS m0,
-             CAST(CEIL((MAX(doc_id) - MIN(doc_id) + 1) / 3.0)
-                  AS BIGINT) AS wid
-      FROM documents
-    ),
+    WITH {_doc_prm_sql()},
     vals AS (
-      SELECT CAST(length(text) AS DOUBLE) AS v,
-             LEAST(CAST(FLOOR((doc_id - prm.m0) / prm.wid) AS BIGINT),
-                   2) AS c
+      SELECT CAST(length(text) AS DOUBLE) AS v, {_doc_tercile_sql()} AS c
       FROM documents, prm
     ),
     cal AS (
-      -- degenerate-calibration guard mirrors the engine (ADVICE r9):
+      -- degenerate-calibration guard mirrors the engine:
       -- all-equal batch-0 values fall back to width 1.0, never 0
       SELECT MIN(v) AS lo, MAX(v) AS hi,
              CASE WHEN MAX(v) > MIN(v)
@@ -8504,60 +8197,41 @@ def stream_quantile_monitor_sql(*, n_bins: int = 64) -> str:
 @query("stream_quantile_monitor", stream_quantile_monitor_sql())
 def q_stream_quantile_monitor(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming rank-statistic monitor
-    (streaming/quantile_monitor.py, round-9 capability): p50/p90/p99 of
-    document length per micro-batch via mergeable fixed-bin histogram
-    state (n_bins longs regardless of stream age) — the drift signal a
-    data-quality pager fires on, with the error bar (bin width) emitted
-    alongside. Registered in the round-10 gate (never-green rule) with the
-    full-value replay stream_quantile_monitor_sql, pre-validated at
-    sf0.001 AND sf0.01 in tests/test_quantile_monitor.py."""
+    (streaming/quantile_monitor.py): p50/p90/p99 of document length per
+    micro-batch via mergeable fixed-bin histogram state (n_bins longs
+    regardless of stream age) — the drift signal a data-quality pager
+    fires on, with the error bar (bin width) emitted alongside."""
     from flink_kafka_table_api_spark.streaming.quantile_monitor import (
         stream_quantile_monitor,
     )
 
-    d = _t(spark, sf, "documents")
-    prm = d.agg(
-        F.min("doc_id").alias("m0"),
-        F.ceil((F.max("doc_id") - F.min("doc_id") + 1) / 3.0)
-        .cast("long").alias("w"),
-    ).first()
-    rows = d.select(
+    natural, _ = _doc_tercile(spark, sf)
+    rows = _t(spark, sf, "documents").select(
         F.length("text").cast("double").alias("value"),
-        F.least(
-            F.floor((F.col("doc_id") - F.lit(prm.m0)) / F.lit(prm.w)),
-            F.lit(2),
-        ).cast("int").alias("__chunk"),
+        natural.cast("int").alias("__chunk"),
     )
-    state = _scratch_dir("qmon", sf)
-    return stream_quantile_monitor(spark, rows, state, n_chunks=3)
+    return stream_quantile_monitor(
+        spark, rows, _scratch_dir("qmon", sf), n_chunks=3
+    )
 
 
 def stream_allowed_lateness_sql(
     *, delay_days: int = 2, allowed_days: int = 12
 ) -> str:
     """Oracle for `stream_allowed_lateness`
-    (streaming/allowed_lateness.py): events in day-tercile drops with
-    the %37/%61 late shifts; per-chunk monotone watermark from
-    delivered maxima; classification against W_{k-1} and
-    W_{k-1} - allowed; first fire at max(watermark-pass batch, first
-    admitted arrival) — a window whose pass precedes its first
-    late-allowed arrival fires when the row lands; '-U'/'+U'
-    correction pairs at every later batch that delivers an admitted
-    row to a fired window; quarantined rows aggregate per (window,
-    arrival batch) as 'LATE'; never-fired windows flush as batch 3."""
-    d0 = "(SELECT MIN(CAST(ts AS DATE)) FROM events)"
-    nat = (
-        f"LEAST(CAST(datediff('day', {d0}, CAST(ts AS DATE)) // 10 "
-        "AS BIGINT), 2)"
-    )
+    (streaming/allowed_lateness.py): events in the delivery schedule, a
+    per-drop monotone watermark from the delivered maxima, and each row
+    classified against W_{k-1} and W_{k-1} - allowed. A window first
+    fires at max(watermark-pass batch, first admitted arrival); every
+    later batch that delivers an admitted row to a fired window emits a
+    '-U'/'+U' correction pair; rows past the allowance aggregate per
+    (window, arrival batch) as 'LATE'; never-fired windows flush as
+    batch 3."""
     dl = f"INTERVAL {delay_days} DAY"
     al = f"INTERVAL {allowed_days} DAY"
     return f"""
     WITH rows_ AS (
-      SELECT ts, value,
-             LEAST({nat} + (CASE WHEN event_id % 61 = 0 THEN 2
-                                 WHEN event_id % 37 = 0 THEN 1
-                                 ELSE 0 END), 2) AS c
+      SELECT ts, value, {_late_drop_sql()} AS c
       FROM events
     ),
     mx AS (SELECT c AS k, MAX(ts) AS m FROM rows_ GROUP BY c),
@@ -8631,168 +8305,40 @@ def stream_allowed_lateness_sql(
 
 @query("stream_allowed_lateness", stream_allowed_lateness_sql())
 def q_stream_allowed_lateness(spark: SparkSession, sf: str) -> DataFrame:
-    """Allowed lateness + late-data side output
-    (streaming/allowed_lateness.py, round-9 capability — Flink's
-    allowedLateness/sideOutputLateData): events in 3 out-of-order
-    drops (%37/%61 shifts), 1-day windows under a 2-day watermark with
-    a 12-day allowance sized to the drop cadence (one-tercile-late rows
-    straddle it: the newer ones RE-FIRE their window as a '-U'/'+U'
-    correction pair, the older ones and every two-tercile-late row land
-    in the 'LATE' side output instead of vanishing — both paths live,
-    asserted in the tests). Registered in the round-10 gate (never-green rule) with the
-    classification+schedule replay
-    stream_allowed_lateness_sql, pre-validated at sf0.001 AND sf0.01 in
-    tests/test_allowed_lateness.py."""
+    """Allowed lateness with a late-data side output
+    (streaming/allowed_lateness.py, Flink's
+    allowedLateness/sideOutputLateData): events in the delivery
+    schedule, 1-day windows under a 2-day watermark with a 12-day
+    allowance sized to the drop cadence. One-drop-late rows straddle
+    it: the newer ones re-fire their window as a '-U'/'+U' correction
+    pair, while the older ones and every two-drops-late row land in the
+    'LATE' side output instead of vanishing."""
     from flink_kafka_table_api_spark.streaming.allowed_lateness import (
         stream_allowed_lateness,
     )
 
-    ev = _t(spark, sf, "events")
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    shift = (
-        F.when(F.col("event_id") % 61 == 0, F.lit(2))
-        .when(F.col("event_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
-    )
-    rows = ev.select(
+    rows = _t(spark, sf, "events").select(
         F.col("ts").cast("timestamp").alias("ts"),
         "value",
-        F.least(natural + shift, F.lit(2)).cast("int").alias("__chunk"),
+        _late_drop(_day_tercile(_events_min_date(spark, sf)))
+        .cast("int").alias("__chunk"),
     )
-    state = _scratch_dir("allowlate", sf)
     return stream_allowed_lateness(
-        spark, rows, state, n_chunks=3, delay="2 days",
-        allowed="12 days",
+        spark, rows, _scratch_dir("allowlate", sf), n_chunks=3,
+        delay="2 days", allowed="12 days",
     )
 
 
-def stream_agg_retract_sql() -> str:
-    """Oracle for `stream_agg_retract`
-    (streaming/agg_retract.py): events as an upsert/delete changelog
-    (key=user_id, grp=event_type, 'error'=delete) in natural day
-    terciles; per-batch snapshots = per-key argmax by (op_ts, op_id)
-    over chunks <= k, live keys aggregated per grp with DECIMAL sums;
-    consecutive snapshots diffed into the RowKind changelog (the
-    stream_topn_retract oracle shape)."""
-    d0 = "(SELECT MIN(CAST(ts AS DATE)) FROM events)"
-    nat = (
-        f"LEAST(CAST(datediff('day', {d0}, CAST(ts AS DATE)) // 10 "
-        "AS BIGINT), 2)"
-    )
+def _retract_ops_sql() -> str:
+    """The head of a WITH clause for the update-mode GROUP BY oracles:
+    ``ops``, the events changelog with grp=event_type in natural day
+    terciles, and ``snapw``, each batch k's ops through drop k ranked
+    newest first per key."""
     return f"""
-    WITH ops AS (
-      SELECT event_id AS op_id, ts AS op_ts, user_id AS key,
-             event_type AS grp,
-             CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-             value, {nat} AS chunk
+    ops AS (
+      SELECT {_changelog_ops_sql()}, event_type AS grp,
+             {_day_tercile_sql()} AS chunk
       FROM events
-    ),
-    snapw AS (
-      SELECT kk.k, o.key, o.grp, o.op, o.value,
-             row_number() OVER (PARTITION BY kk.k, o.key
-                                ORDER BY o.op_ts DESC, o.op_id DESC)
-               AS rn
-      FROM (VALUES (0), (1), (2)) AS kk(k)
-      JOIN ops o ON o.chunk <= kk.k
-    ),
-    snaps AS (
-      SELECT k, grp, CAST(COUNT(*) AS BIGINT) AS n_keys,
-             CAST(SUM(CAST(value AS DECIMAL(25,6)))
-                  AS DECIMAL(25,6)) AS total
-      FROM snapw WHERE rn = 1 AND op <> 'D'
-      GROUP BY k, grp
-    ),
-    paired AS (
-      SELECT COALESCE(n.k, o.k + 1) AS batch_id,
-             COALESCE(n.grp, o.grp) AS grp,
-             o.n_keys AS onk, o.total AS ot,
-             n.n_keys AS nnk, n.total AS nt
-      FROM snaps n
-      FULL OUTER JOIN snaps o ON o.k = n.k - 1 AND o.grp = n.grp
-      WHERE COALESCE(n.k, o.k + 1) <= 2
-    )
-    SELECT '+I' AS op, grp, nnk AS n_keys, CAST(nt AS DOUBLE) AS total,
-           CAST(batch_id AS BIGINT) AS batch_id
-    FROM paired WHERE onk IS NULL
-    UNION ALL
-    SELECT '-D', grp, onk, CAST(ot AS DOUBLE), CAST(batch_id AS BIGINT)
-    FROM paired WHERE nnk IS NULL
-    UNION ALL
-    SELECT '-U', grp, onk, CAST(ot AS DOUBLE), CAST(batch_id AS BIGINT)
-    FROM paired
-    WHERE onk IS NOT NULL AND nnk IS NOT NULL
-      AND (onk <> nnk OR ot <> nt)
-    UNION ALL
-    SELECT '+U', grp, nnk, CAST(nt AS DOUBLE), CAST(batch_id AS BIGINT)
-    FROM paired
-    WHERE onk IS NOT NULL AND nnk IS NOT NULL
-      AND (onk <> nnk OR ot <> nt)
-    """
-
-
-@query("stream_agg_retract", stream_agg_retract_sql())
-def q_stream_agg_retract(spark: SparkSession, sf: str) -> DataFrame:
-    """Retract-mode GROUP BY over an UPDATE stream
-    (streaming/agg_retract.py, round-9 capability): events as an
-    upsert/delete changelog (key=user_id, grp/value are attributes of
-    the key's CURRENT version; 'error'=delete) in 3 natural-tercile
-    drops; per-grp COUNT/SUM of live keys emitted as the RowKind
-    changelog — a key's new version retracts its old contribution from
-    its old group (Flink's updating-source aggregate semantics, which
-    append-style folding gets wrong). Registered in the round-10 gate (never-green rule) with the
-    snapshot-diff oracle stream_agg_retract_sql,
-    pre-validated at sf0.001 AND sf0.01 in tests/test_agg_retract.py."""
-    from flink_kafka_table_api_spark.streaming.agg_retract import (
-        stream_agg_retract,
-    )
-
-    ev = _t(spark, sf, "events")
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    ops = ev.select(
-        F.col("event_id").alias("op_id"),
-        F.col("ts").cast("timestamp").alias("op_ts"),
-        F.col("user_id").alias("key"),
-        F.col("event_type").alias("grp"),
-        F.when(F.col("event_type") == "error", "D").otherwise("U")
-        .alias("op"),
-        "value",
-        natural.cast("int").alias("__chunk"),
-    )
-    state = _scratch_dir("aggretract", sf)
-    return stream_agg_retract(spark, ops, state, n_chunks=3)
-
-
-def stream_state_ttl_sql(*, ttl_days: int = 1) -> str:
-    """Oracle for `stream_state_ttl` (streaming/state_ttl.py): the
-    stream_agg_retract snapshot-diff replay plus ONE predicate — the
-    event-time TTL cutoff. Per batch k the clock is the delivered
-    maximum op_ts through chunk k; a key's argmax winner contributes
-    only if op_ts > clock_k - ttl (strict: a key exactly at the cutoff
-    is evicted, Flink's fired-retention-timer rule). The merge-then-
-    evict engine order is equivalent to this filter formulation by the
-    monotone-cutoff argument in the module docstring."""
-    d0 = "(SELECT MIN(CAST(ts AS DATE)) FROM events)"
-    nat = (
-        f"LEAST(CAST(datediff('day', {d0}, CAST(ts AS DATE)) // 10 "
-        "AS BIGINT), 2)"
-    )
-    return f"""
-    WITH ops AS (
-      SELECT event_id AS op_id, ts AS op_ts, user_id AS key,
-             event_type AS grp,
-             CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-             value, {nat} AS chunk
-      FROM events
-    ),
-    ck AS (
-      SELECT kk.k, MAX(o.op_ts) AS clock
-      FROM (VALUES (0), (1), (2)) AS kk(k)
-      JOIN ops o ON o.chunk <= kk.k
-      GROUP BY kk.k
     ),
     snapw AS (
       SELECT kk.k, o.key, o.grp, o.op, o.op_ts, o.value,
@@ -8801,6 +8347,71 @@ def stream_state_ttl_sql(*, ttl_days: int = 1) -> str:
                AS rn
       FROM (VALUES (0), (1), (2)) AS kk(k)
       JOIN ops o ON o.chunk <= kk.k
+    )"""
+
+
+def stream_agg_retract_sql() -> str:
+    """Oracle for `stream_agg_retract` (streaming/agg_retract.py): the
+    events changelog (grp=event_type) in natural day terciles. Each
+    batch's snapshot is the per-key argmax by (op_ts, op_id) over drops
+    <= k, live keys aggregated per grp with DECIMAL sums, and
+    consecutive snapshots are diffed into RowKind ops."""
+    return f"""
+    WITH {_retract_ops_sql()},
+    snaps AS (
+      SELECT k, grp, CAST(COUNT(*) AS BIGINT) AS n_keys,
+             CAST(SUM(CAST(value AS DECIMAL(25,6)))
+                  AS DECIMAL(25,6)) AS total
+      FROM snapw WHERE rn = 1 AND op <> 'D'
+      GROUP BY k, grp
+    ),
+    {_rowkind_diff_sql("snaps", "grp", ("n_keys", "total"))}
+    """
+
+
+def _retract_ops(spark: SparkSession, sf: str) -> DataFrame:
+    """Spark twin of :func:`_retract_ops_sql`'s ``ops``."""
+    return _changelog_ops(
+        _t(spark, sf, "events"),
+        _day_tercile(_events_min_date(spark, sf)).cast("int"),
+        F.col("event_type").alias("grp"),
+    )
+
+
+@query("stream_agg_retract", stream_agg_retract_sql())
+def q_stream_agg_retract(spark: SparkSession, sf: str) -> DataFrame:
+    """Retract-mode GROUP BY over an update stream
+    (streaming/agg_retract.py): per-grp COUNT/SUM of the live keys of
+    the events changelog, where grp and value belong to a key's CURRENT
+    version, emitted as the RowKind changelog. A key's new version
+    retracts its old contribution from its old group (Flink's
+    updating-source aggregate semantics, which append-style folding
+    gets wrong)."""
+    from flink_kafka_table_api_spark.streaming.agg_retract import (
+        stream_agg_retract,
+    )
+
+    return stream_agg_retract(
+        spark, _retract_ops(spark, sf), _scratch_dir("aggretract", sf),
+        n_chunks=3,
+    )
+
+
+def stream_state_ttl_sql(*, ttl_days: int = 1) -> str:
+    """Oracle for `stream_state_ttl` (streaming/state_ttl.py): the
+    stream_agg_retract replay plus the event-time TTL cutoff. Batch k's
+    clock is the delivered maximum op_ts through drop k; a key's argmax
+    winner counts only if op_ts > clock_k - ttl (strict: a key exactly
+    at the cutoff is evicted, Flink's fired-retention-timer rule). The
+    module docstring shows the engine's merge-then-evict order equals
+    this filter."""
+    return f"""
+    WITH {_retract_ops_sql()},
+    ck AS (
+      SELECT kk.k, MAX(o.op_ts) AS clock
+      FROM (VALUES (0), (1), (2)) AS kk(k)
+      JOIN ops o ON o.chunk <= kk.k
+      GROUP BY kk.k
     ),
     snaps AS (
       SELECT s.k, s.grp, CAST(COUNT(*) AS BIGINT) AS n_keys,
@@ -8811,109 +8422,65 @@ def stream_state_ttl_sql(*, ttl_days: int = 1) -> str:
         AND s.op_ts > ck.clock - INTERVAL {ttl_days} DAY
       GROUP BY s.k, s.grp
     ),
-    paired AS (
-      SELECT COALESCE(n.k, o.k + 1) AS batch_id,
-             COALESCE(n.grp, o.grp) AS grp,
-             o.n_keys AS onk, o.total AS ot,
-             n.n_keys AS nnk, n.total AS nt
-      FROM snaps n
-      FULL OUTER JOIN snaps o ON o.k = n.k - 1 AND o.grp = n.grp
-      WHERE COALESCE(n.k, o.k + 1) <= 2
-    )
-    SELECT '+I' AS op, grp, nnk AS n_keys, CAST(nt AS DOUBLE) AS total,
-           CAST(batch_id AS BIGINT) AS batch_id
-    FROM paired WHERE onk IS NULL
-    UNION ALL
-    SELECT '-D', grp, onk, CAST(ot AS DOUBLE), CAST(batch_id AS BIGINT)
-    FROM paired WHERE nnk IS NULL
-    UNION ALL
-    SELECT '-U', grp, onk, CAST(ot AS DOUBLE), CAST(batch_id AS BIGINT)
-    FROM paired
-    WHERE onk IS NOT NULL AND nnk IS NOT NULL
-      AND (onk <> nnk OR ot <> nt)
-    UNION ALL
-    SELECT '+U', grp, nnk, CAST(nt AS DOUBLE), CAST(batch_id AS BIGINT)
-    FROM paired
-    WHERE onk IS NOT NULL AND nnk IS NOT NULL
-      AND (onk <> nnk OR ot <> nt)
+    {_rowkind_diff_sql("snaps", "grp", ("n_keys", "total"))}
     """
 
 
 @query("stream_state_ttl", stream_state_ttl_sql())
 def q_stream_state_ttl(spark: SparkSession, sf: str) -> DataFrame:
     """Per-key state TTL on the update-mode GROUP BY
-    (streaming/state_ttl.py, round-10 capability — Flink's
-    table.exec.state.ttl / StateTtlConfig idle-state retention,
-    replayed deterministically as event-time TTL against the delivered
-    high-watermark): the stream_agg_retract pipeline with keys idle
-    beyond 1 day of the clock EVICTED from carried state — the
-    bounded-state guarantee for a year-old pipeline (state ∝ churn
-    horizon, not key history). The 1-day TTL is sized to the corpus:
-    measured idle gaps between a key's last op and the delivered
-    maximum run 1-3 days (17/150 keys idle >= 1 day at sf0.01, 1/15 at
-    sf0.001, NONE >= 3 days), so 1 day keeps both paths live — most
-    keys survive, some age out — at both gate SFs (asserted in the
-    tests against the TTL-less sibling's snapshots). Oracle: the
-    snapshot-diff+cutoff replay stream_state_ttl_sql, checked at sf0.001
-    AND sf0.01 in tests/test_state_ttl.py."""
+    (streaming/state_ttl.py; Flink's table.exec.state.ttl idle-state
+    retention, replayed as event-time TTL against the delivered
+    high-watermark): the stream_agg_retract pipeline with keys idle for
+    more than 1 day of the clock evicted from the carried state, so
+    state grows with the churn horizon, not the key history. The 1-day
+    TTL is sized to the corpus: a key's idle gap to the delivered
+    maximum runs 1-3 days (17/150 keys idle >= 1 day at sf0.01, 1/15 at
+    sf0.001, none >= 3 days), so most keys survive and some age out at
+    both sizes."""
     from flink_kafka_table_api_spark.streaming.state_ttl import (
         stream_agg_state_ttl,
     )
 
-    ev = _t(spark, sf, "events")
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    ops = ev.select(
-        F.col("event_id").alias("op_id"),
-        F.col("ts").cast("timestamp").alias("op_ts"),
-        F.col("user_id").alias("key"),
-        F.col("event_type").alias("grp"),
-        F.when(F.col("event_type") == "error", "D").otherwise("U")
-        .alias("op"),
-        "value",
-        natural.cast("int").alias("__chunk"),
-    )
-    state = _scratch_dir("aggttl", sf)
     return stream_agg_state_ttl(
-        spark, ops, state, n_chunks=3, ttl="1 day"
+        spark, _retract_ops(spark, sf), _scratch_dir("aggttl", sf),
+        n_chunks=3, ttl="1 day",
     )
 
 
-@query("stream_watermark_alignment", stream_watermark_alignment_sql())
-def q_stream_watermark_alignment(spark: SparkSession, sf: str) -> DataFrame:
-    """Watermark ALIGNMENT across sources
-    (streaming/watermark_alignment.py, round-9 capability — Flink
-    FLIP-182 withWatermarkAlignment, the throttling complement of
-    stream_idle_watermark's idleness): events as 5 sources where
-    'click' delivers one tercile EARLY (the source that ran ahead);
-    with drift = 3 days its far-future rows DEFER across batches until
-    the group's minimum advances — nothing drops, the per-window
-    batch_id and the per-batch deferred counts are the throttle trace.
-    Registered in the round-10 gate (never-green rule) with the
-    unrolled admission replay (stream_watermark_alignment_sql), pre-validated at
-    sf0.001 AND sf0.01 in tests/test_watermark_alignment.py."""
-    from flink_kafka_table_api_spark.streaming.watermark_alignment import (
-        stream_watermark_alignment,
-    )
-
-    ev = _t(spark, sf, "events")
-    d0 = _events_min_date(spark, sf)
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
+def _watermark_alignment_rows(spark: SparkSession, sf: str) -> DataFrame:
+    """The stream_watermark_alignment input: events as (source=event_type,
+    ts, value) in natural day terciles, 'click' one tercile early."""
+    natural = _day_tercile(_events_min_date(spark, sf))
     chunk = F.when(
         F.col("event_type") == "click",
         F.greatest(natural - 1, F.lit(0)),
     ).otherwise(natural)
-    rows = ev.select(
+    return _t(spark, sf, "events").select(
         F.col("event_type").alias("source"),
         F.col("ts").cast("timestamp").alias("ts"),
         "value",
         chunk.cast("int").alias("__chunk"),
     )
-    state = _scratch_dir("wmalign", sf)
+
+
+@query("stream_watermark_alignment", stream_watermark_alignment_sql())
+def q_stream_watermark_alignment(spark: SparkSession, sf: str) -> DataFrame:
+    """Watermark alignment across sources
+    (streaming/watermark_alignment.py, Flink FLIP-182
+    withWatermarkAlignment: the throttling complement of
+    stream_idle_watermark's idleness). With drift = 3 days the early
+    'click' source's far-future rows defer across batches until the
+    group's minimum advances. Nothing drops; the per-window batch_id and
+    the per-batch deferred counts are the throttle trace."""
+    from flink_kafka_table_api_spark.streaming.watermark_alignment import (
+        stream_watermark_alignment,
+    )
+
     return stream_watermark_alignment(
-        spark, rows, state, n_chunks=3, delay="2 days", drift="3 days",
+        spark, _watermark_alignment_rows(spark, sf),
+        _scratch_dir("wmalign", sf), n_chunks=3, delay="2 days",
+        drift="3 days",
     )
 
 
@@ -8953,8 +8520,8 @@ def pii_scrub_sql() -> str:
 
 @query("pii_scrub", pii_scrub_sql())
 def q_pii_scrub(spark: SparkSession, sf: str) -> DataFrame:
-    """PII detection + redaction (operators/text.py `pii_scrub`,
-    round-8 capability): emails, NNN-NNN-NNNN phones, octet-validated
+    """PII detection + redaction (operators/text.py `pii_scrub`):
+    emails, NNN-NNN-NNNN phones, octet-validated
     dotted quads, Luhn-validated 13-16-digit card runs — counted per
     document, every candidate span redacted to its tag. The corpus
     carries a deterministic doc_id-derived PII injection (2/3 of docs)
@@ -9093,9 +8660,6 @@ def q_pq_ann(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# Formerly round-10 staged operators: registered in round 7 (VERDICT r6
-# ledger compression) or committed to the round-8 gate.
-
 def _two_gen_edges(spark: SparkSession, sf: str) -> DataFrame:
     """Two-generator bounded-degree symmetric graph from customer keys:
     k -> 1 + (k*13 mod N) and k -> 1 + (k*29 mod N) (both multipliers
@@ -9228,9 +8792,6 @@ def q_containment_pairs(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# Formerly round-11 staged operators: registered in round 7 (VERDICT r6
-# ledger compression) or committed to the round-8 gate.
-
 @query("winnow_matches", tx.winnow_matches_sql(k=8, w=4, min_shared=3, max_hash_df=20))
 def q_winnow_matches(spark: SparkSession, sf: str) -> DataFrame:
     """The MOSS pair-matching step over winnowing fingerprints
@@ -9260,9 +8821,7 @@ def q_adamic_adar(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def lsh_recall_audit_sql(*, threshold: float = 0.5) -> str:
-    """Oracle for `lsh_recall_audit` (the round-11 prevalidated oracle,
-    tests/test_r11_prevalidated.py, promoted verbatim at registration):
-    exact shingle-Jaccard ground truth (quadratic — ORACLE ONLY; the
+    """Oracle for `lsh_recall_audit`: exact shingle-Jaccard ground truth (quadratic — ORACLE ONLY; the
     operator's truth side is the scalable prefix-filter join) banded by
     jaccard decile, recall measured against the registered LSH candidate
     replay (_lsh_pairs_oracle)."""
@@ -9358,9 +8917,6 @@ def q_char_entropy(spark: SparkSession, sf: str) -> DataFrame:
     return tx.char_entropy(_t(spark, sf, "documents"), "doc_id", "text")
 
 
-# Formerly round-12 staged operators: registered in round 7 (VERDICT r6
-# ledger compression) or committed to the round-8 gate.
-
 @query("edit_similarity_join", dd.edit_similarity_join_sql("part", "p_name", k=2))
 def q_edit_similarity_join(spark: SparkSession, sf: str) -> DataFrame:
     """Ed-Join-style edit-distance self-join over part names
@@ -9408,10 +8964,6 @@ def q_zipf_gini_audit(spark: SparkSession, sf: str) -> DataFrame:
     return tx.zipf_gini_audit(_t(spark, sf, "documents"))
 
 
-# Formerly round-13 staged operators (oracles pre-validated in
-# tests/test_r13_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in rounds 7-8.
-
 @query("readability", tx.readability_scores_sql())
 def q_readability(spark: SparkSession, sf: str) -> DataFrame:
     """Flesch Reading Ease + Flesch-Kincaid grade per document
@@ -9439,17 +8991,13 @@ def q_rake_keywords(spark: SparkSession, sf: str) -> DataFrame:
     return tx.rake_keywords(_t(spark, sf, "documents"))
 
 
-# Formerly round-14 staged operators (oracles pre-validated in
-# tests/test_r14_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in rounds 7-8.
-
 @query("burst_detection", tsr.burst_detection_sql())
 def q_burst_detection(spark: SparkSession, sf: str) -> DataFrame:
     """Kleinberg two-state burst intervals over daily event shares
     (operators/timeseries.py `burst_detection`): one corpus-sized daily
     aggregate, then an integer-quantized scalar Viterbi walk
     D_t = (e1-e0) + clamp(D_{t-1}, 0, gamma) on the tiny groups-x-days
-    calendar (round-10 reformulation; quantum 1e3)."""
+    calendar (quantum 1e3)."""
     from flink_kafka_table_api_spark.operators.timeseries import (
         burst_detection,
     )
@@ -9555,10 +9103,6 @@ def q_tokenizer_fertility(spark: SparkSession, sf: str) -> DataFrame:
     return tx.tokenizer_fertility(_t(spark, sf, "documents"))
 
 
-# Formerly round-15 staged operators (oracles pre-validated in
-# tests/test_r15_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in rounds 7-8.
-
 @query("ks_source_drift", cu.ks_source_drift_sql())
 def q_ks_source_drift(spark: SparkSession, sf: str) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov per source vs rest over the
@@ -9586,10 +9130,6 @@ def q_shingle_overlap_matrix(spark: SparkSession, sf: str) -> DataFrame:
     intersection join."""
     return dd.shingle_overlap_matrix(_t(spark, sf, "documents"))
 
-
-# Formerly round-16 staged operators (oracles pre-validated in
-# tests/test_r16_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in rounds 7-8.
 
 @query("holt_forecast", tsr.holt_forecast_sql())
 def q_holt_forecast(spark: SparkSession, sf: str) -> DataFrame:
@@ -9646,10 +9186,6 @@ def q_snapshot_diff(spark: SparkSession, sf: str) -> DataFrame:
     )
     return cu.snapshot_diff(old, new)
 
-
-# Formerly round-17 staged operators (oracles pre-validated in
-# tests/test_r17_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in rounds 7-8.
 
 def _hits_edges(spark: SparkSession, sf: str) -> DataFrame:
     """Directed quadratic+linear generator graph on customer keys:
@@ -9749,7 +9285,7 @@ def q_markov_transitions(spark: SparkSession, sf: str) -> DataFrame:
     """First-order Markov transition matrix of per-user event
     sequences (operators/timeseries.py `markov_transitions`): one
     user-keyed lag window then a |types|^2-cell hash aggregate; counts
-    exact integers, MLE probability one round-9 division."""
+    exact integers, MLE probability one division rounded to 9 places."""
     from flink_kafka_table_api_spark.operators.timeseries import (
         markov_transitions,
     )
@@ -9771,10 +9307,6 @@ def q_benford_audit(spark: SparkSession, sf: str) -> DataFrame:
 
     return benford_audit(_t(spark, sf, "lineitem"), "l_extendedprice")
 
-
-# Formerly round-18 staged operators (oracles pre-validated in
-# tests/test_r18_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in rounds 7-8.
 
 @query("k_anonymity", vd.k_anonymity_audit_sql(
     "customer", ["c_nationkey", "c_mktsegment"], "c_acctbal"
@@ -9843,10 +9375,6 @@ def q_psi_drift(spark: SparkSession, sf: str) -> DataFrame:
     return psi_drift(old, new, "n_chars")
 
 
-# Formerly round-19 staged operators (oracles pre-validated in
-# tests/test_r19_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in rounds 7-8.
-
 @query("rfm_segments", rfm_segments_sql())
 def q_rfm_segments(spark: SparkSession, sf: str) -> DataFrame:
     """RFM customer segmentation over orders (operators/relational.py
@@ -9883,10 +9411,6 @@ def q_assoc_rules(spark: SparkSession, sf: str) -> DataFrame:
 
     return assoc_rules(_t(spark, sf, "documents"))
 
-
-# Formerly round-20 staged operators (oracles pre-validated in
-# tests/test_r20_prevalidated.py): the round-6 VERDICT compressed the
-# staging ledger, so these registered in rounds 7-8.
 
 # Phase-II level-shift derivation matching q_ewma_control (pre-
 # validated in tests/test_r20_prevalidated.py).

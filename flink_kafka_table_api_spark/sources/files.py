@@ -13,16 +13,9 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def read_csv(
-    spark: SparkSession, path: str, schema: StructType, *, header: bool = True
-) -> DataFrame:
-    """CSV scan with a DECLARED schema (never inferSchema — inference costs
-    an extra full pass and produces SF-dependent types)."""
-    return spark.read.schema(schema).option("header", str(header).lower()).csv(path)
-
-
 def read_json(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    """JSON-lines scan with a declared schema (same stance as CSV)."""
+    """JSON-lines scan with a DECLARED schema (never inferSchema — inference
+    costs an extra full pass and produces SF-dependent types)."""
     return spark.read.schema(schema).json(path)
 
 

@@ -40,21 +40,6 @@ def collect_stream(
     return spark.table(query_name).collect()
 
 
-def run_to_completion(
-    df: DataFrame, query_name: str, *, output_mode: str = "append"
-) -> StreamingQuery:
-    """availableNow trigger: process the full backlog as a bounded job then
-    stop — the Spark-native equivalent of the reference's bounded-scan hint
-    read-back (O11, reference TransactionFlinkTest.java:144-146)."""
-    return (
-        df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def cancel(query: StreamingQuery) -> None:
     """O13: cooperative cancel (reference TransactionFlinkTest.java:64-76)."""
     query.stop()

@@ -287,24 +287,6 @@ def stream_over_agg(
 # ---------------------------------------------------------------------------
 
 
-def over_rows_agg(rows: DataFrame, n_preceding: int) -> DataFrame:
-    """The batch form of the ROWS-frame OVER aggregate: per row, COUNT
-    and DECIMAL-exact SUM over the key's previous `n_preceding` rows
-    plus itself, ordered by the (ts, row_id) total order (row_id breaks
-    timestamp ties identically in both engines)."""
-    w = (
-        Window.partitionBy("key")
-        .orderBy(F.col("ts").cast("long"), F.col("row_id"))
-        .rowsBetween(-n_preceding, 0)
-    )
-    return rows.select(
-        *ROW_COLUMNS,
-        F.count("*").over(w).cast("long").alias("n_win"),
-        F.sum(F.col("value").cast(DEC)).over(w).cast("double")
-        .alias("sum_win"),
-    )
-
-
 def stream_over_rows_agg(
     spark: SparkSession,
     rows_chunked: DataFrame,

@@ -9,7 +9,6 @@ ops dropped deterministically, crash replay, bounded version tail."""
 
 from __future__ import annotations
 
-import datetime as dt
 import os
 import shutil
 
@@ -17,8 +16,11 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.catalog import read_table
 from flink_kafka_table_api_spark.queries import (
+    QUERIES,
+    _admitted_sql,
+    _changelog_ops_sql,
+    _late_drop_sql,
     stream_cdc_apply_sql as _events_ops_oracle,
 )
 from flink_kafka_table_api_spark.streaming import batch_commit
@@ -110,28 +112,7 @@ def test_version_tail_is_bounded(spark, tmp_path, monkeypatch):
 
 
 def test_oracle_parity_on_testdata(spark):
-    ev = read_table(spark, SF, "events")
-    d0 = ev.agg(F.min(F.to_date("ts"))).first()[0]
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    shift = (
-        F.when(F.col("event_id") % 61 == 0, F.lit(2))
-        .when(F.col("event_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
-    )
-    ops = ev.select(
-        F.col("event_id").alias("op_id"),
-        F.col("ts").cast("timestamp").alias("op_ts"),
-        F.col("user_id").alias("key"),
-        F.when(F.col("event_type") == "error", "D").otherwise("U")
-        .alias("op"),
-        "value",
-        F.least(natural + shift, F.lit(2)).alias("__chunk"),
-    )
-    out = stream_cdc_apply(
-        spark, ops, str(__import__("tempfile").mkdtemp(prefix="fkta_cdc_")),
-        n_chunks=3, delay="2 days",
-    )
+    out = QUERIES["stream_cdc_apply"](spark, SF)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
@@ -145,16 +126,14 @@ def test_oracle_parity_on_testdata(spark):
     # (a too-late op really changed some key's current state)
     naive = sorted(
         tuple(str(x) for x in r)
-        for r in con.execute("""
+        for r in con.execute(f"""
       WITH win AS (
-        SELECT user_id AS key, event_id AS last_op_id, ts AS last_op_ts,
-               CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END
-                 AS last_op,
-               value AS last_value,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY ts DESC, event_id DESC) AS rn,
-               COUNT(*) OVER (PARTITION BY user_id) AS n_ops
-        FROM events
+        SELECT key, op_id AS last_op_id, op_ts AS last_op_ts,
+               op AS last_op, value AS last_value,
+               row_number() OVER (PARTITION BY key
+                                  ORDER BY op_ts DESC, op_id DESC) AS rn,
+               COUNT(*) OVER (PARTITION BY key) AS n_ops
+        FROM (SELECT {_changelog_ops_sql()} FROM events)
       )
       SELECT key, last_op_id, last_op_ts, last_op, last_value,
              CAST(n_ops AS BIGINT) AS n_ops
@@ -166,24 +145,12 @@ def test_oracle_parity_on_testdata(spark):
         "construction has no live signal on this corpus"
     )
     dropped = con.execute(f"""
-      WITH ops AS (
-        SELECT event_id AS op_id, ts AS op_ts,
-               datediff('day', (SELECT MIN(CAST(ts AS DATE)) FROM events),
-                        CAST(ts AS DATE)) AS d_idx
+      WITH chun AS (
+        SELECT {_changelog_ops_sql()}, {_late_drop_sql()} AS chunk
         FROM events
       ),
-      chun AS (
-        SELECT *, LEAST(LEAST(CAST(d_idx // 10 AS BIGINT), 2)
-               + (CASE WHEN op_id % 61 = 0 THEN 2
-                       WHEN op_id % 37 = 0 THEN 1 ELSE 0 END), 2) AS chunk
-        FROM ops
-      ),
-      mx AS (SELECT chunk, MAX(op_ts) AS mts FROM chun GROUP BY chunk)
-      SELECT COUNT(*) FROM chun c
-      WHERE c.op_ts <= COALESCE(
-        (SELECT MAX(m.mts) FROM mx m WHERE m.chunk < c.chunk)
-          - INTERVAL 2 DAY,
-        TIMESTAMP '1970-01-01')
+      {_admitted_sql("adm", "chun", "INTERVAL 2 DAY", ts="op_ts")}
+      SELECT (SELECT COUNT(*) FROM chun) - (SELECT COUNT(*) FROM adm)
     """).fetchone()[0]
     assert dropped > 0, "no op crossed the admission watermark"
 

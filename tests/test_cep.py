@@ -14,8 +14,8 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.catalog import read_table
 from flink_kafka_table_api_spark.queries import (
+    QUERIES,
     match_recognize_sql as oracle_sql,
 )
 from flink_kafka_table_api_spark.operators.cep import (
@@ -109,35 +109,10 @@ def test_pattern_validation():
     assert compile_pattern("A B{2,3} C", ["A", "B", "C"]) == "AB{2,3}C"
 
 
-def spark_twin(spark, sf: str):
-    """Mirrors oracle_sql (shared by the queries.py twin): the funnel
-    PATTERN (view click+ purchase) per user over the events table."""
-    ev = read_table(spark, sf, "events")
-    return match_recognize(
-        ev,
-        key_col="user_id",
-        order_cols=["ts", "event_id"],
-        define=[
-            ("V", F.col("event_type") == "view"),
-            ("K", F.col("event_type") == "click"),
-            ("P", F.col("event_type") == "purchase"),
-        ],
-        pattern="V K+ P",
-        measures={
-            "start_ts": F.min("ts"),
-            "end_ts": F.max("ts"),
-            "n_clicks": F.sum((F.col("__symbol") == "K").cast("long")),
-            "click_value": F.sum(
-                F.when(F.col("__symbol") == "K", F.col("value"))
-                .cast("decimal(25,6)")
-            ).cast("double"),
-        },
-    ).select("user_id", "start_ts", "end_ts", "n_clicks", "click_value")
-
-
 def test_oracle_parity_on_testdata(spark):
     got = sorted(
-        tuple(str(x) for x in r) for r in spark_twin(spark, SF).collect()
+        tuple(str(x) for x in r)
+        for r in QUERIES["match_recognize"](spark, SF).collect()
     )
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")

@@ -95,7 +95,7 @@ def test_oracle_parity_on_testdata(spark, name, sql):
 def test_stream_form_has_live_signal(spark):
     """The lateness construction must matter: the streaming result
     differs from the drop-nothing batch cumulate bounded by the same
-    terminal watermark (some %61 rows really crossed the eviction
+    terminal watermark (some two-drops-late rows really crossed the eviction
     horizon), and at least one emitted slice carries a cumulative with
     no populated partial of its own (the densified-spine case)."""
     con = duckdb.connect()

@@ -20,8 +20,8 @@ import shutil
 import duckdb
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.catalog import read_table
 from flink_kafka_table_api_spark.queries import (
+    _event_temporal_join_inputs,
     stream_event_temporal_join_sql as oracle_sql,
 )
 from flink_kafka_table_api_spark.streaming.event_temporal_join import (
@@ -149,48 +149,13 @@ def test_pending_buffer_is_bounded(spark, tmp_path):
     assert [r.probe_id for r in last.collect()] == [5]
 
 
-def spark_twin(spark, sf: str, state: str):
-    """The Spark side of the gate/bench twin: mirrors oracle_sql's
-    derivations exactly (shared by queries.q_stream_event_temporal_join)."""
-    ev = read_table(spark, sf, "events")
-    d0 = ev.agg(F.min(F.to_date("ts"))).first()[0]
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    ops = ev.select(
-        F.col("event_id").alias("op_id"),
-        F.col("ts").cast("timestamp").alias("op_ts"),
-        F.col("user_id").alias("key"),
-        F.when(F.col("event_type") == "error", "D").otherwise("U")
-        .alias("op"),
-        "value",
-        F.least(
-            natural
-            + F.when(F.col("event_id") % 61 == 0, F.lit(2))
-            .when(F.col("event_id") % 37 == 0, F.lit(1))
-            .otherwise(F.lit(0)),
-            F.lit(2),
-        ).alias("__chunk"),
-    )
-    probes = ev.select(
-        F.col("event_id").alias("probe_id"),
-        F.col("ts").cast("timestamp").alias("probe_ts"),
-        F.col("user_id").alias("key"),
-        F.least(
-            natural
-            + F.when(F.col("event_id") % 53 == 0, F.lit(2))
-            .when(F.col("event_id") % 41 == 0, F.lit(1))
-            .otherwise(F.lit(0)),
-            F.lit(2),
-        ).alias("__chunk"),
-    )
-    return stream_event_temporal_join(
-        spark, ops, probes, state,
+def test_oracle_parity_on_testdata(spark, tmp_path):
+    # the registered query's inputs, joined without its lookup binning
+    ops, probes = _event_temporal_join_inputs(spark, SF)
+    out = stream_event_temporal_join(
+        spark, ops, probes, str(tmp_path / "e5"),
         n_chunks=3, dim_delay="2 days", probe_delay="1 day",
     )
-
-
-def test_oracle_parity_on_testdata(spark, tmp_path):
-    out = spark_twin(spark, SF, str(tmp_path / "e5"))
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")

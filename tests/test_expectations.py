@@ -8,10 +8,9 @@ a plan pin that a multi-rule table really is scanned once."""
 from __future__ import annotations
 
 import duckdb
-from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.catalog import read_table
 from flink_kafka_table_api_spark.queries import (
+    QUERIES,
     data_expectations_sql as oracle_sql,
 )
 from flink_kafka_table_api_spark.operators.expectations import (
@@ -104,18 +103,10 @@ def test_multi_rule_table_is_scanned_once(spark):
 RULES = TESTDATA_CONTRACT
 
 
-def spark_twin(spark, sf: str):
-    tables = {
-        t: read_table(spark, sf, t)
-        for t in ("orders", "events", "part", "lineitem", "customer",
-                  "nation", "region")
-    }
-    return expectations_report(tables, RULES)
-
-
 def test_oracle_parity_on_testdata(spark):
     got = sorted(
-        tuple(str(x) for x in r) for r in spark_twin(spark, SF).collect()
+        tuple(str(x) for x in r)
+        for r in QUERIES["data_expectations"](spark, SF).collect()
     )
     con = duckdb.connect()
     for t in ("orders", "events", "part", "lineitem", "customer",

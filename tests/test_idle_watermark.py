@@ -17,8 +17,10 @@ import shutil
 import duckdb
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.catalog import read_table
-from flink_kafka_table_api_spark.queries import stream_idle_watermark_sql
+from flink_kafka_table_api_spark.queries import (
+    _idle_watermark_rows,
+    stream_idle_watermark_sql,
+)
 from flink_kafka_table_api_spark.streaming.idle_watermark import (
     stream_idle_watermark,
 )
@@ -162,32 +164,9 @@ def test_replay_of_committed_batches_is_a_noop(spark, tmp_path):
     assert _got(out2) == want
 
 
-def _gate_rows(spark):
-    ev = read_table(spark, SF, "events")
-    d0 = ev.agg(F.min(F.to_date("ts"))).first()[0]
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    shift = (
-        F.when(F.col("event_id") % 61 == 0, F.lit(2))
-        .when(F.col("event_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
-    )
-    chunk = F.when(
-        F.col("event_type") == "signup", F.lit(0)
-    ).otherwise(F.least(natural + shift, F.lit(2)))
-    return ev.filter(
-        (F.col("event_type") != "signup") | (natural == 0)
-    ).select(
-        F.col("event_type").alias("source"),
-        F.col("ts").cast("timestamp").alias("ts"),
-        "value",
-        chunk.cast("int").alias("__chunk"),
-    )
-
-
 def test_oracle_parity_on_testdata(spark, tmp_path):
     out = stream_idle_watermark(
-        spark, _gate_rows(spark), str(tmp_path / "s7"),
+        spark, _idle_watermark_rows(spark, SF), str(tmp_path / "s7"),
         n_chunks=3, delay="2 days",
     )
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
@@ -203,7 +182,7 @@ def test_oracle_parity_on_testdata(spark, tmp_path):
     # some window finalizes before the flush that the control run
     # cannot finalize early (the min-combine pin)
     ctl = stream_idle_watermark(
-        spark, _gate_rows(spark), str(tmp_path / "s8"),
+        spark, _idle_watermark_rows(spark, SF), str(tmp_path / "s8"),
         n_chunks=3, delay="2 days", idleness=False,
     )
     flush_ids = {r.batch_id for r in ctl.collect()

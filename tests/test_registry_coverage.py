@@ -1,13 +1,16 @@
 """Registry guards (Spark-free): `queries()`/`oracle_sql()` are the one
 registry, every registered query carries an oracle, and no registered
 query is a union of other registered queries (each capability is
-registered once and checked once against its own oracle).
+registered once and checked once against its own oracle), and the
+out-of-order delivery schedule of the stream_* fixtures is written once
+per engine side.
 """
 
 from __future__ import annotations
 
 import ast
 import inspect
+import re
 
 from flink_kafka_table_api_spark import queries as q
 from flink_kafka_table_api_spark.queries import ORACLES, QUERIES
@@ -76,3 +79,33 @@ def test_no_registered_query_runs_another_registered_query():
     assert found == [], (
         f"registered queries that run other registered queries: {found}"
     )
+
+
+# The delivery-schedule literals: the late-shift moduli and the 10-day
+# tercile, in either engine's spelling.
+_SCHEDULE_LITERAL = re.compile(
+    r"%\s*(?:61|37|53|41)\b|//\s*10\b|/\s*F\.lit\(10\)"
+)
+
+
+def test_delivery_schedule_is_written_once_per_engine_side():
+    """Every schedule literal in queries.py sits inside its one Spark
+    helper or its one SQL helper, so a new streaming query reuses them."""
+    src = inspect.getsource(q)
+    spans = {
+        node.name: range(node.lineno, node.end_lineno + 1)
+        for node in ast.parse(src).body
+        if isinstance(node, ast.FunctionDef)
+    }
+    owners: dict[str | None, list[str]] = {}
+    for i, line in enumerate(src.splitlines(), 1):
+        for m in _SCHEDULE_LITERAL.finditer(line):
+            owner = next((n for n, r in spans.items() if i in r), None)
+            owners.setdefault(owner, []).append(re.sub(r"\s", "", m.group()))
+    moduli = ["%53", "%41", "%61", "%37"]
+    assert owners == {
+        "_day_tercile": ["/F.lit(10)"],
+        "_late_drop": moduli,
+        "_day_tercile_sql": ["//10"],
+        "_late_shift_sql": moduli,
+    }, owners

@@ -8,10 +8,14 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.catalog import read_table
+from flink_kafka_table_api_spark.queries import (
+    _changelog_ops,
+    _day_tercile,
+    _events_min_date,
+)
 from flink_kafka_table_api_spark.streaming.reprocess import reset_from
 from flink_kafka_table_api_spark.streaming.temporal_join import (
     stream_temporal_join,
@@ -21,27 +25,17 @@ SF = "/root/testdata/sf0.001"
 
 
 def _fixture(spark):
+    """The events changelog and the events as probes, both in natural day
+    terciles."""
     ev = read_table(spark, SF, "events")
-    d0 = ev.agg(F.min(F.to_date("ts"))).first()[0]
-    natural = F.least(
-        F.floor(F.datediff(F.to_date("ts"), F.lit(d0)) / F.lit(10))
-        .cast("long"), F.lit(2),
-    )
-    ops = ev.select(
-        F.col("event_id").alias("op_id"),
-        F.col("ts").cast("timestamp").alias("op_ts"),
-        F.col("user_id").alias("key"),
-        F.when(F.col("event_type") == "error", "D").otherwise("U")
-        .alias("op"),
-        "value", natural.alias("__chunk"),
-    )
+    natural = _day_tercile(_events_min_date(spark, SF))
     probes = ev.select(
         F.col("event_id").alias("probe_id"),
         F.col("ts").cast("timestamp").alias("probe_ts"),
         F.col("user_id").alias("key"),
         natural.alias("__chunk"),
     )
-    return ops, probes
+    return _changelog_ops(ev, natural), probes
 
 
 def _run(spark, state):

@@ -16,8 +16,8 @@ import shutil
 import duckdb
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.catalog import read_table
 from flink_kafka_table_api_spark.queries import (
+    QUERIES,
     stream_topn_retract_sql as oracle_sql,
 )
 from flink_kafka_table_api_spark.streaming.retract import (
@@ -99,24 +99,8 @@ def test_crash_replay_is_clean(spark, tmp_path):
     assert got == want == EXPECTED
 
 
-def spark_twin(spark, sf: str, state: str, n: int = 10):
-    """Mirrors oracle_sql's derivation (shared by the queries.py bench
-    twin)."""
-    ev = read_table(spark, sf, "events")
-    d0 = ev.agg(F.min(F.to_date("ts"))).first()[0]
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    rows = ev.select(
-        F.col("event_id").alias("row_id"),
-        F.col("user_id").alias("key"),
-        "value",
-        F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-        .alias("__chunk"),
-    )
-    return stream_topn_retract(spark, rows, state, n_chunks=3, n=n)
-
-
-def test_oracle_parity_on_testdata(spark, tmp_path):
-    out = spark_twin(spark, SF, str(tmp_path / "r4"))
+def test_oracle_parity_on_testdata(spark):
+    out = QUERIES["stream_topn_retract"](spark, SF)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")

@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.catalog import read_table
 from flink_kafka_table_api_spark.queries import (
+    QUERIES,
+    _changelog_ops,
     stream_scd2_sql as scd2_oracle,
 )
 from flink_kafka_table_api_spark.streaming.scd2_stream import stream_scd2
@@ -142,29 +144,8 @@ def test_compaction_is_equivalent_and_bounds_the_chain(spark, tmp_path):
         >= {1, 2, 4}
 
 
-def test_oracle_parity_on_testdata(spark, tmp_path):
-    ev = read_table(spark, SF, "events")
-    d0 = ev.agg(F.min(F.to_date("ts"))).first()[0]
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    shift = (
-        F.when(F.col("event_id") % 61 == 0, F.lit(2))
-        .when(F.col("event_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
-    )
-    ops = ev.select(
-        F.col("event_id").alias("op_id"),
-        F.col("ts").cast("timestamp").alias("op_ts"),
-        F.col("user_id").alias("key"),
-        F.when(F.col("event_type") == "error", "D").otherwise("U")
-        .alias("op"),
-        "value",
-        F.least(natural + shift, F.lit(2)).alias("__chunk"),
-    )
-    out = stream_scd2(
-        spark, ops, str(tmp_path / "s5"), n_chunks=3, delay="2 days",
-        compact_every=2,
-    )
+def test_oracle_parity_on_testdata(spark):
+    out = QUERIES["stream_scd2"](spark, SF)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
@@ -333,14 +314,7 @@ def test_binned_lookup_equals_plain_lookup(spark, tmp_path):
     )
 
     ev = read_table(spark, SF, "events")
-    ops = ev.select(
-        F.col("event_id").alias("op_id"),
-        F.col("ts").cast("timestamp").alias("op_ts"),
-        F.col("user_id").alias("key"),
-        F.when(F.col("event_type") == "error", "D").otherwise("U")
-        .alias("op"),
-        "value", F.lit(0).alias("__chunk"),
-    )
+    ops = _changelog_ops(ev, F.lit(0))
     hist = stream_scd2(
         spark, ops, str(tmp_path / "s9"), n_chunks=1, delay="2 days",
     ).select(

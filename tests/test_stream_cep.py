@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.catalog import read_table
 from flink_kafka_table_api_spark.queries import (
+    QUERIES,
     stream_match_recognize_sql as oracle_sql,
 )
 from flink_kafka_table_api_spark.streaming.stream_cep import (
@@ -138,45 +139,8 @@ def test_crash_replay_is_clean(spark, tmp_path):
     assert got == want == EXPECTED
 
 
-def spark_twin(spark, sf: str, state: str):
-    """Mirrors oracle_sql (shared by the queries.py twin): the funnel
-    PATTERN (view click+ purchase) streamed as 3 out-of-order drops
-    under a 2-day watermark. batch_id is dropped from the oracle-
-    checked shape (emission timing is pinned by the fixtures above)."""
-    ev = read_table(spark, sf, "events")
-    d0 = ev.agg(F.min(F.to_date("ts"))).first()[0]
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    chunked = ev.select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"),
-        "user_id", "event_type", "value",
-        F.least(
-            natural
-            + F.when(F.col("event_id") % 61 == 0, F.lit(2))
-            .when(F.col("event_id") % 37 == 0, F.lit(1))
-            .otherwise(F.lit(0)),
-            F.lit(2),
-        ).alias("__chunk"),
-    )
-    return stream_match_recognize(
-        spark, chunked, state, n_chunks=3, delay="2 days",
-        key_col="user_id", ts_col="ts", id_col="event_id",
-        define=[
-            ("V", F.col("event_type") == "view"),
-            ("K", F.col("event_type") == "click"),
-            ("P", F.col("event_type") == "purchase"),
-        ],
-        pattern="V K+ P",
-        measures={
-            "start_ts": F.min("ts"),
-            "end_ts": F.max("ts"),
-            "n_clicks": F.sum((F.col("__symbol") == "K").cast("long")),
-        },
-    ).select("user_id", "start_ts", "end_ts", "n_clicks")
-
-
-def test_oracle_parity_on_testdata(spark, tmp_path):
-    out = spark_twin(spark, SF, str(tmp_path / "c4"))
+def test_oracle_parity_on_testdata(spark):
+    out = QUERIES["stream_match_recognize"](spark, SF)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")

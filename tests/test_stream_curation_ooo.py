@@ -11,10 +11,16 @@ import os
 import shutil
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.queries import ORACLES, QUERIES
+from flink_kafka_table_api_spark.queries import (
+    ORACLES,
+    QUERIES,
+    _admitted_sql,
+    _doc_prm_sql,
+    _doc_tercile_sql,
+    _late_drop_sql,
+)
 from flink_kafka_table_api_spark.streaming.ooo_curation import (
     stream_curate_pack_ooo,
 )
@@ -48,34 +54,18 @@ def test_oracle_parity_on_testdata(spark):
     # the staged lateness has a live signal on the shipped corpus: some
     # two-drops-late docs fall below the admission watermark, and some
     # one-drop-late docs land inside it
-    excluded, late_admitted = con.execute("""
-      WITH prm AS (
-        SELECT MIN(doc_id) AS m0,
-               CAST(CEIL((MAX(doc_id) - MIN(doc_id) + 1) / 3.0) AS BIGINT)
-                 AS w
-        FROM documents
-      ),
+    nat = _doc_tercile_sql("d.doc_id")
+    excluded, late_admitted = con.execute(f"""
+      WITH {_doc_prm_sql()},
       chun AS (
-        SELECT d.doc_id,
-               LEAST(LEAST((d.doc_id - p.m0) // p.w, 2)
-                     + (CASE WHEN d.doc_id % 61 = 0 THEN 2
-                             WHEN d.doc_id % 37 = 0 THEN 1 ELSE 0 END),
-                     2) AS chunk,
-               LEAST((d.doc_id - p.m0) // p.w, 2) AS nat
-        FROM documents d, prm p
+        SELECT d.doc_id, {nat} AS nat,
+               {_late_drop_sql(nat, "d.doc_id")} AS chunk
+        FROM documents d, prm
       ),
-      mx AS (SELECT chunk, MAX(doc_id) AS mxid FROM chun GROUP BY chunk),
-      j AS (
-        SELECT c.*, (SELECT MAX(m.mxid) FROM mx m WHERE m.chunk < c.chunk)
-                      - GREATEST(1, p.w // 4) AS wmp
-        FROM chun c, prm p
-      )
-      SELECT SUM(CASE WHEN wmp IS NOT NULL AND doc_id <= wmp
-                      THEN 1 ELSE 0 END),
-             SUM(CASE WHEN chunk > nat
-                       AND (wmp IS NULL OR doc_id > wmp)
-                      THEN 1 ELSE 0 END)
-      FROM j
+      {_admitted_sql("adm", "chun", "(SELECT GREATEST(1, w // 4) FROM prm)",
+                     ts="doc_id", floor="-1")}
+      SELECT (SELECT COUNT(*) FROM chun) - (SELECT COUNT(*) FROM adm),
+             (SELECT COUNT(*) FROM adm WHERE chunk > nat)
     """).fetchone()
     assert excluded > 0, "no late doc crossed the admission watermark"
     assert late_admitted > 0, "no late doc was admitted"

@@ -7,15 +7,17 @@ oracle. The pinned model lives in streaming/late_data.py's docstring."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.queries import (
-    QUERIES,
     ORACLES,
+    QUERIES,
+    _admitted_sql,
+    _late_drop_sql,
+    _late_shift_sql,
 )
 from flink_kafka_table_api_spark.streaming.late_data import stage_chunked_by
 
@@ -93,6 +95,20 @@ def test_watermark_semantics_pin(spark, tmp_path):
     assert wms[2] == "2024-01-01T10:30:00.000Z"
 
 
+# The delivery schedule and Spark's window-eviction admission, as the
+# stream_late_events oracle replays them: `chun` is every delivered row
+# with its late shift, `adm` the rows whose window was still open.
+_REPLAY = f"""
+    chun AS (
+      SELECT event_id, ts, {_late_shift_sql()} AS shift,
+             {_late_drop_sql()} AS chunk
+      FROM events
+    ),
+    {_admitted_sql("adm", "chun", "INTERVAL 2 DAY",
+                   admit_by="date_trunc('day', r.ts) + INTERVAL 1 DAY",
+                   lag=2)}"""
+
+
 @pytest.fixture(scope="module")
 def con():
     c = duckdb.connect()
@@ -116,37 +132,12 @@ def test_late_slices_have_live_signal(spark, con):
     shipped corpus: some two-drops-late rows cross the eviction horizon
     (dropped), every one-drop-late row lands inside it (admitted), and
     the emitted aggregate reflects exactly the drops."""
-    dropped, one_late_total, one_late_dropped = con.execute("""
-      WITH base AS (
-        SELECT event_id, ts,
-               datediff('day', (SELECT MIN(CAST(ts AS DATE)) FROM events),
-                        CAST(ts AS DATE)) AS d_idx
-        FROM events
-      ),
-      chun AS (
-        SELECT *, LEAST(LEAST(CAST(d_idx // 10 AS BIGINT), 2)
-               + (CASE WHEN event_id % 61 = 0 THEN 2
-                       WHEN event_id % 37 = 0 THEN 1 ELSE 0 END), 2) AS chunk
-        FROM base
-      ),
-      mx AS (SELECT chunk, MAX(ts) AS mts FROM chun GROUP BY chunk),
-      j AS (
-        SELECT c.*,
-               (SELECT MAX(m.mts) FROM mx m WHERE m.chunk <= c.chunk - 2)
-                 - INTERVAL 2 DAY AS horizon
-        FROM chun c
-      )
-      SELECT
-        SUM(CASE WHEN horizon IS NOT NULL
-                  AND date_trunc('day', ts) + INTERVAL 1 DAY <= horizon
-                 THEN 1 ELSE 0 END),
-        SUM(CASE WHEN event_id % 37 = 0 AND event_id % 61 <> 0
-                 THEN 1 ELSE 0 END),
-        SUM(CASE WHEN event_id % 37 = 0 AND event_id % 61 <> 0
-                  AND horizon IS NOT NULL
-                  AND date_trunc('day', ts) + INTERVAL 1 DAY <= horizon
-                 THEN 1 ELSE 0 END)
-      FROM j
+    dropped, one_late_total, one_late_dropped = con.execute(f"""
+      WITH {_REPLAY}
+      SELECT (SELECT COUNT(*) FROM chun) - (SELECT COUNT(*) FROM adm),
+             (SELECT COUNT(*) FROM chun WHERE shift = 1),
+             (SELECT COUNT(*) FROM chun WHERE shift = 1)
+               - (SELECT COUNT(*) FROM adm WHERE shift = 1)
     """).fetchone()
     assert dropped > 0, "no two-drops-late row crossed the horizon"
     assert one_late_total > 0 and one_late_dropped == 0, (
@@ -157,35 +148,15 @@ def test_late_slices_have_live_signal(spark, con):
     # exactly the dropped rows inside the emission horizon
     df = QUERIES["stream_late_events"](spark, SF)
     emitted = df.agg(F.sum("n_events")).first()[0]
-    naive, dropped_in_horizon = con.execute("""
-      WITH base AS (
-        SELECT event_id, ts,
-               datediff('day', (SELECT MIN(CAST(ts AS DATE)) FROM events),
-                        CAST(ts AS DATE)) AS d_idx
-        FROM events
-      ),
-      chun AS (
-        SELECT *, LEAST(LEAST(CAST(d_idx // 10 AS BIGINT), 2)
-               + (CASE WHEN event_id % 61 = 0 THEN 2
-                       WHEN event_id % 37 = 0 THEN 1 ELSE 0 END), 2) AS chunk
-        FROM base
-      ),
-      mx AS (SELECT chunk, MAX(ts) AS mts FROM chun GROUP BY chunk),
-      j AS (
-        SELECT c.*,
-               (SELECT MAX(m.mts) FROM mx m WHERE m.chunk <= c.chunk - 2)
-                 - INTERVAL 2 DAY AS horizon
-        FROM chun c
-      ),
-      wm AS (SELECT MAX(ts) - INTERVAL 2 DAY AS w FROM events)
-      SELECT
-        SUM(CASE WHEN date_trunc('day', ts) + INTERVAL 1 DAY <= wm.w
-                 THEN 1 ELSE 0 END),
-        SUM(CASE WHEN date_trunc('day', ts) + INTERVAL 1 DAY <= wm.w
-                  AND horizon IS NOT NULL
-                  AND date_trunc('day', ts) + INTERVAL 1 DAY <= horizon
-                 THEN 1 ELSE 0 END)
-      FROM j, wm
+    naive, dropped_in_horizon = con.execute(f"""
+      WITH {_REPLAY},
+      wm AS (SELECT MAX(ts) - INTERVAL 2 DAY AS w FROM events),
+      closed AS (
+        SELECT c.event_id, c.event_id IN (SELECT event_id FROM adm) AS kept
+        FROM chun c, wm
+        WHERE date_trunc('day', c.ts) + INTERVAL 1 DAY <= wm.w
+      )
+      SELECT COUNT(*), COUNT(*) FILTER (WHERE NOT kept) FROM closed
     """).fetchone()
     assert emitted == naive - dropped_in_horizon
 

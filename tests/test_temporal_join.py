@@ -16,8 +16,15 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.catalog import read_table
-from flink_kafka_table_api_spark.queries import stream_temporal_join_sql
+from flink_kafka_table_api_spark.queries import (
+    QUERIES,
+    _admitted_sql,
+    _changelog_ops_sql,
+    _day_tercile_sql,
+    _late_drop_sql,
+    _temporal_join_inputs,
+    stream_temporal_join_sql,
+)
 from flink_kafka_table_api_spark.streaming.temporal_join import (
     stream_temporal_join,
 )
@@ -82,50 +89,11 @@ def test_temporal_visibility_semantics(spark, tmp_path):
     }
 
 
-def _events_fixture(spark):
-    """Testdata construction the round-9/10 registration will use: the
-    events changelog (the cdc_apply rule: key=user_id, 'error'=delete,
-    day-tercile chunks with %37/%61 late shifts) probed by the events
-    themselves in NATURAL day terciles."""
-    ev = read_table(spark, SF, "events")
-    d0 = ev.agg(F.min(F.to_date("ts"))).first()[0]
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    shift = (
-        F.when(F.col("event_id") % 61 == 0, F.lit(2))
-        .when(F.col("event_id") % 37 == 0, F.lit(1))
-        .otherwise(F.lit(0))
-    )
-    ops = ev.select(
-        F.col("event_id").alias("op_id"),
-        F.col("ts").cast("timestamp").alias("op_ts"),
-        F.col("user_id").alias("key"),
-        F.when(F.col("event_type") == "error", "D").otherwise("U")
-        .alias("op"),
-        "value",
-        F.least(natural + shift, F.lit(2)).alias("__chunk"),
-    )
-    probes = ev.select(
-        F.col("event_id").alias("probe_id"),
-        F.col("ts").cast("timestamp").alias("probe_ts"),
-        F.col("user_id").alias("key"),
-        natural.alias("__chunk"),
-    )
-    return ops, probes
-
-
-# The processing-time replay moved to queries.py for the round-9
-# registration; ORACLE_SQL_EVENT below stays test-only (the
-# semantics='event' variant is not a registered gate form).
 ORACLE_SQL = stream_temporal_join_sql()
 
 
-def test_oracle_parity_on_testdata(spark, tmp_path):
-    ops, probes = _events_fixture(spark)
-    out = stream_temporal_join(
-        spark, ops, probes, str(tmp_path / "tjdata"),
-        n_chunks=3, delay="2 days",
-    )
+def test_oracle_parity_on_testdata(spark):
+    out = QUERIES["stream_temporal_join"](spark, SF)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
@@ -178,34 +146,18 @@ def test_event_time_visibility_semantics(spark, tmp_path):
     }
 
 
-ORACLE_SQL_EVENT = """
-WITH base AS (
-  SELECT event_id, ts, user_id, event_type, value,
-         datediff('day', (SELECT MIN(CAST(ts AS DATE)) FROM events),
-                  CAST(ts AS DATE)) AS d_idx
+# The event-time variant is not registered; its replay differs from
+# ORACLE_SQL only in the candidate filter a.op_ts <= p.probe_ts.
+ORACLE_SQL_EVENT = f"""
+WITH ops AS (
+  SELECT {_changelog_ops_sql()}, {_late_drop_sql()} AS chunk
   FROM events
 ),
-ops AS (
-  SELECT event_id AS op_id, ts AS op_ts, user_id AS key,
-         CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-         value,
-         LEAST(LEAST(CAST(d_idx // 10 AS BIGINT), 2)
-           + (CASE WHEN event_id % 61 = 0 THEN 2
-                   WHEN event_id % 37 = 0 THEN 1 ELSE 0 END), 2) AS chunk
-  FROM base
-),
-mx AS (SELECT chunk, MAX(op_ts) AS mts FROM ops GROUP BY chunk),
-adm AS (
-  SELECT o.* FROM ops o
-  WHERE o.op_ts > COALESCE(
-    (SELECT MAX(m.mts) FROM mx m WHERE m.chunk < o.chunk)
-      - INTERVAL 2 DAY,
-    TIMESTAMP '1970-01-01')
-),
+{_admitted_sql("adm", "ops", "INTERVAL 2 DAY", ts="op_ts")},
 probes AS (
   SELECT event_id AS probe_id, ts AS probe_ts, user_id AS key,
-         LEAST(CAST(d_idx // 10 AS BIGINT), 2) AS pk
-  FROM base
+         {_day_tercile_sql()} AS pk
+  FROM events
 ),
 cand AS (
   SELECT p.probe_id, a.op, a.value, a.op_id,
@@ -227,7 +179,7 @@ FROM probes p LEFT JOIN win w ON w.probe_id = p.probe_id
 
 
 def test_event_time_oracle_parity_on_testdata(spark, tmp_path):
-    ops, probes = _events_fixture(spark)
+    ops, probes = _temporal_join_inputs(spark, SF)
     out = stream_temporal_join(
         spark, ops, probes, str(tmp_path / "tjedata"),
         n_chunks=3, delay="2 days", semantics="event",
@@ -254,7 +206,7 @@ def test_event_time_oracle_parity_on_testdata(spark, tmp_path):
 
 @pytest.mark.parametrize("semantics", ["processing", "event"])
 def test_crash_mid_batch_replays_clean(spark, tmp_path, semantics):
-    ops, probes = _events_fixture(spark)
+    ops, probes = _temporal_join_inputs(spark, SF)
     state = str(tmp_path / f"tjcrash_{semantics}")
     out = stream_temporal_join(
         spark, ops, probes, state, n_chunks=3, delay="2 days",
@@ -273,7 +225,7 @@ def test_crash_mid_batch_replays_clean(spark, tmp_path, semantics):
 
 
 def test_replay_of_committed_batches_is_a_noop(spark, tmp_path):
-    ops, probes = _events_fixture(spark)
+    ops, probes = _temporal_join_inputs(spark, SF)
     state = str(tmp_path / "tjreplay")
     out = stream_temporal_join(
         spark, ops, probes, state, n_chunks=3, delay="2 days",
@@ -297,7 +249,7 @@ def test_asof_enrich_plan_is_one_keyed_window_no_join(spark):
         asof_enrich,
     )
 
-    ops, probes = _events_fixture(spark)
+    ops, probes = _temporal_join_inputs(spark, SF)
     history = ops.select("op_id", "op_ts", "key", "op", "value")
     plan = (
         asof_enrich(probes.drop("__chunk"), history)
@@ -316,7 +268,7 @@ def test_changelog_winners_is_partial_aggregate(spark):
         changelog_winners,
     )
 
-    ops, _ = _events_fixture(spark)
+    ops, _ = _temporal_join_inputs(spark, SF)
     plan = (
         changelog_winners(ops.withColumn("__n", F.lit(1)), "__n")
         ._jdf.queryExecution().executedPlan().toString()

@@ -17,9 +17,9 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.catalog import read_table
 from flink_kafka_table_api_spark.queries import (
     QUERIES,
+    _watermark_alignment_rows,
     stream_watermark_alignment_sql,
 )
 from flink_kafka_table_api_spark.streaming.watermark_alignment import (
@@ -157,20 +157,7 @@ def test_throttle_is_live_on_testdata(spark, tmp_path):
     """The gate form really throttles: the firehose source's far-future
     rows defer at batches 1-2 (a dead fixture would make the whole
     operator a plain windowed aggregate)."""
-    sf = "/root/testdata/sf0.001"
-    ev = read_table(spark, sf, "events")
-    d0 = ev.agg(F.min(F.to_date("ts"))).first()[0]
-    d_idx = F.datediff(F.to_date("ts"), F.lit(d0))
-    natural = F.least(F.floor(d_idx / F.lit(10)).cast("long"), F.lit(2))
-    chunk = F.when(
-        F.col("event_type") == "click",
-        F.greatest(natural - 1, F.lit(0)),
-    ).otherwise(natural)
-    rows = ev.select(
-        F.col("event_type").alias("source"),
-        F.col("ts").cast("timestamp").alias("ts"),
-        "value", chunk.cast("int").alias("__chunk"),
-    )
+    rows = _watermark_alignment_rows(spark, "/root/testdata/sf0.001")
     state = str(tmp_path / "s6")
     stream_watermark_alignment(
         spark, rows, state, n_chunks=3, delay="2 days", drift="3 days",

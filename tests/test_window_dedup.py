@@ -11,6 +11,7 @@ import duckdb
 
 from flink_kafka_table_api_spark.queries import (
     QUERIES,
+    _late_shift_sql,
     stream_window_dedup_sql,
 )
 
@@ -45,11 +46,14 @@ def test_late_winner_semantics(spark):
     rows = con.execute(stream_window_dedup_sql()).fetchall()
     keys = [(r[0], r[2]) for r in rows]
     assert len(keys) == len(set(keys))  # (a)
-    # (b): some winner arrives one drop late (%37 shift) yet has the
-    # smallest (ts, event_id) of its window+user
-    late_winners = [r for r in rows if r[3] % 37 == 0]
+    # (b): some winner arrives one drop late yet has the smallest
+    # (ts, event_id) of its window+user
+    one_late = {r[0] for r in con.execute(
+        f"SELECT event_id FROM events WHERE {_late_shift_sql()} = 1"
+    ).fetchall()}
+    late_winners = [r for r in rows if r[3] in one_late]
     assert late_winners, "no late-admitted row ever won a window"
-    # (c): the watermark-dropped slice (%61 two drops late) would have
+    # (c): the watermark-dropped slice (two drops late) would have
     # won some window in the drop-nothing replay
     naive = con.execute("""
       WITH ranked AS (
