@@ -56,12 +56,12 @@ def replan_cached_plans(spark):
     The flag lets AQE re-plan (and coalesce) the partitioning of CACHED
     plans, so a persisted micro-batch frame materializes at data-sized
     parallelism instead of the full shuffle-partition fan-out — measured
-    in r10 on stream_curation_ooo: 8798 -> 3731 tasks, job-time sum
-    57 -> 21 s. Session-wide, however, the r11 interleaved A/B on the
-    23-query comparable set (medians of 3 invocations per side) measured ON ~7% slower overall — the flag
-    coalesces CPU-expensive cached frames (the LSH pipeline's shingle
-    sets) below useful parallelism on the batch paths — matching the
-    r10 driver's 11 regressed batch queries. So: default OFF
+    on stream_curation_ooo: 8798 -> 3731 tasks, job-time sum 57 -> 21 s.
+    Session-wide, however, an interleaved A/B on 23 batch queries
+    (medians of 3 invocations per side) measured ON ~7% slower overall —
+    the flag coalesces CPU-expensive cached frames (the LSH pipeline's
+    shingle sets) below useful parallelism on the batch paths. So:
+    default OFF
     (session.py no longer sets it), ON only inside the foreachBatch
     pipelines whose per-batch persisted frames are the proven win."""
     key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"

@@ -77,8 +77,8 @@ def spark_round6_sql(expr: str) -> str:
     repr-boundary value the two disagree: 66.1600125 is stored as
     66.16001249999999345..., which Spark rounds UP to 66.160013 (the
     repr ends in ...5) and DuckDB rounds DOWN (the exact value is below
-    the boundary) — one cell of holt_forecast at sf0.01, found by the
-    round-8 gate replica. CAST(x AS VARCHAR) in DuckDB prints the same
+    the boundary) — one cell of holt_forecast at sf0.01, found by sf0.01
+    parity. CAST(x AS VARCHAR) in DuckDB prints the same
     shortest round-trip repr Java's Double.toString produces; DECIMAL
     round is exact HALF_UP (away from zero, like Java's) — so this
     chain reproduces Spark's result bit-for-bit on every finite double.

@@ -1,6 +1,5 @@
 """Row-pattern matching over ordered event sequences — SQL:2016
-MATCH_RECOGNIZE, the Flink SQL / FlinkCEP surface (built round 8,
-registration-bound for a round-9/10 gate slot).
+MATCH_RECOGNIZE, the Flink SQL / FlinkCEP surface.
 
 Flink SQL ships MATCH_RECOGNIZE as its complex-event-processing
 surface (public Table API/SQL docs; the reference repo's pipeline has

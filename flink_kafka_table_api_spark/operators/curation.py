@@ -372,7 +372,7 @@ def temperature_mix(
     upsampling (epochs over small sources), hash-based downsampling, both
     reproducible across runs, partitionings, and engines.
 
-    Cross-engine exactness (the round-6 oracle contract): ``temperature``
+    Cross-engine exactness (the oracle contract): ``temperature``
     must be a power of two, so n^(1/T) is a chain of sqrt calls — sqrt is
     IEEE correctly-rounded everywhere, while pow is NOT guaranteed to be
     and may differ between JVM and DuckDB in the last ulp. The per-source
@@ -432,11 +432,11 @@ def temperature_mix(
     # computation — ties must break the same way in all three places
     from decimal import ROUND_HALF_UP, Decimal
 
-    def r9(x: float) -> float:
+    def half_up_1e9(x: float) -> float:
         return float(Decimal(x).quantize(Decimal("1e-9"), ROUND_HALF_UP))
 
     rates = [
-        (s, r9(w / w_sum * scale * n_total / n))
+        (s, half_up_1e9(w / w_sum * scale * n_total / n))
         for (s, w), (_, n) in zip(weights, counts)
     ]
     spark = df.sparkSession
@@ -475,8 +475,8 @@ def temperature_mix_sql(
     construction (sqrt chain, source-ordered left fold via list_reduce —
     DuckDB's no-init fold starts acc = first element, identical to a
     0.0-seeded left fold since 0.0 + x == x — HALF_UP rounding, portable
-    md5 uniform). This is the committed round-6 oracle; validated
-    against the operator by tests/test_temperature_mix.py."""
+    md5 uniform). Validated against the operator by
+    tests/test_temperature_mix.py."""
     import math
 
     k = int(math.log2(temperature))
@@ -991,9 +991,9 @@ def weighted_sample_sql(
     target_n: int = 100,
     salt: str = "fkta-wsample",
 ) -> str:
-    """DuckDB replay of :func:`weighted_sample` — the pre-validated
-    round-7 oracle (same integer W, same IEEE division, same md5
-    uniform; membership bit-equal by construction)."""
+    """DuckDB replay of :func:`weighted_sample` (same integer W, same
+    IEEE division, same md5 uniform; membership bit-equal by
+    construction)."""
     h = (f"(('0x' || substr(md5('{salt}:' || CAST({id_col} AS VARCHAR)),"
          f" 1, 15))::BIGINT)")
     return f"""
@@ -1668,7 +1668,7 @@ def psi_drift(
     snapshots, one n_bins-cell count aggregate per snapshot with
     map-side combine, then pure algebra on the 2 x n_bins-row frame.
     Returns one row per bin: (bin_id, n_old, n_new, p_old, p_new,
-    psi_term, psi_total) — psi_total repeated per row, round 6."""
+    psi_term, psi_total) — psi_total repeated per row."""
     qs = [i / n_bins for i in range(1, n_bins)]
     spark = old.sparkSession
     cuts_row = old.agg(

@@ -162,8 +162,8 @@ def lsh_candidate_pairs(
     to the corpus squared.
 
     ``max_bucket_size`` is the boilerplate-skew defusal (the winnow_matches
-    max_hash_df recipe, measured necessary by the round-7 zipf-skew
-    experiment: a hot template paragraph shared by ~7% of a 64x corpus made
+    max_hash_df recipe, measured necessary by a zipf-skew experiment: a
+    hot template paragraph shared by ~7% of a 64x corpus made
     dedup_clusters degrade 3.08x): buckets larger than the cap are SKIPPED
     before the self-join, bounding per-bucket work at cap^2. The docs a
     mega-bucket holds collide there because of SHARED BOILERPLATE, whose

@@ -1,6 +1,5 @@
 """Declarative data-expectations engine: a rule set compiled into the
-fewest possible passes, reporting one row per rule (built round 8,
-registration-bound for a round-9/10 gate slot).
+fewest possible passes, reporting one row per rule.
 
 The data-contract surface every ingest pipeline needs (the shape
 popularized by dbt tests / Great Expectations — public tooling): a

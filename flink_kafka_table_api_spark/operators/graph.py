@@ -399,7 +399,7 @@ def pagerank_sql(
     damping: float = 0.85,
     iterations: int = 5,
 ) -> str:
-    """DuckDB replay of :func:`pagerank` — the committed round-6 oracle.
+    """DuckDB replay of :func:`pagerank`.
     ``edges_sql`` is a query producing the symmetric (src, dst) relation.
     Iterations unroll as a WITH chain; each per-node sum is
     list_reduce over a src-ORDERED list of contributions (DuckDB's
@@ -413,27 +413,32 @@ def pagerank_sql(
     # 0.15; as doubles it is 0.15000000000000002, which is what Spark
     # computes)
     d = f"CAST({damping!r} AS DOUBLE)"
+
+    def ranks(i: int) -> str:
+        """The CTE holding the ranks after iteration `i`."""
+        return f"r{i}"
+
     parts = [
         f"e AS ({edges_sql})",
         "deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY src)",
         "nn AS (SELECT COUNT(*) AS c FROM deg)",
-        "r0 AS (SELECT src AS node, CAST(1.0 AS DOUBLE) / c AS rank "
+        f"{ranks(0)} AS (SELECT src AS node, CAST(1.0 AS DOUBLE) / c AS rank "
         "FROM deg, nn)",
     ]
     for i in range(iterations):
         parts.append(
-            f"r{i + 1} AS ("
+            f"{ranks(i + 1)} AS ("
             f"SELECT e.dst AS node, "
             f"((CAST(1.0 AS DOUBLE) - {d}) / nn.c) + {d} * "
             f"list_reduce(list(r.rank / deg.d ORDER BY e.src), "
             f"(a, b) -> a + b) AS rank "
             f"FROM e JOIN deg ON e.src = deg.src "
-            f"JOIN r{i} r ON e.src = r.node, nn "
+            f"JOIN {ranks(i)} r ON e.src = r.node, nn "
             f"GROUP BY e.dst, nn.c)"
         )
     return (
         "WITH " + ", ".join(parts)
-        + f" SELECT node, round(rank, 9) AS rank FROM r{iterations}"
+        + f" SELECT node, round(rank, 9) AS rank FROM {ranks(iterations)}"
     )
 
 
@@ -895,8 +900,8 @@ def bfs_hops_sql(
     nodes x (max_hops+1) rows — and MIN(hop) per node is exactly the
     operator's first-reached round; pure integer arithmetic, bit-exact.
 
-    History (round 8): the original replay unrolled the rounds as a
-    WITH chain where each d{h} referenced d{h-1} TWICE (the frontier
+    Why not an unrolled chain: the original replay unrolled the rounds
+    as a WITH chain where each d{h} referenced d{h-1} TWICE (the frontier
     join and the NOT-IN settle). DuckDB 1.0 INLINES multiply-referenced
     CTEs, so the unrolled plan re-evaluated the whole prefix per
     reference — exponential in max_hops (measured at sf0.001: hops=6

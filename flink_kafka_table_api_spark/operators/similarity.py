@@ -344,7 +344,7 @@ def ivf_build_index(
     paid once at ingest, amortized over every query. At 100 TB the index
     is just a partitioned table; each query then touches 1/k of the data
     via partition pruning instead of re-assigning the whole corpus
-    (the round-1 anti-pattern this replaces). The index also materializes
+    (the anti-pattern this replaces). The index also materializes
     the int8-quantized vector (``qe``, array<tinyint> — 4x smaller than the
     float column) so quantized search never touches the float payload."""
     assign = ivf_assign(vectors, centroids, id_col=id_col, vec_col=vec_col)
@@ -1177,7 +1177,7 @@ def grid_density_clusters(
             F.element_at(F.col(vec_col), 2).cast("double") / F.lit(cell)
         ).cast("long").alias("cell_y"),
     )
-    # loud out-of-range guard (round-7 ADVICE): a coordinate beyond
+    # loud out-of-range guard: a coordinate beyond
     # +-2^20 cell widths would silently alias distinct cells into one
     # packed id — fail the job instead. assert_true returns NULL on
     # success; routing __cid through it keeps the check un-prunable.

@@ -178,10 +178,10 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
 def tf_idf(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Per-(doc, token) TF-IDF: tf = occurrences/doc_len, idf = ln(N/df).
 
-    BEHAVIOR CHANGE (round 5): N counts documents with >= 1 token, not
-    all distinct input documents. A corpus containing empty or
-    whitespace-only documents therefore gets slightly smaller idf values
-    than the pre-r5 operator produced. This matches the standard
+    N counts documents with >= 1 token, not all distinct input
+    documents, so a corpus containing empty or whitespace-only documents
+    gets slightly smaller idf values than a count of every input
+    document would give. This matches the standard
     definition (a zero-token document contributes to no df and can carry
     no tf-idf mass) and the DuckDB oracle's COUNT(DISTINCT doc_id) over
     the exploded relation — but downstream consumers comparing tfidf
@@ -1147,7 +1147,7 @@ def _apriori_stage(
 def frequent_pairs_sql(min_support: int = 10) -> str:
     """DuckDB replay of :func:`frequent_pairs` over the documents table —
     identical tokenization, identical distinct/prune/pair pipeline,
-    pure integer arithmetic; the pre-validated round-7 oracle."""
+    pure integer arithmetic."""
     toks = tokens_sql("text")
     return f"""
     WITH dt AS (
@@ -1742,7 +1742,7 @@ def winnow_matches(
     # straight into the Generate — without it the hash transform
     # re-evaluates per window element and the pipeline goes quadratic
     # per document (measured: >10 min for the sf0.001 corpus vs ~2 s
-    # with the boundary; the cdc_chunk_dedup lesson, round 4). The
+    # with the boundary; the cdc_chunk_dedup lesson). The
     # per-doc summary (:func:`winnowing_fingerprints`) doesn't need it:
     # its consuming projection references __fp three times, which
     # already fails CollapseProject's single-reference/isCheap test.
@@ -2649,8 +2649,8 @@ def heaps_law(
     )
     # + 0.0 canonicalizes IEEE negative zero: a slope that rounds to
     # zero from below is -0.0 in DuckDB's round but 0.0 in Spark's
-    # (BigDecimal drops the sign) — caught by the round-8 sf0.01 gate
-    # replica ("%.6g" renders them "-0" vs "0")
+    # (BigDecimal drops the sign) — caught by sf0.01 parity ("%.6g"
+    # renders them "-0" vs "0")
     fit = folded.select(
         (F.round(beta, 9) + F.lit(0.0)).alias("beta"),
         F.round(
@@ -2740,7 +2740,7 @@ def heaps_law_sql(*, n_buckets: int = 20) -> str:
 
 
 # ---------------------------------------------------------------------------
-# PII scrub (round 8): VALIDATED detection + redaction of four PII
+# PII scrub: VALIDATED detection + redaction of four PII
 # signal classes over a text column. The registered `pii_redact`
 # (operators/curation.py) is the pattern-REPLACEMENT pass (typed tags +
 # one total tag count); this operator adds what an audit/compliance

@@ -489,8 +489,8 @@ def cusum_drift_sql(*, slack: float = 0.5, threshold: float = 4.0) -> str:
 BURST_QUANTUM = 1_000.0
 """Cost quantization scale for burst_detection (milli-units).
 
-Round-10 coarsening (VERDICT r9 item 1a): at quantum 1e6 the committed
-margin audit measured cost-boundary floors of ~1e-5 micro-units — two
+Why milli-units and not micro-units: at quantum 1e6 a margin audit
+measured cost-boundary floors of ~1e-5 micro-units — two
 orders above a glibc-quality ln's ulp wiggle, but a driver DuckDB built
 against a DIFFERENT libm (or vectorizing ln) can legally exceed that
 band: a 1e-13-relative ln difference amplified by c<=n~1e3 is ~2e-5
@@ -649,8 +649,8 @@ def _burst_walk_col(g: int) -> "Column":
     """Given sorted per-group cost structs `xs` (day, c, n, e0, e1),
     build the per-day burst-state column.
 
-    The two-state Viterbi reduces to a SCALAR integer walk (round-10
-    reformulation, VERDICT r9 item 1b). With c0/c1 the usual forward
+    The two-state Viterbi reduces to a SCALAR integer walk. With c0/c1
+    the usual forward
     minima (c0_t = e0_t + min(c0', c1'); c1_t = e1_t + min(c0' + g,
     c1')), the difference D = c1 - c0 satisfies
 
@@ -661,7 +661,7 @@ def _burst_walk_col(g: int) -> "Column":
     = clamp(D', 0, g). The parent pointers are FUNCTIONS of D': the
     predecessor of q0 is q1 iff D' < 0 (tie prefers q0), and the
     predecessor of q1 is q0 iff D' > g (tie prefers q1) — the exact
-    tie-breaks of the round-9 pointer formulation. The final state is
+    tie-breaks of the parent-pointer formulation. The final state is
     q1 iff D_T < 0 (tie prefers q0). So the backtrack reads D against
     0/g and no unbounded c0/c1 sums or parent-pointer strings exist:
     every comparison is small-integer-exact in any engine."""
@@ -737,9 +737,8 @@ def burst_detection(
     inside a burst stay marked because switching back costs more than
     the dip saves.
 
-    Cross-engine determinism (round-10 hardening, after driver reds in
-    r8 AND r9 with a local replica green on the identical commit/data —
-    the divergence is inside the driver's newer DuckDB binary): costs
+    Cross-engine determinism (a different DuckDB binary on identical
+    data once disagreed with the local replay): costs
     quantize ONCE to integer MILLI-units via floor(x*1e3 + 0.5) — see
     BURST_QUANTUM for why 1e3 makes the margins robust to ANY libm —
     and the Viterbi collapses to a scalar integer walk
@@ -793,10 +792,10 @@ def burst_detection_sql(
     """DuckDB oracle for :func:`burst_detection` over `events`: same
     calendar, same floor(x*1e3 + 0.5) milli-unit quantization, and the
     Viterbi restated as the SCALAR integer walk D_t = (e1_t - e0_t) +
-    clamp(D_{t-1}, 0, gamma) (round-10 rewrite; derivation in
-    :func:`_burst_walk_col`) — two small recursive CTEs over pure
-    integer arithmetic, no parent-pointer strings, no list lambdas
-    (whose accumulator behavior proved DuckDB-version-specific in r8)."""
+    clamp(D_{t-1}, 0, gamma) (derivation in :func:`_burst_walk_col`) —
+    two small recursive CTEs over pure integer arithmetic, no
+    parent-pointer strings, no list lambdas (whose accumulator behavior
+    proved DuckDB-version-specific)."""
     g = _burst_gamma(gamma_scale)
     return _burst_scored_sql(burst_mult=burst_mult) + f""",
     walk AS (
@@ -1208,7 +1207,7 @@ def markov_transitions(
 
 def markov_transitions_sql() -> str:
     """DuckDB replay of :func:`markov_transitions` over the events
-    view (same (ts, event_id) lag order, same round-9 MLE)."""
+    view (same (ts, event_id) lag order, same MLE)."""
     return """
     WITH seq AS (
       SELECT event_type,
@@ -1715,8 +1714,7 @@ def mann_kendall(
     z/verdict. A corpus spanning a SINGLE calendar day produces NO
     rows at all (not NULL rows): the pairwise-slope join is empty, so
     the inner join back onto the tie table drops every group —
-    identically in both engines (round-7 ADVICE: the behavior is
-    engine-consistent; this docstring previously promised NULLs).
+    identically in both engines.
 
     Returns (group, n_days, s_stat, var_s_x18, z round(9), trend
     in {'increasing','decreasing','no_trend'}, sens_slope round(9)).

@@ -272,7 +272,7 @@ def k_anonymity_audit_sql(
     thresholds: Sequence[int] = (2, 5, 10, 25),
 ) -> str:
     """DuckDB replay of :func:`k_anonymity_audit` (same class
-    aggregate, same threshold spine, same round-9 share)."""
+    aggregate, same threshold spine, same share)."""
     qi = ", ".join(qi_cols)
     ks = ", ".join(f"({int(k)})" for k in sorted(thresholds))
     return f"""

@@ -99,8 +99,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # canChangeCachedPlanOutputPartitioning is NOT set here any more
-        # (r11): session-wide it regressed the batch comparable set ~7%
+        # canChangeCachedPlanOutputPartitioning is NOT set here:
+        # session-wide it regressed the batch comparable set ~7%
         # (interleaved A/B: AQE coalesces CPU-expensive cached frames
         # below useful parallelism), while its
         # proven win is the streaming foreachBatch pipelines' per-batch

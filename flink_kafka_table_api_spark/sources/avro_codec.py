@@ -1,12 +1,14 @@
-"""Minimal pure-Python Avro binary codec (encode + decode).
+"""Minimal pure-Python Avro binary codec (encode + decode): the
+reference codec of the object-container file source and of the tests.
 
-Why this exists: the reference's wire format is Confluent-framed Avro
-(SURVEY.md §2.1 O2). Spark's native path is `from_avro`/`to_avro`, which
-needs the external spark-avro package; this container has neither that jar
-nor any Python Avro library. Rather than leave O2 gated on infrastructure,
-this module implements the Avro binary encoding for the subset of the spec
-the engine's schemas use — primitives, nullable unions, maps, arrays,
-records, and timestamp logical types — per the public Avro 1.11 spec:
+The reference's wire format is Confluent-framed Avro (SURVEY.md §2.1
+O2). The Kafka path (`sources/kafka.py`) decodes and encodes it in the
+JVM, through the in-repo codec UDF (`sources/java_udf.py`). This module
+is the plain-Python codec beside it: the OCF reader/writer in
+`sources/avro_file.py` uses it, and tests check the JVM codec's rows and
+bytes against it. It implements the subset of the Avro 1.11 binary
+encoding the engine's schemas use — primitives, nullable unions, maps,
+arrays, records, and timestamp logical types:
 
 - int/long: zigzag -> unsigned LEB128 varint
 - float/double: 4/8 bytes little-endian IEEE
@@ -21,11 +23,6 @@ records, and timestamp logical types — per the public Avro 1.11 spec:
 - decimal (bytes/fixed): two's-complement big-endian unscaled int, minimal
   length (the same bytes java.math.BigInteger.toByteArray() emits, so the
   JVM UDF path in java/fkta/ and this codec are bit-identical)
-
-The Spark integration (`sources/kafka.py`) decodes and encodes in the JVM,
-through the in-repo codec UDF (`sources/java_udf.py`). This module is the
-plain-Python reference codec: the OCF reader/writer in `sources/avro_file.py`
-uses it, and tests check the JVM codec's rows and bytes against it.
 """
 
 from __future__ import annotations

@@ -148,7 +148,7 @@ def zorder_gate_probe(
     *,
     num_files: int = 16,
 ) -> DataFrame:
-    """The committed round-6 gate-query shape for the z-order layout: a
+    """The registered query shape for the z-order layout: a
     single-row result combining (a) the box-predicate aggregate over the
     REWRITTEN data — which the DuckDB oracle reproduces over the original
     table, proving the rewrite lost nothing the predicate can see — and

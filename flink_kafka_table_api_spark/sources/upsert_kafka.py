@@ -1,5 +1,5 @@
 """upsert-kafka framing: a RowKind changelog as a compacted Kafka
-topic (built round 8; sandbox-local like every Kafka surface here — no
+topic (sandbox-local like every Kafka surface here — no
 broker socket, the framing and materialization are the testable parts,
 exactly the registered_payload precedent in sources/kafka.py).
 

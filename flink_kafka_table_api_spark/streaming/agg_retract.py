@@ -1,6 +1,5 @@
-"""Retract-mode GROUP BY aggregation over an UPDATE stream (built
-round 9, staged for a round-10 gate slot — with `streaming/retract.py`
-this completes Flink's update-mode query class).
+"""Retract-mode GROUP BY aggregation over an UPDATE stream (with
+`streaming/retract.py` this completes Flink's update-mode query class).
 
 `streaming/retract.py` ranks an APPEND stream's running sums;
 `streaming/cdc_apply.py` materializes an update stream's current rows.
@@ -33,7 +32,7 @@ The Spark-first state machine (foreachBatch, batch_commit protocol):
                instead of deltas, costing one hash aggregate of
                O(live keys) state (Flink pays the same state, held in
                the aggregate operator's accumulators);
-    3. DIFF:   changelog(agg_{k-1} -> agg_k): groups appearing emit
+    3. DIFF:   retract.rowkind_diff(agg_{k-1} -> agg_k): groups appearing emit
                +I, disappearing emit -D (old row), changing emit -U
                (old) then +U (new) — |groups|-sized full-outer join;
     4. PUBLISH state/batch-k + agg/batch-k + out/batch-k.
@@ -62,7 +61,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.streaming.batch_commit import (
@@ -73,6 +72,7 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     read_version,
 )
 from flink_kafka_table_api_spark.streaming.late_data import stage_chunked_by
+from flink_kafka_table_api_spark.streaming.retract import rowkind_diff
 
 OPS_COLUMNS = ["op_id", "op_ts", "key", "grp", "op", "value"]
 OPS_SCHEMA = (
@@ -116,44 +116,11 @@ def _group_agg(winners: DataFrame) -> DataFrame:
     )
 
 
-def _changelog(prev: DataFrame, cur: DataFrame, batch_id: int) -> DataFrame:
-    o = prev.select(
-        F.col("grp"), F.col("n_keys").alias("__on"),
-        F.col("total").alias("__ot"),
-    )
-    n = cur.select(
-        F.col("grp"), F.col("n_keys").alias("__nn"),
-        F.col("total").alias("__nt"),
-    )
-    j = o.join(n, "grp", "full_outer")
-    ins = j.filter(F.col("__on").isNull()).select(
-        F.lit("+I").alias("op"), "grp",
-        F.col("__nn").alias("n_keys"),
-        F.col("__nt").cast("double").alias("total"),
-    )
-    dels = j.filter(F.col("__nn").isNull()).select(
-        F.lit("-D").alias("op"), "grp",
-        F.col("__on").alias("n_keys"),
-        F.col("__ot").cast("double").alias("total"),
-    )
-    chg = j.filter(
-        F.col("__on").isNotNull() & F.col("__nn").isNotNull()
-        & ((F.col("__on") != F.col("__nn"))
-           | (F.col("__ot") != F.col("__nt")))
-    )
-    ret = chg.select(
-        F.lit("-U").alias("op"), "grp",
-        F.col("__on").alias("n_keys"),
-        F.col("__ot").cast("double").alias("total"),
-    )
-    upd = chg.select(
-        F.lit("+U").alias("op"), "grp",
-        F.col("__nn").alias("n_keys"),
-        F.col("__nt").cast("double").alias("total"),
-    )
-    return (
-        ins.unionByName(ret).unionByName(upd).unionByName(dels)
-        .withColumn("batch_id", F.lit(batch_id).cast("long"))
+def changelog(prev: DataFrame, cur: DataFrame, batch_id: int) -> DataFrame:
+    """The RowKind changelog of the group aggregates from batch
+    `batch_id` - 1 to `batch_id`."""
+    return rowkind_diff(prev, cur, "grp", ("n_keys", "total")).withColumn(
+        "batch_id", F.lit(batch_id).cast("long")
     )
 
 
@@ -193,26 +160,10 @@ def stream_agg_retract(
         agg = _group_agg(merged).persist()
         prev_agg = read_version(spark, agg_dir, batch_id - 1, _AGG_SCHEMA)
         return Publish([
-            overwrite(_changelog(prev_agg, agg, batch_id),
+            overwrite(changelog(prev_agg, agg, batch_id),
                       batch_dir(out_dir, batch_id)),
             overwrite(merged, batch_dir(state_dir_v, batch_id)),
             overwrite(agg, batch_dir(agg_dir, batch_id)),
         ], release=[merged, agg])
 
     return commit.drain(spark, src, OPS_SCHEMA, process, out_dir, _OUT_SCHEMA)
-
-
-def apply_changelog(log: DataFrame) -> DataFrame:
-    """Materialize the changelog a consumer would: the last +I/+U row
-    per group not followed by -D — used by tests to pin that applying
-    the log reproduces the final GROUP BY exactly."""
-    w = Window.partitionBy("grp").orderBy(
-        F.col("batch_id").desc(),
-        # within a batch: -U precedes +U; apply order +I/+U last
-        F.when(F.col("op").isin("+I", "+U"), 1).otherwise(0).desc(),
-    )
-    return (
-        log.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & F.col("op").isin("+I", "+U"))
-        .select("grp", "n_keys", "total")
-    )

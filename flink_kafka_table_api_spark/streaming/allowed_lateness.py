@@ -1,6 +1,6 @@
-"""Allowed lateness with a late-data side output (built round 9, staged
-for a round-10 gate slot — Flink's `allowedLateness()` +
-`sideOutputLateData()`, the DataStream windowing surface that completes
+"""Allowed lateness with a late-data side output (Flink's
+`allowedLateness()` + `sideOutputLateData()`, the DataStream windowing
+surface that completes
 the repo's lateness-policy toolbox: DROP at the watermark
 (streaming/windows.py), don't let an idle source stall the watermark
 (idle_watermark), throttle a fast source (watermark_alignment), and now
@@ -71,10 +71,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.functions.portable import DEC
-from flink_kafka_table_api_spark.streaming.chunk_stats import (
-    ChunkStats,
-    stat_max,
-)
 from flink_kafka_table_api_spark.streaming.batch_commit import (
     BatchCommit,
     Publish,
@@ -83,6 +79,7 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     read_version,
 )
 from flink_kafka_table_api_spark.streaming.late_data import (
+    EventClock,
     stage_chunked_by,
     ts_shift,
 )
@@ -138,31 +135,26 @@ def stream_allowed_lateness(
         os.path.join(state_dir, "src"),
         chunk_col="__chunk", n_chunks=n_chunks, columns=["ts", "value"],
     )
-    ckpt = os.path.join(state_dir, "ckpt")
-    # watermark-advance maxima ride ONE staging-time job instead of one
-    # agg job per micro-batch (chunk_stats.py; guide §1.2)
-    stats = ChunkStats(
-        spark, src, "ts timestamp, value double", {"mx": F.max("ts")}
-    )
     out_dir = os.path.join(state_dir, "out")
     st_dir = os.path.join(state_dir, "state")
     commit = BatchCommit(
         state_dir, scoped=(out_dir, st_dir), versioned=(st_dir,),
         meta_dir=os.path.join(state_dir, "wm"),
     )
-
-    def _ts_minus(iso: str, interval: str) -> str:
-        return ts_shift(iso, interval)
+    clock = EventClock(
+        spark, commit, src, "ts timestamp, value double", "ts", delay
+    )
 
     def process(batch: DataFrame, batch_id: int) -> Publish:
         batch = batch.persist()
-        prev = commit.meta(batch_id - 1, {"max_seen": None})
+        # admission is against W_{k-1} - allowed, not W_{k-1}: the clock
+        # only advances W (the fire/evict step below reads W_k)
+        t = clock.tick(batch, batch_id, admit=False)
         # 1. CLASSIFY against W_{k-1}
-        if prev["max_seen"] is None:
+        if t.prev is None:
             admitted, quarantined = batch, batch.filter(F.lit(False))
         else:
-            w_prev = _ts_minus(prev["max_seen"], delay)
-            q_line = _ts_minus(w_prev.replace(" ", "T"), allowed)
+            q_line = ts_shift(t.prev, allowed)
             admitted = batch.filter(
                 F.col("ts") > F.lit(q_line).cast("timestamp")
             )
@@ -204,20 +196,8 @@ def stream_allowed_lateness(
                 F.col("sum_value").alias("__old_sv"),
             )
         ).persist()
-        # 3. FIRE — advance W from DELIVERED maxima, monotone
-        # (sidecar; in-batch aggregate only if the files don't resolve)
-        srows = stats.for_batch(ckpt, batch_id)
-        mx = (
-            batch.agg(F.max("ts")).first()[0] if srows is None
-            else stat_max(srows, "mx")
-        )
-        max_seen = prev["max_seen"]
-        if mx is not None:
-            cand = mx.isoformat()
-            max_seen = cand if max_seen is None else max(max_seen, cand)
-        wm = None if max_seen is None else _ts_minus(
-            max_seen.replace(" ", "T"), delay
-        )
+        # 3. FIRE at W_k, advanced from DELIVERED maxima, monotone
+        wm = t.watermark
         passed = (
             merged.filter(F.col("window_end") <= F.lit(wm)
                           .cast("timestamp"))
@@ -252,7 +232,7 @@ def stream_allowed_lateness(
              if wm is not None else F.col("fired")).alias("fired"),
         )
         if wm is not None:
-            evict_line = _ts_minus(wm.replace(" ", "T"), allowed)
+            evict_line = ts_shift(wm, allowed)
             new_state = new_state.filter(
                 ~(F.col("fired")
                   & (F.col("window_end")
@@ -261,7 +241,7 @@ def stream_allowed_lateness(
         return Publish([
             overwrite(out, batch_dir(out_dir, batch_id)),
             overwrite(new_state, batch_dir(st_dir, batch_id)),
-        ], meta={"max_seen": max_seen}, release=[merged, prior, batch])
+        ], meta=t.meta, release=[merged, prior, batch])
 
     emitted = commit.drain(
         spark, src, "ts timestamp, value double", process,

@@ -1,5 +1,4 @@
-"""Streaming ANN index ingest (built round 8, registration-bound for
-round 9).
+"""Streaming ANN index ingest.
 
 The batch ANN family (operators/similarity.py) already materializes an
 IVF inverted file — parquet partitioned by coarse cluster — and
@@ -116,7 +115,7 @@ def stream_ann_ingest(
     the vec_id=0 embedding). Returns tagged rows:
 
       ('topk', vec_id, score)   — the pruned exact re-rank, nprobe
-                                  clusters scanned, round-6 cosine;
+                                  clusters scanned, portable cosine;
       ('n_indexed', n, NULL)    — rowcount conservation across every
                                   published batch.
 

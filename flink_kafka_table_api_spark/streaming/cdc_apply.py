@@ -1,5 +1,4 @@
-"""CDC changelog apply with an event-time watermark (built round 8,
-registration-bound for round 9).
+"""CDC changelog apply with an event-time watermark.
 
 The reference is a Flink Table API client, and the Table API's signature
 abstraction beyond windowed aggregation is the CHANGELOG/UPSERT stream:
@@ -9,7 +8,8 @@ continuously-maintained current-state table
 the reference's own pipeline is the insert-only special case,
 TransactionProcessor.java:192). This module is the Spark-first
 equivalent: a foreachBatch keyed merge (the streaming/upsert.py recipe)
-hardened with the round-8 watermark + crash-safety machinery:
+under the shared event-time clock (late_data.EventClock) and the
+batch_commit crash-safety protocol:
 
   per micro-batch k (foreachBatch):
     1. ADMIT:  ops with op_ts > W_{k-1} (the stored watermark); ops at
@@ -60,16 +60,13 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
 from flink_kafka_table_api_spark.streaming.incremental_dedup import (
     IncrementalDedup,
 )
-from flink_kafka_table_api_spark.streaming.chunk_stats import (
-    ChunkStats,
-    stat_max,
-)
 from flink_kafka_table_api_spark.streaming.late_data import (
+    EventClock,
     stage_chunked_by,
-    ts_shift,
 )
 
 OPS_COLUMNS = ["op_id", "op_ts", "key", "op", "value"]
+OPS_SCHEMA = "op_id long, op_ts timestamp, key long, op string, value double"
 
 
 def changelog_winners(df: DataFrame, n_col=None) -> DataFrame:
@@ -151,20 +148,12 @@ def stream_cdc_apply(
         ops_chunked, os.path.join(state_dir, "src"),
         chunk_col=chunk_col, n_chunks=n_chunks, columns=OPS_COLUMNS,
     )
-    ckpt = os.path.join(state_dir, "ckpt")
-    # watermark-advance maxima ride ONE staging-time job instead of one
-    # agg job per micro-batch (chunk_stats.py; guide §1.2)
-    stats = ChunkStats(
-        spark, src,
-        "op_id long, op_ts timestamp, key long, op string, value double",
-        {"mx": F.max("op_ts")},
-    )
     state = os.path.join(state_dir, "state")
-    offsets_dir = os.path.join(state_dir, "offsets")
     commit = BatchCommit(
-        state_dir, scoped=(state,), versioned=(state,), meta_dir=offsets_dir
+        state_dir, scoped=(state,), versioned=(state,),
+        meta_dir=os.path.join(state_dir, "offsets"),
     )
-    no_meta = {"watermark": None, "max_seen": None}
+    clock = EventClock(spark, commit, src, OPS_SCHEMA, "op_ts", delay)
 
     if snapshot is not None and commit.meta(-1, None) is None:
         # idempotent, crash-safe seeding: state parquet first
@@ -172,49 +161,21 @@ def stream_cdc_apply(
         # reseed after a mid-seed crash just overwrites
         snapshot.write.mode("overwrite").parquet(batch_dir(state, -1))
         mx = snapshot.agg(F.max("last_op_ts")).first()[0]
-        max_seen = mx.isoformat() if mx is not None else None
-        commit.write_meta(-1, {
-            "watermark": None if max_seen is None
-            else ts_shift(max_seen, delay),
-            "max_seen": max_seen,
-        })
+        commit.write_meta(-1, clock.fold({}, mx))
 
     def process(batch: DataFrame, batch_id: int) -> Publish:
-        prev = commit.meta(batch_id - 1, no_meta)
-        admitted = (
-            batch if prev["watermark"] is None
-            else batch.filter(F.col("op_ts") > prev["watermark"])
-        )
+        t = clock.tick(batch, batch_id)
         batch_w = changelog_winners(
-            admitted.withColumn("__n", F.lit(1)), "__n"
+            t.admitted.withColumn("__n", F.lit(1)), "__n"
         )
         merged = merge_state_version(
             spark, batch_dir(state, batch_id - 1), batch_w
         )
-        # sidecar; in-batch aggregate only if the files don't resolve
-        srows = stats.for_batch(ckpt, batch_id)
-        batch_max = (
-            batch.agg(F.max("op_ts")).first()[0] if srows is None
-            else stat_max(srows, "mx")
-        )
-        candidates = [
-            m for m in (prev["max_seen"], None if batch_max is None
-                        else batch_max.isoformat()) if m is not None
-        ]
-        max_seen = max(candidates) if candidates else None
-        new_wm = None
-        if max_seen is not None:
-            new_wm = ts_shift(max_seen, delay)
         return Publish(
-            [overwrite(merged, batch_dir(state, batch_id))],
-            meta={"watermark": new_wm, "max_seen": max_seen},
+            [overwrite(merged, batch_dir(state, batch_id))], meta=t.meta
         )
 
-    commit.drain(
-        spark, src,
-        "op_id long, op_ts timestamp, key long, op string, value double",
-        process,
-    )
+    commit.drain(spark, src, OPS_SCHEMA, process)
     last = _last_state_version(state)
     if last is None:
         return spark.createDataFrame(

@@ -20,8 +20,9 @@ Correctness posture:
 - The stats job reads the staged files with the SAME explicit schema the
   streaming source declares, so values are bit-identical to what the
   micro-batch DataFrame would aggregate to.
-- The file→batch mapping comes from ``<ckpt>/sources/0/<batch_id>``, the
-  FileStreamSource's own metadata log — the authoritative record of
+- The file→batch mapping comes from ``<ckpt>/sources/0/<batch_id>`` (or
+  its compacted ``<batch_id>.compact``), the FileStreamSource's own
+  metadata log — the authoritative record of
   which files make up a batch (never an assumption that batch k == chunk
   k).
 - :meth:`ChunkStats.for_batch` returns ``None`` whenever the log is
@@ -96,17 +97,12 @@ class ChunkStats:
         """Stat rows for micro-batch ``batch_id`` (flattened across its
         files), or ``None`` when the batch's files cannot all be
         resolved — the caller must then aggregate the batch itself."""
-        log = os.path.join(ckpt_dir, "sources", "0", str(batch_id))
-        try:
-            with open(log) as f:
-                lines = f.read().splitlines()
-        except OSError:
+        entries = _source_log(ckpt_dir, batch_id)
+        if entries is None:
             return None
         out: list[dict[str, Any]] = []
-        for line in lines[1:]:  # line 0 is the log version header
-            if not line.strip():
-                continue
-            name = os.path.basename(json.loads(line)["path"])
+        for e in entries:
+            name = os.path.basename(e["path"])
             if name not in self.by_file:
                 return None
             out.extend(self.by_file[name])
@@ -118,6 +114,27 @@ class ChunkStats:
         batch id in the operator itself) instead of through a streaming
         source. ``None`` when the file is unknown."""
         return self.by_file.get(name)
+
+
+def _source_log(ckpt_dir: str, batch_id: int) -> list[dict] | None:
+    """The file entries of batch ``batch_id`` in the file source's
+    metadata log, or None when the log does not record it. Spark
+    compacts the log every ``fileSource.log.compactInterval`` batches
+    (default 10): batch N is then written only as ``N.compact``, which
+    lists the files of every batch up to N, each with its ``batchId``."""
+    base = os.path.join(ckpt_dir, "sources", "0")
+    for name, only in ((str(batch_id), False), (f"{batch_id}.compact", True)):
+        try:
+            with open(os.path.join(base, name)) as f:
+                lines = f.read().splitlines()
+        except OSError:
+            continue
+        # line 0 is the log version header
+        entries = [json.loads(ln) for ln in lines[1:] if ln.strip()]
+        return [
+            e for e in entries if not only or e.get("batchId") == batch_id
+        ]
+    return None
 
 
 def stat_max(rows: list[dict[str, Any]], field: str):
@@ -133,6 +150,12 @@ def stat_min(rows: list[dict[str, Any]], field: str):
     """Min twin of :func:`stat_max`."""
     vals = [r[field] for r in rows if r[field] is not None]
     return min(vals) if vals else None
+
+
+def stat_range(rows: list[dict[str, Any]], lo: str, hi: str):
+    """``(min of lo, max of hi)`` across per-file stat rows, each None
+    exactly where :func:`stat_min` / :func:`stat_max` would be."""
+    return stat_min(rows, lo), stat_max(rows, hi)
 
 
 def stat_group_max(

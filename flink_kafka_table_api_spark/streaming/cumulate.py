@@ -1,6 +1,5 @@
 """Flink CUMULATE windows (windowing TVF, public Flink SQL surface) as a
-Spark-first two-stage plan (built round 8, registration-bound for a
-round-9/10 gate slot).
+Spark-first two-stage plan.
 
 Flink's `CUMULATE(TABLE t, DESCRIPTOR(ts), step, size)` assigns each row
 to the expanding window family [start, start+step), [start, start+2*step),

@@ -1,4 +1,4 @@
-"""End-to-end INCREMENTAL curation pipeline (round-6 VERDICT item 6):
+"""End-to-end INCREMENTAL curation pipeline:
 
     file-stream source -> incremental near-dup -> quality gate
         -> packed sink via replay-safe foreachBatch merge
@@ -51,8 +51,7 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
 )
 from flink_kafka_table_api_spark.streaming.chunk_stats import (
     ChunkStats,
-    stat_max,
-    stat_min,
+    stat_range,
 )
 from flink_kafka_table_api_spark.streaming.incremental_dedup import (
     IncrementalDedup,
@@ -163,12 +162,11 @@ def stream_curate_pack(
         # empty layout, zero new tokens — no extra emptiness probe job)
         offset = commit.meta(batch_id - 1, {"token_total": 0})["token_total"]
         srows = stats.for_batch(ckpt, batch_id)
-        mn = stat_min(srows, "mn") if srows is not None else None
-        bounds = (
-            (int(mn), int(stat_max(srows, "mx")))
-            if srows is not None and mn is not None
-            else None
+        mn, mx = (
+            stat_range(srows, "mn", "mx") if srows is not None
+            else (None, None)
         )
+        bounds = (int(mn), int(mx)) if mn is not None else None
         packed = pack_sequences(
             kept, budget=budget, start_offset=offset, id_bounds=bounds
         )

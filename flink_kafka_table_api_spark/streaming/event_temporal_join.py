@@ -1,6 +1,5 @@
 """Watermark-synchronized EVENT-TIME temporal join against the
-SCD2-maintained versioned dimension (built round 8, registration-bound
-for a round-9/10 gate slot).
+SCD2-maintained versioned dimension.
 
 Flink's event-time temporal join (`FOR SYSTEM_TIME AS OF p.event_time`
 against a versioned table — public Table API surface; the reference
@@ -87,14 +86,13 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     partition_dir,
     read_back,
 )
-from flink_kafka_table_api_spark.streaming.cdc_apply import OPS_COLUMNS
-from flink_kafka_table_api_spark.streaming.chunk_stats import (
-    ChunkStats,
-    stat_max,
+from flink_kafka_table_api_spark.streaming.cdc_apply import (
+    OPS_COLUMNS,
+    OPS_SCHEMA,
 )
 from flink_kafka_table_api_spark.streaming.late_data import (
+    EventClock,
     stage_chunked_by,
-    ts_shift,
 )
 from flink_kafka_table_api_spark.streaming.scd2_stream import (
     _latest_per_key,
@@ -109,7 +107,6 @@ OUT_SCHEMA = (
     "dim_value double, dim_op_id long"
 )
 PENDING_SCHEMA = "probe_id long, probe_ts timestamp, key long"
-OPS_SCHEMA = "op_id long, op_ts timestamp, key long, op string, value double"
 
 
 def _enrich(
@@ -170,21 +167,27 @@ def stream_event_temporal_join(
         probes_chunked, os.path.join(state_dir, "probes"),
         chunk_col=chunk_col, n_chunks=n_chunks, columns=PROBE_COLUMNS,
     )
-    ckpt = os.path.join(state_dir, "ckpt")
-    # both sides' watermark-advance maxima AND per-file key-bucket sets
-    # ride ONE staging-time job each instead of per-batch agg/collect
-    # jobs (chunk_stats.py). Bucket sets are SUPERSETS of what each
-    # batch admits/emits — valid for the history-scan prunes because the
-    # exact-key semi-joins downstream do the real restriction.
-    kb_set = F.collect_set(
+    hist = os.path.join(state_dir, "hist")
+    pending = os.path.join(state_dir, "pending")
+    out = os.path.join(state_dir, "out")
+    commit = BatchCommit(
+        state_dir, scoped=(pending,), partitioned=(hist, out),
+        versioned=(pending,), meta_dir=os.path.join(state_dir, "offsets"),
+    )
+    # one clock per side; per-file key-bucket sets ride their staging
+    # jobs. Bucket sets are SUPERSETS of what each batch admits/emits —
+    # valid for the history-scan prunes because the exact-key semi-joins
+    # downstream do the real restriction.
+    kb_set = {"kbs": F.collect_set(
         F.pmod(F.xxhash64("key"), F.lit(n_buckets)).cast("int")
+    )}
+    dim_clock = EventClock(
+        spark, commit, ops_src, OPS_SCHEMA, "op_ts", dim_delay,
+        key="dim_", aggs=kb_set,
     )
-    ops_stats = ChunkStats(
-        spark, ops_src, OPS_SCHEMA, {"mx": F.max("op_ts"), "kbs": kb_set}
-    )
-    probe_stats = ChunkStats(
-        spark, probe_src, "probe_id long, probe_ts timestamp, key long",
-        {"mx": F.max("probe_ts"), "kbs": kb_set},
+    probe_clock = EventClock(
+        spark, commit, probe_src, PENDING_SCHEMA, "probe_ts", probe_delay,
+        key="probe_", aggs=kb_set,
     )
 
     def probe_kbs_through(batch_id: int) -> list[int] | None:
@@ -194,30 +197,12 @@ def stream_event_temporal_join(
         None when any batch's files don't resolve."""
         out: set[int] = set()
         for i in range(batch_id + 1):
-            rows = probe_stats.for_batch(ckpt, i)
+            rows = probe_clock.stats.for_batch(commit.ckpt, i)
             if rows is None:
                 return None
             for r in rows:
                 out.update(r["kbs"])
         return sorted(out)
-    hist = os.path.join(state_dir, "hist")
-    pending = os.path.join(state_dir, "pending")
-    out = os.path.join(state_dir, "out")
-    commit = BatchCommit(
-        state_dir, scoped=(pending,), partitioned=(hist, out),
-        versioned=(pending,), meta_dir=os.path.join(state_dir, "offsets"),
-    )
-
-    def wm(max_seen: str | None, delay: str) -> str | None:
-        if max_seen is None:
-            return None
-        return ts_shift(max_seen, delay)
-
-    def advance(prev_max: str | None, mx) -> str | None:
-        cands = [m for m in (prev_max,
-                             None if mx is None else mx.isoformat())
-                 if m is not None]
-        return max(cands) if cands else None
 
     def read_pending(batch_id: int) -> DataFrame | None:
         p = batch_dir(pending, batch_id)
@@ -226,60 +211,35 @@ def stream_event_temporal_join(
         return spark.read.schema(PENDING_SCHEMA).parquet(p)
 
     def process(probe_batch: DataFrame, batch_id: int) -> Publish:
-        prev = commit.meta(batch_id - 1, dict.fromkeys((
-            "dim_watermark", "dim_max_seen",
-            "probe_watermark", "probe_max_seen",
-        )))
         # 2. dim side: admit + fold into the SCD2 delta store
         ops_file = f"chunk{batch_id:04d}.parquet"
         ops = spark.read.schema(OPS_SCHEMA).parquet(
             os.path.join(ops_src, ops_file)
         )
-        dim_admitted = (
-            ops if prev["dim_watermark"] is None
-            else ops.filter(F.col("op_ts") > prev["dim_watermark"])
-        ).withColumn(
-            "__kb", F.pmod(F.xxhash64("key"), F.lit(n_buckets)).cast("int")
-        )
-        orows = ops_stats.for_file(ops_file)
+        dim = dim_clock.tick(ops, batch_id, file=ops_file)
         apply_history_delta(
-            spark, hist, dim_admitted, batch_id=batch_id,
-            n_buckets=n_buckets,
+            spark, hist,
+            dim.admitted.withColumn(
+                "__kb",
+                F.pmod(F.xxhash64("key"), F.lit(n_buckets)).cast("int"),
+            ),
+            batch_id=batch_id, n_buckets=n_buckets,
             kbs=(
-                sorted({b for r in orows for b in r["kbs"]})
-                if orows is not None else None
+                sorted({b for r in dim.rows for b in r["kbs"]})
+                if dim.rows is not None else None
             ),
         )
         # 3. probe side: admit + union with the carried buffer
-        probe_admitted = (
-            probe_batch if prev["probe_watermark"] is None
-            else probe_batch.filter(
-                F.col("probe_ts") > prev["probe_watermark"])
-        ).select(*PROBE_COLUMNS)
+        probe = probe_clock.tick(probe_batch, batch_id)
         carried = read_pending(batch_id - 1)
+        probe_admitted = probe.admitted.select(*PROBE_COLUMNS)
         buffered = (
             probe_admitted if carried is None
             else carried.unionByName(probe_admitted)
         ).persist()
-        # 4. advance both watermarks from rows SEEN — per-chunk maxima
-        # from the staging-time sidecar (zero per-batch jobs); fused
-        # union-aggregate fallback if either side doesn't resolve
-        orows = ops_stats.for_file(ops_file)
-        prows = probe_stats.for_batch(ckpt, batch_id)
-        if orows is None or prows is None:
-            mx_rows = (
-                ops.agg(F.max("op_ts").alias("m"))
-                .unionAll(probe_batch.agg(F.max("probe_ts").alias("m")))
-                .collect()
-            )
-            ops_mx, probe_mx = mx_rows[0][0], mx_rows[1][0]
-        else:
-            ops_mx = stat_max(orows, "mx")
-            probe_mx = stat_max(prows, "mx")
-        dim_max = advance(prev["dim_max_seen"], ops_mx)
-        probe_max = advance(prev["probe_max_seen"], probe_mx)
-        w_dim = wm(dim_max, dim_delay)
-        w_probe = wm(probe_max, probe_delay)
+        # 4. both watermarks advanced from rows SEEN (dropped rows
+        # advance them); the emission horizon is their minimum
+        w_dim, w_probe = dim.watermark, probe.watermark
         horizon = (
             min(w_dim, w_probe)
             if w_dim is not None and w_probe is not None else None
@@ -318,10 +278,7 @@ def stream_event_temporal_join(
             overwrite(_enrich(full_hist, emit, lookup_bin_seconds),
                       partition_dir(out, batch_id)),
             overwrite(still, batch_dir(pending, batch_id)),
-        ], meta={
-            "dim_watermark": w_dim, "dim_max_seen": dim_max,
-            "probe_watermark": w_probe, "probe_max_seen": probe_max,
-        }, release=[buffered])
+        ], meta={**dim.meta, **probe.meta}, release=[buffered])
 
     commit.drain(
         spark, probe_src, "probe_id long, probe_ts timestamp, key long",

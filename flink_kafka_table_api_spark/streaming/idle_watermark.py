@@ -1,6 +1,4 @@
-"""Per-partition watermark alignment with idle-source handling (built
-round 9 — VERDICT r8 item 7, the one public Flink streaming behavior the
-family still lacked).
+"""Per-partition watermark alignment with idle-source handling.
 
 Flink's multi-source watermarking (public docs: WatermarkStrategy
 `withIdleness`, per-partition watermark combination) keeps ONE watermark

@@ -163,7 +163,7 @@ class IncrementalDedup:
         new_bands = self._new_bands(batch).persist()
         index = self._read_parts(spark, self.bands_path, new_bands)
         # One tagged union of (index, this batch) feeds BOTH the cap
-        # aggregate and the candidate join below — the pre-r10 shape ran
+        # aggregate and the candidate join below — a former shape ran
         # two separate probe joins (new-vs-indexed, new-vs-new) plus a
         # union: one exchange + one broadcast build more per micro-batch
         # for the identical candidate set (guide §2.4).

@@ -1,7 +1,6 @@
-"""Out-of-order incremental curation (round 8): the `stream_curation`
-pipeline generalized to crawl drops whose contents are NOT in doc-id
-order — the shape VERDICT r7 item 7 asked for ("real crawl drops
-aren't" in order).
+"""Out-of-order incremental curation: the `stream_curation` pipeline
+generalized to crawl drops whose contents are NOT in doc-id order, as
+real crawl drops are not.
 
 `stream_curate_pack` (curation_pipeline.py) assumes drops arrive in id
 order, so keep-FIRST-ARRIVAL equals keep-SMALLEST-ID and packing can
@@ -9,7 +8,8 @@ emit every batch immediately. Out of order, both break: a smaller-id
 near-dup arriving later should have won, and packing (seq_id = pure
 function of the id-ordered cumulative token sum) cannot emit a doc
 while a smaller id can still arrive. This module fixes both with a
-WATERMARK over doc_id (the event-time proxy: smaller id = older doc):
+WATERMARK over doc_id (the event-time proxy: smaller id = older doc),
+kept by the shared late_data.EventClock with an integer delay:
 
   per micro-batch k (foreachBatch):
     1. ADMIT:    rows with doc_id >  W_{k-1} (the stored watermark);
@@ -76,12 +76,11 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
 from flink_kafka_table_api_spark.streaming.incremental_dedup import (
     IncrementalDedup,
 )
-from flink_kafka_table_api_spark.streaming.chunk_stats import (
-    ChunkStats,
-    stat_max,
-    stat_min,
+from flink_kafka_table_api_spark.streaming.chunk_stats import stat_min
+from flink_kafka_table_api_spark.streaming.late_data import (
+    EventClock,
+    stage_chunked_by,
 )
-from flink_kafka_table_api_spark.streaming.late_data import stage_chunked_by
 
 
 def stream_curate_pack_ooo(
@@ -108,50 +107,35 @@ def stream_curate_pack_ooo(
         chunk_col=chunk_col, n_chunks=n_chunks,
         columns=["doc_id", "text"],
     )
-    ckpt = os.path.join(state_dir, "ckpt")
-    # watermark-advance maxima AND pack-bounds minima ride ONE
-    # staging-time job instead of per-micro-batch agg jobs
-    # (chunk_stats.py; guide §1.2)
-    stats = ChunkStats(
-        spark, src, "doc_id long, text string",
-        {"mn": F.min("doc_id"), "mx": F.max("doc_id")},
-    )
-    # smallest id across the whole staged drop set: a valid lower COVER
-    # for any finalized interval (used when no previous watermark exists)
-    all_rows = [r for rows in stats.by_file.values() for r in rows]
-    global_min = stat_min(all_rows, "mn")
     sink = os.path.join(state_dir, "packed")
     commit = BatchCommit(
         state_dir, scoped=(sink,), meta_dir=os.path.join(state_dir, "offsets")
     )
+    # pack-bounds minima ride the clock's staging job
+    clock = EventClock(
+        spark, commit, src, "doc_id long, text string", "doc_id", delay,
+        aggs={"mn": F.min("doc_id")},
+    )
+    # smallest id across the whole staged drop set: a valid lower COVER
+    # for any finalized interval (used when no previous watermark exists)
+    all_rows = [r for rows in clock.stats.by_file.values() for r in rows]
+    global_min = stat_min(all_rows, "mn")
     inc = IncrementalDedup(
         os.path.join(state_dir, "dedup"),
         threshold=threshold, portable=portable,
     )
-    no_meta = {"token_total": 0, "watermark": None, "max_seen": None}
 
     def process(batch: DataFrame, batch_id: int) -> Publish:
-        prev = commit.meta(batch_id - 1, no_meta)
-        wm_prev = prev["watermark"]
+        token_total = commit.meta(batch_id - 1, {"token_total": 0})[
+            "token_total"
+        ]
         batch = batch.select("doc_id", "text")
-        # 1) admit: too-late rows (id at/below the watermark) drop here,
-        #    but still advance max_seen below — the Spark contract
-        admitted = (
-            batch if wm_prev is None
-            else batch.filter(F.col("doc_id") > wm_prev)
-        )
+        # 1) admit (too-late rows, id at/below W_{k-1}, drop here) and
+        # 3) advance W from everything SEEN — the Spark contract
+        t = clock.tick(batch, batch_id)
+        wm_prev, new_wm = t.prev, t.watermark
         # 2) dedup the admitted rows against the accumulated index
-        inc.process_batch(admitted, batch_id)
-        # 3) advance the watermark from everything SEEN (sidecar;
-        #    in-batch aggregate only if the files don't resolve)
-        srows = stats.for_batch(ckpt, batch_id)
-        batch_max = (
-            batch.agg(F.max("doc_id")).first()[0] if srows is None
-            else stat_max(srows, "mx")
-        )
-        seen = [m for m in (prev["max_seen"], batch_max) if m is not None]
-        max_seen = max(seen) if seen else None
-        new_wm = None if max_seen is None else int(max_seen) - delay
+        inc.process_batch(t.admitted, batch_id)
         # 4) finalize the id interval this watermark advance closed; the
         #    buffer is the dedup doc store (admitted docs, batch-scoped)
         store = inc._read_parts(spark, inc.docs_path, batch)
@@ -205,7 +189,7 @@ def stream_curate_pack_ooo(
             else None
         )
         packed = pack_sequences(
-            kept, budget=budget, start_offset=prev["token_total"],
+            kept, budget=budget, start_offset=token_total,
             id_bounds=bounds,
         )
         obs = Observation()
@@ -213,9 +197,8 @@ def stream_curate_pack_ooo(
             [overwrite(packed.observe(obs, F.sum("n_tokens").alias("t")),
                        batch_dir(sink, batch_id))],
             meta=lambda: {
-                "token_total": int(prev["token_total"] + (obs.get["t"] or 0)),
-                "watermark": new_wm,
-                "max_seen": None if max_seen is None else int(max_seen),
+                "token_total": int(token_total + (obs.get["t"] or 0)),
+                **t.meta,
             },
             release=[kept],
         )

@@ -1,5 +1,4 @@
-"""Event-time OVER aggregation on a stream (built round 8,
-registration-bound for a round-9/10 gate slot).
+"""Event-time OVER aggregation on a stream.
 
 Flink's third aggregation class (after GROUP BY windows and windowing
 TVFs) is the OVER window: one output row PER INPUT ROW carrying an
@@ -13,7 +12,8 @@ aggregate over the key's preceding event-time range —
 exactly this class of planning to Flink, TransactionProcessor.java:106).
 Spark Structured Streaming has no streaming window functions at all —
 `Window.partitionBy(...).orderBy(...)` is batch-only — so this module
-implements the operator with the round-8 foreachBatch state machine:
+implements the operator as a foreachBatch state machine under the
+shared event-time clock (late_data.EventClock):
 
   per micro-batch k (foreachBatch):
     1. ADMIT:   rows with ts > W_{k-1} (the stored watermark); rows at
@@ -62,10 +62,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.functions.portable import DEC
-from flink_kafka_table_api_spark.streaming.chunk_stats import (
-    ChunkStats,
-    stat_max,
-)
 from flink_kafka_table_api_spark.streaming.batch_commit import (
     BatchCommit,
     Publish,
@@ -74,13 +70,13 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     read_version,
 )
 from flink_kafka_table_api_spark.streaming.late_data import (
+    EventClock,
     stage_chunked_by,
     ts_shift,
 )
 
 ROW_COLUMNS = ["row_id", "ts", "key", "value"]
 _SCHEMA = "row_id long, ts timestamp, key long, value double"
-_NO_META = {"watermark": None, "max_seen": None}
 
 
 def _commit(state_dir: str) -> tuple[BatchCommit, str, str, str]:
@@ -206,37 +202,15 @@ def stream_over_agg(
         rows_chunked, os.path.join(state_dir, "src"),
         chunk_col=chunk_col, n_chunks=n_chunks, columns=ROW_COLUMNS,
     )
-    ckpt = os.path.join(state_dir, "ckpt")
-    # watermark-advance maxima ride ONE staging-time job instead of one
-    # agg job per micro-batch (chunk_stats.py; guide §1.2)
-    stats = ChunkStats(spark, src, _SCHEMA, {"mx": F.max("ts")})
     commit, emitted_dir, context_dir, pending_dir = _commit(state_dir)
+    clock = EventClock(spark, commit, src, _SCHEMA, "ts", delay)
 
     def process(batch: DataFrame, batch_id: int) -> Publish:
-        prev = commit.meta(batch_id - 1, _NO_META)
-        batch = batch.select(*ROW_COLUMNS)
-        admitted = (
-            batch if prev["watermark"] is None
-            else batch.filter(F.col("ts") > prev["watermark"])
-        )
+        t = clock.tick(batch.select(*ROW_COLUMNS), batch_id)
+        new_wm = t.watermark
         live = read_version(
             spark, pending_dir, batch_id - 1, _SCHEMA
-        ).unionByName(admitted)
-        # advance the watermark from everything SEEN (sidecar; in-batch
-        # aggregate only if this batch's files don't resolve)
-        srows = stats.for_batch(ckpt, batch_id)
-        batch_max = (
-            batch.agg(F.max("ts")).first()[0] if srows is None
-            else stat_max(srows, "mx")
-        )
-        candidates = [
-            m for m in (prev["max_seen"], None if batch_max is None
-                        else batch_max.isoformat()) if m is not None
-        ]
-        max_seen = max(candidates) if candidates else None
-        new_wm = None
-        if max_seen is not None:
-            new_wm = ts_shift(max_seen, delay)
+        ).unionByName(t.admitted)
         live = live.persist()
         emit = (
             live if new_wm is None
@@ -266,7 +240,7 @@ def stream_over_agg(
             overwrite(out, batch_dir(emitted_dir, batch_id)),
             overwrite(new_context, batch_dir(context_dir, batch_id)),
             overwrite(pending, batch_dir(pending_dir, batch_id)),
-        ], meta={"watermark": new_wm, "max_seen": max_seen}, release=[live])
+        ], meta=t.meta, release=[live])
 
     return commit.drain(
         spark, src, _SCHEMA, process,
@@ -305,33 +279,15 @@ def stream_over_rows_agg(
         rows_chunked, os.path.join(state_dir, "src"),
         chunk_col=chunk_col, n_chunks=n_chunks, columns=ROW_COLUMNS,
     )
-    ckpt = os.path.join(state_dir, "ckpt")
-    stats = ChunkStats(spark, src, _SCHEMA, {"mx": F.max("ts")})
     commit, emitted_dir, context_dir, pending_dir = _commit(state_dir)
+    clock = EventClock(spark, commit, src, _SCHEMA, "ts", delay)
 
     def process(batch: DataFrame, batch_id: int) -> Publish:
-        prev = commit.meta(batch_id - 1, _NO_META)
-        batch = batch.select(*ROW_COLUMNS)
-        admitted = (
-            batch if prev["watermark"] is None
-            else batch.filter(F.col("ts") > prev["watermark"])
-        )
+        t = clock.tick(batch.select(*ROW_COLUMNS), batch_id)
+        new_wm = t.watermark
         live = read_version(
             spark, pending_dir, batch_id - 1, _SCHEMA
-        ).unionByName(admitted)
-        srows = stats.for_batch(ckpt, batch_id)
-        batch_max = (
-            batch.agg(F.max("ts")).first()[0] if srows is None
-            else stat_max(srows, "mx")
-        )
-        candidates = [
-            m for m in (prev["max_seen"], None if batch_max is None
-                        else batch_max.isoformat()) if m is not None
-        ]
-        max_seen = max(candidates) if candidates else None
-        new_wm = None
-        if max_seen is not None:
-            new_wm = ts_shift(max_seen, delay)
+        ).unionByName(t.admitted)
         live = live.persist()
         emit = (
             live if new_wm is None
@@ -378,7 +334,7 @@ def stream_over_rows_agg(
             overwrite(out, batch_dir(emitted_dir, batch_id)),
             overwrite(new_context, batch_dir(context_dir, batch_id)),
             overwrite(pending, batch_dir(pending_dir, batch_id)),
-        ], meta={"watermark": new_wm, "max_seen": max_seen}, release=[live])
+        ], meta=t.meta, release=[live])
 
     return commit.drain(
         spark, src, _SCHEMA, process,

@@ -1,5 +1,4 @@
-"""Streaming incremental table-profile monitor (built round 8,
-registration-bound for round 9).
+"""Streaming incremental table-profile monitor.
 
 A 100 TB ingest pipeline needs continuous data-quality accounting —
 per-column row/null counts, value ranges, and distinct cardinalities —
@@ -38,7 +37,7 @@ Per micro-batch k (foreachBatch, batch_commit protocol):
 
 The profile readout (`profile_of`) is deterministic and — except for
 the sketch estimate, which carries the HLL++ accuracy contract instead —
-exactly replayable by DuckDB over the same corpus, so the round-9 gate
+exactly replayable by DuckDB over the same corpus, so the registered
 query can hash-check counts/ranges and assert the estimate's 4-sigma
 tolerance boolean (the `approx_distinct` precedent).
 """

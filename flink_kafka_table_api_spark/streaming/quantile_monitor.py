@@ -1,5 +1,5 @@
 """Streaming quantile monitor: mergeable histogram state -> per-batch
-rank statistics (built round 9, staged for a round-10 gate slot).
+rank statistics.
 
 `streaming/profile_monitor.py` tracks counts/nulls/ranges/distincts;
 the monitoring signal it cannot answer is a RANK statistic — "did p99
@@ -57,8 +57,7 @@ from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.streaming.chunk_stats import (
     ChunkStats,
-    stat_max,
-    stat_min,
+    stat_range,
 )
 from flink_kafka_table_api_spark.streaming.batch_commit import (
     BatchCommit,
@@ -169,7 +168,7 @@ def stream_quantile_monitor(
         lo, w = meta["lo"], meta["w"]
         n_seen = sum(n for _, n in cells)
         rows = []
-        # empty-input agreement (ADVICE r9): a batch with zero
+        # empty-input agreement: a batch with zero
         # cumulative values has no rank statistic — emit nothing, as
         # the oracle's per-batch GROUP BY produces no rows either
         for q in quantiles if n_seen else ():
@@ -206,7 +205,7 @@ def stream_quantile_monitor(
             # n_bins-long state, publish via Arrow — zero Spark jobs
             # after the one-time bin-count job
             if meta is None:
-                lo_v, hi_v = stat_min(srows, "lo"), stat_max(srows, "hi")
+                lo_v, hi_v = stat_range(srows, "lo", "hi")
                 lo = float(lo_v) if lo_v is not None else 0.0
                 hi = float(hi_v) if hi_v is not None else 1.0
                 w = (hi - lo) / n_bins if hi > lo else 1.0

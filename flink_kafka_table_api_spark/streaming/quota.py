@@ -1,5 +1,4 @@
-"""Streaming per-source token-budget quota enforcement (built round 8,
-registration-bound for a round-9/10 gate slot).
+"""Streaming per-source token-budget quota enforcement.
 
 The registered `source_token_cap` (operators/curation.py) downsamples an
 over-represented source to its token allocation by re-ranking documents
@@ -10,7 +9,7 @@ admitted in delivery order until the source's consumed-token counter
 reaches the budget; a document is kept iff the tokens seen before it
 are under budget (the boundary document spills over, exactly the batch
 twin's rule). Flink expresses this as keyed state + a value counter;
-Spark-first it is the round-8 foreachBatch state machine:
+Spark-first it is a foreachBatch state machine:
 
   per micro-batch k (foreachBatch):
     1. ORDER:  the batch's documents per source by doc_id (drops are

@@ -1,4 +1,4 @@
-"""Selective reprocessing for batch_commit streaming state (round 8).
+"""Selective reprocessing for batch_commit streaming state.
 
 Every foreachBatch pipeline in this package keeps its state under
 `state_dir` in the streaming/batch_commit.py layout:

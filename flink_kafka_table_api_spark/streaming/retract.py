@@ -1,6 +1,6 @@
 """Retract-stream Top-N: Flink's Rank operator over an UPDATE stream,
-emitting a RowKind changelog (built round 8, registration-bound for a
-round-9/10 gate slot).
+emitting a RowKind changelog; and the RowKind diff and consumer-side
+changelog apply that every update-mode pipeline here shares.
 
 The Flink Table API's other signature abstraction (beside the temporal
 join) is the UPDATE-mode query: a continuous aggregation whose result
@@ -54,9 +54,12 @@ state is (key, total), exactly Flink's ValueState per key.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType
 
 from flink_kafka_table_api_spark.streaming.batch_commit import (
     BatchCommit,
@@ -64,6 +67,7 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     batch_dir,
     overwrite,
     partition_dir,
+    read_version,
 )
 from flink_kafka_table_api_spark.streaming.late_data import stage_chunked_by
 
@@ -105,51 +109,50 @@ def _topn(state: DataFrame, n: int) -> DataFrame:
     )
 
 
-def _diff(old: DataFrame | None, new: DataFrame) -> DataFrame:
-    """RowKind changelog from snapshot `old` to snapshot `new` (each
-    <= N rows): +I for entering keys, -D for leaving keys (old row),
-    -U/+U pairs for staying keys whose (total, rnk) changed."""
-    n = new.select(
-        F.col("key").alias("__k"),
-        F.col("total").alias("__nt"), F.col("rnk").alias("__nr"),
-    )
-    if old is None:
-        return n.select(
-            F.lit("+I").alias("op"), F.col("__k").alias("key"),
-            F.col("__nt").cast("double").alias("total"),
-            F.col("__nr").alias("rnk"),
+def rowkind_diff(
+    old: DataFrame, new: DataFrame, key: str, cols: Sequence[str]
+) -> DataFrame:
+    """RowKind changelog (op, `key`, *`cols`) from snapshot `old` to
+    snapshot `new`, one row per `key` on each side: +I for entering
+    keys, -D for leaving keys (old row), -U (old row) then +U (new row)
+    for staying keys whose `cols` changed. DECIMAL columns leave as
+    DOUBLE. One full outer join; the Spark twin of
+    ``queries._rowkind_diff_sql``."""
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(
+            F.col(key).alias("__k"), F.lit(True).alias(f"__{s}"),
+            *[F.col(c).alias(f"__{s}_{c}") for c in cols],
         )
-    o = old.select(
-        F.col("key").alias("__k"),
-        F.col("total").alias("__ot"), F.col("rnk").alias("__or"),
+
+    j = side(old, "o").join(side(new, "n"), "__k", "full_outer")
+    dec = {
+        f.name for f in new.schema.fields
+        if isinstance(f.dataType, DecimalType)
+    }
+
+    def emit(op: str, s: str, cond) -> DataFrame:
+        return j.filter(cond).select(
+            F.lit(op).alias("op"), F.col("__k").alias(key),
+            *[
+                (F.col(f"__{s}_{c}").cast("double") if c in dec
+                 else F.col(f"__{s}_{c}")).alias(c)
+                for c in cols
+            ],
+        )
+
+    changed = (
+        F.col("__o").isNotNull() & F.col("__n").isNotNull()
+        & reduce(
+            lambda a, b: a | b,
+            [F.col(f"__o_{c}") != F.col(f"__n_{c}") for c in cols],
+        )
     )
-    j = o.join(n, "__k", "full_outer")
-    ins = j.filter(F.col("__or").isNull()).select(
-        F.lit("+I").alias("op"), F.col("__k").alias("key"),
-        F.col("__nt").cast("double").alias("total"),
-        F.col("__nr").alias("rnk"),
+    return (
+        emit("+I", "n", F.col("__o").isNull())
+        .unionByName(emit("-D", "o", F.col("__n").isNull()))
+        .unionByName(emit("-U", "o", changed))
+        .unionByName(emit("+U", "n", changed))
     )
-    dels = j.filter(F.col("__nr").isNull()).select(
-        F.lit("-D").alias("op"), F.col("__k").alias("key"),
-        F.col("__ot").cast("double").alias("total"),
-        F.col("__or").alias("rnk"),
-    )
-    changed = j.filter(
-        F.col("__or").isNotNull() & F.col("__nr").isNotNull()
-        & ((F.col("__ot") != F.col("__nt"))
-           | (F.col("__or") != F.col("__nr")))
-    )
-    retr = changed.select(
-        F.lit("-U").alias("op"), F.col("__k").alias("key"),
-        F.col("__ot").cast("double").alias("total"),
-        F.col("__or").alias("rnk"),
-    )
-    upd = changed.select(
-        F.lit("+U").alias("op"), F.col("__k").alias("key"),
-        F.col("__nt").cast("double").alias("total"),
-        F.col("__nr").alias("rnk"),
-    )
-    return ins.unionByName(dels).unionByName(retr).unionByName(upd)
 
 
 def stream_topn_retract(
@@ -190,15 +193,14 @@ def stream_topn_retract(
             spark, batch_dir(state, batch_id - 1), _batch_sums(batch)
         ).persist()
         new_top = _topn(merged, n).persist()
-        prev_top_path = batch_dir(top, batch_id - 1)
-        prev_top = (
-            spark.read.schema(TOP_SCHEMA).parquet(prev_top_path)
-            if os.path.isdir(prev_top_path) else None
-        )
+        prev_top = read_version(spark, top, batch_id - 1, TOP_SCHEMA)
         return Publish([
             overwrite(merged, batch_dir(state, batch_id)),
             overwrite(new_top, batch_dir(top, batch_id)),
-            overwrite(_diff(prev_top, new_top), partition_dir(out, batch_id)),
+            overwrite(
+                rowkind_diff(prev_top, new_top, "key", ("total", "rnk")),
+                partition_dir(out, batch_id),
+            ),
         ], release=[merged, new_top])
 
     return commit.drain(
@@ -207,26 +209,28 @@ def stream_topn_retract(
     ).select("op", "key", "total", "rnk", "batch_id")
 
 
-def apply_changelog(log: DataFrame) -> DataFrame:
-    """Materialize the changelog a CONSUMER would: the last +I/+U row
-    per key not later deleted — one argmax per key over (batch_id,
-    op-kind ordinal), no replay loop. Used by tests to pin that the
-    log reconstructs the final Top-N exactly."""
-    ordinal = (
-        F.when(F.col("op") == "-U", 0)
-        .when(F.col("op") == "-D", 1)
-        .otherwise(2)  # +I / +U after retractions within a batch
-    )
-    last = log.groupBy("key").agg(
+def apply_changelog(log: DataFrame, key: str = "key") -> DataFrame:
+    """Materialize a RowKind changelog (op, `key`, value columns,
+    batch_id) the way a CONSUMER would: the last +I/+U row per key not
+    later deleted — one argmax per key over (batch_id, op kind), no
+    replay loop. Within a batch a -U precedes its +U. Returns `key` and
+    the value columns."""
+    cols = [c for c in log.columns if c not in ("op", key, "batch_id")]
+    last = log.groupBy(key).agg(
         F.max_by(
-            F.struct("op", "total", "rnk"),
-            F.struct(F.col("batch_id"), ordinal),
+            F.struct("op", *cols),
+            F.struct(
+                F.col("batch_id"),
+                F.col("op").isin("+I", "+U").cast("int"),
+            ),
         ).alias("w")
     )
     return (
         last.filter(F.col("w.op").isin("+I", "+U"))
-        .select("key", "w.total", "w.rnk")
+        .select(key, *[f"w.{c}" for c in cols])
     )
 
 
-__all__ = ["stream_topn_retract", "apply_changelog"]
+__all__ = [
+    "stream_topn_retract", "rowkind_diff", "apply_changelog",
+]

@@ -1,5 +1,4 @@
-"""Streaming SCD2 history maintenance over a CDC changelog (built
-round 8, registration-bound for round 9/10).
+"""Streaming SCD2 history maintenance over a CDC changelog.
 
 `streaming/cdc_apply.py` materializes the changelog's CURRENT-state
 snapshot — the upsert-stream shape whose insert-only special case is
@@ -75,14 +74,13 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     BatchCommit,
     Publish,
 )
-from flink_kafka_table_api_spark.streaming.cdc_apply import OPS_COLUMNS
-from flink_kafka_table_api_spark.streaming.chunk_stats import (
-    ChunkStats,
-    stat_max,
+from flink_kafka_table_api_spark.streaming.cdc_apply import (
+    OPS_COLUMNS,
+    OPS_SCHEMA,
 )
 from flink_kafka_table_api_spark.streaming.late_data import (
+    EventClock,
     stage_chunked_by,
-    ts_shift,
 )
 
 HIST_SCHEMA = (
@@ -218,23 +216,6 @@ def stream_scd2(
         ops_chunked, os.path.join(state_dir, "src"),
         chunk_col=chunk_col, n_chunks=n_chunks, columns=OPS_COLUMNS,
     )
-    ckpt = os.path.join(state_dir, "ckpt")
-    # watermark-advance maxima AND per-file key-bucket sets ride ONE
-    # staging-time job instead of per-micro-batch agg/collect jobs
-    # (chunk_stats.py; guide §1.2). A file's bucket set is a SUPERSET of
-    # its admitted subset's — valid for the hist-scan prune because the
-    # exact-key semi-join inside apply_history_delta does the real
-    # restriction.
-    stats = ChunkStats(
-        spark, src,
-        "op_id long, op_ts timestamp, key long, op string, value double",
-        {
-            "mx": F.max("op_ts"),
-            "kbs": F.collect_set(
-                F.pmod(F.xxhash64("key"), F.lit(n_buckets)).cast("int")
-            ),
-        },
-    )
     hist = os.path.join(state_dir, "hist")
 
     def compacts(batch_id: int) -> bool:
@@ -257,33 +238,26 @@ def stream_scd2(
         state_dir, partitioned=(hist,),
         meta_dir=os.path.join(state_dir, "offsets"), after=drop_shadowed,
     )
+    # per-file key-bucket sets ride the clock's staging job. A file's
+    # bucket set is a SUPERSET of its admitted subset's — valid for the
+    # hist-scan prune because the exact-key semi-join inside
+    # apply_history_delta does the real restriction.
+    clock = EventClock(
+        spark, commit, src, OPS_SCHEMA, "op_ts", delay,
+        aggs={"kbs": F.collect_set(
+            F.pmod(F.xxhash64("key"), F.lit(n_buckets)).cast("int")
+        )},
+    )
 
     def process(batch: DataFrame, batch_id: int) -> Publish:
-        prev = commit.meta(batch_id - 1, {"watermark": None, "max_seen": None})
-        admitted = (
-            batch if prev["watermark"] is None
-            else batch.filter(F.col("op_ts") > prev["watermark"])
-        ).withColumn(
+        t = clock.tick(batch, batch_id)
+        admitted = t.admitted.withColumn(
             "__kb", F.pmod(F.xxhash64("key"), F.lit(n_buckets)).cast("int")
         ).persist()
-        # sidecar; in-batch aggregate/collect only if files don't resolve
-        srows = stats.for_batch(ckpt, batch_id)
         file_kbs = (
-            sorted({b for r in srows for b in r["kbs"]})
-            if srows is not None else None
+            sorted({b for r in t.rows for b in r["kbs"]})
+            if t.rows is not None else None
         )
-        batch_max = (
-            batch.agg(F.max("op_ts")).first()[0] if srows is None
-            else stat_max(srows, "mx")
-        )
-        candidates = [
-            m for m in (prev["max_seen"], None if batch_max is None
-                        else batch_max.isoformat()) if m is not None
-        ]
-        max_seen = max(candidates) if candidates else None
-        new_wm = None
-        if max_seen is not None:
-            new_wm = ts_shift(max_seen, delay)
         return Publish([
             lambda: apply_history_delta(
                 spark, hist, admitted,
@@ -291,14 +265,9 @@ def stream_scd2(
                 compact=compacts(batch_id),
                 kbs=file_kbs,
             ),
-        ], meta={"watermark": new_wm, "max_seen": max_seen},
-            release=[admitted])
+        ], meta=t.meta, release=[admitted])
 
-    commit.drain(
-        spark, src,
-        "op_id long, op_ts timestamp, key long, op string, value double",
-        process,
-    )
+    commit.drain(spark, src, OPS_SCHEMA, process)
     full = read_history(spark, hist)
     if full is None:
         return spark.createDataFrame(

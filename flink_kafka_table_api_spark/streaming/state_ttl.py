@@ -1,6 +1,5 @@
-"""Per-key state TTL for the update-mode aggregate family (built
-round 10, staged for a round-11 gate slot — VERDICT r9 item 7's
-"bounded-state guarantees for the update-mode operators").
+"""Per-key state TTL for the update-mode aggregate family: the
+bounded-state guarantee of the update-mode operators.
 
 `streaming/agg_retract.py` materializes a GROUP BY over an upsert
 changelog by carrying ONE row per live key forever: correct, but its
@@ -42,7 +41,9 @@ batch_commit protocol) with one extra stage:
                aggregate — map-side combine absorbs celebrity keys);
     2. CLOCK:  clock_k = max(clock_{k-1}, batch max op_ts), persisted
                as meta (state alone cannot recover it: eviction
-               deletes the very rows that carried the maximum);
+               deletes the very rows that carried the maximum). This is
+               the shared late_data.EventClock with delay = ttl and no
+               admission: its watermark IS cutoff_k;
     3. EVICT:  drop winners with op_ts <= clock_k - ttl — THE
                bounded-state step: carried state is one row per key
                active within the TTL horizon, not per key ever seen;
@@ -77,15 +78,11 @@ from flink_kafka_table_api_spark.streaming.agg_retract import (
     OPS_COLUMNS,
     OPS_SCHEMA,
     _AGG_SCHEMA,
-    _changelog,
     _group_agg,
     _OUT_SCHEMA,
     _STATE_SCHEMA,
     _winners,
-)
-from flink_kafka_table_api_spark.streaming.chunk_stats import (
-    ChunkStats,
-    stat_max,
+    changelog,
 )
 from flink_kafka_table_api_spark.streaming.batch_commit import (
     BatchCommit,
@@ -95,7 +92,7 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     read_version,
 )
 from flink_kafka_table_api_spark.streaming.late_data import (
-    interval_micros,
+    EventClock,
     stage_chunked_by,
 )
 
@@ -121,15 +118,6 @@ def stream_agg_state_ttl(
         ops_chunked, os.path.join(state_dir, "src"),
         chunk_col=chunk_col, n_chunks=n_chunks, columns=OPS_COLUMNS,
     )
-    # ttl in exact microseconds (driver-side day-time interval parse,
-    # pinned against the SQL interval parser by tests/test_ts_shift.py)
-    ttl_us = interval_micros(ttl)
-    ckpt = os.path.join(state_dir, "ckpt")
-    # per-chunk clock maxima ride ONE staging-time job instead of one
-    # agg job per micro-batch (chunk_stats.py; guide §1.2)
-    stats = ChunkStats(
-        spark, src, OPS_SCHEMA, {"mx": F.max(F.unix_micros("op_ts"))}
-    )
     out_dir = os.path.join(state_dir, "out")
     state_dir_v = os.path.join(state_dir, "state")
     agg_dir = os.path.join(state_dir, "agg")
@@ -138,6 +126,7 @@ def stream_agg_state_ttl(
         versioned=(state_dir_v, agg_dir),
         meta_dir=os.path.join(state_dir, "meta"),
     )
+    clock = EventClock(spark, commit, src, OPS_SCHEMA, "op_ts", ttl)
 
     def process(batch: DataFrame, batch_id: int) -> Publish:
         merged = _winners(
@@ -146,46 +135,29 @@ def stream_agg_state_ttl(
                 "key", "op_id", "op_ts", "grp", "op", "value"
             ))
         )
-        # CLOCK: delivered high-watermark in exact microseconds (one
-        # scalar — a documented bounded collect, the idle_watermark.py
-        # precedent). The max over THIS batch alone is enough: prev
-        # clock already dominates every prior row's op_ts (it is the
-        # monotone max over all delivered rows, and carried state is a
-        # subset of those), so max(prev_clock, max(batch)) equals the
-        # max over the whole merge — the batch-only scan replaces a
-        # state+batch scan and lets `merged` flow straight into the
-        # eviction filter without its own persist pass. The meta file
-        # is load-bearing: eviction removes the rows that carried old
+        # CLOCK: the delivered high-watermark. The max over THIS batch
+        # alone is enough: the previous clock already dominates every
+        # prior row's op_ts (carried state is a subset of the delivered
+        # rows), so the merge needs no scan of its own. The sidecar is
+        # load-bearing: eviction removes the rows that carried old
         # maxima, so the clock must be carried OUTSIDE the state.
-        # sidecar; in-batch aggregate only if the files don't resolve
-        srows = stats.for_batch(ckpt, batch_id)
-        mx = (
-            batch.agg(F.max(F.unix_micros("op_ts")).alias("m"))
-            .first()["m"]
-            if srows is None else stat_max(srows, "mx")
-        )
-        prev_clock = commit.meta(batch_id - 1, {"clock_us": None})["clock_us"]
-        clock = max(
-            (c for c in (prev_clock, mx) if c is not None), default=None
-        )
+        cutoff = clock.tick(batch, batch_id, admit=False)
         # EVICT: strict op_ts > clock - ttl (a key exactly AT the
         # cutoff is evicted — Flink clears state whose retention timer
-        # has fired). Pure integer-microsecond comparison, exact in
-        # both engines (the repo's timestamp-portability rule).
-        if clock is None:
-            kept = merged
-        else:
-            kept = merged.filter(
-                F.unix_micros("op_ts") > F.lit(clock - ttl_us)
-            )
+        # has fired). ts_shift is exact to the microsecond, as is the
+        # timestamp comparison.
+        kept = (
+            merged if cutoff.watermark is None
+            else merged.filter(F.col("op_ts") > cutoff.watermark)
+        )
         kept = kept.persist()
         agg = _group_agg(kept).persist()
         prev_agg = read_version(spark, agg_dir, batch_id - 1, _AGG_SCHEMA)
         return Publish([
-            overwrite(_changelog(prev_agg, agg, batch_id),
+            overwrite(changelog(prev_agg, agg, batch_id),
                       batch_dir(out_dir, batch_id)),
             overwrite(kept, batch_dir(state_dir_v, batch_id)),
             overwrite(agg, batch_dir(agg_dir, batch_id)),
-        ], meta={"clock_us": clock}, release=[kept, agg])
+        ], meta=cutoff.meta, release=[kept, agg])
 
     return commit.drain(spark, src, OPS_SCHEMA, process, out_dir, _OUT_SCHEMA)

@@ -1,12 +1,12 @@
 """Streaming MATCH_RECOGNIZE: incremental row-pattern matching with
-watermark-gated emission (built round 8, registration-bound for a
-round-9/10 gate slot).
+watermark-gated emission.
 
 FlinkCEP / Flink SQL's MATCH_RECOGNIZE runs on unbounded streams: the
 NFA consumes rows per key as watermarks advance and emits a match only
 when no earlier-timestamped row can still arrive. This module is the
-Spark-first incremental twin of `operators/cep.py`, on the round-8
-drops machinery (admission, per-batch publishes under batch_commit).
+Spark-first incremental twin of `operators/cep.py`, on the shared
+drops machinery (admission by late_data.EventClock, per-batch publishes
+under batch_commit).
 
 The frozen-prefix argument that makes incremental emission sound:
 
@@ -66,10 +66,6 @@ from flink_kafka_table_api_spark.operators.cep import (
     compile_pattern,
     tail_extensible,
 )
-from flink_kafka_table_api_spark.streaming.chunk_stats import (
-    ChunkStats,
-    stat_max,
-)
 from flink_kafka_table_api_spark.streaming.batch_commit import (
     BatchCommit,
     Publish,
@@ -78,8 +74,8 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     partition_dir,
 )
 from flink_kafka_table_api_spark.streaming.late_data import (
+    EventClock,
     stage_chunked_by,
-    ts_shift,
 )
 
 
@@ -132,10 +128,6 @@ def stream_match_recognize(
         chunk_col=chunk_col, n_chunks=n_chunks, columns=data_cols,
     )
     rows_schema = classified.drop(chunk_col).schema
-    ckpt = os.path.join(state_dir, "ckpt")
-    # watermark-advance maxima ride ONE staging-time job instead of one
-    # agg job per micro-batch (chunk_stats.py; guide §1.2)
-    stats = ChunkStats(spark, src, rows_schema, {"mx": F.max(ts_col)})
     rows_store = os.path.join(state_dir, "rows")
     consumed = os.path.join(state_dir, "consumed")
     out = os.path.join(state_dir, "out")
@@ -143,6 +135,7 @@ def stream_match_recognize(
         state_dir, scoped=(consumed,), partitioned=(rows_store, out),
         versioned=(consumed,), meta_dir=os.path.join(state_dir, "offsets"),
     )
+    clock = EventClock(spark, commit, src, rows_schema, ts_col, delay)
 
     @F.pandas_udf("array<struct<s: int, e: int, final: boolean>>")
     def scan(seq, frozen_len, offset):
@@ -298,41 +291,25 @@ def stream_match_recognize(
         return Publish(writes, release=[rows, spans])
 
     def process(batch: DataFrame, batch_id: int) -> Publish:
-        prev = commit.meta(batch_id - 1, {"watermark": None, "max_seen": None})
-        admitted = (
-            batch if prev["watermark"] is None
-            else batch.filter(F.col(ts_col) > prev["watermark"])
-        )
-        admitted.write.mode("overwrite").parquet(
+        t = clock.tick(batch, batch_id)
+        t.admitted.write.mode("overwrite").parquet(
             partition_dir(rows_store, batch_id)
         )
-        # sidecar; in-batch aggregate only if the files don't resolve
-        srows = stats.for_batch(ckpt, batch_id)
-        mx = (
-            batch.agg(F.max(ts_col)).first()[0] if srows is None
-            else stat_max(srows, "mx")
-        )
-        cands = [m for m in (prev["max_seen"],
-                             None if mx is None else mx.isoformat())
-                 if m is not None]
-        max_seen = max(cands) if cands else None
-        new_wm = None
-        if max_seen is not None:
-            new_wm = ts_shift(max_seen, delay)
+        new_wm = t.watermark
         # keys whose frozen prefix grew this batch: stored rows with
         # ts in (W_{k-1}, W_k]
         stored = read_rows()
         affected = None
         if stored is not None and new_wm is not None:
             grown = stored.filter(F.col(ts_col) <= new_wm)
-            if prev["watermark"] is not None:
-                grown = grown.filter(F.col(ts_col) > prev["watermark"])
+            if t.prev is not None:
+                grown = grown.filter(F.col(ts_col) > t.prev)
             affected = grown.select(key_col).distinct()
         return emit(
             affected if affected is not None
             else spark.createDataFrame([], f"{key_col} long"),
             new_wm, read_consumed(batch_id - 1), batch_id, flush=False,
-        )._replace(meta={"watermark": new_wm, "max_seen": max_seen})
+        )._replace(meta=t.meta)
 
     commit.drain(spark, src, rows_schema, process)
     commit.run(

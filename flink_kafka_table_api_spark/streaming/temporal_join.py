@@ -1,5 +1,4 @@
-"""Processing-time TEMPORAL JOIN against a CDC-maintained dimension
-(built round 8, registration-bound for round 9/10).
+"""Processing-time TEMPORAL JOIN against a CDC-maintained dimension.
 
 The Flink Table API's signature enrichment shape is the temporal join:
 a probe stream joined `FOR SYSTEM_TIME AS OF` against the latest version
@@ -7,7 +6,7 @@ of a continuously-updated (changelog-backed) dimension table — public
 Flink API surface; the reference pipeline is the degenerate case whose
 "dimension" is a literal CASE expression (TransactionProcessor.java's
 currency conversion). This module is the Spark-first equivalent, built
-directly on the round-8 CDC apply machinery (streaming/cdc_apply.py):
+directly on the CDC apply machinery (streaming/cdc_apply.py):
 
   per micro-batch k (foreachBatch, driven by the PROBE stream):
     1. COMMIT: the batch_commit protocol — state version k AND output
@@ -50,10 +49,6 @@ from flink_kafka_table_api_spark.streaming.cdc_apply import (
     changelog_winners,
     merge_state_version,
 )
-from flink_kafka_table_api_spark.streaming.chunk_stats import (
-    ChunkStats,
-    stat_max,
-)
 from flink_kafka_table_api_spark.streaming.batch_commit import (
     BatchCommit,
     Publish,
@@ -62,8 +57,8 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     overwrite,
 )
 from flink_kafka_table_api_spark.streaming.late_data import (
+    EventClock,
     stage_chunked_by,
-    ts_shift,
 )
 
 PROBE_COLUMNS = ["probe_id", "probe_ts", "key"]
@@ -166,10 +161,6 @@ def stream_temporal_join(
     )
     if semantics not in ("processing", "event"):
         raise ValueError(f"unknown temporal-join semantics: {semantics!r}")
-    # watermark-advance maxima ride ONE staging-time job instead of one
-    # agg job per micro-batch (chunk_stats.py; guide §1.2); schema=None
-    # mirrors the per-batch inference read of the same files
-    ops_stats = ChunkStats(spark, ops_src, None, {"mx": F.max("op_ts")})
     state = os.path.join(state_dir, "state")
     hist = os.path.join(state_dir, "hist")
     out = os.path.join(state_dir, "out")
@@ -177,18 +168,17 @@ def stream_temporal_join(
         state_dir, scoped=(state,), partitioned=(hist, out),
         versioned=(state,), meta_dir=os.path.join(state_dir, "offsets"),
     )
+    # the ops drops are read per batch by file name; schema=None mirrors
+    # that inference read of the same files
+    clock = EventClock(spark, commit, ops_src, None, "op_ts", delay)
 
     def process(probe_batch: DataFrame, batch_id: int) -> Publish:
         # 1. apply ops drop k BEFORE the probe join
         ops_file = f"chunk{batch_id:04d}.parquet"
         ops = spark.read.parquet(os.path.join(ops_src, ops_file))
-        prev = commit.meta(
-            batch_id - 1, {"watermark": None, "max_seen": None}
-        )
-        admitted = (
-            ops if prev["watermark"] is None
-            else ops.filter(F.col("op_ts") > prev["watermark"])
-        )
+        # the watermark advances from ops SEEN (dropped ops advance it)
+        t = clock.tick(ops, batch_id, file=ops_file)
+        admitted = t.admitted
         # Both semantics previously wrote their dimension state, read
         # the files straight back, and only then built + wrote the
         # enrichment — two serialized jobs with a parquet round-trip in
@@ -242,28 +232,13 @@ def stream_temporal_join(
                 .partitionBy("batch_id")
                 .parquet(hist)
             )
-        # 3. advance the watermark from ops SEEN (dropped ops advance
-        # it); sidecar — in-batch aggregate only if the file is unknown
-        orows = ops_stats.for_file(ops_file)
-        ops_max = (
-            ops.agg(F.max("op_ts")).first()[0] if orows is None
-            else stat_max(orows, "mx")
-        )
-        candidates = [
-            m for m in (prev["max_seen"], None if ops_max is None
-                        else ops_max.isoformat()) if m is not None
-        ]
-        max_seen = max(candidates) if candidates else None
-        new_wm = None
-        if max_seen is not None:
-            new_wm = ts_shift(max_seen, delay)
         return Publish([
             state_write,
             lambda: enriched.withColumn("batch_id", F.lit(batch_id))
             .write.mode("append")
             .partitionBy("batch_id")
             .parquet(out),
-        ], meta={"watermark": new_wm, "max_seen": max_seen},
+        ], meta=t.meta,
             release=[merged if semantics == "processing" else admitted])
 
     return commit.drain(

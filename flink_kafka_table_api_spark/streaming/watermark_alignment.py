@@ -1,5 +1,4 @@
-"""Watermark ALIGNMENT across sources (built round 9, staged for a
-round-10 gate slot — the throttling complement of
+"""Watermark ALIGNMENT across sources (the throttling complement of
 `streaming/idle_watermark.py`'s idleness handling; together they cover
 Flink's multi-source watermark toolbox).
 

@@ -20,9 +20,9 @@ from flink_kafka_table_api_spark.queries import (
     stream_agg_retract_sql,
 )
 from flink_kafka_table_api_spark.streaming.agg_retract import (
-    apply_changelog,
     stream_agg_retract,
 )
+from flink_kafka_table_api_spark.streaming.retract import apply_changelog
 
 SF = "/root/testdata/sf0.001"
 
@@ -96,7 +96,8 @@ def test_applying_the_changelog_materializes_the_group_by(spark, tmp_path):
         spark, _ops(spark, rows), str(tmp_path / "s3"), n_chunks=3,
     )
     got = sorted(
-        (r.grp, r.n_keys, r.total) for r in apply_changelog(out).collect()
+        (r.grp, r.n_keys, r.total)
+        for r in apply_changelog(out, "grp").collect()
     )
     # final state: key1->b(3.0), key2 deleted, key3->b(1.5); a is gone
     assert got == [("b", 2, 4.5)]
@@ -137,8 +138,19 @@ def test_replay_of_committed_batches_is_a_noop(spark, tmp_path):
     assert _got(out2) == want
 
 
-@pytest.mark.parametrize("sf", ["/root/testdata/sf0.001",
-                                "/root/testdata/sf0.01"])
+def test_live_signal_on_testdata():
+    """tests/test_oracle_parity.py pins the registered stream_agg_retract to
+    this oracle at sf0.001; the live signal is checked on the oracle's
+    rows."""
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
+    ops = {r[0] for r in con.execute(stream_agg_retract_sql()).fetchall()}
+    # retractions really happen after batch 0 (the update-mode class is
+    # exercised, not just |groups| +I rows)
+    assert "-U" in ops, sorted(ops)
+
+
+@pytest.mark.parametrize("sf", ["/root/testdata/sf0.01"])
 def test_oracle_parity_on_testdata(spark, sf):
     out = QUERIES["stream_agg_retract"](spark, sf)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())

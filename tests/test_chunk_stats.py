@@ -128,3 +128,39 @@ def test_unknown_file_and_missing_log_fall_back(staged):
         f.write('v1\n{"path":"file://%s/chunk0001.parquet"}\n' % src)
     assert stats.for_batch(os.path.join(d, "fakeckpt"), 1) == []
     assert stat_max([], "mx") is None
+
+
+def test_compacted_source_log_resolves_every_batch(spark, tmp_path):
+    """Spark compacts the file-source log every 10 batches
+    (``fileSource.log.compactInterval``): batch 9 exists only as
+    ``9.compact``, which lists the files of batches 0-9. Every batch of
+    a 12-file drain must still resolve, to that batch's own aggregate."""
+    src = str(tmp_path / "src")
+    df = spark.createDataFrame(
+        [(i, f"2024-01-01 00:00:{i:02d}", "a", float(i), i)
+         for i in range(12)],
+        "row_id long, ts string, source string, value double, __chunk int",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    stage_chunked_by(
+        df, src, n_chunks=12, columns=["row_id", "ts", "source", "value"]
+    )
+    stats = ChunkStats(
+        spark, src, SCHEMA, {"mx": F.max("ts"), "n": F.count("*")}
+    )
+    ckpt = str(tmp_path / "ckpt")
+    observed = []
+
+    def per_batch(batch, batch_id):
+        observed.append(
+            (batch_id, batch.agg(F.max("ts"), F.count("*")).first())
+        )
+
+    _run_stream(spark, src, ckpt, per_batch)
+    assert [b for b, _ in observed] == list(range(12))
+    log = sorted(os.listdir(os.path.join(ckpt, "sources", "0")))
+    assert "9.compact" in log and "9" not in log
+    for batch_id, row in observed:
+        rows = stats.for_batch(ckpt, batch_id)
+        assert rows is not None, f"batch {batch_id} must resolve"
+        assert stat_max(rows, "mx") == row[0]
+        assert sum(r["n"] for r in rows) == row[1]

@@ -10,7 +10,6 @@ from __future__ import annotations
 import duckdb
 
 from flink_kafka_table_api_spark.queries import (
-    QUERIES,
     data_expectations_sql as oracle_sql,
 )
 from flink_kafka_table_api_spark.operators.expectations import (
@@ -103,20 +102,14 @@ def test_multi_rule_table_is_scanned_once(spark):
 RULES = TESTDATA_CONTRACT
 
 
-def test_oracle_parity_on_testdata(spark):
-    got = sorted(
-        tuple(str(x) for x in r)
-        for r in QUERIES["data_expectations"](spark, SF).collect()
-    )
+def test_oracle_has_one_row_per_rule():
+    """tests/test_oracle_parity.py pins the registered data_expectations to
+    this oracle at sf0.001; its one row per rule is checked on the
+    oracle's rows."""
     con = duckdb.connect()
     for t in ("orders", "events", "part", "lineitem", "customer",
               "nation", "region"):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'"
         )
-    exp = sorted(
-        tuple(str(x) for x in r)
-        for r in con.execute(oracle_sql()).fetchall()
-    )
-    assert len(got) == len(exp) == len(RULES)
-    assert got == exp
+    assert len(con.execute(oracle_sql()).fetchall()) == len(RULES)

@@ -23,30 +23,33 @@ SF = "/root/testdata/sf0.001"
 # so it returns 0 rows; join_anti_urgent is its non-empty sibling.
 NONEMPTY = frozenset("""
     adamic_adar agg_minmax_by agg_rollup_cube ann_bruteforce ann_lsh
-    approx_distinct approx_percentiles bpe_encode_counts bpe_train_merges
-    char_entropy chunk_dedup cohort_retention cold_customers
-    corpus_shuffle corr_avg_subquery datetime_funcs dedup_exact
+    approx_distinct approx_percentiles bpe_encode_counts
+    bpe_train_merges burst_detection char_entropy chunk_dedup
+    cohort_retention cold_customers corpus_shuffle corr_avg_subquery
+    cumulate_windows data_expectations datetime_funcs dedup_exact
     dedup_keep_best dedup_minhash dedup_simhash doc_chunks
     dup_ngram_coverage embedding_neardup equi_depth_bins exists_orders
     fingerprint funnel_conversion gazetteer_tag grouping_sets
     hard_negatives hybrid_search join_anti_urgent join_full_outer
     join_left join_semi json_funcs kcore label_propagation lang_id
     length_band_filter link_prediction llm_curation llm_curation_packed
-    lsh_candidate_pairs multi_distinct neardup_verified pagerank
-    percentiles readability scalar_funcs scalar_subquery semantic_dedup
-    set_ops_all set_ops_distinct simhash_pairs stratified_sample
-    stream_agg_retract stream_allowed_lateness stream_ann_ingest
-    stream_cdc_apply stream_cumulate stream_curation stream_curation_ooo
+    lsh_candidate_pairs match_recognize multi_distinct neardup_verified
+    pagerank percentiles pii_scrub readability scalar_funcs
+    scalar_subquery semantic_dedup set_ops_all set_ops_distinct
+    simhash_pairs stratified_sample stream_agg_retract
+    stream_allowed_lateness stream_ann_ingest stream_cdc_apply
+    stream_cumulate stream_curation stream_curation_ooo
     stream_event_temporal_join stream_idle_watermark stream_late_events
-    stream_match_recognize stream_over_agg stream_over_rows stream_profile
-    stream_quantile_monitor stream_scd2 stream_session stream_sliding
-    stream_source_quota stream_state_ttl stream_static_join
-    stream_temporal_join stream_topn_retract stream_tumbling
-    stream_watermark_alignment stream_window_dedup stream_window_join
-    stream_window_topk strip_dup_substrings substring_dup_stats
-    table_profile text_quality token_count tpch_q14_promo
-    tpch_q19_disjunctive tpch_q6_forecast triangle_count value_histogram
-    window_analytic window_frames window_running window_topk winnowing
+    stream_match_recognize stream_over_agg stream_over_rows
+    stream_profile stream_quantile_monitor stream_scd2 stream_session
+    stream_session_dynamic stream_sliding stream_source_quota
+    stream_state_ttl stream_static_join stream_temporal_join
+    stream_topn_retract stream_tumbling stream_watermark_alignment
+    stream_window_dedup stream_window_join stream_window_topk
+    strip_dup_substrings substring_dup_stats table_profile text_quality
+    token_count tpch_q14_promo tpch_q19_disjunctive tpch_q6_forecast
+    triangle_count value_histogram window_analytic window_frames
+    window_running window_topk winnowing
 """.split())
 
 

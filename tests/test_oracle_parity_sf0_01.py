@@ -1,14 +1,9 @@
-"""Committed two-SF oracle parity for the round-9 registrations
-(ADVICE r8 item 1): the per-capability test files pin
-SF=/root/testdata/sf0.001, and the sf0.01 validations used to live only
-in session-run check_gate replicas recorded in comments —
-burst_detection proved local-replica green is necessary but not
-sufficient, and an UNCOMMITTED sf0.01 run is not evidence at all. This
-file makes the claim reproducible: every round-9-registered
-(query, oracle) pair runs at sf0.001 AND sf0.01 through the SAME
+"""Oracle parity at sf0.01 for the registered queries whose
+sf0.001 parity tests/test_oracle_parity.py already pins (exactly, and
+with a NONEMPTY guard): each (query, oracle) pair runs through the SAME
 registry surface the driver reads, compared with the driver harness's
 normalizations (columns sorted by name, rows sorted, floats %.6g,
-timestamps to milliseconds).
+timestamps to milliseconds), and must return rows.
 """
 
 from __future__ import annotations
@@ -21,17 +16,27 @@ import pytest
 
 from flink_kafka_table_api_spark.queries import ORACLES, QUERIES
 
-R9_REGISTRATIONS = [
+SF = "/root/testdata/sf0.01"
+
+NAMES = [
+    # streaming
     "stream_scd2", "stream_cdc_apply", "stream_temporal_join",
     "stream_event_temporal_join", "stream_topn_retract",
-    "match_recognize", "stream_match_recognize", "stream_ann_ingest",
-    "stream_profile", "data_expectations", "cumulate_windows",
+    "stream_match_recognize", "stream_ann_ingest", "stream_profile",
     "stream_cumulate", "stream_over_agg", "stream_over_rows",
-    "stream_window_dedup", "stream_session_dynamic",
-    "stream_window_join", "stream_source_quota", "pii_scrub",
-    # the round-9 stretch capability (VERDICT r8 item 7), registered
-    # straight into the round-9 gate after the same two-SF validation
-    "stream_idle_watermark",
+    "stream_window_dedup", "stream_session_dynamic", "stream_window_join",
+    "stream_source_quota", "stream_idle_watermark",
+    "stream_watermark_alignment", "stream_agg_retract",
+    "stream_quantile_monitor", "stream_allowed_lateness",
+    # batch
+    "match_recognize", "data_expectations", "cumulate_windows",
+    "pii_scrub", "burst_detection",
+    # graph
+    "pagerank", "triangle_count", "label_propagation", "kcore",
+    "link_prediction", "adamic_adar",
+    # per-document text stats
+    "lang_id", "text_quality", "char_entropy", "token_count",
+    "dup_ngram_coverage", "readability", "gazetteer_tag",
 ]
 
 TABLES = (
@@ -74,28 +79,26 @@ def _normalized(rows, cols):
     return sorted(tuple(_norm_cell(r[i]) for i in order) for r in rows)
 
 
-@pytest.mark.parametrize("sf", ["/root/testdata/sf0.001",
-                                "/root/testdata/sf0.01"])
-@pytest.mark.parametrize("name", R9_REGISTRATIONS)
-def test_r9_registration_matches_oracle(spark, name, sf):
+@pytest.mark.parametrize("name", NAMES)
+def test_registration_matches_oracle_at_sf0_01(spark, name):
     assert name in QUERIES and name in ORACLES, (
         f"{name} lost its registration"
     )
-    sdf = QUERIES[name](spark, sf)
+    sdf = QUERIES[name](spark, SF)
     scols = sdf.columns
     srows = sdf.collect()
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
     res = con.execute(ORACLES[name])
     dcols = [d[0] for d in res.description]
     drows = res.fetchall()
     assert sorted(scols) == sorted(dcols), (
-        f"{name}@{sf}: columns {sorted(scols)} != {sorted(dcols)}"
+        f"{name}@{SF}: columns {sorted(scols)} != {sorted(dcols)}"
     )
     assert len(srows) == len(drows) > 0, (
-        f"{name}@{sf}: {len(srows)} spark rows vs {len(drows)} oracle rows"
+        f"{name}@{SF}: {len(srows)} spark rows vs {len(drows)} oracle rows"
     )
     assert _normalized(srows, scols) == _normalized(drows, dcols), (
-        f"{name}@{sf}: value mismatch"
+        f"{name}@{SF}: value mismatch"
     )

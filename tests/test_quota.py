@@ -15,7 +15,6 @@ import duckdb
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.queries import (
-    QUERIES,
     stream_source_quota_sql,
 )
 from flink_kafka_table_api_spark.streaming.quota import (
@@ -80,19 +79,14 @@ def test_crash_replay_is_clean(spark, tmp_path):
     assert sorted(tuple(r) for r in out2.collect()) == want
 
 
-def test_oracle_parity_on_testdata(spark):
-    out = QUERIES["stream_source_quota"](spark, SF)
-    got = sorted(tuple(str(x) for x in r) for r in out.collect())
+def test_live_signal_on_testdata():
+    """tests/test_oracle_parity.py pins the registered stream_source_quota to
+    this oracle at sf0.001; the live signals are checked on the oracle's
+    rows."""
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
     )
-    exp = sorted(
-        tuple(str(x) for x in r)
-        for r in con.execute(stream_source_quota_sql()).fetchall()
-    )
-    assert len(got) == len(exp) > 0
-    assert got == exp
     # live signals: (a) the cap really bit (some doc dropped), and
     # (b) at least one source's boundary falls in drop 1 or 2 — the
     # carried counter across batch boundaries did the admission

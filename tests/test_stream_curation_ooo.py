@@ -14,8 +14,6 @@ import duckdb
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.queries import (
-    ORACLES,
-    QUERIES,
     _admitted_sql,
     _doc_prm_sql,
     _doc_tercile_sql,
@@ -38,19 +36,14 @@ def _chunked(spark, rows):
     ).select("doc_id", "text", F.col("c").alias("__chunk"))
 
 
-def test_oracle_parity_on_testdata(spark):
+def test_live_signal_on_testdata():
+    """tests/test_oracle_parity.py pins the registered stream_curation_ooo to
+    this oracle at sf0.001; the live signals are checked on the oracle's
+    rows."""
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'"
     )
-    df = QUERIES["stream_curation_ooo"](spark, SF)
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(
-        tuple(r)
-        for r in con.execute(ORACLES["stream_curation_ooo"]).fetchall()
-    )
-    assert len(got) == len(exp) > 0
-    assert got == exp
     # the staged lateness has a live signal on the shipped corpus: some
     # two-drops-late docs fall below the admission watermark, and some
     # one-drop-late docs land inside it

@@ -17,7 +17,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.queries import (
-    QUERIES,
     _admitted_sql,
     _changelog_ops_sql,
     _day_tercile_sql,
@@ -92,17 +91,15 @@ def test_temporal_visibility_semantics(spark, tmp_path):
 ORACLE_SQL = stream_temporal_join_sql()
 
 
-def test_oracle_parity_on_testdata(spark):
-    out = QUERIES["stream_temporal_join"](spark, SF)
-    got = sorted(tuple(str(x) for x in r) for r in out.collect())
+def test_live_signal_on_testdata():
+    """tests/test_oracle_parity.py pins the registered stream_temporal_join to
+    this oracle at sf0.001; the live signals are checked on the oracle's
+    rows."""
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
-    exp = sorted(
-        tuple(str(x) for x in r)
-        for r in con.execute(ORACLE_SQL).fetchall()
-    )
-    assert len(got) == len(exp) > 0
-    assert got == exp
+    got = [
+        tuple(str(x) for x in r) for r in con.execute(ORACLE_SQL).fetchall()
+    ]
     # live signals: some probes enriched, some NULL (tombstones/unseen),
     # and at least one NULL comes from a real 'error' tombstone
     n_null = sum(1 for r in got if r[3] == "None")
