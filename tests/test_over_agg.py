@@ -17,7 +17,7 @@ import shutil
 import duckdb
 from pyspark.sql import functions as F
 
-from flink_kafka_table_api_spark.queries import stream_over_agg_sql
+from flink_kafka_table_api_spark.queries import QUERIES, stream_over_agg_sql
 from flink_kafka_table_api_spark.streaming import batch_commit
 
 SF = "/root/testdata/sf0.001"
@@ -172,6 +172,21 @@ def test_over_rows_context_is_count_bounded(spark, tmp_path, monkeypatch):
     # at most n_preceding rows per key survive in the context tail
     per_key = ctx.groupBy("key").count().collect()
     assert per_key and all(r["count"] <= 1 for r in per_key)
+
+
+def test_over_rows_oracle_parity_on_testdata(spark):
+    from flink_kafka_table_api_spark.queries import stream_over_rows_sql
+
+    out = QUERIES["stream_over_rows"](spark, SF)
+    got = sorted(tuple(str(x) for x in r) for r in out.collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
+    exp = sorted(
+        tuple(str(x) for x in r)
+        for r in con.execute(stream_over_rows_sql()).fetchall()
+    )
+    assert len(got) == len(exp) > 0
+    assert got == exp
 
 
 def test_banded_equals_naive_window(spark):

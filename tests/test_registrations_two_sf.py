@@ -1,9 +1,9 @@
-"""Oracle parity at sf0.01 for the registered queries whose
-sf0.001 parity tests/test_oracle_parity.py already pins (exactly, and
-with a NONEMPTY guard): each (query, oracle) pair runs through the SAME
-registry surface the driver reads, compared with the driver harness's
-normalizations (columns sorted by name, rows sorted, floats %.6g,
-timestamps to milliseconds), and must return rows.
+"""Two-SF oracle parity for the registered queries: each (query, oracle)
+pair runs at sf0.001 AND sf0.01 through the SAME registry surface the
+driver reads, compared with the driver harness's normalizations
+(columns sorted by name, rows sorted, floats %.6g, timestamps to
+milliseconds), and must return rows. tests/test_oracle_parity.py pins
+the sf0.001 rows exactly; this file adds the sf0.01 scale.
 """
 
 from __future__ import annotations
@@ -15,8 +15,6 @@ import duckdb
 import pytest
 
 from flink_kafka_table_api_spark.queries import ORACLES, QUERIES
-
-SF = "/root/testdata/sf0.01"
 
 NAMES = [
     # streaming
@@ -79,26 +77,28 @@ def _normalized(rows, cols):
     return sorted(tuple(_norm_cell(r[i]) for i in order) for r in rows)
 
 
+@pytest.mark.parametrize("sf", ["/root/testdata/sf0.001",
+                                "/root/testdata/sf0.01"])
 @pytest.mark.parametrize("name", NAMES)
-def test_registration_matches_oracle_at_sf0_01(spark, name):
+def test_registration_matches_oracle(spark, name, sf):
     assert name in QUERIES and name in ORACLES, (
         f"{name} lost its registration"
     )
-    sdf = QUERIES[name](spark, SF)
+    sdf = QUERIES[name](spark, sf)
     scols = sdf.columns
     srows = sdf.collect()
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
     res = con.execute(ORACLES[name])
     dcols = [d[0] for d in res.description]
     drows = res.fetchall()
     assert sorted(scols) == sorted(dcols), (
-        f"{name}@{SF}: columns {sorted(scols)} != {sorted(dcols)}"
+        f"{name}@{sf}: columns {sorted(scols)} != {sorted(dcols)}"
     )
     assert len(srows) == len(drows) > 0, (
-        f"{name}@{SF}: {len(srows)} spark rows vs {len(drows)} oracle rows"
+        f"{name}@{sf}: {len(srows)} spark rows vs {len(drows)} oracle rows"
     )
     assert _normalized(srows, scols) == _normalized(drows, dcols), (
-        f"{name}@{SF}: value mismatch"
+        f"{name}@{sf}: value mismatch"
     )

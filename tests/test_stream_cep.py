@@ -14,9 +14,14 @@ from __future__ import annotations
 import os
 import shutil
 
+import duckdb
 from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.catalog import read_table
+from flink_kafka_table_api_spark.queries import (
+    QUERIES,
+    stream_match_recognize_sql as oracle_sql,
+)
 from flink_kafka_table_api_spark.streaming.stream_cep import (
     stream_match_recognize,
 )
@@ -132,6 +137,19 @@ def test_crash_replay_is_clean(spark, tmp_path):
     shutil.rmtree(os.path.join(state, "ckpt"))
     got = _got(_run(spark, _rows(spark, FIXTURE), state))
     assert got == want == EXPECTED
+
+
+def test_oracle_parity_on_testdata(spark):
+    out = QUERIES["stream_match_recognize"](spark, SF)
+    got = sorted(tuple(str(x) for x in r) for r in out.collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
+    exp = sorted(
+        tuple(str(x) for x in r)
+        for r in con.execute(oracle_sql()).fetchall()
+    )
+    assert len(got) == len(exp) > 0
+    assert got == exp
 
 
 def test_streamed_equals_batch_cep(spark, tmp_path):

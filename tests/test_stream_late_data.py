@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.queries import (
     ORACLES,
+    QUERIES,
     _admitted_sql,
     _late_drop_sql,
     _late_shift_sql,
@@ -113,6 +114,17 @@ def con():
     c = duckdb.connect()
     c.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
     return c
+
+
+def test_stream_late_events_oracle_parity(spark, con):
+    df = QUERIES["stream_late_events"](spark, SF)
+    got = sorted(tuple(str(x) for x in r) for r in df.collect())
+    exp = sorted(
+        tuple(str(x) for x in r)
+        for r in con.execute(ORACLES["stream_late_events"]).fetchall()
+    )
+    assert len(got) == len(exp) > 0
+    assert got == exp
 
 
 def test_late_slices_have_live_signal(con):

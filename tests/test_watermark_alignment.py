@@ -138,7 +138,8 @@ def test_replay_of_committed_batches_is_a_noop(spark, tmp_path):
     assert _got(out2) == want
 
 
-@pytest.mark.parametrize("sf", ["/root/testdata/sf0.01"])
+@pytest.mark.parametrize("sf", ["/root/testdata/sf0.001",
+                                "/root/testdata/sf0.01"])
 def test_oracle_parity_on_testdata(spark, sf):
     out = QUERIES["stream_watermark_alignment"](spark, sf)
     got = sorted(tuple(str(x) for x in r) for r in out.collect())

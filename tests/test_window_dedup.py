@@ -10,12 +10,26 @@ from __future__ import annotations
 import duckdb
 
 from flink_kafka_table_api_spark.queries import (
+    QUERIES,
     _late_shift_sql,
     stream_window_dedup_sql,
 )
 
 
 SF = "/root/testdata/sf0.001"
+
+
+def test_oracle_parity_on_testdata(spark):
+    out = QUERIES["stream_window_dedup"](spark, SF)
+    got = sorted(tuple(str(x) for x in r) for r in out.collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
+    exp = sorted(
+        tuple(str(x) for x in r)
+        for r in con.execute(stream_window_dedup_sql()).fetchall()
+    )
+    assert len(got) == len(exp) > 0
+    assert got == exp
 
 
 def test_late_winner_semantics(spark):
