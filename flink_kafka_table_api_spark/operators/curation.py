@@ -34,39 +34,13 @@ from flink_kafka_table_api_spark.functions.portable import (
     hash_uniform,
     portable_hash64,
 )
+from flink_kafka_table_api_spark.operators.dedup import shingles
 from flink_kafka_table_api_spark.operators.text import (
     token_count,
     tokens,
     tokens_sql,
 )
 from flink_kafka_table_api_spark.parallelism import ensure_parallelism
-
-
-def ngrams(text: Column | str, n: int) -> Column:
-    """Distinct space-joined token n-grams; docs shorter than n tokens yield
-    their whole token sequence as a single gram (so short benchmark prompts
-    still participate in overlap checks)."""
-    toks = tokens(text)
-    sz = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), sz - n),
-        lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-    )
-    return F.array_distinct(
-        F.when(sz >= n, grams).otherwise(F.array(F.array_join(toks, " ")))
-    )
-
-
-def ngrams_sql(expr: str, n: int) -> str:
-    """DuckDB rendering of :func:`ngrams` (identical semantics)."""
-    toks = (f"list_filter(regexp_split_to_array(lower(trim({expr})), '\\s+'),"
-            f" t -> t != '')")
-    return (
-        f"list_distinct(CASE WHEN len({toks}) >= {n} THEN "
-        f"list_transform(generate_series(1, len({toks}) - {n} + 1), "
-        f"i -> array_to_string(list_slice({toks}, i, i + {n} - 1), ' ')) "
-        f"ELSE [array_to_string({toks}, ' ')] END)"
-    )
 
 
 def decontaminate(
@@ -93,12 +67,12 @@ def decontaminate(
     """
     train = ensure_parallelism(train)
     bench_grams = (
-        benchmark.select(F.explode(ngrams(text_col, ngram_n)).alias("__g"))
+        benchmark.select(F.explode(shingles(text_col, ngram_n)).alias("__g"))
         .select(portable_hash64(F.col("__g")).alias("__gh"))
         .distinct()
     )
     train_grams = train.select(
-        F.col(id_col), F.explode(ngrams(text_col, ngram_n)).alias("__g")
+        F.col(id_col), F.explode(shingles(text_col, ngram_n)).alias("__g")
     ).select(F.col(id_col), portable_hash64(F.col("__g")).alias("__gh"))
     if keep_contaminated:
         return (
@@ -165,7 +139,7 @@ def bloom_decontaminate(
         return out
 
     bench_grams = benchmark.select(
-        F.explode(ngrams(text_col, ngram_n)).alias("__g")
+        F.explode(shingles(text_col, ngram_n)).alias("__g")
     ).distinct()
     bitmap = (
         bench_grams.select(F.explode(F.array(*probe_cols(F.col("__g")))).alias("__p"))
@@ -175,7 +149,7 @@ def bloom_decontaminate(
     )
 
     train_grams = train.select(
-        F.col(id_col), F.explode(ngrams(text_col, ngram_n)).alias("__g")
+        F.col(id_col), F.explode(shingles(text_col, ngram_n)).alias("__g")
     )
     probes = train_grams.select(
         id_col, "__g",

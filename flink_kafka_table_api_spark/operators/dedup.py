@@ -32,7 +32,11 @@ from flink_kafka_table_api_spark.functions.portable import (
     minhash_perm,
     portable_hash64,
 )
-from flink_kafka_table_api_spark.operators.text import kgram_strings, tokens
+from flink_kafka_table_api_spark.operators.text import (
+    kgram_strings,
+    tokens,
+    tokens_sql,
+)
 from flink_kafka_table_api_spark.parallelism import ensure_parallelism
 
 # Fixed universal-hash family coefficients (odd constants; any fixed odd a
@@ -81,8 +85,7 @@ def shingles(text: Column | str, k: int = 3) -> Column:
 
 def shingles_sql(expr: str, k: int = 3) -> str:
     """DuckDB rendering of :func:`shingles` (identical semantics)."""
-    toks = (f"list_filter(regexp_split_to_array(lower(trim({expr})), '\\s+'),"
-            f" t -> t != '')")
+    toks = tokens_sql(expr)
     return (
         f"list_distinct(CASE WHEN len({toks}) >= {k} THEN "
         f"list_transform(generate_series(1, len({toks}) - {k} + 1), "
@@ -511,8 +514,7 @@ def simhash(
 
 def simhash_sql(id_expr: str, text_expr: str, *, bits: int = 32) -> str:
     """DuckDB SELECT-list fragment matching :func:`simhash` (portable mode)."""
-    toks = (f"list_filter(regexp_split_to_array(lower(trim({text_expr})), '\\s+'),"
-            f" t -> t != '')")
+    toks = tokens_sql(text_expr)
     hts = (f"list_transform({toks},"
            f" t -> ('0x' || substr(md5(t), 1, 15))::BIGINT)")
     terms = []

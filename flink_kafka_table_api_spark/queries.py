@@ -3156,8 +3156,8 @@ def _curate_pack_oracle(
     quality_threshold: float = 0.5, ngram_n: int = 4, budget: int = 256
 ) -> str:
     toks = tx.tokens_sql("text")
-    ngrams = cu.ngrams_sql("text", ngram_n)
-    ngrams_d = cu.ngrams_sql("d.text", ngram_n)
+    ngrams = dd.shingles_sql("text", ngram_n)
+    ngrams_d = dd.shingles_sql("d.text", ngram_n)
     quality_cte = f"""
       SELECT doc_id,
              round((CASE WHEN len(__toks) BETWEEN 10 AND 1000 THEN 0.4 ELSE 0.0 END)
@@ -5219,11 +5219,11 @@ _DECON_N = 4
     f"""
     WITH bench AS (
       SELECT DISTINCT {portable_hash64_sql('__g')} AS __gh
-      FROM (SELECT unnest({cu.ngrams_sql('text', _DECON_N)}) AS __g
+      FROM (SELECT unnest({dd.shingles_sql('text', _DECON_N)}) AS __g
             FROM documents WHERE source = 'src19')
     ), train AS (
       SELECT doc_id, {portable_hash64_sql('__g')} AS __gh
-      FROM (SELECT doc_id, unnest({cu.ngrams_sql('text', _DECON_N)}) AS __g
+      FROM (SELECT doc_id, unnest({dd.shingles_sql('text', _DECON_N)}) AS __g
             FROM documents WHERE source <> 'src19')
     )
     SELECT train.doc_id, CAST(COUNT(*) AS BIGINT) AS overlap_ngrams
@@ -5248,12 +5248,12 @@ def q_contamination_audit(spark: SparkSession, sf: str) -> DataFrame:
     f"""
     WITH bench AS (
       SELECT DISTINCT __g
-      FROM (SELECT unnest({cu.ngrams_sql('text', _DECON_N)}) AS __g
+      FROM (SELECT unnest({dd.shingles_sql('text', _DECON_N)}) AS __g
             FROM documents WHERE source = 'src19')
     )
     SELECT doc_id, source, n_chars FROM documents d
     WHERE source <> 'src19' AND NOT EXISTS (
-      SELECT 1 FROM (SELECT unnest({cu.ngrams_sql('d.text', _DECON_N)}) AS __g) g
+      SELECT 1 FROM (SELECT unnest({dd.shingles_sql('d.text', _DECON_N)}) AS __g) g
       JOIN bench USING (__g)
     )
     """,
@@ -5278,12 +5278,12 @@ def q_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     f"""
     WITH bench AS (
       SELECT DISTINCT __g
-      FROM (SELECT unnest({cu.ngrams_sql('text', _DECON_N)}) AS __g
+      FROM (SELECT unnest({dd.shingles_sql('text', _DECON_N)}) AS __g
             FROM documents WHERE source = 'src19')
     )
     SELECT doc_id, source, n_chars FROM documents d
     WHERE source <> 'src19' AND NOT EXISTS (
-      SELECT 1 FROM (SELECT unnest({cu.ngrams_sql('d.text', _DECON_N)}) AS __g) g
+      SELECT 1 FROM (SELECT unnest({dd.shingles_sql('d.text', _DECON_N)}) AS __g) g
       JOIN bench USING (__g)
     )
     """,

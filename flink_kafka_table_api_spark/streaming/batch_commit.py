@@ -1,6 +1,6 @@
 """The exactly-once micro-batch commit protocol shared by every
-foreachBatch pipeline in this package, and the bounded drain that runs
-them.
+foreachBatch pipeline in this package, the bounded drain that runs
+them, and the one owner of their on-disk state layout.
 
 Structured Streaming (SIGMOD 2018) gets end-to-end exactly-once from an
 offset write-ahead log plus sinks that are idempotent per epoch. Spark's
@@ -23,19 +23,41 @@ Per batch N, :meth:`BatchCommit.run`:
   4. PUBLISH  its writes through ``late_data.run_concurrently``, then the
               sidecar ``<meta_dir>/batch-N.json``;
   5. MARKER   ``<marker_dir>/batch-N``, last;
-  6. PRUNE    every ``batch-M`` of each versioned dir older than the
-              newest ``KEEP_VERSIONS`` — on the SKIP path too, so a crash
+  6. PRUNE    every version of each versioned dir older than the newest
+              ``KEEP_VERSIONS`` — on the SKIP path too, so a crash
               between the marker and the prune leaves nothing behind.
 
-Everything a batch writes is named ``batch-N``, ``batch-N.json``,
-``batch_id=N`` or (the end-of-input flush marker) ``batch-N-flush``;
-``reprocess.reset_from`` deletes by exactly that rule (:data:`BATCH_NAME`).
+A pipeline keeps its state under `state_dir` in this layout:
 
-Storage goes through plain ``os``/``shutil``. That keeps the protocol
-valid on local and POSIX paths, where a file create is visible at once
-and a directory removal is final; it is NOT valid on HDFS or object
-stores such as S3. Moving to Hadoop FileSystem calls is a change to this
-module alone.
+  commits/batch-N        the marker, written LAST (``batch-N-flush``
+                         for the end-of-input flush)
+  offsets/batch-N.json   the JSON sidecar: watermark and offset scalars
+  state/batch-N          versioned carried state (``batch--1`` is the
+                         cdc_apply snapshot seed)
+  <dir>/batch-N          batch-scoped outputs, at any depth (a nested
+  <dir>/batch_id=N/      commit such as dedup/indexed/batch-N included)
+  ckpt/                  the Structured Streaming checkpoint
+
+:data:`BATCH_NAME` is that naming rule; :func:`versions` lists it,
+:func:`prune` and :func:`reset_from` delete by it. Reprocessing is
+therefore the inverse of the rule rather than a wipe-and-rerun: to
+re-run a stream from drop K (a fixed bug, a revised threshold, a
+corrupted publish), :func:`reset_from` deletes everything batches >= K
+published and their markers, keeps everything before K, and drops the
+checkpoint. The next availableNow run replays every drop; batches < K
+hit their markers and no-op, batches >= K recompute against the
+surviving prefix state, the same path crash recovery takes. The cost is
+O(reprocessed drops), not a rebuild of the corpus.
+
+Every listing, existence check, read by name and delete of a state path
+in ``streaming/`` goes through this module. Storage is plain
+``os``/``shutil``, valid on local and POSIX paths, where a file create
+is visible at once and a directory removal is final; it is NOT valid on
+HDFS or object stores such as S3, and moving to Hadoop FileSystem calls
+is a change to this module. Two other modules still touch files with
+``os``, neither of them state: ``late_data.stage_chunked_by`` stages the
+input drops, and ``chunk_stats`` lists those staged files and reads the
+checkpoint's file-source log.
 """
 
 from __future__ import annotations
@@ -74,21 +96,88 @@ def partition_dir(base: str, batch_id) -> str:
     return os.path.join(base, f"batch_id={batch_id}")
 
 
+def _entries(base: str) -> list[tuple[int, str]]:
+    """(N, path) of every ``batch-N``, ``batch-N.json`` and
+    ``batch_id=N`` entry directly under `base` (flush markers excluded)."""
+    if not os.path.isdir(base):
+        return []
+    return [
+        (n, e.path) for e in os.scandir(base)
+        if not e.name.endswith("-flush")
+        and (n := batch_number(e.name)) is not None
+    ]
+
+
+def versions(base: str) -> list[int]:
+    """The sorted N of every version under `base` ([] when absent)."""
+    return sorted(n for n, _ in _entries(base))
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    else:
+        os.remove(path)
+
+
+def prune(dirs: Sequence[str], floor: int) -> None:
+    """Delete every version N <= `floor` of each of `dirs`."""
+    for d in dirs:
+        for n, path in _entries(d):
+            if n <= floor:
+                _remove(path)
+
+
 def overwrite(df: DataFrame, path: str) -> Callable[[], None]:
     """A publish thunk that overwrites `path` with `df`."""
     return lambda: df.write.mode("overwrite").parquet(path)
 
 
+def overwrite_arrow(table, path: str) -> Callable[[], None]:
+    """A publish thunk that writes the driver-side Arrow `table` as the
+    one data file of `path`: no Spark job, for state of a few rows."""
+    def write() -> None:
+        import pyarrow.parquet as pq
+
+        os.makedirs(path, exist_ok=True)
+        pq.write_table(table, os.path.join(path, "part-0.parquet"))
+
+    return write
+
+
+def _is_data(name: str) -> bool:
+    return name.endswith(".parquet") and not name.startswith(("_", "."))
+
+
+def read_arrow(path: str, columns: Sequence[str]) -> list:
+    """The `columns` of each parquet data file directly under `path`, as
+    Arrow tables read on the driver (no Spark job), in file-name order;
+    [] when `path` does not exist. The read twin of
+    :func:`overwrite_arrow`; it reads Spark-written versions too."""
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(path):
+        return []
+    return [
+        pq.read_table(e.path, columns=list(columns))
+        for e in sorted(os.scandir(path), key=lambda e: e.name)
+        if _is_data(e.name)
+    ]
+
+
 def has_data(path: str) -> bool:
     """True iff a parquet data file exists under `path` (an all-empty
     batch can leave a directory holding only ``_SUCCESS``)."""
-    for _root, _dirs, files in os.walk(path):
-        if any(
-            f.endswith(".parquet") and not f.startswith(("_", "."))
-            for f in files
-        ):
-            return True
-    return False
+    return any(
+        any(map(_is_data, files)) for _root, _dirs, files in os.walk(path)
+    )
+
+
+def _empty(spark: SparkSession, schema) -> DataFrame:
+    """A typed empty frame that Catalyst prunes from unions, joins and
+    aggregates: ``limit(0)`` makes it an empty LocalRelation, where
+    ``createDataFrame([])`` alone scans an RDD of empty partitions."""
+    return spark.createDataFrame([], schema).limit(0)
 
 
 def read_version(
@@ -98,7 +187,7 @@ def read_version(
     a typed empty frame when that version does not exist."""
     p = batch_dir(base, batch_id)
     if not os.path.isdir(p):
-        return spark.createDataFrame([], schema)
+        return _empty(spark, schema)
     return spark.read.schema(schema).parquet(p)
 
 
@@ -107,7 +196,7 @@ def read_back(spark: SparkSession, path: str, schema) -> DataFrame:
     recursively, ``batch_id=N`` dirs with ``batch_id`` as a partition
     column — or a typed empty frame when nothing was published."""
     if not has_data(path):
-        return spark.createDataFrame([], schema)
+        return _empty(spark, schema)
     reader = spark.read.schema(schema)
     if any(e.name.startswith("batch_id=") for e in os.scandir(path)):
         return reader.parquet(path)
@@ -135,14 +224,7 @@ def _write_marker(path: str) -> None:
 
 
 def _prune(versioned: Sequence[str], batch_id: int) -> None:
-    floor = batch_id - KEEP_VERSIONS
-    for d in versioned:
-        if not os.path.isdir(d):
-            continue
-        for e in os.scandir(d):
-            n = batch_number(e.name) if e.name.startswith("batch-") else None
-            if n is not None and n <= floor:
-                shutil.rmtree(e.path, ignore_errors=True)
+    prune(versioned, batch_id - KEEP_VERSIONS)
 
 
 class BatchCommit:
@@ -179,15 +261,7 @@ class BatchCommit:
 
     def last(self) -> int:
         """The newest committed batch id (-1 before the first)."""
-        names = (
-            os.listdir(self.marker_dir)
-            if os.path.isdir(self.marker_dir) else []
-        )
-        return max(
-            (int(n[len("batch-"):]) for n in names
-             if re.fullmatch(r"batch-\d+", n)),
-            default=-1,
-        )
+        return max(versions(self.marker_dir), default=-1)
 
     def meta(self, batch_id: int, default: dict) -> dict:
         """Batch `batch_id`'s JSON sidecar, or `default` when absent."""
@@ -259,3 +333,51 @@ class BatchCommit:
                 .awaitTermination()
             )
         return None if out is None else read_back(spark, out, out_schema)
+
+
+def reset_from(state_dir: str, batch_id: int) -> dict:
+    """Remove every ``batch-N``, ``batch-N.json``, ``batch-N-flush`` or
+    ``batch_id=N`` entry with N >= `batch_id` at any depth under
+    `state_dir` (:data:`BATCH_NAME`), plus the streaming checkpoint
+    ``ckpt/``, leaving batches < `batch_id` untouched. Returns
+    {kind: n_removed} for auditing: markers, offsets and state count the
+    top-level commits/, offsets/ and state/ entries, partitions the
+    top-level ``<dir>/batch_id=N`` dirs, nested every other removal
+    (``<dir>/batch-N`` outputs, nested commits)."""
+    # fail fast, before any deletion: pipelines with a versioned state
+    # chain (cdc_apply, temporal_join) fold batch K onto state/batch-K-1,
+    # and the version prune (KEEP_VERSIONS) drops old versions —
+    # resetting to a K whose basis was pruned would silently rebase the
+    # tail's merge on nothing
+    have = versions(os.path.join(state_dir, "state"))
+    if batch_id > 0 and have and batch_id - 1 not in have:
+        raise ValueError(
+            f"state/batch-{batch_id - 1} (the merge basis for batch "
+            f"{batch_id}) was pruned by the version tail; valid "
+            f"resets are 0 (full rebuild) or >= {have[0] + 1} (whose "
+            "predecessor version survives)"
+        )
+    removed = {"markers": 0, "offsets": 0, "state": 0,
+               "partitions": 0, "nested": 0, "checkpoint": 0}
+    kinds = {MARKER_DIR: "markers", "offsets": "offsets", "state": "state"}
+    for root, dirs, files in os.walk(state_dir):
+        rel = os.path.relpath(root, state_dir)
+        if rel == ".":
+            dirs[:] = [d for d in dirs if d != "ckpt"]
+        for name in dirs + files:
+            n = batch_number(name)
+            if n is None or n < batch_id:
+                continue
+            _remove(os.path.join(root, name))
+            if os.sep not in rel and rel in kinds:
+                removed[kinds[rel]] += 1
+            elif os.sep not in rel and name.startswith("batch_id="):
+                removed["partitions"] += 1
+            else:
+                removed["nested"] += 1
+        dirs[:] = [d for d in dirs if os.path.isdir(os.path.join(root, d))]
+    ckpt = os.path.join(state_dir, "ckpt")
+    if os.path.isdir(ckpt):
+        shutil.rmtree(ckpt)
+        removed["checkpoint"] = 1
+    return removed

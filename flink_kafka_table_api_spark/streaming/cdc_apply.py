@@ -56,6 +56,8 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     Publish,
     batch_dir,
     overwrite,
+    read_version,
+    versions,
 )
 from flink_kafka_table_api_spark.streaming.incremental_dedup import (
     IncrementalDedup,
@@ -67,6 +69,10 @@ from flink_kafka_table_api_spark.streaming.late_data import (
 
 OPS_COLUMNS = ["op_id", "op_ts", "key", "op", "value"]
 OPS_SCHEMA = "op_id long, op_ts timestamp, key long, op string, value double"
+STATE_SCHEMA = (
+    "key long, last_op_id long, last_op_ts timestamp, last_op string, "
+    "last_value double, n_ops long"
+)
 
 
 def changelog_winners(df: DataFrame, n_col=None) -> DataFrame:
@@ -93,14 +99,12 @@ def changelog_winners(df: DataFrame, n_col=None) -> DataFrame:
 
 
 def merge_state_version(
-    spark: SparkSession, prev_path: str, batch_winners: DataFrame
+    prev_state: DataFrame, batch_winners: DataFrame
 ) -> DataFrame:
-    """Fold a batch's per-key winners into the previous state version:
-    the SAME aggregate — the previous winner row (carrying its
-    accumulated n_ops) competes with the batch winner row; max_by picks
-    the newer, sum accumulates the counts."""
-    if not os.path.isdir(prev_path):
-        return batch_winners
+    """Fold a batch's per-key winners into the previous state version
+    (typed empty before the first): the SAME aggregate — the previous
+    winner row (carrying its accumulated n_ops) competes with the batch
+    winner row; max_by picks the newer, sum accumulates the counts."""
     as_ops = lambda df: df.select(  # noqa: E731
         "key",
         F.col("last_op_id").alias("op_id"),
@@ -109,7 +113,6 @@ def merge_state_version(
         F.col("last_value").alias("value"),
         F.col("n_ops").alias("__n"),
     )
-    prev_state = spark.read.parquet(prev_path)
     return changelog_winners(
         as_ops(prev_state).unionByName(as_ops(batch_winners)), "__n"
     )
@@ -169,28 +172,23 @@ def stream_cdc_apply(
             t.admitted.withColumn("__n", F.lit(1)), "__n"
         )
         merged = merge_state_version(
-            spark, batch_dir(state, batch_id - 1), batch_w
+            read_version(spark, state, batch_id - 1, STATE_SCHEMA), batch_w
         )
         return Publish(
             [overwrite(merged, batch_dir(state, batch_id))], meta=t.meta
         )
 
     commit.drain(spark, src, OPS_SCHEMA, process)
-    last = _last_state_version(state)
+    last = _last_state(spark, state)
     if last is None:
-        return spark.createDataFrame(
-            [], "key long, last_op_id long, last_op_ts timestamp, "
-            "last_op string, last_value double, n_ops long"
-        )
-    return spark.read.parquet(last).filter(F.col("last_op") != "D")
+        return spark.createDataFrame([], STATE_SCHEMA)
+    return last.filter(F.col("last_op") != "D")
 
 
-def _last_state_version(state: str) -> str | None:
-    versions = sorted(
-        (e for e in os.scandir(state) if e.name.startswith("batch-")),
-        key=lambda e: int(e.name[len("batch-"):]),  # batch--1 parses too
-    ) if os.path.isdir(state) else []
-    return versions[-1].path if versions else None
+def _last_state(spark: SparkSession, state: str) -> DataFrame | None:
+    """The newest state version (``batch--1`` is the seed), or None."""
+    vs = versions(state)
+    return read_version(spark, state, vs[-1], STATE_SCHEMA) if vs else None
 
 
 def load_cdc_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -200,10 +198,10 @@ def load_cdc_state(spark: SparkSession, state_dir: str) -> DataFrame:
     user-facing return filters tombstones and must NOT be used as a
     seed: without the tombstone, a late-but-admitted op older than a
     pre-snapshot delete would resurrect the deleted key."""
-    last = _last_state_version(os.path.join(state_dir, "state"))
+    last = _last_state(spark, os.path.join(state_dir, "state"))
     if last is None:
         raise FileNotFoundError(f"no state versions under {state_dir}")
-    return spark.read.parquet(last)
+    return last
 
 
 # re-export for callers that stage their own chunks

@@ -35,7 +35,10 @@ not — that is the entire contract, and the splice test pins it.
                               arrival rate, never O(stream age))
     out/batch_id=k/           rows whose emission horizon was reached
                               at batch k
-    offsets/batch-k.json      both sides' watermarks + max_seen
+    offsets/batch-k.json      both sides' watermarks + max_seen, and
+                              probe_kbs: the union of the probe files'
+                              key buckets through batch k (None once a
+                              batch's files did not resolve)
 
   per micro-batch k (foreachBatch, driven by the probe stream):
     1. SKIP/SCRUB (batch_commit);
@@ -85,6 +88,7 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     overwrite,
     partition_dir,
     read_back,
+    read_version,
 )
 from flink_kafka_table_api_spark.streaming.cdc_apply import (
     OPS_COLUMNS,
@@ -190,25 +194,19 @@ def stream_event_temporal_join(
         key="probe_", aggs=kb_set,
     )
 
-    def probe_kbs_through(batch_id: int) -> list[int] | None:
+    def probe_kbs_through(batch_id: int, rows: list | None) -> list | None:
         """Union of probe-file bucket sets over batches 0..batch_id — a
         superset of the buckets of every probe buffered or emitted at
-        batch_id (carried probes came from earlier batches' files).
-        None when any batch's files don't resolve."""
-        out: set[int] = set()
-        for i in range(batch_id + 1):
-            rows = probe_clock.stats.for_batch(commit.ckpt, i)
-            if rows is None:
-                return None
-            for r in rows:
-                out.update(r["kbs"])
-        return sorted(out)
-
-    def read_pending(batch_id: int) -> DataFrame | None:
-        p = batch_dir(pending, batch_id)
-        if not os.path.isdir(p):
+        batch_id (carried probes came from earlier batches' files):
+        batch_id-1's sidecar union plus this batch's stat `rows`. None
+        once any batch's files did not resolve."""
+        prev = commit.meta(batch_id - 1, {"probe_kbs": []}).get("probe_kbs")
+        if prev is None or rows is None:
             return None
-        return spark.read.schema(PENDING_SCHEMA).parquet(p)
+        return sorted({*prev, *(b for r in rows for b in r["kbs"])})
+
+    def read_pending(batch_id: int) -> DataFrame:
+        return read_version(spark, pending, batch_id, PENDING_SCHEMA)
 
     def process(probe_batch: DataFrame, batch_id: int) -> Publish:
         # 2. dim side: admit + fold into the SCD2 delta store
@@ -231,11 +229,9 @@ def stream_event_temporal_join(
         )
         # 3. probe side: admit + union with the carried buffer
         probe = probe_clock.tick(probe_batch, batch_id)
-        carried = read_pending(batch_id - 1)
-        probe_admitted = probe.admitted.select(*PROBE_COLUMNS)
-        buffered = (
-            probe_admitted if carried is None
-            else carried.unionByName(probe_admitted)
+        probe_kbs = probe_kbs_through(batch_id, probe.rows)
+        buffered = read_pending(batch_id - 1).unionByName(
+            probe.admitted.select(*PROBE_COLUMNS)
         ).persist()
         # 4. both watermarks advanced from rows SEEN (dropped rows
         # advance them); the emission horizon is their minimum
@@ -254,12 +250,12 @@ def stream_event_temporal_join(
         full_hist = read_history(spark, hist)
         if full_hist is not None:
             # prune the history scan to the emitting probes' buckets and
-            # keys. The bucket list comes from the staging-time sidecar
-            # (union over probe files 0..k — a superset of the buffered
+            # keys. The bucket list is the running union carried in the
+            # sidecar (probe files 0..k — a superset of the buffered
             # probes' buckets, output-identical because the exact-key
             # semi-join does the real restriction); the per-batch
             # distinct-collect runs only if the sidecar doesn't resolve.
-            kbs = probe_kbs_through(batch_id)
+            kbs = probe_kbs
             if kbs is None:
                 kbs = [
                     r[0] for r in emit.select(
@@ -278,7 +274,8 @@ def stream_event_temporal_join(
             overwrite(_enrich(full_hist, emit, lookup_bin_seconds),
                       partition_dir(out, batch_id)),
             overwrite(still, batch_dir(pending, batch_id)),
-        ], meta={**dim.meta, **probe.meta}, release=[buffered])
+        ], meta={**dim.meta, **probe.meta, "probe_kbs": probe_kbs},
+            release=[buffered])
 
     commit.drain(
         spark, probe_src, "probe_id long, probe_ts timestamp, key long",
@@ -290,7 +287,7 @@ def stream_event_temporal_join(
     # committed like any batch)
     def flush() -> Publish:
         left = read_pending(n_chunks - 1)
-        return Publish([] if left is None else [overwrite(
+        return Publish([overwrite(
             _enrich(read_history(spark, hist), left, lookup_bin_seconds),
             partition_dir(out, n_chunks),
         )])

@@ -91,6 +91,7 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
 from flink_kafka_table_api_spark.streaming.late_data import (
     stage_chunked_by,
     ts_shift,
+    utc_iso,
 )
 
 _PENDING_SCHEMA = (
@@ -191,13 +192,13 @@ def stream_idle_watermark(
         srows = stats.for_batch(ckpt, batch_id)
         if srows is None:  # in-batch aggregate fallback
             batch_max = {
-                r["source"]: r["mx"].isoformat()
+                r["source"]: utc_iso(r["mx"])
                 for r in batch.groupBy("source")
                 .agg(F.max("ts").alias("mx")).collect()
             }
         else:
             batch_max = {
-                k: v.isoformat()
+                k: utc_iso(v)
                 for k, v in stat_group_max(srows, "source", "mx").items()
             }
         max_seen = dict(prev["max_seen"])

@@ -53,6 +53,8 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     batch_dir,
     has_data,
     overwrite,
+    read_back,
+    versions,
 )
 
 
@@ -260,22 +262,15 @@ class IncrementalDedup:
         ], release=[cand, sh, new_bands, batch])
 
     def matches(self, spark) -> DataFrame:
-        if not os.path.isdir(self.matches_path):
+        if not versions(self.matches_path):
             raise FileNotFoundError("no batches processed yet")
-        if not has_data(self.matches_path):
-            # batches ran but every one was match-free: typed empty frame
-            return spark.createDataFrame(
-                [], "a long, b long, jaccard double, batch_id int"
-            )
         # explicit schema: the published match rows' exact types (pinned
         # by process_batch's select + lit), skipping per-call footer
-        # schema inference over every published batch file
-        return (
-            spark.read
-            .schema("a long, b long, jaccard double, batch_id int")
-            .option("recursiveFileLookup", "true")
-            .parquet(self.matches_path)
-            .select("a", "b", "jaccard", "batch_id")
+        # schema inference over every published batch file; typed empty
+        # when every batch was match-free
+        return read_back(
+            spark, self.matches_path,
+            "a long, b long, jaccard double, batch_id int",
         )
 
     def compact_state(
@@ -293,11 +288,10 @@ class IncrementalDedup:
         from flink_kafka_table_api_spark.sources.files import compact
 
         for p in (self.bands_path, self.docs_path, self.matches_path):
-            if not os.path.isdir(p):
-                continue
-            for e in os.scandir(p):
-                if e.is_dir() and e.name.startswith("batch-"):
-                    compact(spark, e.path, target_file_bytes=target_file_bytes)
+            for n in versions(p):
+                compact(
+                    spark, batch_dir(p, n), target_file_bytes=target_file_bytes
+                )
 
 
 def streaming_neardup(

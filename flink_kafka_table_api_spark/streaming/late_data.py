@@ -48,7 +48,7 @@ from __future__ import annotations
 import os
 import shutil
 from concurrent.futures import ThreadPoolExecutor
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -85,6 +85,14 @@ def interval_micros(delay: str) -> int:
             raise ValueError(f"unsupported interval unit in: {delay!r}")
         us += int(toks[i]) * _UNIT_US[unit]
     return us
+
+
+def utc_iso(ts: datetime) -> str:
+    """The ISO string of a TIMESTAMP value collected from Spark, as UTC
+    wall-clock time. PySpark hands such a value to Python as a naive
+    datetime in the process's LOCAL timezone, while the sidecars and the
+    watermark literals are in the session timezone, which is pinned UTC."""
+    return ts.astimezone(timezone.utc).replace(tzinfo=None).isoformat()
 
 
 def ts_shift(ts: str, delay: str, *, sign: int = -1) -> str:
@@ -158,7 +166,7 @@ class EventClock:
         """The sidecar fields after seeing maximum `mx` on top of the
         fields `prev`."""
         if isinstance(mx, datetime):
-            mx = mx.isoformat()
+            mx = utc_iso(mx)
         seen = [m for m in (prev.get(self.seen_key), mx) if m is not None]
         max_seen = max(seen) if seen else None
         wm = (

@@ -64,6 +64,8 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     Publish,
     batch_dir,
     overwrite,
+    overwrite_arrow,
+    read_arrow,
     read_version,
 )
 from flink_kafka_table_api_spark.streaming.late_data import stage_chunked_by
@@ -118,20 +120,10 @@ def stream_quantile_monitor(
     )
 
     def _hist_cells_after(batch_id: int) -> dict[int, int]:
-        """Driver-side histogram state read (n_bins longs — pyarrow,
-        no Spark job); reads Spark-written state from older runs too."""
-        import pyarrow.parquet as pq
-
-        p = batch_dir(hist_dir, batch_id)
+        """Driver-side histogram state read (n_bins longs, no Spark
+        job); reads Spark-written state from older runs too."""
         cells: dict[int, int] = {}
-        if not os.path.isdir(p):
-            return cells
-        for e in sorted(os.scandir(p), key=lambda e: e.name):
-            if not e.name.endswith(".parquet") or e.name.startswith(
-                ("_", ".")
-            ):
-                continue
-            t = pq.read_table(e.path, columns=["bin", "n"])
+        for t in read_arrow(batch_dir(hist_dir, batch_id), ["bin", "n"]):
             for b, n in zip(t["bin"].to_pylist(), t["n"].to_pylist()):
                 cells[b] = cells.get(b, 0) + n
         return cells
@@ -144,18 +136,6 @@ def stream_quantile_monitor(
             ),
             F.lit(n_bins - 1),
         ).cast("int")
-
-    def _arrow_write(base: str, batch_id: int, table) -> Callable:
-        """Publish thunk for a tiny driver-side table — written via Arrow
-        instead of spinning a Spark job for a few rows each batch."""
-        import pyarrow.parquet as pq
-
-        def write() -> None:
-            d = batch_dir(base, batch_id)
-            os.makedirs(d, exist_ok=True)
-            pq.write_table(table, os.path.join(d, "part-0.parquet"))
-
-        return write
 
     def _emit(
         batch_id: int, meta: dict, cells: list, hist_write: Callable,
@@ -192,7 +172,7 @@ def stream_quantile_monitor(
             "bin_width": pa.array([r[5] for r in rows], pa.float64()),
         })
         return Publish(
-            [_arrow_write(out_dir, batch_id, tbl), hist_write],
+            [overwrite_arrow(tbl, batch_dir(out_dir, batch_id)), hist_write],
             meta=meta, release=release,
         )
 
@@ -227,11 +207,12 @@ def stream_quantile_monitor(
                 cells = sorted(merged_cells.items())
                 # histogram state is n_bins longs: published driver-side
                 # too (typed exactly as the Spark write: bin int32, n int64)
-                return _emit(batch_id, meta, cells, _arrow_write(
-                    hist_dir, batch_id, pa.table({
+                return _emit(batch_id, meta, cells, overwrite_arrow(
+                    pa.table({
                         "bin": pa.array([b for b, _ in cells], pa.int32()),
                         "n": pa.array([n for _, n in cells], pa.int64()),
                     }),
+                    batch_dir(hist_dir, batch_id),
                 ))
         # fallback: the original in-batch Spark path (unresolvable files)
         if meta is None:

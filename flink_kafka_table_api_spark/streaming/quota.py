@@ -49,6 +49,7 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     batch_dir,
     overwrite,
     read_version,
+    versions,
 )
 from flink_kafka_table_api_spark.streaming.late_data import stage_chunked_by
 
@@ -129,11 +130,7 @@ def load_consumed(spark: SparkSession, state_dir: str) -> DataFrame:
     """The per-source consumed-token counters after the last committed
     batch — the operational read an ingest dashboard does."""
     consumed_dir = os.path.join(state_dir, "consumed")
-    versions = sorted(
-        (e for e in os.scandir(consumed_dir)
-         if e.name.startswith("batch-")),
-        key=lambda e: int(e.name[len("batch-"):]),
-    ) if os.path.isdir(consumed_dir) else []
-    if not versions:
+    vs = versions(consumed_dir)
+    if not vs:
         raise FileNotFoundError(f"no consumed versions under {state_dir}")
-    return spark.read.parquet(versions[-1].path)
+    return read_version(spark, consumed_dir, vs[-1], _CONSUMED_SCHEMA)

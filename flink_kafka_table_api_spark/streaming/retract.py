@@ -83,12 +83,7 @@ def _batch_sums(batch: DataFrame) -> DataFrame:
     )
 
 
-def _fold(spark: SparkSession, prev_path: str, sums: DataFrame) -> DataFrame:
-    if not os.path.isdir(prev_path):
-        return sums.select(
-            "key", F.col("total").cast("decimal(25,6)").alias("total")
-        )
-    prev = spark.read.schema(STATE_SCHEMA).parquet(prev_path)
+def _fold(prev: DataFrame, sums: DataFrame) -> DataFrame:
     return (
         prev.unionByName(sums)
         .groupBy("key")
@@ -190,7 +185,8 @@ def stream_topn_retract(
         # rows (a parquet round-trip is value-preserving), so all three
         # publishes are independent DAGs to DISTINCT paths.
         merged = _fold(
-            spark, batch_dir(state, batch_id - 1), _batch_sums(batch)
+            read_version(spark, state, batch_id - 1, STATE_SCHEMA),
+            _batch_sums(batch),
         ).persist()
         new_top = _topn(merged, n).persist()
         prev_top = read_version(spark, top, batch_id - 1, TOP_SCHEMA)

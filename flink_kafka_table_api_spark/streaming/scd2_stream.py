@@ -20,8 +20,8 @@ last-writer-wins reads:
   state/hist/batch_id=K/__kb=N/...   full REBUILT history of exactly
                               the keys touched in batch K (and nothing
                               else), hash-bucketed by key into
-                              n_buckets dirs (batch_id=N dirs are the
-                              shared reprocess.py convention)
+                              n_buckets dirs (batch_id=N dirs are
+                              batch_commit's naming rule)
 
   per micro-batch k (foreachBatch):
     1. ADMIT:   ops with op_ts > W_{k-1}; too-late ops are dropped
@@ -65,7 +65,6 @@ crash-safe without a lock.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -73,6 +72,11 @@ from pyspark.sql import functions as F
 from flink_kafka_table_api_spark.streaming.batch_commit import (
     BatchCommit,
     Publish,
+    partition_dir,
+    prune,
+    read_back,
+    reset_from,
+    versions,
 )
 from flink_kafka_table_api_spark.streaming.cdc_apply import (
     OPS_COLUMNS,
@@ -122,17 +126,11 @@ def _latest_per_key(hist: DataFrame) -> DataFrame:
 def read_history(spark: SparkSession, hist: str) -> DataFrame | None:
     """Read the raw delta chain (all surviving batch_id= dirs) with an
     explicit schema: no per-batch inference job, and an all-empty delta
-    dir (admitted-nothing batch) reads as zero rows."""
-    versions = [
-        e.name for e in os.scandir(hist) if e.name.startswith("batch_id=")
-    ] if os.path.isdir(hist) else []
-    if not versions:
+    dir (admitted-nothing batch) reads as zero rows. None before the
+    first delta."""
+    if not versions(hist):
         return None
-    return (
-        spark.read.schema(HIST_SCHEMA + ", batch_id int")
-        .option("basePath", hist)
-        .parquet(*(os.path.join(hist, v) for v in versions))
-    )
+    return read_back(spark, hist, HIST_SCHEMA + ", batch_id int")
 
 
 def apply_history_delta(
@@ -190,7 +188,7 @@ def apply_history_delta(
         else:
             out = rebuilt
     out.write.partitionBy("__kb").mode("overwrite").parquet(
-        os.path.join(hist, f"batch_id={batch_id}")
+        partition_dir(hist, batch_id)
     )
 
 
@@ -227,12 +225,8 @@ def stream_scd2(
         # a compaction batch's delta is a full snapshot; older deltas are
         # shadowed duplicates — deleting them AFTER the marker is
         # idempotent cleanup, crash-safe by construction
-        if not compacts(batch_id):
-            return
-        for e in os.scandir(hist):
-            if e.name.startswith("batch_id=") and \
-                    int(e.name.split("=")[1]) < batch_id:
-                shutil.rmtree(e.path, ignore_errors=True)
+        if compacts(batch_id):
+            prune([hist], batch_id - 1)
 
     commit = BatchCommit(
         state_dir, partitioned=(hist,),
@@ -359,7 +353,7 @@ def scd2_lookup(
 
 
 def reset_scd2_from(state_dir: str, batch_id: int) -> dict:
-    """Selective reprocessing (streaming/reprocess.py) with the one
+    """Selective reprocessing (batch_commit.reset_from) with the one
     extra invariant compaction introduces: a compaction snapshot is the
     ONLY surviving basis for the batches it shadowed-then-deleted, so a
     reset targeting a batch at or before the oldest surviving delta
@@ -368,13 +362,7 @@ def reset_scd2_from(state_dir: str, batch_id: int) -> dict:
     batch_id == 0 (full recompute: every marker goes too) or
     batch_id > the oldest surviving delta index; anything between is
     rejected loudly."""
-    from flink_kafka_table_api_spark.streaming.reprocess import reset_from
-
-    hist = os.path.join(state_dir, "hist")
-    surviving = sorted(
-        int(e.name.split("=")[1]) for e in os.scandir(hist)
-        if e.name.startswith("batch_id=")
-    ) if os.path.isdir(hist) else []
+    surviving = versions(os.path.join(state_dir, "hist"))
     floor = surviving[0] if surviving else 0
     if 0 < batch_id <= floor:
         raise ValueError(

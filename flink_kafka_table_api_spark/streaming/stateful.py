@@ -39,22 +39,9 @@ SESSIONS_OUTPUT = (
 )
 
 
-def transform_with_state_available() -> bool:
-    """transformWithState's Python side speaks protobuf to the state server;
-    environments without the protobuf wheel must use the
-    applyInPandasWithState twin (:func:`session_windows_timeout`)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def _ts_us(series) -> list[int]:
     """Epoch-micros from a pandas datetime series, robust to the Arrow
-    transfer unit (ns under applyInPandasWithState, us under
-    transformWithState). Micros preserve Spark TimestampType exactly."""
+    transfer unit. Micros preserve Spark TimestampType exactly."""
     return series.astype("datetime64[us]").astype("int64").tolist()
 
 
@@ -100,103 +87,6 @@ def _fold_sessions(state, ts_us, vals, gap_us):
                  state[3] + s[3])
         sessions.append(s)
     return (sessions[:-1], sessions[-1])
-
-
-def _lazy_session_processor(gap_seconds: int):
-    """Build the StatefulProcessor class lazily: the transformWithState API
-    needs the protobuf wheel at worker startup (gate via
-    :func:`transform_with_state_available`)."""
-    from pyspark.sql.streaming import StatefulProcessor
-
-    gap_us = gap_seconds * 1_000_000
-
-    class EventTimeSessionProcessor(StatefulProcessor):
-        """Event-time sessionization with timers — the Flink
-        KeyedProcessFunction+ValueState+Timer triple on Spark's
-        transformWithState runtime.
-
-        Per key, state holds the open session (start, last, n, total). An
-        incoming event either extends the session (re-arming the gap timer)
-        or — if it lies beyond the gap — closes it inline and starts a new
-        one. When the event-time watermark passes last+gap the registered
-        timer fires, emitting the closed session and clearing state, so
-        sessions end even for keys that go silent (the case a pure
-        applyInPandasWithState fold cannot express without timeouts).
-        """
-
-        def init(self, handle) -> None:
-            self._handle = handle
-            self._sess = handle.getValueState(
-                "sess", "start long, last long, n long, total double"
-            )
-
-        def _emit(self, key, sessions):
-            # ONE DataFrame per key per batch — per-session 1-row frames
-            # dominate the operator's cost on keys with many sessions
-            import pandas as pd
-
-            return pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(sessions),
-                    "session_start": pd.to_datetime(
-                        [s[0] for s in sessions], unit="us"),
-                    "session_end": pd.to_datetime(
-                        [s[1] + gap_us for s in sessions], unit="us"),
-                    "n_events": [s[2] for s in sessions],
-                    "total_value": [s[3] for s in sessions],
-                }
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            state = tuple(self._sess.get()) if self._sess.exists() else None
-            ts_all, v_all = [], []
-            for pdf in rows:
-                ts_all.extend(_ts_us(pdf["ts"]))
-                v_all.extend(pdf["value"].tolist())
-            completed, state = _fold_sessions(state, ts_all, v_all, gap_us)
-            if completed:
-                yield self._emit(key, completed)
-            if state is not None:
-                self._sess.update(state)
-                self._handle.registerTimer(_timeout_ms(state[1] + gap_us))
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            expiry = expired_timer_info.getExpiryTimeInMs()
-            if self._sess.exists():
-                start, last, n, total = self._sess.get()
-                # stale timer from an extended session: the real timer is
-                # still armed at the (later) current deadline
-                if expiry >= _timeout_ms(last + gap_us):
-                    self._sess.clear()
-                    yield self._emit(key, [(start, last, n, total)])
-
-    return EventTimeSessionProcessor()
-
-
-def session_windows_with_timers(
-    stream: DataFrame,
-    *,
-    gap_seconds: int = 60,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    watermark_delay: str = "1 second",
-) -> DataFrame:
-    """Custom event-time session windows via transformWithStateInPandas
-    (Spark 4.x): emits one row per CLOSED session (append semantics). Unlike
-    F.session_window aggregation, the operator owns its state machine, so
-    arbitrary per-session logic (pattern flags, early triggers, side
-    metrics) can ride along. Requires the RocksDB state store provider."""
-    return (
-        stream.select(key_col, ts_col, "value")
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            _lazy_session_processor(gap_seconds),
-            outputStructType=SESSIONS_OUTPUT,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
 
 
 SESSION_STATE = "start long, last long, n long, total double"
@@ -248,10 +138,9 @@ def session_windows_timeout(
     watermark_delay: str = "1 second",
 ) -> DataFrame:
     """Event-time session windows with timeout-driven close on the
-    applyInPandasWithState runtime — identical semantics to
-    :func:`session_windows_with_timers` (inline close on in-stream gap,
-    watermark-timeout close for silent keys, open sessions withheld), built
-    on GroupStateTimeout.EventTimeTimeout so it runs wherever Spark 3.4+
+    applyInPandasWithState runtime: inline close on an in-stream gap,
+    watermark-timeout close for silent keys, open sessions withheld. Built
+    on GroupStateTimeout.EventTimeTimeout, so it runs wherever Spark 3.4+
     runs. This mirrors Flink's KeyedProcessFunction-with-timers pattern the
     reference's runtime offers but its pipeline never uses."""
     gap_us = gap_seconds * 1_000_000

@@ -72,6 +72,8 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     batch_dir,
     overwrite,
     partition_dir,
+    read_back,
+    read_version,
 )
 from flink_kafka_table_api_spark.streaming.late_data import (
     EventClock,
@@ -165,29 +167,20 @@ def stream_match_recognize(
 
         return pd.Series(map(one, zip(seq, frozen_len, offset)))
 
-    def read_rows() -> DataFrame | None:
-        parts = [
-            e.name for e in os.scandir(rows_store)
-            if e.name.startswith("batch_id=")
-        ] if os.path.isdir(rows_store) else []
-        if not parts:
-            return None
-        return spark.read.schema(rows_schema).parquet(
-            *(os.path.join(rows_store, p) for p in parts)
+    def read_rows() -> DataFrame:
+        return read_back(spark, rows_store, rows_schema).select(
+            *rows_schema.fieldNames()
         )
 
-    def read_consumed(batch_id: int) -> DataFrame | None:
-        p = batch_dir(consumed, batch_id)
-        if not os.path.isdir(p):
-            return None
-        return spark.read.schema(
-            f"{key_col} long, __off int"
-        ).parquet(p)
+    def read_consumed(batch_id: int) -> DataFrame:
+        return read_version(
+            spark, consumed, batch_id, f"{key_col} long, __off int"
+        )
 
     def emit(
         keys: DataFrame | None,
         horizon: str | None,
-        prev_consumed: DataFrame | None,
+        prev_consumed: DataFrame,
         batch_id: int,
         flush: bool,
     ) -> Publish:
@@ -196,8 +189,6 @@ def stream_match_recognize(
         publish final matches to out/batch_id=`batch_id` and (unless
         `flush`) the new offsets to consumed/batch-`batch_id`."""
         stored = read_rows()
-        if stored is None:
-            stored = spark.createDataFrame([], rows_schema)
         scoped = (
             stored if keys is None
             else stored.join(keys, key_col, "left_semi")
@@ -226,11 +217,7 @@ def stream_match_recognize(
             F.sum(F.col("__frozen").cast("int")).cast("int")
             .alias("__flen"),
         )
-        if prev_consumed is not None:
-            seqs = seqs.join(prev_consumed, key_col, "left")
-            seqs = seqs.fillna({"__off": 0})
-        else:
-            seqs = seqs.withColumn("__off", F.lit(0))
+        seqs = seqs.join(prev_consumed, key_col, "left").fillna({"__off": 0})
         if flush:
             seqs = seqs.withColumn("__flen", F.lit(1 << 30))
         spans = seqs.select(
@@ -270,13 +257,8 @@ def stream_match_recognize(
                     F.col("__mk").alias(key_col), "__noff",
                 )
             )
-            base = (
-                prev_consumed if prev_consumed is not None
-                else spark.createDataFrame(
-                    [], f"{key_col} long, __off int")
-            )
             new_cons = (
-                base.join(adv, key_col, "full_outer")
+                prev_consumed.join(adv, key_col, "full_outer")
                 .select(
                     key_col,
                     F.greatest(
@@ -298,17 +280,15 @@ def stream_match_recognize(
         new_wm = t.watermark
         # keys whose frozen prefix grew this batch: stored rows with
         # ts in (W_{k-1}, W_k]
-        stored = read_rows()
-        affected = None
-        if stored is not None and new_wm is not None:
-            grown = stored.filter(F.col(ts_col) <= new_wm)
+        affected = spark.createDataFrame([], f"{key_col} long")
+        if new_wm is not None:
+            grown = read_rows().filter(F.col(ts_col) <= new_wm)
             if t.prev is not None:
                 grown = grown.filter(F.col(ts_col) > t.prev)
             affected = grown.select(key_col).distinct()
         return emit(
-            affected if affected is not None
-            else spark.createDataFrame([], f"{key_col} long"),
-            new_wm, read_consumed(batch_id - 1), batch_id, flush=False,
+            affected, new_wm, read_consumed(batch_id - 1), batch_id,
+            flush=False,
         )._replace(meta=t.meta)
 
     commit.drain(spark, src, rows_schema, process)
@@ -319,19 +299,11 @@ def stream_match_recognize(
         suffix="-flush",
     )
 
-    parts = [
-        e.name for e in os.scandir(out)
-        if e.name.startswith("batch_id=")
-    ] if os.path.isdir(out) else []
-    reads = [
-        spark.read.parquet(os.path.join(out, p)) for p in sorted(parts)
-    ]
-    result = reads[0]
-    for r in reads[1:]:
-        result = result.unionByName(r)
-    return result.withColumn(
-        "batch_id", F.col("batch_id").cast("long")
-    )
+    # the published match rows' types, derived without a job
+    out_schema = spark.createDataFrame([], rows_schema).groupBy(key_col).agg(
+        *[c.alias(n) for n, c in measures.items()]
+    ).schema.add("batch_id", "long")
+    return read_back(spark, out, out_schema)
 
 
 __all__ = ["stream_match_recognize"]

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from flink_kafka_table_api_spark.streaming.cdc_apply import (
     OPS_COLUMNS,
+    STATE_SCHEMA,
     changelog_winners,
     merge_state_version,
 )
@@ -55,6 +56,7 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     batch_dir,
     has_data,
     overwrite,
+    read_version,
 )
 from flink_kafka_table_api_spark.streaming.late_data import (
     EventClock,
@@ -189,8 +191,7 @@ def stream_temporal_join(
         if semantics == "processing":
             # the CDC fold: one snapshot version per drop
             merged = merge_state_version(
-                spark,
-                batch_dir(state, batch_id - 1),
+                read_version(spark, state, batch_id - 1, STATE_SCHEMA),
                 changelog_winners(
                     admitted.withColumn("__n", F.lit(1)), "__n"
                 ),

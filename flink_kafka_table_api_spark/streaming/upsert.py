@@ -21,8 +21,6 @@ table format — the foreachBatch hook is identical either way.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
@@ -90,7 +88,10 @@ def upsert_to_parquet(
     commit = BatchCommit(checkpoint_dir, marker_dir=table_path + "__commits")
 
     def swap(batch: DataFrame) -> None:
-        if os.path.exists(table_path):
+        jvm = spark._jvm
+        dst = jvm.org.apache.hadoop.fs.Path(table_path)
+        fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
+        if fs.exists(dst):
             current = spark.read.parquet(table_path)
             keys = batch.select(*key_cols)
             kept = current.join(keys, list(key_cols), "left_anti")
@@ -102,9 +103,6 @@ def upsert_to_parquet(
         # swap: move the old table aside, then the new one in. Hadoop FS
         # rename reports failure via its boolean — fail the batch on false
         # (no marker is written, so recovery replays it).
-        jvm = spark._jvm
-        dst = jvm.org.apache.hadoop.fs.Path(table_path)
-        fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
         old = jvm.org.apache.hadoop.fs.Path(table_path + "__old")
         fs.delete(old, True)
         if fs.exists(dst) and not fs.rename(dst, old):

@@ -76,7 +76,6 @@ relationally.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -93,10 +92,12 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     batch_dir,
     overwrite,
     read_version,
+    versions,
 )
 from flink_kafka_table_api_spark.streaming.late_data import (
     stage_chunked_by,
     ts_shift,
+    utc_iso,
 )
 
 _ROWS_SCHEMA = "source string, ts timestamp, value double"
@@ -174,7 +175,7 @@ def stream_watermark_alignment(
             admitted, deferred = avail, avail.filter(F.lit(False))
         # 3. TAKE — update per-source admitted maxima
         batch_max = {
-            r["source"]: r["mx"].isoformat()
+            r["source"]: utc_iso(r["mx"])
             for r in admitted.groupBy("source")
             .agg(F.max("ts").alias("mx")).collect()
         }
@@ -254,13 +255,7 @@ def load_deferred_counts(spark: SparkSession, state_dir: str) -> list[int]:
     """The throttle trace: rows deferred at each committed batch — the
     operational metric an alignment dashboard plots."""
     wm_dir = os.path.join(state_dir, "wm")
-    out = []
-    for k in sorted(
-        int(e.name[len("batch-"):-len(".json")])
-        for e in os.scandir(wm_dir) if e.name.endswith(".json")
-    ):
-        out.append(
-            json.load(open(os.path.join(wm_dir, f"batch-{k}.json")))
-            .get("n_deferred", 0)
-        )
-    return out
+    commit = BatchCommit(state_dir, meta_dir=wm_dir)
+    return [
+        commit.meta(k, {}).get("n_deferred", 0) for k in versions(wm_dir)
+    ]

@@ -8,6 +8,9 @@
   after the marker but before the prune), the run fails, and a rerun on
   the same state_dir resumes from the surviving checkpoint. Output AND
   the batch-scoped on-disk layout must equal an uninterrupted run's.
+- A source scan (no Spark) keeps the state layout in this module: no
+  other module under `streaming/` lists, tests, opens, creates or deletes
+  a path, apart from the input staging and the checkpoint-log read.
 - `reset_from` removes nested commit state (`dedup/indexed/batch-N`
   and its siblings), so a reprocess recomputes instead of reusing it.
 """
@@ -33,7 +36,7 @@ from flink_kafka_table_api_spark.streaming.profile_monitor import (
     stream_profile,
 )
 from flink_kafka_table_api_spark.streaming.quota import stream_source_quota
-from flink_kafka_table_api_spark.streaming.reprocess import reset_from
+from flink_kafka_table_api_spark.streaming.batch_commit import reset_from
 
 SF = "/root/testdata/sf0.001"
 STREAMING = pathlib.Path(batch_commit.__file__).parent
@@ -115,6 +118,51 @@ def test_only_the_clock_and_the_diff_own_their_rules():
         p.name: found
         for p in sorted(STREAMING.glob("*.py"))
         if (found := _clock_or_diff_copies(p.name, p.read_text()))
+    }
+    assert offenders == {}
+
+
+# batch_commit owns every state path; the two other modules that touch
+# files hold no state: late_data stages the input drops, and chunk_stats
+# lists those staged files and reads the checkpoint's file-source log.
+STORAGE_OWNERS = {"batch_commit.py", "late_data.py", "chunk_stats.py"}
+STORAGE_CALLS = {
+    "lists a directory": r"\bos\.(?:scandir|listdir|walk)\(",
+    "tests a path": r"\bos\.path\.(?:isdir|exists)\(",
+    "creates or deletes a path": r"\bos\.(?:makedirs|remove)\(|\bshutil\.",
+    "opens a file": r"(?<![\w.])open\(",
+    "uses pyarrow.parquet": r"\bpyarrow\.parquet\b",
+}
+
+
+def _storage_copies(name: str, src: str) -> list[str]:
+    """What a module does to a path that only batch_commit.py may do."""
+    if name in STORAGE_OWNERS:
+        return []
+    return [what for what, rx in STORAGE_CALLS.items() if re.search(rx, src)]
+
+
+def test_storage_scan_catches_a_hand_written_copy():
+    copy = '''
+    versions = sorted(
+        (e for e in os.scandir(state) if e.name.startswith("batch-")),
+        key=lambda e: int(e.name[len("batch-"):]),
+    ) if os.path.isdir(state) else []
+    shutil.rmtree(versions[0].path, ignore_errors=True)
+    n = json.load(open(os.path.join(wm_dir, "batch-0.json")))
+    import pyarrow.parquet as pq
+    '''
+    assert len(_storage_copies("cdc_apply.py", copy)) == 5
+    assert _storage_copies("batch_commit.py", copy) == []
+    hadoop = "if fs.exists(dst):\n    f = fs.open(dst)"
+    assert _storage_copies("upsert.py", hadoop) == []
+
+
+def test_only_batch_commit_touches_a_state_path():
+    offenders = {
+        p.name: found
+        for p in sorted(STREAMING.glob("*.py"))
+        if (found := _storage_copies(p.name, p.read_text()))
     }
     assert offenders == {}
 

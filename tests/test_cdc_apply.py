@@ -228,7 +228,7 @@ def test_reset_refuses_a_pruned_merge_basis(spark, tmp_path, monkeypatch):
     a batch whose predecessor version was pruned must fail loudly (the
     silent alternative rebases the tail's merge on nothing), while a
     full reset_from(0) stays valid and reproduces the original."""
-    from flink_kafka_table_api_spark.streaming.reprocess import reset_from
+    from flink_kafka_table_api_spark.streaming.batch_commit import reset_from
 
     state = str(tmp_path / "pruned")
     monkeypatch.setattr(batch_commit, "KEEP_VERSIONS", 1)

@@ -185,3 +185,25 @@ def test_binned_emission_join_preserves_parity(spark, tmp_path):
         lookup_bin_seconds=3600,
     )
     assert _got(out) == EXPECTED
+
+
+def test_checkpoint_log_is_read_once_per_batch(spark, tmp_path,
+                                               monkeypatch):
+    """The probe bucket union rides the sidecar (`probe_kbs`), so batch
+    k reads the file-source log of batch k alone, not of 0..k."""
+    from flink_kafka_table_api_spark.streaming import chunk_stats
+
+    real, reads = chunk_stats._source_log, []
+
+    def counted(ckpt_dir, batch_id):
+        reads.append(batch_id)
+        return real(ckpt_dir, batch_id)
+
+    monkeypatch.setattr(chunk_stats, "_source_log", counted)
+    ops, probes = _event_temporal_join_inputs(spark, SF)
+    out = stream_event_temporal_join(
+        spark, ops, probes, str(tmp_path / "e7"),
+        n_chunks=3, dim_delay="2 days", probe_delay="1 day",
+    )
+    assert out.count() > 0
+    assert sorted(reads) == [0, 1, 2]

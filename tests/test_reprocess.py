@@ -1,4 +1,4 @@
-"""Selective reprocessing (`streaming/reprocess.py`, round 8): reset a
+"""Selective reprocessing (`batch_commit.reset_from`, round 8): reset a
 marker-protocol pipeline to drop K and re-run — batches < K no-op via
 their markers (their published files are untouched, byte-for-byte),
 batches >= K recompute against the surviving prefix state, and the final
@@ -16,7 +16,7 @@ from flink_kafka_table_api_spark.queries import (
     _day_tercile,
     _events_min_date,
 )
-from flink_kafka_table_api_spark.streaming.reprocess import reset_from
+from flink_kafka_table_api_spark.streaming.batch_commit import reset_from
 from flink_kafka_table_api_spark.streaming.temporal_join import (
     stream_temporal_join,
 )

@@ -80,38 +80,6 @@ def test_session_windows_timeout(spark, tmp_path):
     _assert_sessions(got)
 
 
-def test_session_windows_with_timers(spark, tmp_path):
-    """Same semantics through the Spark 4.x transformWithStateInPandas
-    runtime (real registered timers + RocksDB provider). Skipped where the
-    protobuf wheel isn't available (its Python<->state-server protocol)."""
-    import pytest
-
-    from flink_kafka_table_api_spark.streaming.stateful import (
-        session_windows_with_timers,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available():
-        pytest.skip("google.protobuf not installed; transformWithState needs it")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        got = _run_session_op(
-            spark, tmp_path,
-            lambda s: session_windows_with_timers(s, gap_seconds=60),
-            "tws_sessions",
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    _assert_sessions(got)
-
-
 def test_state_survives_across_batches(spark, tmp_path):
     src = str(tmp_path / "src")
     _write(spark, [(1, 10.0), (1, 5.0), (2, 1.0)], src)

@@ -73,3 +73,32 @@ def test_calendar_units_rejected():
         interval_micros("2 years")
     with pytest.raises(ValueError):
         interval_micros("days")
+
+
+def test_clock_fold_is_utc_in_any_local_timezone(monkeypatch):
+    """PySpark collects a TIMESTAMP as a naive datetime in the Python
+    process's local timezone; the clock must still store the UTC wall
+    clock that the session (pinned UTC) compares against. `fold` is pure
+    driver arithmetic, so the clock is built without its staging job."""
+    import time
+
+    from pyspark.sql.types import TimestampType
+
+    from flink_kafka_table_api_spark.streaming.late_data import EventClock
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        mx = TimestampType().fromInternal(1704755834743969)
+        assert mx.isoformat() == "2024-01-08T18:17:14.743969"
+        clock = EventClock.__new__(EventClock)
+        clock.wm_key, clock.seen_key, clock.delay = (
+            "watermark", "max_seen", "2 days",
+        )
+        assert clock.fold({}, mx) == {
+            "watermark": "2024-01-06 23:17:14.743969",
+            "max_seen": "2024-01-08T23:17:14.743969",
+        }
+    finally:
+        monkeypatch.undo()
+        time.tzset()
