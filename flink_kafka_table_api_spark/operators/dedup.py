@@ -5,9 +5,9 @@ distributes them (no driver-side loops, no Python in the hot path):
 
 - exact:        hash-groupBy on the dedup key (one shuffle on the key)
 - MinHash+LSH:  shingle -> k-perm minhash signature -> band buckets ->
-                bucket self-join for candidates -> exact-Jaccard verify.
-                At 100 TB the candidate join shuffles only (band, hash)
-                buckets, never the O(n^2) pair space.
+                one id list per bucket for candidates -> exact-Jaccard
+                verify. At 100 TB candidate generation shuffles only
+                (band, hash) buckets, never the O(n^2) pair space.
 - SimHash:      per-token hash bit-voting -> 32/64-bit signature; near-dups
                 are signatures within small Hamming distance.
 - n-gram Jaccard: blocked self-join + exact Jaccard on distinct token sets
@@ -160,46 +160,33 @@ def lsh_candidate_pairs(
     *,
     max_bucket_size: int | None = 256,
 ) -> DataFrame:
-    """Distinct candidate pairs (a < b) sharing any band bucket. The join key
-    (band_id, band_hash) keeps the shuffle proportional to bucket sizes, not
-    to the corpus squared.
+    """Distinct candidate pairs (a < b) sharing any band bucket, built from
+    one aggregate per bucket: each (band_id, band_hash) bucket collects its
+    ids, and the list is exploded against itself. Work and shuffle are
+    proportional to bucket sizes, never to the corpus squared.
 
-    ``max_bucket_size`` is the boilerplate-skew defusal (the winnow_matches
-    max_hash_df recipe, measured necessary by a zipf-skew experiment: a
-    hot template paragraph shared by ~7% of a 64x corpus made
-    dedup_clusters degrade 3.08x): buckets larger than the cap are SKIPPED
-    before the self-join, bounding per-bucket work at cap^2. The docs a
-    mega-bucket holds collide there because of SHARED BOILERPLATE, whose
-    pair Jaccard sits far below any near-dup threshold — and genuinely
-    near-identical docs also collide in their other bands, so the recall
-    cost is ~zero while the blowup is quadratic. The oracle replays the
-    identical cap (_lsh_pairs_oracle), so the capped form stays
-    gate-registrable; at every shipped sf the largest bucket is far below
-    256, making the cap a pure no-op at certification scale."""
+    ``max_bucket_size`` is the boilerplate-skew cap: a bucket holding more
+    than the cap rows contributes no pairs; a bucket at the cap is kept.
+    Docs share a mega-bucket because of shared boilerplate, whose pair
+    Jaccard sits far below any near-dup threshold, while genuinely
+    near-identical docs also collide in their other bands. The cap is a
+    ``count(*)`` window over the bucket key, applied before the collect:
+    the window buffers a bucket with spill, so no aggregation buffer ever
+    holds a list longer than the cap, and the bucket aggregate reuses the
+    window's hash partitioning, so the cap adds no exchange.
+    ``_lsh_pairs_oracle`` replays the same cap."""
     if max_bucket_size is not None:
-        # enforce the cap via its COMPLEMENT: the oversized-bucket set is
-        # the pathology, so it is TINY (empty at every shipped sf — max
-        # real occupancy is 10, and bounded above by rows/cap always) and
-        # broadcasts into an anti-join — the bands table is never
-        # re-shuffled for the cap, and no extra driver action runs. (A
-        # semi-join against the under-cap buckets re-shuffled bands twice
-        # and cost ~+0.6s per LSH query at sf0.1 — measured, hence this
-        # shape.)
-        big = (
-            band_df.groupBy("band_id", "band_hash")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_bucket_size)
-            .select("band_id", "band_hash")
+        bucket = Window.partitionBy("band_id", "band_hash")
+        band_df = band_df.withColumn("__n", F.count("*").over(bucket)).filter(
+            F.col("__n") <= max_bucket_size
         )
-        band_df = band_df.join(
-            F.broadcast(big), ["band_id", "band_hash"], "left_anti"
-        )
-    a = band_df.select(F.col(id_col).alias("a"), "band_id", "band_hash")
-    b = band_df.select(F.col(id_col).alias("b"), "band_id", "band_hash")
+    buckets = band_df.groupBy("band_id", "band_hash").agg(
+        F.collect_list(id_col).alias("__ids")
+    )
     return (
-        a.join(b, on=["band_id", "band_hash"])
+        buckets.select(F.explode("__ids").alias("a"), "__ids")
+        .select("a", F.explode("__ids").alias("b"))
         .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
         .distinct()
     )
 
@@ -269,10 +256,12 @@ def lsh_verified_pairs(
     O(corpus) for signatures + O(sum of bucket^2) for candidates (tiny when
     bands/rows are tuned to the target similarity) — never O(corpus^2).
     """
-    # Signatures are tiny (k longs per doc) but EXPENSIVE to produce; the
-    # band self-join and the verify join would otherwise re-run the whole
-    # shingling job once per branch. Persisting signature/candidate tables
-    # is the same call a 100 TB run makes (they are O(corpus * k) longs).
+    # Signatures are tiny (k longs per doc) but EXPENSIVE to produce, and
+    # the candidate table feeds the suspect-id prune and both sides of the
+    # verify join; without the caches nothing reuses their exchanges and a
+    # curate_and_pack pass runs twice the jobs. Persisting signature/
+    # candidate tables is the same call a 100 TB run makes (they are
+    # O(corpus * k) longs).
     # tracked_persist: the consuming action is the caller's, so caches are
     # registered and freed via caching.release_cached() at query boundaries.
     from flink_kafka_table_api_spark.caching import tracked_persist
@@ -542,26 +531,25 @@ def connected_components(
     This is the step that turns pair DETECTION into actual DEDUP: keep one
     canonical doc per component, drop the rest.
 
-    Two execution paths, chosen by edge count:
-    - The near-dup pair graph is typically orders of magnitude smaller than
-      the corpus (only suspected duplicates appear). Below
-      ``driver_edge_threshold`` edges, a driver-side union-find is strictly
-      better: one collect of the (tiny) edge list replaces ~diameter
-      distributed jobs. Even at 100 TB of documents, a few million near-dup
-      pairs fit on the driver comfortably.
-    - Above it, distributed min-label propagation: one join + aggregate per
-      iteration, exits at fixpoint; only the `changed` counter crosses to
-      the driver.
+    Two execution paths, chosen by edge count, from ONE bounded read of
+    the edges (``edges.limit(driver_edge_threshold + 1).collect()``):
+    - At most ``driver_edge_threshold`` edges: driver-side union-find over
+      the collected rows. The near-dup pair graph is typically orders of
+      magnitude smaller than the corpus (only suspected duplicates
+      appear), so one collect replaces ~diameter distributed jobs; even at
+      100 TB of documents a few million near-dup pairs fit on the driver.
+    - More: distributed min-label propagation, one join + aggregate per
+      iteration, exiting at fixpoint; only the `changed` counter crosses
+      to the driver. This path reads `edges` once more (its bidirectional
+      checkpoint): the trade that keeps the common small-graph path at
+      one pass, with no cache to fill and no separate count.
     """
     spark = edges.sparkSession
-    # persist AND materialize first: `edges` is usually an expensive
-    # pipeline (LSH verify) that downstream branches would otherwise
-    # recompute; the cache must be filled by its own action before reuse
-    edges = edges.select("a", "b").persist()
-    n_edges = edges.count()
-    if n_edges <= driver_edge_threshold:
-        # Union-find is direction-agnostic: collect the FORWARD edges only
-        # (half the rows, and no union/distinct shuffle at all).
+    edges = edges.select("a", "b")
+    fwd = edges.limit(driver_edge_threshold + 1).collect()
+    if len(fwd) <= driver_edge_threshold:
+        # Union-find is direction-agnostic: the FORWARD edges suffice (no
+        # union/distinct shuffle at all).
         parent: dict = {}
 
         def find(x):
@@ -570,8 +558,7 @@ def connected_components(
                 x = parent[x]
             return x
 
-        for row in edges.collect():
-            a, b = row.a, row.b
+        for a, b in fwd:
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
@@ -581,7 +568,6 @@ def connected_components(
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
         rows = [(x, find(x), x == find(x)) for x in parent]
-        edges.unpersist()
         # id type follows the edge columns: doc-dedup passes longs, the
         # ER path (er_clusters) passes name strings — min-label/union-by-
         # smaller semantics are identical under any ordered type
@@ -602,7 +588,6 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    edges.unpersist()
     labels = (
         bidir.select(F.col("a").alias("id")).distinct()
         .withColumn("cluster", F.col("id"))
@@ -1240,7 +1225,7 @@ def lsh_recall_audit(
     round(x, 6) division.
 
     Scale shape: both inputs are the scalable pipelines (prefix-posting
-    join for truth, band-bucket join for LSH); the audit itself adds one
+    join for truth, per-bucket id lists for LSH); the audit itself adds one
     broadcast-sized join of two pair tables and a tiny banded aggregate.
     Run it on a SAMPLE of the corpus at 100 TB — recall is a property of
     the hash family and the similarity distribution, not of corpus

@@ -9,7 +9,7 @@ stays declarative + distributed:
   stage             shape at scale
   quality scoring   narrow pass, whole-stage codegen
   quality filter    pushed predicate (drops rows before any shuffle)
-  LSH near-dup      O(corpus) signatures + bucket joins (never O(n^2))
+  LSH near-dup      O(corpus) signatures + per-bucket id lists (never O(n^2))
   clustering        union-find over the (tiny) near-dup pair graph
   canonical filter  left-anti join against non-canonical ids
 

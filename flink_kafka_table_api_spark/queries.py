@@ -2095,12 +2095,12 @@ def _lsh_pairs_oracle(bands: int = 4, rows_per_band: int = 2,
 @query("lsh_candidate_pairs", _lsh_pairs_oracle())
 def q_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """MinHash-LSH banding: 8 hashes folded into 4 bands of 2 — candidate
-    pairs collide in >=1 band. The bucket join is the scale contract: work
-    is proportional to bucket sizes, never corpus^2."""
+    pairs collide in >=1 band. The per-bucket id lists are the scale
+    contract: work is proportional to bucket sizes, never corpus^2."""
     sigs = dd.minhash_signatures(
         _t(spark, sf, "documents"), "doc_id", "text",
         num_hashes=8, shingle_k=3, portable=True,
-    ).persist()  # the bucket self-join reads this twice
+    )
     bands = dd.lsh_bands(sigs, "doc_id", bands=4, rows_per_band=2)
     return dd.lsh_candidate_pairs(bands, "doc_id")
 

@@ -181,9 +181,9 @@ class IncrementalDedup:
             )
         )
         # Oversized-bucket cap on the ACCUMULATED occupancy (index + this
-        # batch) — the operators/dedup.py lsh_candidate_pairs recipe: the
-        # oversized set is the pathology, therefore tiny, and broadcasts
-        # into an anti-join; the bands tables are never re-shuffled for it.
+        # batch): the oversized set is the pathology, therefore tiny, and
+        # broadcasts into an anti-join, so the bands tables are never
+        # re-shuffled for it.
         capped = tagged
         if self.max_bucket_size is not None:
             big = (

@@ -43,6 +43,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from flink_kafka_table_api_spark.streaming.cdc_apply import (
     OPS_COLUMNS,
@@ -54,8 +55,8 @@ from flink_kafka_table_api_spark.streaming.batch_commit import (
     BatchCommit,
     Publish,
     batch_dir,
-    has_data,
     overwrite,
+    read_back,
     read_version,
 )
 from flink_kafka_table_api_spark.streaming.late_data import (
@@ -170,14 +171,20 @@ def stream_temporal_join(
         state_dir, scoped=(state,), partitioned=(hist, out),
         versioned=(state,), meta_dir=os.path.join(state_dir, "offsets"),
     )
-    # the ops drops are read per batch by file name; schema=None mirrors
-    # that inference read of the same files
-    clock = EventClock(spark, commit, ops_src, None, "op_ts", delay)
+    # the ops drops are read per batch by file name, with the schema they
+    # were staged with: no per-batch inference job
+    ops_schema = ops_chunked.select(*OPS_COLUMNS).schema
+    hist_schema = StructType(
+        ops_schema.fields + [StructField("batch_id", IntegerType())]
+    )
+    clock = EventClock(spark, commit, ops_src, ops_schema, "op_ts", delay)
 
     def process(probe_batch: DataFrame, batch_id: int) -> Publish:
         # 1. apply ops drop k BEFORE the probe join
         ops_file = f"chunk{batch_id:04d}.parquet"
-        ops = spark.read.parquet(os.path.join(ops_src, ops_file))
+        ops = spark.read.schema(ops_schema).parquet(
+            os.path.join(ops_src, ops_file)
+        )
         # the watermark advances from ops SEEN (dropped ops advance it)
         t = clock.tick(ops, batch_id, file=ops_file)
         admitted = t.admitted
@@ -216,13 +223,10 @@ def stream_temporal_join(
             # Probes see prior history ∪ this batch's admitted ops — the
             # same rows the append-then-reread produced.
             admitted = admitted.select(*OPS_COLUMNS).persist()
-            prior_hist = (
-                spark.read.parquet(hist).drop("batch_id")
-                if has_data(hist) else None
-            )
             full_hist = (
-                admitted if prior_hist is None
-                else prior_hist.unionByName(admitted)
+                read_back(spark, hist, hist_schema)
+                .drop("batch_id")
+                .unionByName(admitted)
             )
             # 2. each probe sees the version AS OF its own probe_ts
             enriched = asof_enrich(probe_batch, full_hist)

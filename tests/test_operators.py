@@ -60,7 +60,7 @@ def test_lsh_finds_exact_dup_pair(spark, docs):
 
 
 def test_lsh_bucket_cap_skips_mega_buckets_only(spark, docs):
-    """max_bucket_size (the round-7 zipf-skew fix): a bucket above the cap
+    """max_bucket_size (the boilerplate-skew cap): a bucket above the cap
     contributes NO candidate pairs; buckets at or below the cap are
     untouched; None disables the cap entirely."""
     # 40 identical docs -> every band bucket holds all 40
@@ -522,6 +522,53 @@ def test_connected_components_distributed_branch(spark):
     assert dist == drv
     assert (1, 1, True) in dist and (4, 1, False) in dist
     assert (10, 10, True) in dist and (21, 20, False) in dist
+
+
+def test_connected_components_threshold_boundary(spark, monkeypatch):
+    """The driver path is decided by one bounded collect: a graph of n
+    edges takes union-find at driver_edge_threshold == n without any
+    count(), and label propagation at n - 1; both give the same rows."""
+    from flink_kafka_table_api_spark.operators.dedup import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame(
+        [(2, 1), (2, 3), (4, 3), (11, 10), (20, 21)], "a long, b long"
+    )
+    n = 5
+    DataFrame = type(edges)  # the concrete class that defines count()
+
+    def no_count(self):
+        raise AssertionError("the driver path must not count the edges")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "count", no_count)
+        drv = {
+            tuple(r)
+            for r in connected_components(
+                edges, driver_edge_threshold=n
+            ).collect()
+        }
+    counted = []
+    real_count = DataFrame.count
+
+    def spy_count(self):
+        counted.append(1)
+        return real_count(self)
+
+    with monkeypatch.context() as m:
+        # label propagation counts the changed labels every iteration
+        m.setattr(DataFrame, "count", spy_count)
+        dist = {
+            tuple(r)
+            for r in connected_components(
+                edges, driver_edge_threshold=n - 1
+            ).collect()
+        }
+    assert counted, "n - 1 must take label propagation"
+    assert drv == dist
+    assert len(drv) == 8
+    assert (1, 1, True) in drv and (4, 1, False) in drv
 
 
 def test_curate_documents_distributed_cc(spark, docs):
