@@ -174,7 +174,10 @@ def lsh_candidate_pairs(
     the window buffers a bucket with spill, so no aggregation buffer ever
     holds a list longer than the cap, and the bucket aggregate reuses the
     window's hash partitioning, so the cap adds no exchange.
-    ``_lsh_pairs_oracle`` replays the same cap."""
+    ``_lsh_pairs_oracle`` replays the same cap, and
+    ``streaming.incremental_dedup`` applies the same policy (over the cap
+    skips, at the cap keeps) to its accumulated buckets; keep the three
+    in step."""
     if max_bucket_size is not None:
         bucket = Window.partitionBy("band_id", "band_hash")
         band_df = band_df.withColumn("__n", F.count("*").over(bucket)).filter(
@@ -532,7 +535,9 @@ def connected_components(
     canonical doc per component, drop the rest.
 
     Two execution paths, chosen by edge count, from ONE bounded read of
-    the edges (``edges.limit(driver_edge_threshold + 1).collect()``):
+    the cached edges (``edges.limit(driver_edge_threshold + 1).toArrow()``:
+    one job at any partition count, each partition limited on its
+    executor, at most threshold + 1 rows shipped as Arrow batches):
     - At most ``driver_edge_threshold`` edges: driver-side union-find over
       the collected rows. The near-dup pair graph is typically orders of
       magnitude smaller than the corpus (only suspected duplicates
@@ -540,14 +545,16 @@ def connected_components(
       100 TB of documents a few million near-dup pairs fit on the driver.
     - More: distributed min-label propagation, one join + aggregate per
       iteration, exiting at fixpoint; only the `changed` counter crosses
-      to the driver. This path reads `edges` once more (its bidirectional
-      checkpoint): the trade that keeps the common small-graph path at
-      one pass, with no cache to fill and no separate count.
+      to the driver. Its bidirectional checkpoint reads the cache the
+      bounded read filled, so the upstream pipeline runs once either way.
     """
     spark = edges.sparkSession
-    edges = edges.select("a", "b")
-    fwd = edges.limit(driver_edge_threshold + 1).collect()
-    if len(fwd) <= driver_edge_threshold:
+    # persist: `edges` is usually an expensive pipeline (the LSH verify);
+    # the bounded read fills the cache and the distributed path re-reads it
+    edges = edges.select("a", "b").persist()
+    fwd = edges.limit(driver_edge_threshold + 1).toArrow()
+    if fwd.num_rows <= driver_edge_threshold:
+        edges.unpersist()
         # Union-find is direction-agnostic: the FORWARD edges suffice (no
         # union/distinct shuffle at all).
         parent: dict = {}
@@ -558,7 +565,8 @@ def connected_components(
                 x = parent[x]
             return x
 
-        for a, b in fwd:
+        for a, b in zip(fwd.column("a").to_pylist(),
+                        fwd.column("b").to_pylist()):
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
@@ -588,6 +596,7 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
+    edges.unpersist()
     labels = (
         bidir.select(F.col("a").alias("id")).distinct()
         .withColumn("cluster", F.col("id"))

@@ -183,7 +183,9 @@ class IncrementalDedup:
         # Oversized-bucket cap on the ACCUMULATED occupancy (index + this
         # batch): the oversized set is the pathology, therefore tiny, and
         # broadcasts into an anti-join, so the bands tables are never
-        # re-shuffled for it.
+        # re-shuffled for it. The policy must match
+        # operators/dedup.py lsh_candidate_pairs': a bucket over the cap
+        # is skipped, one at the cap is kept.
         capped = tagged
         if self.max_bucket_size is not None:
             big = (
